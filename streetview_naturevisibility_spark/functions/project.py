@@ -1,4 +1,4 @@
-"""CRS transform pandas UDFs (reference F2: to_crs(4326) <-> local UTM,
+"""CRS transform pandas UDF (reference F2: to_crs(4326) <-> local UTM,
 modules/osmnx_road_network.py:92-95, 127-129, 164-165).
 
 Arrow-vectorized NumPy Krüger series (geo/utm.py) — one batch call per
@@ -11,19 +11,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from ..geo.utm import lonlat_to_utm, utm_to_lonlat
+from ..geo.utm import utm_to_lonlat
 
-_XY = StructType([StructField("x", DoubleType()), StructField("y", DoubleType())])
 _LL = StructType([StructField("lon", DoubleType()), StructField("lat", DoubleType())])
-
-
-def make_to_utm(zone: int = 31):
-    @F.pandas_udf(_XY)
-    def to_utm(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        x, y = lonlat_to_utm(lon.to_numpy(), lat.to_numpy(), zone)
-        return pd.DataFrame({"x": x, "y": y})
-
-    return to_utm
 
 
 def make_to_lonlat(zone: int = 31):

@@ -7,8 +7,9 @@ the pinned extractor (BASELINE.json input_hint), and the segmentation
 label grid becomes a deterministic per-page token-label array
 (SURVEY.md §1.1) scored by the same pixel-counting semantics.
 
-All functions exist in two forms: a plain pandas/NumPy kernel (unit
-tests + oracle) and a pandas UDF wrapper used in DataFrame plans.
+The kernels are plain pandas/NumPy functions (unit tests + oracle);
+``make_page_parser`` fuses them into the one pandas UDF that DataFrame
+plans use.
 """
 
 from __future__ import annotations
@@ -17,22 +18,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
-    IntegerType,
     StringType,
     StructField,
     StructType,
 )
 
-_P_OPEN = b"<body><p>"
-_P_CLOSE = b"</p>"
-_LAT_KEY = b"data-lat='"
-_LON_KEY = b"data-lon='"
-
 N_CLASSES = 19  # Cityscapes label space; 0 = road, 8 = vegetation
-ROAD_LABEL = 0
-VEGETATION_LABEL = 8
 
 
 def _html_string_array(html: pd.Series) -> "pa.Array":
@@ -92,8 +84,8 @@ def _token_byte_matrix(tokens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(n_tokens, width) uint8 matrix (zero-padded) + exact per-token
     byte lengths. Liveness during the hash sweep is ``position <
     length``, NOT ``byte != 0`` — hostile web text can contain embedded
-    NUL bytes, and those must hash identically to the scalar twin
-    (``hash_str64``). NumPy's 'S' dtype strips TRAILING NULs, so the
+    NUL bytes, and those must hash identically to scalar byte-wise
+    FNV-1a. NumPy's 'S' dtype strips TRAILING NULs, so the
     width is forced to cover the true max length; the stripped trailing
     positions read back as 0x00 — exactly the byte FNV must consume."""
     if len(tokens) == 0:
@@ -144,18 +136,6 @@ def token_labels_kernel(text: pd.Series) -> pd.Series:
     return pd.Series(
         [labels[bounds[i] : bounds[i + 1]].tolist() for i in range(len(token_lists))]
     )
-
-
-# ---- pandas UDF wrappers -------------------------------------------------
-
-extract_text = F.pandas_udf(extract_text_kernel, StringType())
-
-parse_coords = F.pandas_udf(
-    lambda html: parse_coords_kernel(html),
-    StructType([StructField("lon", DoubleType()), StructField("lat", DoubleType())]),
-)
-
-token_labels = F.pandas_udf(token_labels_kernel, ArrayType(IntegerType()))
 
 
 _COMBINED_RE = (

@@ -13,10 +13,6 @@ planar meter space with the same *semantics* H3 gives a pipeline:
   approximate containment exactly like H3's aperture-7 parents),
 - a packed 64-bit cell id usable as a shuffle/partition key.
 
-If ``h3`` IS importable, ``latlng_to_h3_udf`` wraps the genuine
-``h3.latlng_to_cell`` in a vectorized pandas UDF with the same column
-contract, so a real deployment swaps libraries without a plan change.
-
 Geometry (pointy-top, circumradius ``size`` meters):
   axial q = (sqrt(3)/3 * x - 1/3 * y) / size
   axial r = (2/3 * y) / size
@@ -95,10 +91,6 @@ def hex_cell_np(x: np.ndarray, y: np.ndarray, size: float) -> np.ndarray:
     return (q + _OFF) * _QSHIFT + (r + _OFF)
 
 
-def hex_cell_py(x: float, y: float, size: float) -> int:
-    return int(hex_cell_np(np.array([x]), np.array([y]), size)[0])
-
-
 def make_hex_cell_udf(size: float):
     """The SURVEY-mandated pandas-UDF form: one NumPy pass per Arrow
     batch (the shape a real h3.latlng_to_cell wrapper would take)."""
@@ -108,23 +100,6 @@ def make_hex_cell_udf(size: float):
         return pd.Series(hex_cell_np(x.to_numpy(), y.to_numpy(), size))
 
     return hex_cell
-
-
-def latlng_to_h3_udf(res: int):
-    """Genuine H3 wrapper, used only when the library exists (absent in
-    this container — the pure-math grid above is the tested path)."""
-    try:
-        import h3
-    except ImportError as exc:  # pragma: no cover - env without h3
-        raise ImportError("h3 not installed; use make_hex_cell_udf") from exc
-
-    @F.pandas_udf(LongType())
-    def to_cell(lat: pd.Series, lng: pd.Series) -> pd.Series:  # pragma: no cover
-        return pd.Series(
-            [h3.str_to_int(h3.latlng_to_cell(a, o, res)) for a, o in zip(lat, lng)]
-        )
-
-    return to_cell
 
 
 def hex_cell_sql_ctes(
@@ -183,15 +158,6 @@ def hex_distance_py(a: int, b: int) -> int:
     qa, ra = unpack_hex_py(a)
     qb, rb = unpack_hex_py(b)
     return int((abs(qa - qb) + abs(ra - rb) + abs((-qa - ra) - (-qb - rb))) // 2)
-
-
-def hex_center_cols(cell: Column, size: float) -> tuple[Column, Column]:
-    """Cell centroid (x, y) back in meters — inverse of the axial map."""
-    q = (F.shiftrightunsigned(cell, 26) - F.lit(_OFF)).cast("double")
-    r = (cell.bitwiseAND(F.lit(_QSHIFT - 1)) - F.lit(_OFF)).cast("double")
-    x = F.lit(size) * (F.lit(_SQRT3) * q + F.lit(_SQRT3 / 2.0) * r)
-    y = F.lit(size) * (F.lit(1.5) * r)
-    return x, y
 
 
 def _floor_div(a: Column, b: int) -> Column:

@@ -142,48 +142,6 @@ def meridian_arc_numeric(lat_deg: float, steps: int = 200000) -> float:
     return float(np.trapz(integrand, phi))
 
 
-def utm_cols(lon_col, lat_col, zone: int = 31):
-    """Forward Krüger projection as a PURE Spark Column expression —
-    the same 6th-order series as ``lonlat_to_utm`` restated in JVM
-    math (sin/cosh/atanh/asinh are all codegen builtins), so the
-    north-star pages pipeline can run with ZERO Python. Returns an
-    array<double> [easting, northing].
-
-    Deliberately a NAIVE expression tree (xi'/eta' referenced 13x):
-    this is pure math, so it stays inside whole-stage codegen, where
-    Spark's subexpression elimination computes each repeated subtree
-    once per row. Wrapping it in functions/hof.let_col would be
-    counterproductive here — higher-order functions are
-    CodegenFallback (interpreted, no CSE); let_col is for pipelines
-    that are already HOF-bound, not for codegen-able math.
-
-    JVM Math and NumPy libm may differ in the last ulp of the
-    transcendentals, so x/y agree with the NumPy path to ~1e-9 m (test
-    asserts 1e-6), not bit-exactly — byte-identical applies to the
-    TEXT extraction contract, not the projection."""
-    from pyspark.sql import functions as F
-
-    lam = F.radians(lon_col - F.lit(zone_central_lon(zone)))
-    phi = F.radians(lat_col)
-    tau = F.tan(phi)
-    sigma = F.sinh(F.lit(float(_E)) * F.atanh(F.lit(float(_E)) * F.sin(phi)))
-    taup = tau * F.sqrt(sigma * sigma + F.lit(1.0)) - sigma * F.sqrt(
-        tau * tau + F.lit(1.0)
-    )
-    xi_p = F.atan2(taup, F.cos(lam))
-    eta_p = F.asinh(F.sin(lam) / F.sqrt(taup * taup + F.cos(lam) * F.cos(lam)))
-    xi, eta = xi_p, eta_p
-    for j in range(6):
-        k = F.lit(2.0 * (j + 1))
-        a = F.lit(float(_ALPHA[j]))
-        xi = xi + a * F.sin(k * xi_p) * F.cosh(k * eta_p)
-        eta = eta + a * F.cos(k * xi_p) * F.sinh(k * eta_p)
-    return F.array(
-        F.lit(_FE) + F.lit(_K0) * F.lit(_RECT_A) * eta,
-        F.lit(_K0) * F.lit(_RECT_A) * xi,
-    )
-
-
 def with_utm(df, lon: str = "lon", lat: str = "lat", zone: int = 31,
              x_col: str = "x", y_col: str = "y"):
     """DataFrame-level forward Krüger: the series STAGED through
@@ -191,8 +149,8 @@ def with_utm(df, lon: str = "lon", lat: str = "lat", zone: int = 31,
     intermediate is non-cheap and referenced more than once, so
     CollapseProject keeps the projections stacked and whole-stage
     codegen computes each stage once per row in a small JIT-friendly
-    local — the single-expression form (utm_cols) textually expands
-    xi'/eta' 13x and generates a method past HotSpot's huge-method
+    local — a single-expression form would textually expand
+    xi'/eta' 13x and generate a method past HotSpot's huge-method
     JIT limit."""
     from pyspark.sql import functions as F
 

@@ -366,7 +366,6 @@ def minhash_lsh_pairs(
     max_bucket: int | None = None,
     return_metrics: bool = False,
     hash_method: str = "tokenmix",
-    verify_prefilter: bool = False,
 ) -> DataFrame:
     """Candidate pairs via banded LSH, verified with exact token-shingle
     Jaccard. Returns (id_a, id_b, jaccard) with id_a < id_b; with
@@ -488,9 +487,6 @@ def minhash_lsh_pairs(
     # when small, broadcast into them so the shingle frame is never
     # shuffled (guide §3.1; a checkpointed frame carries no size
     # statistics, so Catalyst would otherwise pick a sort-merge join).
-    # verify_prefilter is retired to a no-op alias: the checkpointed
-    # shingle frame already gives the one-pass behavior it bought.
-    del verify_prefilter
     cand = cand.localCheckpoint(eager=True)
     small_cand = cand.count() <= 5_000_000
     sh = sh_frame
@@ -514,7 +510,7 @@ def fnv1a64_vec(tokens: np.ndarray) -> np.ndarray:
     """Vectorized FNV-1a 64-bit (masked column sweep over the padded
     token byte matrix — same trick as functions/text.fnv1a32). The mask
     is positional (byte index < token length), so tokens with embedded
-    NUL bytes hash identically to the scalar ``hash_str64`` twin."""
+    NUL bytes hash identically to scalar byte-wise FNV-1a 64."""
     from ..functions.text import _token_byte_matrix
 
     mat, lengths = _token_byte_matrix(
@@ -551,14 +547,6 @@ def simhash_kernel(texts: pd.Series, bits: int = 64) -> pd.Series:
                 sig |= np.uint64(1) << np.uint64(j)
         out[i] = np.int64(sig.astype(np.int64))
     return pd.Series(out)
-
-
-def hash_str64(s: str) -> int:
-    """FNV-1a 64-bit (stable across processes, unlike Python hash())."""
-    h = 0xCBF29CE484222325
-    for byte in s.encode("utf-8"):
-        h = ((h ^ byte) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
 
 
 simhash_udf = F.pandas_udf(lambda s: simhash_kernel(s), LongType())

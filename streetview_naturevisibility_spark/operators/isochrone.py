@@ -10,8 +10,7 @@ subgraph edge by ``edge_buff`` (25 m) → ``unary_union`` →
 
 Engine form: the street graph is a bounded dimension (one city), so it
 broadcasts into an ``applyInPandas`` kernel grouped by ``poi_id`` — the
-standard per-group imperative-NumPy pattern (same shape as
-knn_snap_grouped). Inside the kernel:
+standard per-group imperative-NumPy pattern. Inside the kernel:
 
 1. nearest node by euclidean distance (the reference's
    ``ox.distance.nearest_nodes``),

@@ -23,10 +23,8 @@ Engine plan (Spark-first, 100 TB-ready):
    crucially, **partial (map-side) aggregation**: a hot urban cell with
    millions of pages is reduced inside each input partition before the
    single bounded shuffle by point_id. This is the explicit skew
-   strategy (SURVEY.md §4.2.2); ``salt`` adds a second pre-reduce keyed
-   by (point_id, pmod(hash(url), salt)) for adversarial demonstration —
-   results are identical (tested), partial agg already provides the
-   same effect.
+   strategy (SURVEY.md §4.2.2): no salting pre-reduce is needed, the
+   adversarial single-hot-cell test pins it.
 5. Left join back onto points restores miss rows with the reference's
    exact sentinel semantics.
 """
@@ -36,17 +34,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-import numpy as np
-import pandas as pd
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
 from ..geo.cells import neighbor_cells_col
 
 
@@ -55,8 +42,6 @@ def knn_snap(
     pages: DataFrame,
     max_distance: float = 50.0,
     zoom: int = 14,
-    salt: int | None = None,
-    broadcast_points: bool = True,
     key_col: str = "url",
     reduce: str = "two_phase",
     materialize: bool = True,
@@ -83,14 +68,14 @@ def knn_snap(
     bound = max_distance / 2.0
     key_is_string = dict(pages.dtypes)[key_col] == "string"
 
-    cand_points = points.select(
-        "point_id",
-        F.col("x").alias("_px"),
-        F.col("y").alias("_py"),
-        F.explode(neighbor_cells_col(F.col("tile_x"), F.col("tile_y"), zoom)).alias("cell_id"),
+    cand_points = F.broadcast(
+        points.select(
+            "point_id",
+            F.col("x").alias("_px"),
+            F.col("y").alias("_py"),
+            F.explode(neighbor_cells_col(F.col("tile_x"), F.col("tile_y"), zoom)).alias("cell_id"),
+        )
     )
-    if broadcast_points:
-        cand_points = F.broadcast(cand_points)
 
     pages_side = pages.select(
         "cell_id",
@@ -112,7 +97,7 @@ def knn_snap(
         .select("point_id", "_dist", "_url", "_pano")
     )
 
-    return _snap_reduce_join(points, cand, key_is_string, key_col, reduce, salt, materialize)
+    return _snap_reduce_join(points, cand, key_is_string, key_col, reduce, materialize)
 
 
 def _snap_reduce_join(
@@ -121,7 +106,6 @@ def _snap_reduce_join(
     key_is_string: bool,
     key_col: str,
     reduce: str,
-    salt: int | None,
     materialize: bool = True,
 ) -> DataFrame:
     """Shared k=1 reduce + miss-preserving join-back (used by the
@@ -187,15 +171,6 @@ def _snap_reduce_join(
         )
         if materialize:
             best = best.localCheckpoint(eager=True)
-    elif salt:
-        # Explicit two-stage salted reduce for adversarially hot cells:
-        # pre-reduce per (point_id, salt bucket), then final reduce.
-        pre = (
-            cand.withColumn("_salt", F.pmod(F.hash("_url"), F.lit(int(salt))))
-            .groupBy("point_id", "_salt")
-            .agg(F.min(best_struct).alias("best"))
-        )
-        best = pre.groupBy("point_id").agg(F.min("best").alias("best"))
     else:
         best = cand.groupBy("point_id").agg(F.min(best_struct).alias("best"))
 
@@ -218,7 +193,6 @@ def knn_snap_hex(
     pages: DataFrame,
     max_distance: float = 50.0,
     hex_size: float | None = None,
-    salt: int | None = None,
     key_col: str = "url",
     reduce: str = "two_phase",
     materialize: bool = True,
@@ -268,85 +242,4 @@ def knn_snap_hex(
         .where(F.col("_dist") < F.lit(bound))
         .select("point_id", "_dist", "_url", "_pano")
     )
-    return _snap_reduce_join(points, cand, key_is_string, key_col, reduce, salt, materialize)
-
-
-_GROUPED_BEST = StructType(
-    [
-        StructField("point_id", LongType()),
-        StructField("_dist", DoubleType()),
-        StructField("_url", StringType()),
-        StructField("_pano", BooleanType()),
-    ]
-)
-
-
-def knn_snap_grouped(
-    points: DataFrame,
-    pages: DataFrame,
-    max_distance: float = 50.0,
-    zoom: int = 14,
-) -> DataFrame:
-    """The grouped-map form of the snap join (SURVEY.md J1 option (b)):
-    shuffle candidate pairs by cell, run a vectorized NumPy reduce per
-    cell inside ``applyInPandas`` (the engine twin of the reference's
-    per-tile cKDTree batching, osmnx_road_network.py:98-137), then a
-    global min re-reduce across the 3x3 cells each point probed.
-
-    Numerically identical to ``knn_snap`` (tested); exists because some
-    per-group kernels genuinely need imperative NumPy (e.g. a true
-    KD-tree for k>1, per-cell models) — this is the pattern to copy.
-    """
-    bound = max_distance / 2.0
-
-    cand_points = F.broadcast(
-        points.select(
-            "point_id",
-            F.col("x").alias("_px"),
-            F.col("y").alias("_py"),
-            F.explode(
-                neighbor_cells_col(F.col("tile_x"), F.col("tile_y"), zoom)
-            ).alias("cell_id"),
-        )
-    )
-    pairs = pages.select(
-        "cell_id",
-        F.col("url").alias("_url"),
-        F.col("x").alias("_qx"),
-        F.col("y").alias("_qy"),
-        F.col("is_panoramic").alias("_pano"),
-    ).join(cand_points, "cell_id")
-
-    def _cell_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        d = np.hypot(
-            pdf["_px"].to_numpy() - pdf["_qx"].to_numpy(),
-            pdf["_py"].to_numpy() - pdf["_qy"].to_numpy(),
-        )
-        pdf = pdf.assign(_dist=d)
-        pdf = pdf[pdf["_dist"] < bound]
-        if pdf.empty:
-            return pd.DataFrame(columns=["point_id", "_dist", "_url", "_pano"])
-        best = (
-            pdf.sort_values(["point_id", "_dist", "_url"], kind="mergesort")
-            .groupby("point_id", as_index=False)
-            .first()
-        )
-        return best[["point_id", "_dist", "_url", "_pano"]]
-
-    per_cell = pairs.groupBy("cell_id").applyInPandas(_cell_kernel, _GROUPED_BEST)
-    best = per_cell.groupBy("point_id").agg(
-        F.min(
-            F.struct(
-                F.col("_dist").alias("dist"),
-                F.col("_url").alias("url"),
-                F.col("_pano").alias("pano"),
-            )
-        ).alias("best")
-    )
-    out = points.join(F.broadcast(best), "point_id", "left")
-    return (
-        out.withColumn("page_url", F.coalesce(F.col("best.url"), F.lit("")))
-        .withColumn("snap_distance", F.col("best.dist"))
-        .withColumn("is_panoramic", F.coalesce(F.col("best.pano"), F.lit(False)))
-        .drop("best")
-    )
+    return _snap_reduce_join(points, cand, key_is_string, key_col, reduce, materialize)

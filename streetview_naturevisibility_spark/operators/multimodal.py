@@ -488,61 +488,6 @@ def resize_images(media: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame
     return media.where(F.col("kind") == "image").mapInPandas(rz, RESIZED)
 
 
-FRAMES = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("frame_sha256", StringType(), False),
-        StructField("t_ms", DoubleType(), True),
-        StructField("frame_bytes", IntegerType(), True),
-    ]
-)
-
-
-def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame sampling (1 -> N expansion inside mapInPandas). For MP4
-    payloads the sampling is REAL: the ISO BMFF sample tables
-    (functions/mp4box.py) give each frame's true byte range and decode
-    time, and the digest is of the ACTUAL frame bytes sliced from
-    mdat — no codec needed for extraction. Non-container payloads keep
-    the documented deterministic fake (digest of payload+index); only
-    pixel DECODE of the extracted frames stays codec-bound."""
-    from ..functions.mp4box import extract_frames, is_mp4
-
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {
-                "media_id": [],
-                "frame_idx": [],
-                "frame_sha256": [],
-                "t_ms": [],
-                "frame_bytes": [],
-            }
-            for mid, payload, dur in zip(b["media_id"], b["payload"], b["duration_ms"]):
-                payload = bytes(payload)
-                if is_mp4(payload):
-                    for i, fb, t in extract_frames(payload, every_ms):
-                        rows["media_id"].append(mid)
-                        rows["frame_idx"].append(i)
-                        rows["frame_sha256"].append(hashlib.sha256(fb).hexdigest())
-                        rows["t_ms"].append(float(t))
-                        rows["frame_bytes"].append(len(fb))
-                    continue
-                dur = 0 if dur is None or pd.isna(dur) else int(dur)
-                n = max(dur // every_ms, 1)
-                for i in range(n):
-                    rows["media_id"].append(mid)
-                    rows["frame_idx"].append(i)
-                    rows["frame_sha256"].append(
-                        hashlib.sha256(bytes(payload) + i.to_bytes(4, "little")).hexdigest()
-                    )
-                    rows["t_ms"].append(None)
-                    rows["frame_bytes"].append(None)
-            yield pd.DataFrame(rows)
-
-    return media.where(F.col("kind") == "video").mapInPandas(frames, FRAMES)
-
-
 def synth_mp4(
     i: int,
     n_frames: int = 6,

@@ -1,39 +1,19 @@
-"""Point-in-polygon join (J6) — city boundaries & road buffers.
+"""Point-in-polygon flag (J6) — city boundary membership.
 
-Reference analog: per-point raster clips / buffer masks
-(modules/availability.py:202-218, 275) and the boundary containment
-check. The engine generalizes to two polygon kinds:
-
-- ``city_boundary``: WKT polygon ring, membership by vectorized ray
-  casting (geo/polygon.points_in_polygon);
-- ``road_buffer``: road polyline + radius, membership by exact
-  point-to-polyline distance <= radius (the pinned buffer semantics,
-  SURVEY.md F4 — no polygon discretization error).
-
-Scale plan: polygons are a bounded dimension (thousands). Each polygon
-is expanded driver-side to the z14 cells covering its bbox (+radius),
-the big points/pages side equi-joins on cell_id against the broadcast
-(polygon_id, cell_id) map, and an Arrow pandas UDF refines candidates
-with exact geometry per batch. The big side is never shuffled; refine
-cost is bounded by cell pruning.
+Reference analog: the boundary containment check
+(modules/availability.py:202-218). Membership is vectorized ray casting
+(geo/polygon.points_in_polygon) in an Arrow pandas UDF; the polygon is
+a bounded dimension and rides in the UDF closure, so the big
+points/pages side is never shuffled.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
-from ..geo.cells import pack_cell_py
-from ..geo.mercator import tile_xy_np
-from ..geo.polygon import (
-    dist_points_to_segments,
-    parse_wkt_coords,
-    points_in_polygon,
-)
-from ..geo.utm import utm_to_lonlat
+from ..geo.polygon import parse_wkt_coords, points_in_polygon
 
 
 def make_pip_flag_udf(polygon_wkt: str):
@@ -46,81 +26,3 @@ def make_pip_flag_udf(polygon_wkt: str):
         return pd.Series(points_in_polygon(x.to_numpy(), y.to_numpy(), coords))
 
     return inside
-
-
-def _covering_cells(
-    coords: np.ndarray, radius: float, utm_zone: int, zoom: int
-) -> list[int]:
-    """z14 cells covering the polygon/polyline bbox expanded by radius
-    (driver-side; polygons are a bounded dimension)."""
-    x0, y0 = coords.min(axis=0) - radius
-    x1, y1 = coords.max(axis=0) + radius
-    corners_x = np.array([x0, x1, x0, x1])
-    corners_y = np.array([y0, y0, y1, y1])
-    lon, lat = utm_to_lonlat(corners_x, corners_y, utm_zone)
-    tx, ty = tile_xy_np(lon, lat, zoom)
-    cells = []
-    for cx in range(int(tx.min()), int(tx.max()) + 1):
-        for cy in range(int(ty.min()), int(ty.max()) + 1):
-            cells.append(pack_cell_py(cx, cy, zoom))
-    return cells
-
-
-def pip_join(
-    points: DataFrame,
-    polygons: DataFrame,
-    utm_zone: int = 31,
-    zoom: int = 14,
-    key_col: str = "url",
-) -> DataFrame:
-    """points(key_col, x, y, cell_id) x polygons(polygon_id, kind,
-    geometry_wkt, radius) -> (key_col, polygon_id, kind) membership rows.
-
-    Left side can be 100 TB: it equi-joins unshuffled against the
-    broadcast polygon->cells expansion, then refines per Arrow batch.
-    """
-    spark: SparkSession = points.sparkSession
-    polys = polygons.collect()
-
-    geo_by_id: dict[str, tuple[str, np.ndarray, float]] = {}
-    cell_rows: list[tuple[int, str]] = []
-    for p in polys:
-        coords = parse_wkt_coords(p.geometry_wkt)
-        radius = float(p.radius) if p.radius is not None else 0.0
-        geo_by_id[p.polygon_id] = (p.kind, coords, radius)
-        for c in _covering_cells(coords, radius, utm_zone, zoom):
-            cell_rows.append((c, p.polygon_id))
-
-    cand_map = F.broadcast(
-        spark.createDataFrame(cell_rows, "cell_id: bigint, polygon_id: string")
-    )
-
-    @F.pandas_udf(BooleanType())
-    def refine(polygon_id: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        xs = x.to_numpy()
-        ys = y.to_numpy()
-        out = np.zeros(len(xs), dtype=bool)
-        for pid in polygon_id.unique():
-            kind, coords, radius = geo_by_id[pid]
-            mask = (polygon_id == pid).to_numpy()
-            if kind == "road_buffer":
-                # one broadcast (points x segments) distance kernel per
-                # polygon per batch — no per-point Python loop
-                sub = dist_points_to_segments(xs[mask], ys[mask], coords) <= radius
-            else:
-                sub = points_in_polygon(xs[mask], ys[mask], coords)
-            out[mask] = sub
-        return pd.Series(out)
-
-    cand = points.join(cand_map, "cell_id")
-    kind_map = F.broadcast(
-        spark.createDataFrame(
-            [(pid, k) for pid, (k, _, _) in geo_by_id.items()],
-            "polygon_id: string, kind: string",
-        )
-    )
-    return (
-        cand.where(refine(F.col("polygon_id"), F.col("x"), F.col("y")))
-        .join(kind_map, "polygon_id")
-        .select(key_col, "polygon_id", "kind")
-    )

@@ -5,9 +5,9 @@
   baseline; TakeOrderedAndProject for the top-k (no full sort).
 - LSH-bucketed ANN: deterministic random-hyperplane signatures computed
   in a vectorized NumPy pandas UDF (one matmul per Arrow batch); at
-  query time only matching multi-probe buckets are scanned. The scale
-  path: signatures are computed once and stored; queries touch
-  ~1/2^bits of the data per probe.
+  query time only matching multi-probe buckets are scanned.
+- IVF: vectors in inverted lists by nearest centroid; queries scan only
+  the nearest lists (``ivf_topk_pinned``, literal centroids).
 - embedding-cosine near-dup pairs: same hyperplane buckets self-joined,
   exact cosine verify.
 """
@@ -84,9 +84,7 @@ def ann_topk_lsh(
 ) -> DataFrame:
     """Approximate top-k: scan only buckets whose signature is within
     ``multiprobe_hamming`` of the query's signature, exact cosine
-    inside. This form recomputes signatures inline — the scale path is
-    ``build_ann_index`` + ``ann_topk_from_index`` (signatures stored
-    once as a partition column, queries prune on it)."""
+    inside. Signatures are computed inline per query."""
     planes = hyperplanes(len(query), n_planes, seed)
     probe = query_probe_sigs(query, n_planes, multiprobe_hamming, seed)
     sig_udf = make_lsh_sig_udf(planes)
@@ -111,54 +109,6 @@ def query_probe_sigs(
     if multiprobe_hamming >= 1:
         probe += [qsig ^ (1 << j) for j in range(n_planes)]
     return probe
-
-
-def build_ann_index(
-    df: DataFrame,
-    out_path: str,
-    n_planes: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 7,
-    dim: int = 64,
-) -> None:
-    """Materialize the LSH index ONCE: signature computed by the
-    vectorized UDF at build time and stored as a PARTITION column, so
-    every later query is pure scan-with-partition-pruning — no Python
-    in the query path, and only matching bucket directories are read
-    (Catalyst partition pruning; at 100 TB this is the difference
-    between scanning ~(probes/2^bits) of the data and all of it)."""
-    planes = hyperplanes(dim, n_planes, seed)
-    sig_udf = make_lsh_sig_udf(planes)
-    (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .withColumn("sig", sig_udf(F.col("v")))
-        .write.partitionBy("sig")
-        .mode("overwrite")
-        .parquet(out_path)
-    )
-
-
-def ann_topk_from_index(
-    spark,
-    index_path: str,
-    query: list[float],
-    k: int = 10,
-    n_planes: int = 8,
-    multiprobe_hamming: int = 1,
-    seed: int = 7,
-) -> DataFrame:
-    """Approximate top-k over a stored index: probe signatures are
-    computed driver-side, the scan prunes to those partitions, exact
-    cosine ranks inside — zero UDFs in the plan."""
-    probe = query_probe_sigs(query, n_planes, multiprobe_hamming, seed)
-    cand = spark.read.parquet(index_path).where(F.col("sig").isin(probe))
-    return (
-        cand.select("id", cosine_col(F.col("v"), query).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc("id"))
-        .limit(k)
-        .select("id", F.round("cosine", 6).alias("cosine"))
-    )
 
 
 def build_ivf_index(
@@ -196,29 +146,6 @@ def build_ivf_index(
     with open(os.path.join(out_path, "_centroids.json"), "w") as f:
         json.dump(centroids.tolist(), f)
     return centroids
-
-
-def ivf_topk_from_index(
-    spark, index_path: str, query: list[float], k: int = 10, n_probe: int = 2
-) -> DataFrame:
-    """IVF top-k over a stored index: nearest lists chosen driver-side
-    from the persisted centroids, scan prunes to those partitions,
-    exact cosine inside — no assignment recompute, no UDFs."""
-    import json
-    import os
-
-    with open(os.path.join(index_path, "_centroids.json")) as f:
-        centroids = np.asarray(json.load(f), dtype=np.float64)
-    q = np.asarray(query, dtype=np.float64)
-    qd = ((centroids - q) ** 2).sum(axis=1)
-    probe = [int(i) for i in np.argsort(qd)[:n_probe]]
-    cand = spark.read.parquet(index_path).where(F.col("list_id").isin(probe))
-    return (
-        cand.select("id", cosine_col(F.col("v"), query).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc("id"))
-        .limit(k)
-        .select("id", F.round("cosine", 6).alias("cosine"))
-    )
 
 
 def kmeans_fit(
@@ -329,50 +256,6 @@ def make_ivf_assign_udf(centroids: np.ndarray):
         return pd.Series(d2.argmin(axis=1).astype(np.int32))
 
     return ivf_assign
-
-
-def ivf_topk(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    train_sample: int = 2000,
-    seed: int = 13,
-) -> DataFrame:
-    """IVF approximate top-k: k-means coarse quantizer (fit driver-side
-    on a bounded deterministic sample), vectors partitioned into
-    inverted lists by nearest centroid, queries scan only the
-    ``n_probe`` nearest lists with exact cosine inside.
-
-    NOTE this inline form is the fit-at-query-time CONVENIENCE/test
-    path: it collects a bounded train sample per call. Production is
-    ``build_ivf_index`` + ``ivf_topk_from_index`` (fit once, assignment
-    persisted as a partition column, queries prune with zero UDFs and
-    zero collects); the contract query uses ``ivf_topk_pinned``
-    (literal centroids, no fit at all)."""
-    sample = np.stack(
-        [
-            np.asarray(r[0], dtype=np.float64)
-            for r in df.select(vec_col).orderBy(id_col).limit(train_sample).collect()
-        ]
-    )
-    centroids = kmeans_fit(sample, min(n_lists, len(sample)), seed=seed)
-    q = np.asarray(query, dtype=np.float64)
-    qd = ((centroids - q) ** 2).sum(axis=1)
-    probe = [int(i) for i in np.argsort(qd)[:n_probe]]
-
-    assign = make_ivf_assign_udf(centroids)
-    lists = df.withColumn("_list", assign(F.col(vec_col)))
-    cand = lists.where(F.col("_list").isin(probe))
-    return (
-        cand.select(F.col(id_col).alias("id"), cosine_col(F.col(vec_col), query).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc("id"))
-        .limit(k)
-        .select("id", F.round("cosine", 6).alias("cosine"))
-    )
 
 
 def cosine_near_dup_pairs(

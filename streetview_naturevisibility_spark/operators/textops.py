@@ -23,13 +23,6 @@ STOPWORDS = {
 }
 
 
-def lang_score_col(text_col: str, lang: str):
-    """score(lang) = |distinct_tokens ∩ stopwords(lang)| (JVM-only)."""
-    toks = F.array_distinct(F.split(F.col(text_col), " "))
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.array_intersect(toks, sw))
-
-
 def lang_id_col(text_col: str):
     """Heuristic language ID: argmax over stopword hit counts, fold
     tie-break (first language in alphabetical order wins ties) — the
@@ -1342,21 +1335,6 @@ def dsir_select(
 # broadcast weight join + one per-doc-sum shuffle, exactly the
 # dsir_score plan.
 # ------------------------------------------------------------------
-def _clf_feature_rows(docs, text_col, id_col, n_buckets):
-    """(id, b, inv_n) rows: each hashed-gram instance of a doc with
-    the doc's 1/n_feats weight (fastText length normalization). The
-    bucket array is materialized once per row so explode and size see
-    the same computation (no double hashing)."""
-    arr = hashed_ngram_buckets_col(text_col, n_buckets)
-    return docs.select(
-        F.col(id_col).alias("id"), arr.alias("_fb")
-    ).select(
-        "id",
-        F.explode("_fb").alias("b"),
-        (F.lit(1.0) / F.size("_fb")).alias("inv_n"),
-    )
-
-
 def train_quality_classifier(
     pos_texts: list[str],
     neg_texts: list[str],
@@ -1453,53 +1431,6 @@ def score_quality_classifier(
     return bs.crossJoin(F.broadcast(w_one_row)).select(
         F.col("id").alias(id_col),
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("clf_prob"),
-    )
-
-
-def score_quality_classifier_streaming(
-    docs: DataFrame,
-    weights: np.ndarray,
-    bias: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Streaming-safe classifier scoring: fully STATELESS per-row plan
-    (no aggregation, no watermark) usable inside ``readStream -> ...
-    -> writeStream`` append mode — the batch scorer's per-doc-margin
-    groupBy is a streaming aggregation and would force update mode.
-
-    Shape: the bucket array is computed by the same pure-codegen
-    md5-prefix hash as the batch path (JVM side), then ONE vectorized
-    Arrow UDF maps each array to its margin by NumPy fancy-indexing
-    into the closure-held weight vector (O(1) per probe — a literal
-    Spark map would linear-scan its 4096 entries per lookup). NULL
-    texts are filtered (they are ABSENT from the batch scorer's
-    output; batch == stream row-for-row is pytest-gated).
-    """
-    from pyspark.sql.types import DoubleType
-
-    n_buckets = len(weights)
-    w = np.asarray(weights, dtype=np.float64)
-    b = float(bias)
-
-    @F.pandas_udf(DoubleType())
-    def margin(bs: pd.Series) -> pd.Series:
-        out = np.empty(len(bs))
-        for i, arr in enumerate(bs):
-            a = np.asarray(arr, dtype=np.int64)
-            out[i] = w[a].sum() / len(a) + b
-        return pd.Series(out)
-
-    arr = hashed_ngram_buckets_col(text_col, n_buckets)
-    return (
-        docs.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col), arr.alias("_fb"))
-        .select(
-            id_col,
-            F.round(
-                F.lit(1.0) / (F.lit(1.0) + F.exp(-margin(F.col("_fb")))), 6
-            ).alias("clf_prob"),
-        )
     )
 
 

@@ -44,7 +44,7 @@ def prepare_pages(
     ``engine="jvm"``: the extraction regexes and the Krüger UTM series
     as pure Column expressions — whole-stage codegen, zero Python
     workers (text byte-identical to the Arrow kernel, pytest-gated;
-    x/y agree to ~1e-9 m, see geo/utm.utm_cols). Slower per-core on
+    x/y agree to ~1e-9 m, see geo/utm.with_utm). Slower per-core on
     Arrow-friendly payloads, but it threads at true N (no ~2N Python
     oversubscription), which is why it holds the better 8->32-core
     scaling number (BENCH/BASELINE.md) and remains the choice when

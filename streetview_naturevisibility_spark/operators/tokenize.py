@@ -3,12 +3,11 @@
 Spark-first shape: the merge table is learned ONCE driver-side from a
 BOUNDED sample's word-frequency table (the word counting itself is
 distributed — Arrow-batched pre-tokenization, one word shuffle), then
-broadcast to every executor; encoding is an Arrow-batched pandas UDF
-with a per-batch distinct-word memo, so the hot path is O(distinct
-words) merge loops per batch and ZERO shuffle — a map-only stage at
-any corpus size. Replaces the whitespace/regex token-count heuristics
-(`token_count_col`) wherever a real subword count is wanted (packing,
-token budgets).
+broadcast to every executor; counting is an Arrow-batched pandas UDF
+with a distinct-word memo, so the hot path is O(distinct words) merge
+loops and ZERO shuffle — a map-only stage at any corpus size. Replaces
+the whitespace/regex token-count heuristics (`token_count_col`)
+wherever a real subword count is wanted (packing, token budgets).
 
 The reference has no tokenizer; the method is Sennrich et al. 2016
 (see functions/bpe.py). Training is deliberately sample-bounded: the
@@ -26,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.bpe import encode_text, encode_word, pretokenize, train_bpe
+from ..functions.bpe import encode_word, pretokenize, train_bpe
 
 
 def corpus_word_freqs(
@@ -90,9 +89,10 @@ def _ranks_bc(spark: SparkSession, merges: list[tuple[str, str]]):
 # (spark.python.worker.reuse default), and this module is importable on
 # executors, so a module-level cache survives between tasks and turns
 # the per-task re-encode of the hot vocabulary into dict hits. Keyed by
-# a fingerprint of the merge list (a new tokenizer invalidates the
-# cache); bounded — adversarial corpora with unbounded distinct words
-# (e.g. random-digit junk) would otherwise grow it without limit.
+# the merge tuple itself, compared by equality (a hash fingerprint
+# would let two colliding tokenizers share counts); bounded on every
+# insert — adversarial corpora with unbounded distinct words (e.g.
+# random-digit junk) would otherwise grow it without limit.
 _COUNT_CACHE: dict = {}
 _COUNT_CACHE_KEY: object = None
 _COUNT_CACHE_CAP = 2_000_000
@@ -100,32 +100,10 @@ _COUNT_CACHE_CAP = 2_000_000
 
 def _count_cache_for(key) -> dict:
     global _COUNT_CACHE_KEY
-    if _COUNT_CACHE_KEY != key or len(_COUNT_CACHE) > _COUNT_CACHE_CAP:
+    if _COUNT_CACHE_KEY != key or len(_COUNT_CACHE) >= _COUNT_CACHE_CAP:
         _COUNT_CACHE.clear()
         _COUNT_CACHE_KEY = key
     return _COUNT_CACHE
-
-
-def bpe_encode(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """-> (id, tokens array<string>). Broadcast ranks, Arrow-batched
-    encode with a per-batch distinct-word memo; no shuffle."""
-    bc = _ranks_bc(df.sparkSession, merges)
-
-    @F.pandas_udf("array<string>")
-    def enc(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        ranks = bc.value
-        cache: dict[str, tuple[str, ...]] = {}  # per task (iterator form)
-        for batch in texts:
-            yield batch.map(
-                lambda t: None if t is None else encode_text(t, ranks, cache)
-            )
-
-    return df.select(F.col(id_col), enc(F.col(text_col)).alias("tokens"))
 
 
 def bpe_token_count(
@@ -134,10 +112,11 @@ def bpe_token_count(
     text_col: str = "text",
     out_col: str = "n_tokens_bpe",
 ) -> DataFrame:
-    """Append a real subword count (packing/budget input). Same kernel
-    as ``bpe_encode`` but only the length crosses Arrow back."""
+    """Append a real subword count (packing/budget input): the BPE
+    encode kernel runs per distinct word, only the length crosses
+    Arrow back."""
     bc = _ranks_bc(df.sparkSession, merges)
-    key = hash(tuple(merges))
+    key = tuple(merges)
 
     @F.pandas_udf("long")
     def cnt(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -155,6 +134,8 @@ def bpe_token_count(
                 c = cache.get(w)
                 if c is None:
                     c = len(encode_word(w, ranks))
+                    if len(cache) >= _COUNT_CACHE_CAP:
+                        cache.clear()
                     cache[w] = c
                 total += c
             return total
@@ -163,78 +144,3 @@ def bpe_token_count(
             yield batch.map(n_tok)
 
     return df.withColumn(out_col, cnt(F.col(text_col)))
-
-
-def save_merges(
-    spark: SparkSession, merges: list[tuple[str, str]], path: str
-) -> None:
-    """Persist the learned merge list as parquet (rank, left, right) —
-    the tokenizer is a model artifact; training once and reusing it
-    across corpus versions is the published regime."""
-    spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "rank int, left string, right string",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_merges(spark: SparkSession, path: str) -> list[tuple[str, str]]:
-    rows = spark.read.parquet(path).orderBy("rank").collect()
-    return [(r.left, r.right) for r in rows]
-
-
-def bpe_vocab(merges: list[tuple[str, str]]) -> dict[str, int]:
-    """Deterministic symbol->id table: byte-order-sorted single
-    characters and ``c</w>`` forms reachable from the merges' symbol
-    inventory first, then each merge's output symbol in rank order
-    (the standard BPE vocab construction: base alphabet + one new
-    symbol per merge). Unknown base characters at encode time map to
-    ``unk_id = len(vocab)``."""
-    from ..functions.bpe import EOW
-
-    base: set[str] = set()
-    for a, b in merges:
-        for s in (a, b):
-            stripped = s[:-len(EOW)] if s.endswith(EOW) else s
-            for ch in stripped:
-                base.add(ch)
-                base.add(ch + EOW)
-    vocab: dict[str, int] = {}
-    for s in sorted(base):
-        vocab[s] = len(vocab)
-    for a, b in merges:
-        m = a + b
-        if m not in vocab:
-            vocab[m] = len(vocab)
-    return vocab
-
-
-def bpe_encode_ids(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """-> (id, token_ids array<int>) — the shape a training pipeline
-    consumes (feed to ``pack_assignments`` via ``F.size`` for exact
-    packed budgets). Symbols outside the vocab (characters the sample
-    never saw) map to the single reserved unk id = len(vocab). Same
-    broadcast + Arrow-batched plumbing as ``bpe_encode``."""
-    vocab = bpe_vocab(merges)
-    unk = len(vocab)
-    spark = df.sparkSession
-    bc_r = _ranks_bc(spark, merges)
-    bc_v = spark.sparkContext.broadcast(vocab)
-
-    @F.pandas_udf("array<int>")
-    def enc(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        ranks = bc_r.value
-        v = bc_v.value
-        cache: dict[str, tuple[str, ...]] = {}  # per task (iterator form)
-        for batch in texts:
-            yield batch.map(
-                lambda t: None
-                if t is None
-                else [v.get(s, unk) for s in encode_text(t, ranks, cache)]
-            )
-
-    return df.select(F.col(id_col), enc(F.col(text_col)).alias("token_ids"))

@@ -1,57 +1,18 @@
-"""Session windows over the events stream — the engine's custom
-stateful streaming operator (``applyInPandasWithState``).
+"""Session windows over the events table.
 
-Two twinned forms:
+``sessionize_batch``: gaps-and-islands in pure Spark SQL — per-user
+sessions split where the inter-event gap exceeds ``gap`` (lag +
+conditional cumsum + groupBy). Exact, one shuffle, SQL-expressible
+(the DuckDB oracle in __spark_entry__ mirrors it token for token).
 
-- ``sessionize_batch``: gaps-and-islands in pure Spark SQL — per-user
-  sessions split where the inter-event gap exceeds ``gap`` (lag +
-  conditional cumsum + groupBy). Exact, one shuffle, SQL-expressible
-  (the DuckDB oracle in __spark_entry__ mirrors it token for token).
-- ``sessionize_stream``: the same semantics incrementally via
-  ``applyInPandasWithState`` with event-time timeouts: per-user state
-  holds the open session; events extend it or close it (gap exceeded);
-  a session is EMITTED when a newer event closes it or when the
-  watermark passes ``last_event + gap`` (GroupStateTimeout.EventTime).
-  Streaming results equal the batch twin for every session the
-  watermark has closed (tested).
-
-Timestamps are compared in integer MICROSECONDS end to end
-(unix_micros / epoch_us / int64-ns//1000) so batch, stream and oracle
-can never disagree on sub-second gaps.
+Timestamps are compared in integer MICROSECONDS (unix_micros) so the
+engine and the oracle can never disagree on sub-second gaps.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-        StructField("sum_value", DoubleType()),
-    ]
-)
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n", LongType()),
-        StructField("sv", DoubleType()),
-    ]
-)
 
 
 def sessionize_batch(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
@@ -88,95 +49,3 @@ def sessionize_batch(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value").alias("sum_value"),
     ).drop("sess_id")
-
-
-def _make_session_fn(gap_us: int):
-    def fn(key, pdf_iter, state: GroupState):
-        user_id = key[0]
-        if state.hasTimedOut:
-            start, last, n, sv = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [pd.to_datetime(start, unit="us")],
-                    "session_end": [pd.to_datetime(last, unit="us")],
-                    "n_events": [n],
-                    "sum_value": [sv],
-                }
-            )
-            return
-        batches = [p for p in pdf_iter]
-        rows = pd.concat(batches) if batches else pd.DataFrame()
-        closed: list[tuple[int, int, int, float]] = []
-        if state.exists:
-            start, last, n, sv = state.get
-        else:
-            start = None
-            last = n = 0
-            sv = 0.0
-        if not rows.empty:
-            rows = rows.sort_values(["ts", "event_id"])
-            us = rows["ts"].astype("int64").to_numpy() // 1000  # ns -> us
-            vals = rows["value"].to_numpy()
-            for t, v in zip(us, vals):
-                t = int(t)
-                if start is None:
-                    start, last, n, sv = t, t, 1, float(v)
-                elif t - last > gap_us:
-                    closed.append((start, last, n, sv))
-                    start, last, n, sv = t, t, 1, float(v)
-                else:
-                    last, n, sv = t, n + 1, sv + float(v)
-        if start is not None:
-            state.update((int(start), int(last), int(n), float(sv)))
-            # close the open session once the WATERMARK passes last+gap
-            state.setTimeoutTimestamp((int(last) + gap_us) // 1000)
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": user_id,
-                    "session_start": pd.to_datetime([c[0] for c in closed], unit="us"),
-                    "session_end": pd.to_datetime([c[1] for c in closed], unit="us"),
-                    "n_events": [c[2] for c in closed],
-                    "sum_value": [c[3] for c in closed],
-                }
-            )
-
-    return fn
-
-
-def sessionize_stream(
-    spark: SparkSession,
-    events_path: str,
-    out_path: str,
-    checkpoint: str,
-    gap_seconds: int = 1800,
-    watermark: str = "1 second",
-) -> None:
-    """Incremental sessionization over a file stream; closed sessions
-    append to ``out_path`` (AvailableNow, so catch-up runs terminate)."""
-    schema = spark.read.parquet(events_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(events_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .select("user_id", "event_id", "ts", "value")
-    )
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        _make_session_fn(int(gap_seconds) * 1_000_000),
-        SESSION_SCHEMA,
-        _STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -5,6 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from streetview_naturevisibility_spark import cli
 from streetview_naturevisibility_spark.session import get_spark
 from streetview_naturevisibility_spark.fixtures.generate import write_fixtures
 
@@ -25,6 +26,33 @@ def fixture_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("fixtures")
     write_fixtures(str(d), n_pages=500, n_roads=60)
     return str(d)
+
+
+@pytest.fixture(scope="session")
+def run_cli_pipeline(spark, fixture_dir):
+    """Runs ``cli pipeline`` in-process over the fixture tables, exactly
+    as ``spark-submit ... cli.py pipeline`` would, and returns ``out``."""
+
+    def run(out: str) -> str:
+        saved = sys.argv
+        sys.argv = [
+            "svnv-spark", "--master", "local[4]", "pipeline",
+            "--roads", os.path.join(fixture_dir, "roads.parquet"),
+            "--pages", os.path.join(fixture_dir, "web_pages.parquet"),
+            "--out", out,
+        ]
+        try:
+            cli.main()
+        finally:
+            sys.argv = saved
+        return out
+
+    return run
+
+
+@pytest.fixture(scope="session")
+def pipeline_out(run_cli_pipeline, tmp_path_factory):
+    return run_cli_pipeline(str(tmp_path_factory.mktemp("pipeline_out")))
 
 
 SF_DIR = "/root/testdata/sf0.001"

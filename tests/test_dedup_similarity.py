@@ -186,7 +186,7 @@ class TestIVF:
     def test_ivf_topk_contains_query_and_valid_cosines(self, spark):
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
         q = list(emb.where(F.col("vec_id") == 7).first().embedding)
-        got = similarity.ivf_topk(emb, q, k=10, n_lists=8, n_probe=2).toPandas()
+        got = similarity.ivf_topk_pinned(emb, q, k=10, n_lists=8, n_probe=2).toPandas()
         # the query's own vector lives in the nearest list -> rank 1
         assert got["id"].iloc[0] == 7
         assert got["cosine"].iloc[0] == pytest.approx(1.0, abs=1e-6)
@@ -204,8 +204,8 @@ class TestIVF:
     def test_ivf_deterministic(self, spark):
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
         q = list(emb.where(F.col("vec_id") == 7).first().embedding)
-        a = similarity.ivf_topk(emb, q, k=5).toPandas()
-        b = similarity.ivf_topk(emb.repartition(9), q, k=5).toPandas()
+        a = similarity.ivf_topk_pinned(emb, q, k=5).toPandas()
+        b = similarity.ivf_topk_pinned(emb.repartition(9), q, k=5).toPandas()
         assert a["id"].tolist() == b["id"].tolist()
 
     def test_ivf_pinned_matches_numpy_restricted_bruteforce(self, spark):
@@ -381,54 +381,6 @@ class TestFingerprintValues:
                 assert int(r.fp) == truth[r.doc_id]
                 checked += 1
         assert checked == len(truth) > 0
-
-
-class TestPersistedIndex:
-    """ANN scale path: the index is built once (signature / list id as a
-    stored partition column); queries reuse it with NO python UDF in the
-    plan and partition pruning on the probe buckets."""
-
-    def _plan(self, df) -> str:
-        import io
-        from contextlib import redirect_stdout
-
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
-    def test_ann_index_reused_same_rows_no_udf(self, spark, tmp_path):
-        emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-        q = list(emb.where(F.col("vec_id") == 7).first().embedding)
-        path = str(tmp_path / "ann_idx")
-        similarity.build_ann_index(emb, path, n_planes=6, dim=64)
-        got = similarity.ann_topk_from_index(spark, path, q, k=10, n_planes=6)
-        direct = similarity.ann_topk_lsh(emb, q, k=10, n_planes=6).toPandas()
-        plan = self._plan(got)
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-        assert "PartitionFilters" in plan and "sig" in plan
-        gp = got.toPandas()
-        assert gp["id"].tolist() == direct["id"].tolist()
-        assert np.allclose(gp["cosine"], direct["cosine"])
-        # second query against the same index: still no signature UDF
-        q2 = list(emb.where(F.col("vec_id") == 42).first().embedding)
-        got2 = similarity.ann_topk_from_index(spark, path, q2, k=5, n_planes=6)
-        assert "ArrowEvalPython" not in self._plan(got2)
-        assert got2.count() == 5
-
-    def test_ivf_index_reused_same_rows_no_udf(self, spark, tmp_path):
-        emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-        q = list(emb.where(F.col("vec_id") == 7).first().embedding)
-        path = str(tmp_path / "ivf_idx")
-        similarity.build_ivf_index(emb, path, n_lists=8)
-        got = similarity.ivf_topk_from_index(spark, path, q, k=10, n_probe=2)
-        direct = similarity.ivf_topk(emb, q, k=10, n_lists=8, n_probe=2).toPandas()
-        plan = self._plan(got)
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-        assert "PartitionFilters" in plan and "list_id" in plan
-        gp = got.toPandas()
-        assert gp["id"].tolist() == direct["id"].tolist()
-        assert np.allclose(gp["cosine"], direct["cosine"])
 
 
 class TestSimhashMd5Portable:

@@ -1,5 +1,5 @@
-"""Golden end-to-end: the flagship pipeline's gvi_points and per-road
-aggregates vs a pandas-composed oracle (reference semantics chained:
+"""Golden end-to-end: ``cli pipeline``'s gvi_points and gvi_per_road
+outputs vs a pandas-composed oracle (reference semantics chained:
 sample -> snap -> score -> aggregate -> metrics)."""
 
 import os
@@ -12,20 +12,17 @@ from streetview_naturevisibility_spark.fixtures.generate import gen_roads, gen_w
 from streetview_naturevisibility_spark.functions.labels import process_labels
 from streetview_naturevisibility_spark.functions.text import token_labels_kernel
 from streetview_naturevisibility_spark.geo.utm import lonlat_to_utm
-from streetview_naturevisibility_spark.plans.pipeline import run_pipeline
 from tests.oracle import oracle_knn_snap, oracle_sample_points
 
 
 @pytest.fixture(scope="module")
-def engine_out(spark, fixture_dir):
-    roads = spark.read.parquet(os.path.join(fixture_dir, "roads.parquet"))
-    pages_raw = spark.read.parquet(os.path.join(fixture_dir, "web_pages.parquet")).drop(
-        "lon", "lat", "text"
-    )
-    out = run_pipeline(roads, pages_raw)
+def engine_out(spark, pipeline_out):
+    def read(name):
+        return spark.read.parquet(os.path.join(pipeline_out, name))
+
     return {
-        "gvi": out["gvi_points"].orderBy("point_id").toPandas(),
-        "per_road": out["gvi_per_road"].toPandas(),
+        "gvi": read("gvi_points").orderBy("point_id").toPandas(),
+        "per_road": read("gvi_per_road").orderBy("road_id").toPandas(),
     }
 
 

@@ -144,15 +144,14 @@ class TestGVI:
 
 
 class TestPipelineE2E:
-    def test_flag_semantics_and_determinism(self, spark, fixture_dir):
-        from streetview_naturevisibility_spark.plans.pipeline import run_pipeline
+    def test_flag_semantics_and_determinism(
+        self, spark, pipeline_out, run_cli_pipeline, tmp_path
+    ):
+        def gvi_points(out):
+            path = os.path.join(out, "gvi_points")
+            return spark.read.parquet(path).orderBy("point_id").toPandas()
 
-        roads = spark.read.parquet(os.path.join(fixture_dir, "roads.parquet"))
-        pages_raw = spark.read.parquet(os.path.join(fixture_dir, "web_pages.parquet")).drop(
-            "lon", "lat", "text"
-        )
-        out = run_pipeline(roads, pages_raw)
-        gvi = out["gvi_points"].orderBy("point_id").toPandas()
+        gvi = gvi_points(pipeline_out)
 
         # misses: gvi null, missing, no error, pano False, distance null
         miss = gvi[gvi["page_url"] == ""]
@@ -170,11 +169,12 @@ class TestPipelineE2E:
         pano_hits = hits[hits["is_panoramic"]]
         assert (~pano_hits["missing"]).all()
 
-        per_road = out["gvi_per_road"].toPandas()
+        per_road = spark.read.parquet(os.path.join(pipeline_out, "gvi_per_road")).toPandas()
         assert (per_road["total_points"] >= per_road["null_points_count"]).all()
 
-        # determinism: re-run equals
-        gvi2 = run_pipeline(roads, pages_raw)["gvi_points"].orderBy("point_id").toPandas()
+        # determinism: a fresh run (own checkpoint dir, nothing resumed)
+        # writes identical points
+        gvi2 = gvi_points(run_cli_pipeline(str(tmp_path / "again")))
         pd.testing.assert_frame_equal(gvi.reset_index(drop=True), gvi2.reset_index(drop=True))
 
 

@@ -8,9 +8,7 @@ from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.geo.hexgrid import (
     hex_cell_np,
-    hex_cell_py,
     hex_cell_sql_ctes,
-    hex_center_cols,
     hex_distance_py,
     hex_neighbors_col,
     hex_parent_col,

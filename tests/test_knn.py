@@ -59,22 +59,6 @@ class TestKnnSnap:
         hits = snapped[snapped["page_url"] != ""]
         assert (hits["snap_distance"] <= 25.0).all()
 
-    def test_salted_variant_identical(self, spark, fixture_dir, snapped):
-        roads = spark.read.parquet(os.path.join(fixture_dir, "roads.parquet"))
-        pages_raw = spark.read.parquet(os.path.join(fixture_dir, "web_pages.parquet"))
-        points = sample_points(roads, spacing=50)
-        pages = prepare_pages(pages_raw.drop("lon", "lat"), keep_text=False)
-        salted = (
-            knn_snap(points, pages, max_distance=50.0, salt=8)
-            .orderBy("point_id")
-            .toPandas()
-        )
-        assert (salted["page_url"].to_numpy() == snapped["page_url"].to_numpy()).all()
-        a = salted["snap_distance"].to_numpy(dtype=float)
-        b = snapped["snap_distance"].to_numpy(dtype=float)
-        assert (np.isnan(a) == np.isnan(b)).all()
-        assert np.allclose(a[~np.isnan(a)], b[~np.isnan(b)])
-
     def test_skewed_single_cell(self, spark):
         """Adversarial skew: 50% of pages in one spot still correct."""
         rng = np.random.RandomState(3)
@@ -114,7 +98,6 @@ class TestKnnSnap:
                 spark.createDataFrame(points_pd),
                 spark.createDataFrame(pages_pd),
                 max_distance=50.0,
-                salt=16,
             )
             .orderBy("point_id")
             .toPandas()

@@ -1,17 +1,14 @@
-"""Physical layout (partition pruning, bucketed joins) + operator
-variants (grouped-map kNN, streaming dedup)."""
+"""Physical layout (partition pruning, bucketed joins) + streaming
+dedup."""
 
 import io
 import os
 from contextlib import redirect_stdout
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from streetview_naturevisibility_spark.operators.knn import knn_snap, knn_snap_grouped
-from streetview_naturevisibility_spark.operators.sampling import sample_points
 from streetview_naturevisibility_spark.operators.tiling import prepare_pages
 from streetview_naturevisibility_spark.sources.layout import (
     read_bucketed,
@@ -89,25 +86,6 @@ class TestBucketedJoin:
             spark.sql("DROP TABLE IF EXISTS bt_b")
 
 
-class TestGroupedKnnVariant:
-    def test_identical_to_join_reduce(self, spark, fixture_dir):
-        roads = spark.read.parquet(os.path.join(fixture_dir, "roads.parquet"))
-        pages_raw = spark.read.parquet(os.path.join(fixture_dir, "web_pages.parquet"))
-        points = sample_points(roads, spacing=50)
-        pages = prepare_pages(pages_raw.drop("lon", "lat"), keep_text=False)
-        a = knn_snap(points, pages, max_distance=50.0).orderBy("point_id").toPandas()
-        g = (
-            knn_snap_grouped(points, pages, max_distance=50.0)
-            .orderBy("point_id")
-            .toPandas()
-        )
-        assert (a["page_url"].to_numpy() == g["page_url"].to_numpy()).all()
-        da = a["snap_distance"].to_numpy(dtype=float)
-        dg = g["snap_distance"].to_numpy(dtype=float)
-        assert (np.isnan(da) == np.isnan(dg)).all()
-        assert np.allclose(da[~np.isnan(da)], dg[~np.isnan(dg)])
-
-
 class TestStreamDedup:
     def test_duplicates_dropped_across_batches(self, spark, tmp_path):
         from streetview_naturevisibility_spark.streaming.events import (
@@ -167,37 +145,3 @@ class TestStreamDedup:
         n_texts = docs.select("text").distinct().count()
         assert got.count() == n_texts
         assert got.select("text").distinct().count() == n_texts
-
-
-class TestSkewSalting:
-    def test_hot_cells_detected_and_salted(self, spark):
-        # 10k rows in one cell, 50 in another
-        big = spark.range(10000).select(
-            F.lit(111).alias("cell_id"),
-            F.concat(F.lit("u"), F.col("id").cast("string")).alias("url"),
-        )
-        small = spark.range(50).select(
-            F.lit(222).alias("cell_id"),
-            F.concat(F.lit("v"), F.col("id").cast("string")).alias("url"),
-        )
-        df = big.unionByName(small)
-        from streetview_naturevisibility_spark.operators.skew import (
-            hot_cells,
-            salt_hot_cells,
-        )
-
-        hc = hot_cells(df, threshold=1000).collect()
-        assert [r.cell_id for r in hc] == [111]
-        salted = salt_hot_cells(df, threshold=1000, salt=8)
-        dist = (
-            salted.groupBy("cell_id", "salt")
-            .count()
-            .orderBy("cell_id", "salt")
-            .collect()
-        )
-        hot_groups = [r for r in dist if r.cell_id == 111]
-        cold_groups = [r for r in dist if r.cell_id == 222]
-        assert len(hot_groups) == 8  # split into 8 bounded sub-groups
-        assert max(r["count"] for r in hot_groups) < 10000 * 0.25
-        assert len(cold_groups) == 1 and cold_groups[0].salt == 0
-        assert salted.count() == 10050  # no rows gained/lost

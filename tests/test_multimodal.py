@@ -32,7 +32,7 @@ class TestMultimodal:
         assert all(len(p) == 64 for p in out["pixels"])
 
     def test_frame_sampling_expansion(self, spark, media):
-        frames = mm.sample_video_frames(media, every_ms=1000).toPandas()
+        frames = mm.video_frame_features(media, every_ms=1000).toPandas()
         # one video every 3 ids, duration (i%7+1)*1500ms -> >=1 frame each
         vids = frames["media_id"].unique()
         assert len(vids) == 30
@@ -352,12 +352,11 @@ class TestMp4Container:
             mp4_samples(b"\x00\x00\x00\x0cftypisom")  # no moov
 
     def test_spark_frame_sampling_real_bytes(self, spark):
-        import hashlib
-
         from streetview_naturevisibility_spark.functions.mp4box import mp4_samples
         from streetview_naturevisibility_spark.operators.multimodal import (
-            sample_video_frames,
+            decode_image,
             synth_mp4,
+            video_frame_features,
         )
 
         rows = [
@@ -369,19 +368,19 @@ class TestMp4Container:
             "media_id: long, kind: string, payload: binary, mime: string, "
             "width: int, height: int, duration_ms: int",
         )
-        out = sample_video_frames(media, every_ms=1000).orderBy(
+        out = video_frame_features(media, every_ms=1000).orderBy(
             "media_id", "frame_idx"
         ).collect()
-        # 6 frames at 500ms -> sampled at 0,1000,2000 -> wait: 0..2500ms,
-        # every 1000 -> t in {0,1000,2000} = 3 frames per video
+        # 6 frames at 500ms span 0..2500ms; sampling every 1000ms keeps
+        # t in {0,1000,2000} = 3 frames per video
         assert len(out) == 30
-        # the digest is of the REAL frame bytes from the container
+        # the features are of the REAL frame bytes from the container
         payload = synth_mp4(3)
         s0 = mp4_samples(payload)[0]
-        want = hashlib.sha256(payload[s0[0] : s0[0] + s0[1]]).hexdigest()
+        want = decode_image(payload[s0[0] : s0[0] + s0[1]], 0, 0)
         got = [r for r in out if r.media_id == 3 and r.frame_idx == 0][0]
-        assert got.frame_sha256 == want
-        assert got.t_ms == 0.0 and got.frame_bytes == s0[1]
+        assert got.codec == "mjpeg" and got.t_ms == 0.0
+        assert got.mean_luma == np.float32(want.mean())
 
 
 class TestCodecEdgeCases:
@@ -543,8 +542,6 @@ class TestMjpegVideoDecode:
         )
         out = mm.video_frame_features(media, every_ms=1000).toPandas()
         assert len(out) == 1 and out["codec"].iloc[0] == "fake"
-        frames = mm.sample_video_frames(media, every_ms=1000).toPandas()
-        assert len(frames) == 1
 
 
 class TestPngPropertyRoundtrip:

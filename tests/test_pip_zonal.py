@@ -1,5 +1,6 @@
-"""PIP join + zonal stats vs NumPy oracles (plumbing: the cell/bin
-prefilter must not lose any candidate the exact kernel accepts)."""
+"""Point-in-polygon membership + zonal stats vs NumPy oracles
+(plumbing: the bin prefilter must not lose any candidate the exact
+kernel accepts)."""
 
 import os
 
@@ -16,11 +17,12 @@ from streetview_naturevisibility_spark.fixtures.generate import (
 )
 from streetview_naturevisibility_spark.geo.polygon import (
     dist_point_to_segments,
+    dist_points_to_segments,
     parse_wkt_coords,
     points_in_polygon,
 )
 from streetview_naturevisibility_spark.geo.utm import lonlat_to_utm
-from streetview_naturevisibility_spark.operators.pip import pip_join
+from streetview_naturevisibility_spark.operators.pip import make_pip_flag_udf
 from streetview_naturevisibility_spark.operators.sampling import sample_points
 from streetview_naturevisibility_spark.operators.tiling import prepare_pages
 from streetview_naturevisibility_spark.operators.zonal import zonal_histogram, zonal_mean
@@ -35,10 +37,13 @@ def pages_prepared(spark, fixture_dir):
 
 class TestPipJoin:
     def test_boundary_membership_matches_kernel(self, spark, fixture_dir, pages_prepared):
+        """The boundary flag UDF (the contract's pip path) over the
+        prepared pages keeps exactly the pages the kernel puts inside."""
         polygons = spark.read.parquet(os.path.join(fixture_dir, "polygons.parquet"))
-        boundary_only = polygons.where(F.col("polygon_id") == "boundary")
+        wkt = polygons.where(F.col("polygon_id") == "boundary").first().geometry_wkt
+        inside_udf = make_pip_flag_udf(wkt)
         got = (
-            pip_join(pages_prepared, boundary_only)
+            pages_prepared.where(inside_udf(F.col("x"), F.col("y")))
             .select("url")
             .toPandas()["url"]
             .sort_values()
@@ -55,16 +60,22 @@ class TestPipJoin:
         assert in_bbox.sum() > inside.sum()
 
     def test_road_buffer_membership_matches_kernel(self, spark, fixture_dir, pages_prepared):
-        polygons = spark.read.parquet(os.path.join(fixture_dir, "polygons.parquet"))
-        buffers = polygons.where(F.col("kind") == "road_buffer")
-        got = (
-            pip_join(pages_prepared, buffers)
-            .groupBy("polygon_id")
-            .count()
+        """Road-buffer membership by the batch distance kernel (the one
+        isochrone runs per edge batch) over the prepared pages equals
+        the scalar point-to-polyline oracle, per fixture buffer."""
+        polygons = (
+            spark.read.parquet(os.path.join(fixture_dir, "polygons.parquet"))
+            .where(F.col("kind") == "road_buffer")
             .toPandas()
-            .set_index("polygon_id")["count"]
-            .to_dict()
         )
+        pts = pages_prepared.select("x", "y").toPandas()
+        got: dict[str, int] = {}
+        for r in polygons.itertuples():
+            coords = parse_wkt_coords(r.geometry_wkt)
+            d = dist_points_to_segments(pts["x"].to_numpy(), pts["y"].to_numpy(), coords)
+            n = int((d <= r.radius).sum())
+            if n:
+                got[r.polygon_id] = n
         pages = gen_web_pages(500)
         x, y = lonlat_to_utm(pages["lon"].to_numpy(), pages["lat"].to_numpy(), 31)
         expected: dict[str, int] = {}

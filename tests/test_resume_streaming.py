@@ -4,7 +4,6 @@ import os
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.operators.resume import (
@@ -187,67 +186,3 @@ class TestStreamingDecontamination:
         assert all(i % 10 != 3 for i in got) and len(got) == 36
 
 
-class TestStreamingClassifier:
-    def test_stream_scoring_matches_batch(self, spark, tmp_path):
-        """File-stream docs through score_quality_classifier_streaming
-        (stateless per-row plan): probabilities equal the batch
-        scorer's row-for-row to rounding; NULL-text docs absent from
-        both."""
-        import numpy as np
-
-        from streetview_naturevisibility_spark.operators.textops import (
-            score_quality_classifier,
-            score_quality_classifier_streaming,
-            train_quality_classifier,
-        )
-
-        rng = np.random.RandomState(13)
-        voc_a = ["alpha", "beta", "gamma", "delta"]
-        voc_b = ["zork", "quux", "blarg", "fnord"]
-        pos = [
-            " ".join(voc_a[j] for j in rng.randint(0, 4, size=12))
-            for _ in range(30)
-        ]
-        neg = [
-            " ".join(voc_b[j] for j in rng.randint(0, 4, size=12))
-            for _ in range(30)
-        ]
-        w, b = train_quality_classifier(pos, neg, n_buckets=512)
-
-        rows = []
-        for i in range(30):
-            if i == 7:
-                rows.append((i, None))
-            else:
-                voc = voc_a if i % 2 == 0 else voc_b
-                rows.append(
-                    (i, " ".join(voc[j] for j in rng.randint(0, 4, size=10)))
-                )
-        src = str(tmp_path / "src")
-        spark.createDataFrame(rows, "doc_id: long, text: string").repartition(
-            3
-        ).write.mode("overwrite").parquet(src)
-
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        scored = score_quality_classifier_streaming(stream, w, b)
-        out = str(tmp_path / "out")
-        q = (
-            scored.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            r.doc_id: r.clf_prob for r in spark.read.parquet(out).collect()
-        }
-        batch = {
-            r.doc_id: r.clf_prob
-            for r in score_quality_classifier(
-                spark.read.parquet(src), w, b
-            ).collect()
-        }
-        assert set(got) == set(batch) and 7 not in got
-        for k in got:
-            assert got[k] == pytest.approx(batch[k], abs=2e-6)

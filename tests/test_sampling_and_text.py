@@ -16,9 +16,9 @@ from streetview_naturevisibility_spark.functions.text import (
     extract_text_kernel,
     parse_coords_kernel,
     token_labels_kernel,
-    extract_text,
 )
 from streetview_naturevisibility_spark.operators.sampling import sample_points
+from streetview_naturevisibility_spark.operators.tiling import prepare_pages
 from tests.oracle import oracle_sample_points
 
 
@@ -44,9 +44,15 @@ class TestExtractText:
         assert np.abs(coords["lat"].to_numpy() - pages["lat"].to_numpy()).max() < 1e-6
 
     def test_spark_udf_matches_kernel(self, spark, fixture_dir):
+        """The fused page-parser UDF that prepare_pages runs extracts
+        the pinned text for every row."""
         df = spark.read.parquet(os.path.join(fixture_dir, "web_pages.parquet"))
+        parsed = prepare_pages(df.select("url", "html")).withColumnRenamed(
+            "text", "extracted"
+        )
         got = (
-            df.select("url", "text", extract_text(F.col("html")).alias("extracted"))
+            df.select("url", "text")
+            .join(parsed.select("url", "extracted"), "url")
             .withColumn("ok", F.col("text") == F.col("extracted"))
             .agg(F.sum(F.col("ok").cast("int")).alias("n_ok"), F.count("*").alias("n"))
             .collect()[0]

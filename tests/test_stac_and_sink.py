@@ -1,11 +1,7 @@
-"""S9 (local static STAC catalog source) + S11 (PNG debug sink) —
-the last two SURVEY §2 rows, previously scoped out; the query
-semantics (catalog parse, search predicates, lowest-cloud selection,
-NDVI; label->palette render, real PNG bytes) are now implemented, with
-only the reference's network fetch / matplotlib figure composition
-left out as environment capabilities."""
+"""S9 (local static STAC catalog source): catalog parse, search
+predicates, lowest-cloud selection, NDVI and landcover, with only the
+reference's network fetch left out as an environment capability."""
 
-import glob
 import os
 
 import numpy as np
@@ -79,48 +75,6 @@ class TestStacSource:
     def test_no_match_raises(self, spark, catalog):
         with pytest.raises(ValueError, match="no STAC item"):
             stac.ndvi_for_aoi(spark, catalog, AOI, YEAR, max_cloud=1.0)
-
-
-class TestPngDebugSink:
-    def test_written_pngs_roundtrip_to_palette_colors(self, spark, tmp_path):
-        from streetview_naturevisibility_spark.operators.debug_images import (
-            colorize_labels,
-            write_debug_pngs,
-        )
-        from streetview_naturevisibility_spark.operators.multimodal import (
-            decode_png_channels,
-        )
-
-        rng = np.random.RandomState(7)
-        h, w = 12, 18
-        rows = []
-        grids = {}
-        for iid in range(5):
-            for num in (1, 2):
-                g = rng.randint(0, 19, (h, w))
-                grids[(iid, num)] = g
-                rows.append((iid, num, [int(v) for v in g.ravel()], w))
-        df = spark.createDataFrame(
-            rows, "image_id: long, num: int, labels: array<int>, width: int"
-        )
-        out_dir = str(tmp_path / "sample_images")
-        manifest = write_debug_pngs(df, out_dir)
-        assert os.path.exists(os.path.join(out_dir, "_SUCCESS"))
-        assert len(manifest) == 10
-        assert len(glob.glob(os.path.join(out_dir, "*.png"))) == 10
-        for r in manifest.itertuples():
-            got = decode_png_channels(open(r.path, "rb").read())
-            want = colorize_labels(grids[(r.image_id, r.num)])
-            assert np.array_equal(got, want)
-            assert r.n_bytes == os.path.getsize(r.path)
-
-    def test_label_outside_palette_raises(self):
-        from streetview_naturevisibility_spark.operators.debug_images import (
-            colorize_labels,
-        )
-
-        with pytest.raises(ValueError, match="palette range"):
-            colorize_labels(np.array([[0, 19]]))
 
 
 class TestStacNdviCli:

@@ -21,8 +21,8 @@ from streetview_naturevisibility_spark.operators.bloom import (
     build_bloom,
 )
 from streetview_naturevisibility_spark.operators.textops import c4_clean
+from streetview_naturevisibility_spark.operators import tokenize
 from streetview_naturevisibility_spark.operators.tokenize import (
-    bpe_encode,
     bpe_token_count,
     train_bpe_from_corpus,
 )
@@ -200,13 +200,6 @@ def test_bpe_spark_encode_and_count(spark):
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
     merges = train_bpe_from_corpus(df, n_merges=10, sample_docs=100)
     ranks = {p: i for i, p in enumerate(merges)}
-
-    got = {r.doc_id: r.tokens for r in bpe_encode(df, merges).collect()}
-    for did, text in rows:
-        if text is None:
-            assert got[did] is None
-        else:
-            assert got[did] == encode_text(text, ranks), did
 
     cnt = {
         r.doc_id: r.n_tokens_bpe
@@ -475,38 +468,29 @@ def test_bpe_encode_property_roundtrip_and_oracle(freqs, texts):
             assert list(encode_word(w, ranks)) == _oracle_encode(w, merges)
 
 
-def test_bpe_artifact_roundtrip_and_ids(spark, tmp_path):
-    """save_merges -> load_merges roundtrip; bpe_encode_ids maps every
-    token through the deterministic vocab, unknown chars to unk_id."""
-    from streetview_naturevisibility_spark.operators.tokenize import (
-        bpe_encode_ids,
-        bpe_vocab,
-        load_merges,
-        save_merges,
-    )
-
-    freqs = {"low": 5, "lower": 2, "newest": 6, "widest": 3}
-    merges = train_bpe(freqs, 6)
-    path = str(tmp_path / "merges")
-    save_merges(spark, merges, path)
-    assert load_merges(spark, path) == merges
-
-    vocab = bpe_vocab(merges)
-    # base chars + their </w> forms + one new symbol per merge, no gaps
-    assert sorted(vocab.values()) == list(range(len(vocab)))
-    assert all((a + b) in vocab for a, b in merges)
-    unk = len(vocab)
-
-    df = spark.createDataFrame(
-        [(0, "newest low"), (1, "zzz"), (2, None)],
-        "doc_id: long, text: string",
-    )
-    got = {r.doc_id: r.token_ids for r in bpe_encode_ids(df, merges).collect()}
-    ranks = {p: i for i, p in enumerate(merges)}
-    want0 = [vocab[s] for s in encode_text("newest low", ranks)]
-    assert got[0] == want0
-    # 'z' never seen by the trainer -> every symbol is unk
-    assert got[1] == [unk, unk, unk] and got[2] is None
+def test_bpe_count_memo_keyed_by_merges_not_their_hash():
+    """The cross-task count memo must not be shared between two merge
+    lists whose hash() collides (CPython: hash(-1) == hash(-2)), and a
+    cap reached inside a task clears it instead of growing it."""
+    assert hash(-1) == hash(-2)
+    saved = (dict(tokenize._COUNT_CACHE), tokenize._COUNT_CACHE_KEY)
+    try:
+        tokenize._COUNT_CACHE.clear()
+        tokenize._COUNT_CACHE_KEY = None
+        tokenize._count_cache_for(-1)["word"] = 3
+        assert tokenize._count_cache_for(-1) == {"word": 3}
+        assert tokenize._count_cache_for(-2) == {}
+        tokenize._COUNT_CACHE.update((str(i), 1) for i in range(4))
+        cap = tokenize._COUNT_CACHE_CAP
+        tokenize._COUNT_CACHE_CAP = 4
+        try:
+            assert tokenize._count_cache_for(-2) == {}
+        finally:
+            tokenize._COUNT_CACHE_CAP = cap
+    finally:
+        tokenize._COUNT_CACHE.clear()
+        tokenize._COUNT_CACHE.update(saved[0])
+        tokenize._COUNT_CACHE_KEY = saved[1]
 
 
 def test_cli_curate_done_set(spark, tmp_path, capsys):
