@@ -5,14 +5,13 @@ phase-matched repeats, then measure how much of the duplicated passage
 each method recovers:
 
   - grid            chunk_dedup(L)               one aligned pass
-  - grid+shifted    chunk_dedup_shifted(L)       + offset-L/2 pass
   - cdc             chunk_dedup_cdc              content-defined chunks
   - minhash (docs)  minhash_lsh_pairs            doc-granularity layer
 
 The phase argument (proved in tests/test_curation_ops.py::
 TestChunkAlignment): shifting the grid shifts BOTH instances of a
-repeat, so relative phase is invariant — the shifted pass adds nothing
-on phase-mismatched plants. CDC derives boundaries from content, so
+repeat, so relative phase is invariant — a shifted second pass adds
+nothing on phase-mismatched plants. CDC derives boundaries from content, so
 instance position is irrelevant.
 
 Usage: python BENCH/chunk_recall.py [n_docs=512]
@@ -43,7 +42,6 @@ from streetview_naturevisibility_spark.operators.dedup import minhash_lsh_pairs
 from streetview_naturevisibility_spark.operators.textops import (
     chunk_dedup,
     chunk_dedup_cdc,
-    chunk_dedup_shifted,
 )
 from streetview_naturevisibility_spark.session import get_spark
 
@@ -173,7 +171,6 @@ def main() -> None:
 
     legs = [
         recall(lambda d: chunk_dedup(d, chunk_chars=L), "grid"),
-        recall(lambda d: chunk_dedup_shifted(d, chunk_chars=L), "grid+shifted"),
         recall(lambda d: chunk_dedup_cdc(d), "cdc"),
     ]
 

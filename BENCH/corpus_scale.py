@@ -87,9 +87,8 @@ def main() -> None:
     out["stratified_sample_s"] = round(time.time() - t0, 2)
 
     # benchmark decontamination at corpus scale: 1,000-doc blocklist
-    # (benchmark-suite-sized), explode + LEFT SEMI join path (the
-    # measured default — see textops.contaminated_ids docstring for
-    # the strategy A/B). Planting is inherent: the blocklist reuses the
+    # (benchmark-suite-sized), explode + LEFT SEMI join path (see
+    # textops.contaminated_ids). Planting is inherent: the blocklist reuses the
     # same generator, so its 1,000 docs are verbatim copies of corpus
     # doc_ids 0..999 — those (plus their planted near-dups) MUST be
     # flagged, giving a known hit floor of ~1,000.
@@ -97,7 +96,7 @@ def main() -> None:
 
     blk = synthetic_docs(spark, 1000, 8).selectExpr("doc_id AS bid", "text")
     t0 = time.time()
-    n_contam = contaminated_ids(docs, blk, method="join").count()
+    n_contam = contaminated_ids(docs, blk).count()
     out["decontam_join_s"] = round(time.time() - t0, 2)
 
     # adversarial chain-shaped CC: star vs propagation on the SAME

@@ -143,13 +143,11 @@ def main() -> None:
         "any_hit": int(r.any),
     }
 
-    # token-budget select A/B: exact window (whole-stratum sort) vs
-    # bucketed (broadcast per-bucket verdicts + fine-grained window).
-    # Measured over MATERIALIZED parquet with a precomputed n_tokens
-    # column — the realistic shape (the curate funnel passes
-    # tokens_col): the bucketed method's first pass prunes to 3 narrow
-    # columns, which an on-the-fly generated corpus can't express
-    # (there, regenerating text twice dominates and window wins — see
+    # token-budget select (broadcast per-bucket verdicts + fine-grained
+    # window). Measured over MATERIALIZED parquet with a precomputed
+    # n_tokens column — the realistic shape (the curate funnel passes
+    # tokens_col): the first pass prunes to 3 narrow columns, which an
+    # on-the-fly generated corpus can't express (see
     # BENCH/BASELINE.md). Pseudo-quality is hash-derived so every
     # bucket is populated; budgets sized so ~half of each of the 5
     # langs survives — the boundary lands mid-distribution.
@@ -168,20 +166,17 @@ def main() -> None:
     ).write.mode("overwrite").parquet(stage)
     qdocs = spark.read.parquet(stage)
     budget = {"en": n * 4, "de": n * 4, "fr": n * 4, "es": n * 4, "zh": n * 4}
-    for method in ["window", "bucketed"]:
-        t0 = time.perf_counter()
-        kept = token_budget_select(
-            qdocs, budget, method=method, tokens_col="n_tokens"
-        )
-        r = kept.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_tokens").alias("tok"),
-        ).collect()[0]
-        results[f"token_budget_{method}"] = {
-            "wall_s": round(time.perf_counter() - t0, 2),
-            "docs_kept": r.n,
-            "tokens_kept": int(r.tok),
-        }
+    t0 = time.perf_counter()
+    kept = token_budget_select(qdocs, budget, tokens_col="n_tokens")
+    r = kept.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("n_tokens").alias("tok"),
+    ).collect()[0]
+    results["token_budget_bucketed"] = {
+        "wall_s": round(time.perf_counter() - t0, 2),
+        "docs_kept": r.n,
+        "tokens_kept": int(r.tok),
+    }
 
     # --- round-6 additions: C4 cleaning, BPE counting, Bloom anti-join
 

@@ -871,8 +871,8 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids (similarity.ivf_topk_pinned): list assignment and probe
     selection are pure JVM Column expressions the DuckDB twin
     (_ivf_oracle_sql) restates verbatim; zero UDFs in the plan. The
-    production k-means path (similarity.ivf_topk / build_ivf_index)
-    keeps its exact-cosine + determinism pytest oracle."""
+    production k-means path (similarity.build_ivf_index) keeps its
+    exact-cosine + determinism pytest oracle."""
     from streetview_naturevisibility_spark.operators.similarity import ivf_topk_pinned
 
     emb = load(spark, sf_dir, "embeddings")

@@ -546,9 +546,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         max_bucket=args.max_bucket,
         return_metrics=True,
     )
-    clusters = duplicate_clusters(
-        pairs, algorithm=getattr(args, "cc_algorithm", "propagation")
-    )
+    clusters = duplicate_clusters(pairs)
     near = dedup_keep_canonical(exact, clusters)
     n_near = near.count()
     m = metrics.collect()[0]

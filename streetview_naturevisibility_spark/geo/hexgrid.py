@@ -9,8 +9,6 @@ planar meter space with the same *semantics* H3 gives a pipeline:
 - hexagonal cells (uniform neighbor distance — the property squares
   lack and the reason H3 exists),
 - k-ring neighborhoods (``kring_py`` / ``hex_neighbors_col``),
-- multi-resolution coarsening (``hex_parent_col``: centroid re-bucket,
-  approximate containment exactly like H3's aperture-7 parents),
 - a packed 64-bit cell id usable as a shuffle/partition key.
 
 Geometry (pointy-top, circumradius ``size`` meters):
@@ -158,53 +156,3 @@ def hex_distance_py(a: int, b: int) -> int:
     qa, ra = unpack_hex_py(a)
     qb, rb = unpack_hex_py(b)
     return int((abs(qa - qb) + abs(ra - rb) + abs((-qa - ra) - (-qb - rb))) // 2)
-
-
-def _floor_div(a: Column, b: int) -> Column:
-    """Exact floor division on longs (Spark's DIV truncates toward 0)."""
-    return ((a - F.pmod(a, F.lit(b))) / F.lit(b)).cast("long")
-
-
-def hex_parent_col(cell: Column, ratio: int) -> Column:
-    """Coarser-resolution parent (``parent_size = ratio * size``,
-    integer ratio) by re-bucketing the cell CENTROID — approximate
-    containment, the same compromise H3's aperture-7 hierarchy makes
-    (hexes don't nest exactly).
-
-    The centroid's fractional axial coords at the parent scale reduce
-    to (q/ratio, r/ratio), so the cube-round runs in EXACT integer
-    arithmetic: half-up rounding via floor((2a+m)/(2m)) and rounding
-    errors compared as |round*m - a| — no floats, so the Column form,
-    ``hex_parent_py`` and any SQL twin agree bit-for-bit even at the
-    frequent exact-.5 lattice ties. Pure codegen, so multi-resolution
-    rollups are cascading hash aggregates."""
-    m = int(ratio)
-    q = F.shiftrightunsigned(cell, 26) - F.lit(_OFF)
-    r = cell.bitwiseAND(F.lit(_QSHIFT - 1)) - F.lit(_OFF)
-    s = -q - r
-    q0 = _floor_div(2 * q + F.lit(m), 2 * m)
-    r0 = _floor_div(2 * r + F.lit(m), 2 * m)
-    s0 = _floor_div(2 * s + F.lit(m), 2 * m)
-    eq = F.abs(q0 * F.lit(m) - q)
-    er = F.abs(r0 * F.lit(m) - r)
-    es = F.abs(s0 * F.lit(m) - s)
-    fix_q = (eq > er) & (eq > es)
-    qp = F.when(fix_q, -r0 - s0).otherwise(q0)
-    rp = F.when(~fix_q & (er > es), -q0 - s0).otherwise(r0)
-    return ((qp + F.lit(_OFF)) * F.lit(_QSHIFT) + (rp + F.lit(_OFF))).cast("long")
-
-
-def hex_parent_py(cell: int, ratio: int) -> int:
-    """Driver-side twin of ``hex_parent_col`` (identical integer math)."""
-    m = int(ratio)
-    q, r = unpack_hex_py(cell)
-    s = -q - r
-    q0 = (2 * q + m) // (2 * m)
-    r0 = (2 * r + m) // (2 * m)
-    s0 = (2 * s + m) // (2 * m)
-    eq, er, es = abs(q0 * m - q), abs(r0 * m - r), abs(s0 * m - s)
-    if eq > er and eq > es:
-        q0 = -r0 - s0
-    elif er > es:
-        r0 = -q0 - s0
-    return pack_hex_py(q0, r0)

@@ -450,7 +450,6 @@ def token_budget_select(
     text_col: str = "text",
     tokens_col: str | None = None,
     default_budget: int = 0,
-    method: str = "bucketed",
     n_buckets: int = 1024,
 ) -> DataFrame:
     """Fill each stratum's TOKEN budget with its best documents — the
@@ -458,7 +457,7 @@ def token_budget_select(
     language (or per-source) token counts for the training mix and
     wants the highest-quality documents that fit.
 
-    Semantics (both methods, bit-identical): within each stratum, order
+    Semantics: within each stratum, order
     docs by (quality DESC NULLS LAST, id ASC); keep a doc iff the
     running INCLUSIVE token sum through it is <= budget(stratum).
     A doc that would overshoot the remaining budget is dropped (and so
@@ -467,16 +466,12 @@ def token_budget_select(
     drop). Output = input columns + ``n_tokens`` (computed via
     ``token_count_col`` when ``tokens_col`` is None), kept rows only.
 
-    ``method="window"`` is the direct form: one cumulative-sum window
-    per stratum. Exact, but the window SORTS every stratum end-to-end
-    — at 100 TB the largest language becomes one giant ordered
-    partition, which is precisely the skew a declarative plan can't
-    fix here.
-
-    ``method="bucketed"`` (default) is the two-phase scale path built
-    on one identity: ordering is bucket-major (equal-quality docs
-    always share a bucket, floor is monotone), so the global running
-    sum through a doc decomposes EXACTLY as
+    The direct form — one cumulative-sum window per stratum — SORTS
+    every stratum end-to-end, so at 100 TB the largest language
+    becomes one giant ordered partition. This is instead a two-phase
+    plan built on one identity: ordering is bucket-major (equal-quality
+    docs always share a bucket, floor is monotone), so the global
+    running sum through a doc decomposes EXACTLY as
 
         tokens in strictly-better buckets  +  within-bucket running sum.
 
@@ -486,18 +481,19 @@ def token_budget_select(
     tokens consumed before it (``_before``); (4) broadcast-join
     ``_before`` back and run ONE cumulative window partitioned by
     (stratum, bucket): the sort partitions are ~1/n_buckets of a
-    stratum, so the giant-language skew the plain window method hits
-    at scale never forms — same single corpus scan, same shuffle
-    volume, bounded partition size. Keep iff ``_before + within-bucket
-    cum <= budget`` — bit-identical to ``method="window"`` by the
-    identity above (pytest asserts equality on a tie-heavy corpus).
+    stratum, so the giant-language skew of the plain window never
+    forms — same single corpus scan, same shuffle volume, bounded
+    partition size. Keep iff ``_before + within-bucket cum <= budget``
+    — bit-identical to the plain window by the identity above (pytest
+    asserts equality with the DuckDB window twin on a tie-heavy
+    corpus).
     """
     from streetview_naturevisibility_spark.operators.textops import token_count_col
 
     if tokens_col is None:
-        # NULL text counts as 0 tokens, NOT NULL: a NULL would vanish
-        # from the window sum (kept "for free") but poison the bucketed
-        # method's per-bucket sums — 0 keeps both methods identical
+        # NULL text counts as 0 tokens, NOT NULL: a NULL would poison
+        # the per-bucket sums — 0 keeps the plan equal to the plain
+        # window, where such a doc rides along for free
         df = df.withColumn(
             "n_tokens",
             F.coalesce(token_count_col(text_col), F.lit(0).cast("long")),
@@ -506,20 +502,6 @@ def token_budget_select(
     budget = _budget_col(strata_col, budgets, default_budget)
 
     order = [F.col(quality_col).desc_nulls_last(), F.col(id_col).asc()]
-    if method == "window":
-        w = (
-            Window.partitionBy(strata_col)
-            .orderBy(*order)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return (
-            df.withColumn("_cum", F.sum(tokens_col).over(w))
-            .where(F.col("_cum") <= budget)
-            .drop("_cum")
-        )
-    if method != "bucketed":
-        raise ValueError(f"unknown method {method!r}")
-
     # NULL quality -> NULL bucket, ordered last like the quality sort
     qb = F.floor(F.col(quality_col) * F.lit(float(n_buckets)))
     docs = df.withColumn("_qb", qb)

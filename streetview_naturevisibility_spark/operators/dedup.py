@@ -205,24 +205,18 @@ def minhash_signatures(
     n: int = 3,
     hash_method: str = "xxhash64",
 ) -> DataFrame:
-    """(id, minhash: array<bigint> of length k) — pure JVM expressions:
-    min over shingles of (a_i * hash(shingle) + b_i) mod p.
+    """(id, minhash: array<bigint> of length k): min over shingles of
+    (a_i * hash(shingle) + b_i) mod 2^32 for each of k permutations.
 
     ``hash_method``: "tokenmix" (fastest — arithmetic window mix of
     once-hashed tokens, no shingle strings, see
     ``tokenmix_shingle_hashes``), "xxhash64" (hash of the shingle
     string), or "md5" (engine-portable, the DuckDB-oracle twin).
 
-    All k minima are computed in ONE ``F.aggregate`` traversal of the
-    shingle-hash array. The obvious k-expression form
-    (``array_min(transform(hs, perm_i))`` once per permutation) is
-    3-4x slower: Catalyst's projection collapse inlines the ``hs``
-    definition into EVERY one of the k expressions and there is no
-    common-subexpression elimination across higher-order functions, so
-    the shingle hash (an md5 for the portable path) is recomputed k
-    times per shingle. The single aggregate references ``hs`` once, so
-    each shingle is hashed once and the per-permutation work is k
-    integer ops inside the accumulator ``zip_with``."""
+    The shingle hashes are JVM expressions; all k minima are folded in
+    ONE pass per Arrow batch by ``_minhash_fold_kernel`` (a flat NumPy
+    sweep and segment-min per permutation), bit-identical to a JVM
+    ``F.aggregate`` fold over the same hash array (pytest-pinned)."""
     base = minhash_shingle_frame(df, text_col, id_col, n, hash_method)
     return minhash_signatures_from_shingles(base, k, hash_method)
 
@@ -250,8 +244,8 @@ def _minhash_fold_kernel(k: int):
     """Vectorized minhash fold for 32-bit shingle-HASH arrays (the
     tokenmix path): per Arrow batch, one ``(flat * a_j + b_j) & mask``
     sweep and a segment-min (``np.minimum.reduceat``) per permutation
-    — replacing the JVM ``aggregate``'s per-shingle 2x k-long array
-    allocations (guide §4.2). int64 arithmetic never exceeds 2^60
+    — replacing a JVM ``aggregate``'s per-shingle 2x k-long array
+    allocations. int64 arithmetic never exceeds 2^60
     (h < 2^32, a < 2^28), so every value is bit-identical to the JVM
     fold (pytest-pinned; measured 5.5 s -> 2.3 s on 950k docs x ~38
     shingles at k=32). NULL shingle arrays -> NULL signature; empty
@@ -309,50 +303,22 @@ def _minhash_fold_kernel(k: int):
 
 
 def minhash_signatures_from_shingles(
-    base: DataFrame, k: int, hash_method: str, engine: str = "auto"
+    base: DataFrame, k: int, hash_method: str
 ) -> DataFrame:
-    """(id, minhash) from a ``minhash_shingle_frame`` output.
-    ``engine="auto"`` computes the 32-bit shingle hashes in the JVM
-    (xxhash64/md5 — engine-portable semantics are about the algorithm,
-    not the execution engine) and folds the k permutations with the
-    vectorized Arrow kernel (``_minhash_fold_kernel``, bit-identical);
-    ``engine="jvm"`` forces the pure-JVM ``aggregate`` fold everywhere
-    (the kernel's parity oracle in pytest)."""
-    if engine == "auto":
-        id_type = base.schema["id"].dataType.simpleString()
-        hs = (
-            F.col("sh")
-            if hash_method == "tokenmix"
-            else F.transform(
-                F.col("sh"), lambda s: shingle_hash(s, hash_method)
-            )
-        )
-        return base.select("id", hs.alias("sh")).mapInPandas(
-            _minhash_fold_kernel(k), f"id {id_type}, minhash array<long>"
-        )
-    if hash_method == "tokenmix":
-        base = base.select("id", F.col("sh").alias("hs"))
-    else:
-        base = base.select(
-            "id",
-            F.transform(
-                F.col("sh"), lambda s: shingle_hash(s, hash_method)
-            ).alias("hs"),
-        )
-    perms = _perm_params(k)
-    # sentinel above the modulus: any real (a*h+b) mod 2^32 beats it
-    init = F.array(*[F.lit(1 << 33).cast("long") for _ in range(k)])
-
-    def _merge(acc, h):
-        cand = F.array(
-            *[
-                (h * F.lit(a) + F.lit(b)).bitwiseAND(F.lit(_MIX_MASK_V))
-                for a, b in perms
-            ]
-        )
-        return F.zip_with(acc, cand, lambda x, y: F.least(x, y))
-
-    return base.select("id", F.aggregate("hs", init, _merge).alias("minhash"))
+    """(id, minhash) from a ``minhash_shingle_frame`` output: the
+    32-bit shingle hashes are computed in the JVM (xxhash64/md5 —
+    engine-portable semantics are about the algorithm, not the
+    execution engine) and the k permutations fold in the vectorized
+    Arrow kernel (``_minhash_fold_kernel``)."""
+    id_type = base.schema["id"].dataType.simpleString()
+    hs = (
+        F.col("sh")
+        if hash_method == "tokenmix"
+        else F.transform(F.col("sh"), lambda s: shingle_hash(s, hash_method))
+    )
+    return base.select("id", hs.alias("sh")).mapInPandas(
+        _minhash_fold_kernel(k), f"id {id_type}, minhash array<long>"
+    )
 
 
 def minhash_lsh_pairs(

@@ -5,8 +5,7 @@ Decoders: REAL for every format decodable without external libraries —
 binary PGM/PPM and uncompressed 24-bit BMP (pure NumPy), 8-bit
 non-interlaced PNG (stdlib ``zlib`` inflate + NumPy unfiltering of all
 5 scanline filters), baseline JPEG (from-scratch ITU T.81 codec,
-functions/jpegcodec.py), PCM WAV (stdlib ``wave`` + NumPy, with rfft
-spectral features), and MJPEG-in-MP4 video (ISO BMFF sample tables via
+functions/jpegcodec.py), and MJPEG-in-MP4 video (ISO BMFF sample tables via
 functions/mp4box.py locate each frame's true byte range; frames that
 are baseline JPEG decode to real pixels). Only frames of genuinely
 codec-bound video formats (H.264 etc.) fall back to a clearly-marked
@@ -120,29 +119,6 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     rows = rows.reshape(abs(h), stride)[:, : w * 3].reshape(abs(h), w, 3)
     gray = rows.mean(axis=2).astype(np.uint8)
     return gray[::-1] if h > 0 else gray  # positive height = bottom-up
-
-
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """REAL decoder for PCM WAV via the stdlib ``wave`` module.
-    Returns (mono float64 samples in [-1, 1], sample_rate)."""
-    import io
-    import wave
-
-    with wave.open(io.BytesIO(payload), "rb") as wf:
-        n = wf.getnframes()
-        rate = wf.getframerate()
-        width = wf.getsampwidth()
-        ch = wf.getnchannels()
-        raw = wf.readframes(n)
-    if width == 2:
-        samples = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-    elif width == 1:
-        samples = (np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0) / 128.0
-    else:
-        raise ValueError("only 8/16-bit PCM WAV supported")
-    if ch > 1:
-        samples = samples.reshape(-1, ch).mean(axis=1)
-    return samples, rate
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -456,38 +432,6 @@ def image_features(media: DataFrame, embed_dim: int = 16) -> DataFrame:
     return media.where(F.col("kind") == "image").mapInPandas(extract, IMAGE_FEATURES)
 
 
-RESIZED = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("pixels", ArrayType(IntegerType(), False), False),
-    ]
-)
-
-
-def resize_images(media: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
-    """Decode -> nearest-neighbor resize (NumPy strided sampling)."""
-
-    def rz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = {"media_id": [], "width": [], "height": [], "pixels": []}
-            for mid, payload, w, h in zip(
-                b["media_id"], b["payload"], b["width"], b["height"]
-            ):
-                grid = decode_image(payload, int(w or 16), int(h or 16))
-                yi = (np.arange(out_h) * grid.shape[0] // out_h).clip(0, grid.shape[0] - 1)
-                xi = (np.arange(out_w) * grid.shape[1] // out_w).clip(0, grid.shape[1] - 1)
-                small = grid[np.ix_(yi, xi)]
-                rows["media_id"].append(mid)
-                rows["width"].append(out_w)
-                rows["height"].append(out_h)
-                rows["pixels"].append(small.reshape(-1).astype(np.int32).tolist())
-            yield pd.DataFrame(rows)
-
-    return media.where(F.col("kind") == "image").mapInPandas(rz, RESIZED)
-
-
 def synth_mp4(
     i: int,
     n_frames: int = 6,
@@ -605,59 +549,6 @@ def video_frame_features(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     return media.where(F.col("kind") == "video").mapInPandas(
         frames, VIDEO_FRAME_FEATURES
     )
-
-
-AUDIO_FEATURES = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("sample_rate", IntegerType(), False),
-        StructField("duration_ms", IntegerType(), False),
-        StructField("rms", FloatType(), False),
-        StructField("zero_cross_rate", FloatType(), False),
-        StructField("dominant_hz", FloatType(), False),
-        StructField("embedding", ArrayType(FloatType(), False), False),
-    ]
-)
-
-
-def audio_features(media: DataFrame, embed_dim: int = 8) -> DataFrame:
-    """REAL audio feature extraction over WAV payloads (stdlib wave +
-    NumPy): RMS, zero-crossing rate, dominant frequency via rfft, and
-    log-band FFT energies as the embedding — the same mapInPandas batch
-    shape a torchaudio pipeline would use."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {
-                "media_id": [], "sample_rate": [], "duration_ms": [],
-                "rms": [], "zero_cross_rate": [], "dominant_hz": [],
-                "embedding": [],
-            }
-            for mid, payload in zip(b["media_id"], b["payload"]):
-                samples, rate = decode_wav(bytes(payload))
-                n = len(samples)
-                rms = float(np.sqrt(np.mean(samples**2))) if n else 0.0
-                zcr = float(np.mean(np.abs(np.diff(np.signbit(samples))))) if n > 1 else 0.0
-                spec = np.abs(np.fft.rfft(samples))
-                freqs = np.fft.rfftfreq(n, d=1.0 / rate)
-                dom = float(freqs[int(spec[1:].argmax()) + 1]) if n > 2 else 0.0
-                # log-spaced band energies, L1-normalized
-                edges = np.unique(
-                    np.geomspace(1, len(spec) - 1, embed_dim + 1).astype(int)
-                )
-                bands = np.add.reduceat(spec, edges[:-1])
-                emb = (bands / max(bands.sum(), 1e-12)).astype(np.float32)
-                emb = np.pad(emb, (0, embed_dim - len(emb)))[:embed_dim]
-                out["media_id"].append(mid)
-                out["sample_rate"].append(rate)
-                out["duration_ms"].append(int(n * 1000 / rate))
-                out["rms"].append(rms)
-                out["zero_cross_rate"].append(zcr)
-                out["dominant_hz"].append(dom)
-                out["embedding"].append(emb.tolist())
-            yield pd.DataFrame(out)
-
-    return media.where(F.col("kind") == "audio").mapInPandas(extract, AUDIO_FEATURES)
 
 
 def synth_pgm(i: int, w: int = 16, h: int = 16) -> bytes:

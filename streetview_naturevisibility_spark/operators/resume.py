@@ -18,11 +18,7 @@ per-partition lineage + metrics"):
 - each write also emits ``<root>/<stage>/_lineage/part-*.json`` — one
   record per output partition with {stage, partition_id, rows, wall_ms,
   rows_per_sec, host} — collected executor-side via mapInPandas (no
-  driver round-trip of data);
-- incremental append: ``resume_delta`` anti-joins the input's key
-  column against already-committed keys, so a killed run restarts
-  exactly where it stopped and reprocesses nothing (S6 semantics with
-  the dedup built in, not applied on read).
+  driver round-trip of data).
 """
 
 from __future__ import annotations
@@ -35,7 +31,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def _success_exists(path: str) -> bool:
@@ -104,19 +99,3 @@ def read_lineage(root: str, stage: str) -> list[dict]:
                 out.append(json.load(f))
     return out
 
-
-def resume_delta(inputs: DataFrame, done_path: str, key: str) -> DataFrame:
-    """Rows of ``inputs`` whose key is not yet committed at done_path
-    (left-anti join — the engine form of the reference's append-mode
-    CSV resume, SURVEY.md §2.3)."""
-    spark = inputs.sparkSession
-    if not _success_exists(done_path):
-        return inputs
-    done = spark.read.parquet(done_path).select(key).distinct()
-    return inputs.join(done, key, "left_anti")
-
-
-def append_increment(df: DataFrame, done_path: str) -> None:
-    """Idempotent append of a delta batch (parquet commit is atomic per
-    job; rerunning a killed append re-derives the same delta)."""
-    df.write.mode("append").parquet(done_path)

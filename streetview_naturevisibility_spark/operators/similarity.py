@@ -597,8 +597,8 @@ def semantic_dedup(
         raise ValueError("pairs='local' requires assign='udf' (needs vn)")
     from .dedup import _cap_buckets
 
-    # data-adapted quantizer (kmeans_fit on a sample, or kmeans_fit_df
-    # over the full table) plugs in via ``centroids``; the pinned
+    # data-adapted quantizer (kmeans_fit on a sample) plugs in via
+    # ``centroids``; the pinned
     # data-independent default keeps the operator fit-free
     if centroids is not None:
         centroids = np.asarray(centroids, dtype=np.float64)
@@ -716,78 +716,6 @@ def semantic_dedup(
         )
     )
     return (out, metrics) if return_metrics else out
-
-
-def kmeans_fit_df(
-    df: DataFrame,
-    k: int,
-    iters: int = 10,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> np.ndarray:
-    """Distributed Lloyd's k-means over the FULL table — the
-    data-adapted coarse quantizer for ``build_ivf_index`` /
-    ``semantic_dedup(centroids=...)`` when a bounded driver-side
-    sample (``kmeans_fit``) is not representative (skewed or
-    multi-modal embedding distributions at scale).
-
-    Spark shape per iteration: centroids broadcast inside a chunked
-    Arrow matmul (the ``make_assign_ccos_udf`` buffer discipline),
-    then LONG-FORM mean reduction — ``posexplode(v)`` ->
-    ``groupBy(_lid, pos).avg(val)`` (the ``label_centroids`` shape):
-    the shuffle key is (cluster, dim_pos), partial aggregation
-    combines map-side, and the PLAN carries exactly one aggregate
-    expression regardless of ``dim``. The previous wide shape
-    (``F.avg(v[i]) for i in range(dim)``) fanned out k x dim codegen
-    aggregate columns — plan bloat that breaks down at real embedding
-    dims (384-1024). k x dim rows return to the driver per iteration
-    (a few MB at k=1024, dim=1024); empty clusters keep their previous
-    centroid. Total cost: ``iters`` scans + ``iters`` (k x dim)-row
-    shuffles; nothing driver-side ever holds more than the k x dim
-    centroid matrix.
-
-    Init is deterministic and data-dependent: the k lowest-``id_col``
-    vectors (callers wanting a seeded random init pass the result of
-    ``kmeans_fit`` on a sample as a starting point instead). Mean
-    reduction order is not fixed by Spark, so centroids are
-    reproducible to FP-sum tolerance, not bitwise.
-    """
-    init_rows = (
-        df.select(vec_col).orderBy(id_col).limit(int(k)).collect()
-    )
-    if len(init_rows) < k:
-        raise ValueError(f"k={k} exceeds table size {len(init_rows)}")
-    centroids = np.stack([np.asarray(r[0], dtype=np.float64) for r in init_rows])
-    v = F.col("v")
-    for _ in range(int(iters)):
-        ac = make_assign_ccos_udf(centroids)
-        # no isNotNull filter on _lid here: Catalyst pushes such a
-        # filter below the projection and EVALUATES THE UDF TWICE
-        # (two ArrowEvalPython nodes = two matmul passes per
-        # iteration, seen in the plan audit). NULL-assigned rows
-        # (NULL/empty embeddings) explode to nothing or land in a
-        # NULL group the driver skips.
-        assigned = df.select(F.col(vec_col).alias("v")).withColumn(
-            "_lid", ac(v)["list_id"]
-        )
-        means = (
-            assigned.select("_lid", F.posexplode("v").alias("pos", "val"))
-            .groupBy("_lid", "pos")
-            .agg(F.avg(F.col("val").cast("double")).alias("m"))
-            .collect()
-        )
-        nxt = centroids.copy()
-        touched = {
-            int(r["_lid"]) for r in means if r["_lid"] is not None
-        }
-        for lid in touched:
-            nxt[lid] = np.zeros(dim, dtype=np.float64)
-        for r in means:
-            if r["_lid"] is not None:
-                nxt[int(r["_lid"])][int(r["pos"])] = r["m"]
-        centroids = nxt
-    return centroids
 
 
 def semantic_dedup_incremental(

@@ -1,8 +1,7 @@
 """Sketch aggregates for web-scale rollups.
 
-At 10^12 rows, exact distinct counts and exact percentiles hold
-per-group state proportional to cardinality; the sketch forms hold
-constant state:
+At 10^12 rows, exact distinct counts hold per-group state
+proportional to cardinality; the sketch form holds constant state:
 
 - ``distinct_rollup``: per-window distinct users — exact
   (count_distinct: shuffles the (window, user) pairs) alongside the
@@ -10,9 +9,6 @@ constant state:
   state per group, one pass, mergeable map-side). The exact column is
   the oracle-checked contract surface; the sketch column's relative
   error is pytest-bounded against it.
-- ``quantile_rollup``: ``percentile_approx`` (bounded-state
-  Greenwald-Khanna variant) next to the exact ``percentile`` —
-  same split: exact is contract-checked, sketch is bound-checked.
 
 Scale note: prefer the sketch columns for dashboards/monitoring at
 full scale and the exact forms for bounded post-aggregation data; the
@@ -45,29 +41,3 @@ def distinct_rollup(
                 "n_users_exact", "n_users_approx")
     )
 
-
-def quantile_rollup(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    ps: tuple[float, ...] = (0.5, 0.9, 0.99),
-    accuracy: int = 10_000,
-    round_to: int = 6,
-) -> DataFrame:
-    """Exact percentiles (contract surface) + bounded-state
-    approximations per group."""
-    exact = [
-        F.round(F.percentile(F.col(value_col), F.lit(p)), round_to).alias(
-            f"p{int(p * 100)}"
-        )
-        for p in ps
-    ]
-    approx = [
-        F.percentile_approx(F.col(value_col), F.lit(p), F.lit(accuracy)).alias(
-            f"p{int(p * 100)}_approx"
-        )
-        for p in ps
-    ]
-    return df.groupBy(group_col).agg(
-        F.count(F.lit(1)).alias("n"), *exact, *approx
-    )

@@ -237,8 +237,8 @@ def analyze_documents(
 
 
 # ------------------------------------------------------------------
-# benchmark decontamination + PII redaction (training-data hygiene —
-# the Dolma/GPT-style curation stages a 100 TB text pipeline runs
+# benchmark decontamination (training-data hygiene — the
+# Dolma/GPT-style curation stage a 100 TB text pipeline runs
 # between quality filtering and dedup; engine addendum, no reference
 # analog)
 # ------------------------------------------------------------------
@@ -251,18 +251,6 @@ def _shingle_hashes(text_col: str, n: int):
     return F.transform(shingles_col(text_col, n), lambda s: F.xxhash64(s))
 
 
-def _blocklist_hash_array(blocklist: DataFrame, text_col: str, n: int) -> DataFrame:
-    """The blocklist's distinct shingle hashes as ONE single-row array
-    column ``blk`` — the shared hash contract of the broadcast batch
-    path and the streaming path (one definition so null-handling and
-    hashing can never drift between them)."""
-    return (
-        blocklist.select(F.explode(_shingle_hashes(text_col, n)).alias("h"))
-        .distinct()
-        .agg(F.collect_set("h").alias("blk"))
-    )
-
-
 def contaminated_ids(
     docs: DataFrame,
     blocklist: DataFrame,
@@ -270,20 +258,13 @@ def contaminated_ids(
     id_col: str = "doc_id",
     block_text_col: str = "text",
     n: int = 13,
-    method: str = "join",
 ) -> DataFrame:
     """Docs sharing ANY n-gram (default 13 — the published GPT-3/PaLM
     decontamination window) with the blocklist corpus -> (id, n_hits).
 
-    ``method="join"`` (default, MEASURED): explode doc shingle hashes
-    and LEFT SEMI shuffle-join against the blocklist hash set — 18.5 s
-    per 1M docs vs a 1,000-doc blocklist at local[32]; also the only
-    path for blocklists too big to broadcast. ``method="broadcast"``:
-    the blocklist's distinct hashes collapsed to ONE array joined as a
-    single-row broadcast, each doc evaluating `array_intersect` — zero
-    corpus shuffle, but the per-row set probe costs more than the
-    exploded shuffle at corpus scale (28.1 s same shape, and argument
-    order matters: blocklist array FIRST, 3.3x over the reverse).
+    Explodes doc shingle hashes and LEFT SEMI shuffle-joins them against
+    the blocklist hash set — 18.5 s per 1M docs vs a 1,000-doc
+    blocklist at local[32], and no blocklist size limit.
     Collision note: both sides use the same xxhash64 shingle hash, so
     real overlaps are NEVER missed; a 2^-64 hash collision can only
     add a spurious (conservative) drop."""
@@ -293,28 +274,13 @@ def contaminated_ids(
     blk_h = blocklist.select(
         F.explode(_shingle_hashes(block_text_col, n)).alias("h")
     ).distinct()
-    if method == "broadcast":
-        blk_arr = _blocklist_hash_array(blocklist, block_text_col, n)
-        return (
-            doc_h.join(F.broadcast(blk_arr))
-            .select(
-                F.col("id").alias(id_col),
-                # blk FIRST: array_intersect's lookup structure comes
-                # from its first argument — measured 3.3x faster than
-                # intersecting (hs, blk) at 1M docs
-                F.size(F.array_intersect("blk", "hs")).alias("n_hits"),
-            )
-            .where(F.col("n_hits") > 0)
-        )
-    if method == "join":
-        hits = (
-            doc_h.select("id", F.explode("hs").alias("h"))
-            .join(blk_h, "h", "left_semi")
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("n_hits"))
-        )
-        return hits.select(F.col("id").alias(id_col), "n_hits")
-    raise ValueError(f"unknown method {method!r}")
+    hits = (
+        doc_h.select("id", F.explode("hs").alias("h"))
+        .join(blk_h, "h", "left_semi")
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("n_hits"))
+    )
+    return hits.select(F.col("id").alias(id_col), "n_hits")
 
 
 def decontaminate(
@@ -323,7 +289,6 @@ def decontaminate(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 13,
-    method: str = "join",
 ) -> DataFrame:
     """Drop every doc sharing an n-gram with the blocklist (anti-join
     on the contaminated id set). No forced broadcast: hit sets are
@@ -333,92 +298,9 @@ def decontaminate(
     would then die on the driver where a shuffled anti-join
     succeeds."""
     bad = contaminated_ids(
-        docs, blocklist, text_col=text_col, id_col=id_col, n=n, method=method
+        docs, blocklist, text_col=text_col, id_col=id_col, n=n
     ).select(id_col)
     return docs.join(bad, id_col, "left_anti")
-
-
-# deliberately narrow, high-precision patterns (a curation pass wants
-# no false redactions of ordinary prose); all plain Java regex — the
-# whole redaction is whole-stage codegen
-_PII_PATTERNS = (
-    ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    # optional +cc, then (NXX) or NXX separated groups: matches
-    # "+1 (555) 123-4567", "555-123-4567", "(555) 123-4567",
-    # "555.123.4567" — a separator between the last two groups is
-    # REQUIRED so plain 10-digit ids are not redacted
-    ("phone",
-     r"(?:\+\d{1,3}[ .-]?)?(?:\(\d{3}\)[ .-]?|\d{3}[ .-])\d{3}[ .-]\d{4}",
-     "<PHONE>"),
-    ("ipv4", r"\b(?:\d{1,3}\.){3}\d{1,3}\b", "<IP>"),
-)
-
-
-def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append ``text_redacted`` plus per-pattern hit counts (email /
-    phone / IPv4 -> typed placeholder tokens). Counts come from
-    `regexp_count` on the ORIGINAL text, so they are exact even when
-    patterns overlap after substitution."""
-    out = df
-    red = F.col(text_col)
-    for name, pat, token in _PII_PATTERNS:
-        out = out.withColumn(f"n_{name}", F.regexp_count(F.col(text_col), F.lit(pat)))
-        red = F.regexp_replace(red, pat, token)
-    return out.withColumn("text_redacted", red)
-
-
-def decontaminate_streaming(
-    docs: DataFrame,
-    blocklist: DataFrame,
-    text_col: str = "text",
-    n: int = 13,
-) -> DataFrame:
-    """Streaming-safe decontamination: a stateless stream-static join —
-    the STATIC blocklist collapses to one broadcast row of shingle
-    hashes and every streaming doc keeps/drops itself by one
-    `array_intersect` probe. No aggregation, no watermark, no state:
-    usable directly inside `readStream -> ... -> writeStream` (batch
-    `decontaminate` computes the contaminated-id set first, which
-    would be a disallowed stream self-join). Same hash contract as the
-    batch paths, so batch == stream row-for-row (pytest-gated)."""
-    blk_arr = _blocklist_hash_array(blocklist, text_col, n)
-    out = docs.withColumn("_hs", _shingle_hashes(text_col, n)).join(
-        F.broadcast(blk_arr)
-    )
-    # coalesce: a NULL text yields NULL shingles -> NULL intersect; the
-    # batch paths KEEP such docs (they can't be contaminated), so the
-    # stream must too or batch == stream breaks on null-text rows
-    return out.where(
-        F.coalesce(F.size(F.array_intersect("blk", "_hs")), F.lit(0)) == 0
-    ).drop("_hs", "blk")
-
-
-def normalize_text_col(text_col: str):
-    """Canonical text normalization for NORMALIZED exact dedup (the
-    standard pre-pass before byte-exact digesting: near-identical docs
-    differing only in case/whitespace collapse to one digest group):
-    lowercase, trim, collapse runs of whitespace to single spaces.
-    Pure codegen (lower + regexp_replace + trim)."""
-    return F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-
-
-def exact_dedup_normalized(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact dedup over the NORMALIZED text digest -> one row per
-    group: (norm_md5, n_dups, keeper = min id). Same single-shuffle
-    shape as the byte-exact `dedup.exact_dedup`; choose by whether the
-    pipeline treats case/whitespace variants as the same document."""
-    return (
-        df.select(
-            F.col(id_col), F.md5(normalize_text_col(text_col)).alias("norm_md5")
-        )
-        .groupBy("norm_md5")
-        .agg(
-            F.count(F.lit(1)).alias("n_dups"),
-            F.min(id_col).alias("keeper"),
-        )
-    )
 
 
 # ------------------------------------------------------------------
@@ -786,7 +668,6 @@ def chunk_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     chunk_chars: int = 100,
-    offset: int = 0,
 ) -> DataFrame:
     """Corpus-level exact SUBSTRING dedup, bounded to non-overlapping
     ``chunk_chars``-character windows (the RETRO-chunk approximation of
@@ -816,9 +697,6 @@ def chunk_dedup(
     L = int(chunk_chars)
     if L < 1:
         raise ValueError("chunk_chars must be >= 1")
-    O = int(offset)
-    if O < 0 or O >= L:
-        raise ValueError("offset must be in [0, chunk_chars)")
     # the packed (id, pos) canonical key needs an integral id: a string
     # id would implicitly cast to double -> NULL, making _canon NULL and
     # the != filter drop every kill (silent no-op). Fail fast instead.
@@ -832,22 +710,17 @@ def chunk_dedup(
             f"chunk_dedup needs an integral {id_col!r} (fits 32 bits) "
             f"for its packed (id, pos) canonical key; got {id_type}"
         )
-    # grid phase: chunk i covers [O + i*L, O + (i+1)*L); the first O
-    # chars are protected like the tail (offset != 0 is the SHIFTED
-    # second pass of chunk_dedup_shifted — see the recall-boundary
-    # table in BENCH/BASELINE.md). greatest(0): a doc shorter than the
-    # offset has zero chunks, not floor(negative).
-    n_full = F.greatest(
-        F.floor((F.length(text_col) - F.lit(O)) / F.lit(L)),
-        F.lit(0).cast("long"),
-    )
+    # chunk i covers [i*L, (i+1)*L); the trailing len % L chars are
+    # protected (recall boundary: BENCH/BASELINE.md, "chunk_dedup
+    # grid-alignment recall")
+    n_full = F.floor(F.length(text_col) / F.lit(L))
 
     def _chunks():
         idx = F.sequence(F.lit(0).cast("long"), n_full - 1)
         mk = F.transform(
             idx,
             lambda i: F.col(text_col).substr(
-                (i * F.lit(L) + F.lit(O) + 1).cast("int"), F.lit(L)
+                (i * F.lit(L) + 1).cast("int"), F.lit(L)
             ),
         )
         # sequence(0, stop) DESCENDS when stop < 0 — guard short docs
@@ -879,9 +752,8 @@ def chunk_dedup(
         .groupBy("id")
         .agg(F.collect_set("pos").alias("_kill"))
     )
-    head = F.col(text_col).substr(F.lit(1), F.lit(O))
     tail = F.col(text_col).substr(
-        (n_full * F.lit(L) + F.lit(O) + 1).cast("int"), F.length(text_col)
+        (n_full * F.lit(L) + 1).cast("int"), F.length(text_col)
     )
     kept_arr = F.filter(
         _chunks(),
@@ -893,61 +765,13 @@ def chunk_dedup(
         kills, F.col(id_col) == F.col("id"), "left"
     ).select(
         F.col(id_col),
-        F.concat(head, F.array_join(kept_arr, ""), tail).alias(
+        F.concat(F.array_join(kept_arr, ""), tail).alias(
             "text_deduped"
         ),
         F.coalesce(n_full, F.lit(0)).cast("long").alias("n_chunks"),
         F.coalesce(F.size("_kill"), F.lit(0)).cast("long").alias("n_removed"),
     )
     return out
-
-
-def chunk_dedup_shifted(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_chars: int = 100,
-) -> DataFrame:
-    """Two-phase chunk dedup: the standard aligned pass, then a second
-    pass over the REBUILT text on a grid shifted by ``chunk_chars/2``.
-
-    Recall boundary, quantified (BENCH/BASELINE.md, "chunk_dedup
-    grid-alignment recall"): a duplicated passage is only caught when
-    its two instances share the same grid PHASE (start offset mod L).
-    One pass covers 1 of L phase differences; the shifted pass adds a
-    second, doubling phase coverage to 2/L — full phase coverage is
-    the suffix-array method (Lee et al.) the non-overlapping grid
-    deliberately approximates. Unaligned near-duplicate DOCUMENTS are
-    instead caught at doc granularity by the MinHash/paragraph layers
-    (measured recall 1.0 on the planted fixture). Cost: one more full
-    scan + digest shuffle.
-
-    -> (id_col, text_deduped, n_chunks, n_removed) with n_chunks /
-    n_removed SUMMED over both passes."""
-    first = chunk_dedup(df, text_col, id_col, chunk_chars)
-    second = chunk_dedup(
-        first.select(
-            F.col(id_col), F.col("text_deduped").alias(text_col)
-        ),
-        text_col,
-        id_col,
-        chunk_chars,
-        offset=chunk_chars // 2,
-    )
-    return (
-        first.select(
-            F.col(id_col).alias("_id1"),
-            F.col("n_chunks").alias("_nc1"),
-            F.col("n_removed").alias("_nr1"),
-        )
-        .join(second, F.col("_id1") == F.col(id_col), "inner")
-        .select(
-            F.col(id_col),
-            "text_deduped",
-            (F.col("_nc1") + F.col("n_chunks")).alias("n_chunks"),
-            (F.col("_nr1") + F.col("n_removed")).alias("n_removed"),
-        )
-    )
 
 
 def chunk_dedup_cdc(
@@ -965,9 +789,8 @@ def chunk_dedup_cdc(
     the same passage produce identical interior chunks no matter where
     in their documents they sit. This closes the grid method's phase
     boundary (a fixed grid only matches repeats whose start offsets
-    agree mod L — and shifting the grid shifts BOTH instances, so a
-    shifted second pass cannot change relative phase; measured in
-    BENCH/BASELINE.md "chunk_dedup grid-alignment recall").
+    agree mod L; measured in BENCH/BASELINE.md "chunk_dedup
+    grid-alignment recall").
 
     Semantics: chunks shorter than ``min_tokens`` tokens never dedup
     (guards against killing ubiquitous single-token chunks); among the

@@ -1,16 +1,5 @@
-"""Physical table layout for 100 TB pages tables.
-
-Three complementary layouts (choose per access pattern):
-
-- ``write_cell_partitioned`` / ``read_cell_partitioned``: directory
-  partition pruning on a coarse parent cell (Iceberg-style partition
-  metadata stand-in, SURVEY.md §4.2);
-- ``write_bucketed`` / ``read_bucketed``: co-partitioned large-large
-  joins with ZERO exchanges;
-- ``write_spatial_sorted`` (below): Z-order (Morton) clustering for
-  min/max file skipping on arbitrary bbox predicates.
-
-Z-order (Morton) clustering for data skipping:
+"""Physical table layout for 100 TB pages tables: Z-order (Morton)
+clustering for data skipping.
 
 At 100 TB, the dominant cost of a bbox/tile query is the SCAN — and
 parquet can skip whole files/row-groups when each file's min/max
@@ -36,42 +25,8 @@ this module exists for the 10^12-page scale target.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..geo.cells import cell_parent_col
-
-
-def write_cell_partitioned(
-    df: DataFrame, path: str, cell_col: str = "cell_id", coarse_steps: int = 4
-) -> None:
-    """Partition by the coarse parent cell (zoom - coarse_steps): ~4^s
-    fine cells per directory keeps file counts sane while pruning
-    still removes everything outside a query's spatial extent."""
-    out = df.withColumn("coarse_cell", cell_parent_col(F.col(cell_col), coarse_steps))
-    out.write.mode("overwrite").partitionBy("coarse_cell").parquet(path)
-
-
-def read_cell_partitioned(
-    spark: SparkSession, path: str, coarse_cells: list[int] | None = None
-) -> DataFrame:
-    df = spark.read.parquet(path)
-    if coarse_cells is not None:
-        df = df.where(F.col("coarse_cell").isin([int(c) for c in coarse_cells]))
-    return df
-
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, buckets: int = 16, sort: bool = True
-) -> None:
-    w = df.write.mode("overwrite").bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.format("parquet").saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 # magic masks for 16-bit -> 32-bit bit spreading (x | x<<8 ... pattern)
 _SPREAD_STEPS = (

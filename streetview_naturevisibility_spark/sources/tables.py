@@ -23,41 +23,3 @@ TABLES = (
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
-
-def load_gvi_csv_shards(spark: SparkSession, glob_path: str) -> DataFrame:
-    """Reference scripts/get_gvi_gpkg.py:18-54 as one declarative plan:
-    glob CSV scan + implicit union (S7) -> float-validity filter on x/y
-    (P4: drop rows where float() would raise) -> dedup by id first-wins
-    in (shard file, row order) = the reference's concat order (O4).
-
-    The first-wins order is pinned by the input_file_name so resumed
-    runs that appended duplicate ids resolve identically to pandas
-    ``concat(...).drop_duplicates('id')``.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    raw = (
-        spark.read.option("header", True)
-        .csv(glob_path)
-        .withColumn("_file", F.input_file_name())
-        .withColumn("_order", F.monotonically_increasing_id())
-    )
-    valid = raw.where(
-        F.col("x").try_cast("double").isNotNull()
-        & F.col("y").try_cast("double").isNotNull()
-    )
-    w = Window.partitionBy("id").orderBy("_file", "_order")
-    return (
-        valid.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            F.col("id").cast("long").alias("point_id"),
-            F.col("x").cast("double").alias("x"),
-            F.col("y").cast("double").alias("y"),
-            F.col("GVI").try_cast("double").alias("gvi"),
-            F.col("is_panoramic").try_cast("boolean").alias("is_panoramic"),
-            F.col("missing").try_cast("boolean").alias("missing"),
-            F.col("error").try_cast("boolean").alias("error"),
-        )
-    )

@@ -379,30 +379,6 @@ def duckdb_decontaminate(
     return out
 
 
-def duckdb_redact_pii(docs: pd.DataFrame, patterns) -> pd.DataFrame:
-    """ANSI-SQL twin of operators/textops.redact_pii: per-pattern hit
-    counts from the ORIGINAL text + sequential regexp_replace in
-    pattern order. ``patterns`` is textops._PII_PATTERNS
-    ((name, regex, token) triples) so the twin can never drift from
-    the engine's pattern set."""
-    import duckdb
-
-    con = duckdb.connect()
-    con.register("docs", docs)
-    counts = []
-    red = "text"
-    for name, pat, token in patterns:
-        p = pat.replace("'", "''")
-        counts.append(f"len(regexp_extract_all(text, '{p}')) AS n_{name}")
-        red = f"regexp_replace({red}, '{p}', '{token}', 'g')"
-    out = con.sql(
-        f"SELECT doc_id, text, {', '.join(counts)}, {red} AS text_redacted "
-        "FROM docs ORDER BY doc_id"
-    ).df()
-    con.close()
-    return out
-
-
 def duckdb_repetition_signals(docs: pd.DataFrame, top_ns=(2, 3, 4)) -> pd.DataFrame:
     """ANSI-SQL twin of operators/textops.repetition_signals (Gopher
     repetition axes). Lines split on chr(10), tokens on single space,
@@ -552,9 +528,14 @@ def duckdb_token_budget_select(
 
     con = duckdb.connect()
     con.register("docs", docs)
-    cases = " ".join(
-        f"WHEN '{k}' THEN {int(v)}" for k, v in sorted(budgets.items())
-    )
+    # CASE needs at least one WHEN: with no listed strata every stratum
+    # gets the default
+    budget = str(int(default_budget))
+    if budgets:
+        cases = " ".join(
+            f"WHEN '{k}' THEN {int(v)}" for k, v in sorted(budgets.items())
+        )
+        budget = f"CASE lang {cases} ELSE {budget} END"
     out = con.sql(
         f"""
         WITH t AS (
@@ -567,7 +548,7 @@ def duckdb_token_budget_select(
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
           FROM t)
         SELECT * EXCLUDE (cum) FROM c
-        WHERE cum <= (CASE lang {cases} ELSE {int(default_budget)} END)
+        WHERE cum <= ({budget})
         ORDER BY doc_id
         """
     ).df()
@@ -575,29 +556,25 @@ def duckdb_token_budget_select(
     return out
 
 
-def duckdb_chunk_dedup(
-    docs: pd.DataFrame, chunk_chars: int = 100, offset: int = 0
-) -> pd.DataFrame:
+def duckdb_chunk_dedup(docs: pd.DataFrame, chunk_chars: int = 100) -> pd.DataFrame:
     """ANSI-SQL twin of operators/textops.chunk_dedup: non-overlapping
-    L-char windows starting at ``offset``, md5-grouped; every instance
-    of a >1-occurrence chunk except the packed-min (doc_id, pos)
-    canonical is cut; the first ``offset`` and trailing chars always
-    survive."""
+    L-char windows from the text start, md5-grouped; every instance of
+    a >1-occurrence chunk except the packed-min (doc_id, pos) canonical
+    is cut; the trailing chars always survive."""
     import duckdb
 
     L = int(chunk_chars)
-    O = int(offset)
     con = duckdb.connect()
     con.register("docs", docs)
     out = con.sql(
         f"""
         WITH d AS (
           SELECT doc_id, text,
-                 greatest((strlen(text) - {O}) // {L}, 0) AS nf FROM docs),
+                 greatest(strlen(text) // {L}, 0) AS nf FROM docs),
         ch AS (
           SELECT doc_id, i AS pos,
-                 substring(text, CAST(i * {L} + {O} + 1 AS INT), {L}) AS chunk,
-                 md5(substring(text, CAST(i * {L} + {O} + 1 AS INT), {L})) AS ck
+                 substring(text, CAST(i * {L} + 1 AS INT), {L}) AS chunk,
+                 md5(substring(text, CAST(i * {L} + 1 AS INT), {L})) AS ck
           FROM d, UNNEST(generate_series(0, CAST(nf AS BIGINT) - 1)) AS t(i)),
         dup AS (
           SELECT ck, min(doc_id * 2147483648 + pos) AS canon
@@ -614,8 +591,8 @@ def duckdb_chunk_dedup(
           WHERE kill.pos IS NULL
           GROUP BY ch.doc_id)
         SELECT d.doc_id,
-               substring(d.text, 1, {O}) || coalesce(kept.body, '') ||
-                 substring(d.text, CAST(d.nf * {L} + {O} + 1 AS INT)) AS text_deduped,
+               coalesce(kept.body, '') ||
+                 substring(d.text, CAST(d.nf * {L} + 1 AS INT)) AS text_deduped,
                coalesce(d.nf, 0) AS n_chunks,
                coalesce(d.nf, 0) - coalesce(kept.n_kept, 0) AS n_removed
         FROM d LEFT JOIN kept ON d.doc_id = kept.doc_id
@@ -1123,3 +1100,37 @@ def duckdb_span_dedup_c4(docs: pd.DataFrame, n_sents: int = 3) -> pd.DataFrame:
     ).df()
     con.close()
     return out
+
+
+def jvm_minhash_fold(base, k: int, hash_method: str):
+    """Pure-JVM twin of operators/dedup.minhash_signatures_from_shingles:
+    the same shingle hashes and k permutations, folded by ONE
+    ``F.aggregate`` over the hash array instead of the Arrow kernel.
+    NULL arrays give a NULL signature; empty arrays the 2^33 init
+    sentinel row."""
+    from pyspark.sql import functions as F
+
+    from streetview_naturevisibility_spark.operators.dedup import (
+        _MIX_MASK_V,
+        _perm_params,
+        shingle_hash,
+    )
+
+    if hash_method == "tokenmix":
+        hs = F.col("sh")
+    else:
+        hs = F.transform(F.col("sh"), lambda s: shingle_hash(s, hash_method))
+    perms = _perm_params(k)
+    # sentinel above the modulus: any real (a*h+b) mod 2^32 beats it
+    init = F.array(*[F.lit(1 << 33).cast("long") for _ in range(k)])
+
+    def _merge(acc, h):
+        cand = F.array(
+            *[
+                (h * F.lit(a) + F.lit(b)).bitwiseAND(F.lit(_MIX_MASK_V))
+                for a, b in perms
+            ]
+        )
+        return F.zip_with(acc, cand, lambda x, y: F.least(x, y))
+
+    return base.select("id", F.aggregate(hs, init, _merge).alias("minhash"))

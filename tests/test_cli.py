@@ -3,6 +3,7 @@ fixture tables (pipeline -> metrics -> gap-fill), including resume."""
 
 import argparse
 import os
+import shutil
 
 import pytest
 
@@ -14,50 +15,28 @@ def _ns(**kw):
 
 
 class TestCli:
-    @pytest.fixture(scope="class")
-    def outdir(self, fixture_dir, tmp_path_factory, spark):
-        out = str(tmp_path_factory.mktemp("cli_out"))
-        args = _ns(
-            roads=os.path.join(fixture_dir, "roads.parquet"),
-            pages=os.path.join(fixture_dir, "web_pages.parquet"),
-            out=out,
-            spacing=50,
-            max_distance=50.0,
-            cut_by_road_centres=False,
-            checkpoint=None,
-            begin=None,
-            end=None,
-        )
-        cli.cmd_pipeline(args)
-        return out
-
-    def test_pipeline_outputs(self, spark, outdir):
-        per_road = spark.read.parquet(os.path.join(outdir, "gvi_per_road"))
-        gvi = spark.read.parquet(os.path.join(outdir, "gvi_points"))
+    def test_pipeline_outputs(self, spark, pipeline_out):
+        per_road = spark.read.parquet(os.path.join(pipeline_out, "gvi_per_road"))
+        gvi = spark.read.parquet(os.path.join(pipeline_out, "gvi_points"))
         assert per_road.count() > 0
         assert gvi.count() > 0
         assert set(per_road.columns) >= {"road_id", "avg_gvi", "total_points"}
 
-    def test_pipeline_resume_reuses_stages(self, spark, fixture_dir, outdir, capsys):
+    def test_pipeline_resume_reuses_stages(
+        self, spark, pipeline_out, run_cli_pipeline, tmp_path
+    ):
         """Re-running the same command must resume from checkpoints
-        (run_stage compute-once) and produce identical outputs."""
+        (run_stage compute-once) and produce identical outputs. The
+        re-run goes into a copy so the shared pipeline output stays
+        untouched."""
+        outdir = str(tmp_path / "resumed")
+        shutil.copytree(pipeline_out, outdir)
         before = (
-            spark.read.parquet(os.path.join(outdir, "gvi_per_road"))
+            spark.read.parquet(os.path.join(pipeline_out, "gvi_per_road"))
             .orderBy("road_id")
             .collect()
         )
-        args = _ns(
-            roads=os.path.join(fixture_dir, "roads.parquet"),
-            pages=os.path.join(fixture_dir, "web_pages.parquet"),
-            out=outdir,
-            spacing=50,
-            max_distance=50.0,
-            cut_by_road_centres=False,
-            checkpoint=None,
-            begin=None,
-            end=None,
-        )
-        cli.cmd_pipeline(args)
+        run_cli_pipeline(outdir)
         after = (
             spark.read.parquet(os.path.join(outdir, "gvi_per_road"))
             .orderBy("road_id")
@@ -65,16 +44,23 @@ class TestCli:
         )
         assert before == after
 
-    def test_metrics(self, fixture_dir, outdir, capsys):
-        cli.cmd_metrics(_ns(roads=os.path.join(fixture_dir, "roads.parquet"), results=outdir))
+    def test_metrics(self, fixture_dir, pipeline_out, capsys):
+        cli.cmd_metrics(
+            _ns(
+                roads=os.path.join(fixture_dir, "roads.parquet"),
+                results=pipeline_out,
+            )
+        )
         text = capsys.readouterr().out
         assert "availability score" in text
         assert "top-5 highway types" in text
 
-    def test_gap_fill_prints_model_selection(self, spark, fixture_dir, outdir, capsys):
+    def test_gap_fill_prints_model_selection(
+        self, spark, fixture_dir, pipeline_out, capsys
+    ):
         cli.cmd_gap_fill(
             _ns(
-                results=outdir,
+                results=pipeline_out,
                 ndvi_grid=os.path.join(fixture_dir, "ndvi_grid.parquet"),
                 distance=100.0,
             )
@@ -83,27 +69,29 @@ class TestCli:
         assert "<----- Linear Regression ----->" in text
         assert "<----- Linear GAM ----->" in text
         assert "RMSE:" in text and "AIC value:" in text
-        filled = spark.read.parquet(os.path.join(outdir, "gvi_filled"))
+        filled = spark.read.parquet(os.path.join(pipeline_out, "gvi_filled"))
         assert filled.count() > 0
         assert "gvi_filled" in filled.columns
 
-    def test_gap_fill_gam_model_flag(self, spark, fixture_dir, outdir, capsys):
+    def test_gap_fill_gam_model_flag(
+        self, spark, fixture_dir, pipeline_out, capsys
+    ):
         cli.cmd_gap_fill(
             _ns(
-                results=outdir,
+                results=pipeline_out,
                 ndvi_grid=os.path.join(fixture_dir, "ndvi_grid.parquet"),
                 distance=100.0,
                 model="gam",
             )
         )
         capsys.readouterr()
-        filled = spark.read.parquet(os.path.join(outdir, "gvi_filled")).toPandas()
+        filled = spark.read.parquet(os.path.join(pipeline_out, "gvi_filled")).toPandas()
         assert len(filled) > 0 and filled["gvi_filled"].notna().any()
 
 
     @pytest.mark.parametrize("model", ["linear", "gam"])
     def test_gap_fill_disjoint_raster_warns_not_crashes(
-        self, spark, fixture_dir, outdir, tmp_path, capsys, model
+        self, spark, fixture_dir, pipeline_out, tmp_path, capsys, model
     ):
         """An NDVI raster that does not overlap the study area at all:
         clean warning + empty output, not a TypeError on None metrics
@@ -123,11 +111,11 @@ class TestCli:
             }
         ).to_parquet(far, index=False)
         cli.cmd_gap_fill(
-            _ns(results=outdir, ndvi_grid=far, distance=100.0, model=model)
+            _ns(results=pipeline_out, ndvi_grid=far, distance=100.0, model=model)
         )
         text = capsys.readouterr().out
         assert "WARNING: no points with NDVI values" in text
-        assert spark.read.parquet(os.path.join(outdir, "gvi_filled")).count() == 0
+        assert spark.read.parquet(os.path.join(pipeline_out, "gvi_filled")).count() == 0
 
 class TestCurate:
     def test_curate_funnel(self, spark, tmp_path, capsys):

@@ -284,30 +284,6 @@ def test_distinct_rollup_sketch_bounds(spark):
         )
 
 
-def test_quantile_rollup_sketch_bounds(spark):
-    import numpy as np
-
-    from streetview_naturevisibility_spark.operators.sketches import (
-        quantile_rollup,
-    )
-
-    rng = np.random.RandomState(2)
-    rows = [("g" if i % 2 else "h", int(v)) for i, v in enumerate(rng.randint(0, 100000, 400))]
-    df = spark.createDataFrame(rows, "grp: string, v: long")
-    got = quantile_rollup(df, "grp", "v").collect()
-    for r in got:
-        for p in (50, 90, 99):
-            exact = getattr(r, f"p{p}")
-            approx = getattr(r, f"p{p}_approx")
-            # percentile_approx returns a real element within rank
-            # error 1/accuracy; with accuracy 10k and n=200 the rank
-            # error is < 1 element -> neighbor-element tolerance
-            vals = sorted(v for g, v in rows if g == r.grp)
-            k = int(round(p / 100 * (len(vals) - 1)))
-            lo, hi = vals[max(k - 1, 0)], vals[min(k + 1, len(vals) - 1)]
-            assert lo - 1 <= approx <= hi + 1, (p, exact, approx, lo, hi)
-
-
 def test_clusters_nonconvergence_raises(spark):
     # wrong clusters are worse than no clusters: exhausting max_iters
     # without a fixpoint must raise, not return partial merges

@@ -275,12 +275,9 @@ class TestTokenBudgetSelect:
             ],
             self.SCHEMA,
         )
-        for method in ["window", "bucketed"]:
-            kept = token_budget_select(
-                docs, {"en": 9}, method=method
-            ).collect()
-            assert {r.doc_id for r in kept} == {1}, method
-            assert kept[0].n_tokens == 4
+        kept = token_budget_select(docs, {"en": 9}).collect()
+        assert {r.doc_id for r in kept} == {1}
+        assert kept[0].n_tokens == 4
 
     def test_window_matches_duckdb_twin(self, spark):
         import pandas as pd
@@ -289,7 +286,7 @@ class TestTokenBudgetSelect:
         budgets = {"en": 40, "de": 10_000, "fr": 0}
         docs = spark.createDataFrame(rows, self.SCHEMA)
         got = (
-            token_budget_select(docs, budgets, method="window")
+            token_budget_select(docs, budgets)
             .toPandas()
             .sort_values("doc_id")
             .reset_index(drop=True)
@@ -302,28 +299,26 @@ class TestTokenBudgetSelect:
         assert list(got["n_tokens"]) == list(want["n_tokens"])
 
     def test_bucketed_equals_window(self, spark):
+        import pandas as pd
+
         rows = _budget_corpus()
         docs = spark.createDataFrame(rows, self.SCHEMA)
+        pdf = pd.DataFrame(rows, columns=["doc_id", "text", "lang", "quality_score"])
         for budgets, default in [
             ({"en": 40, "de": 55, "fr": 1}, 0),
             ({"en": 3, "de": 10_000}, 5),
             ({}, 37),
         ]:
-            base = {
-                r.doc_id
-                for r in token_budget_select(
-                    docs, budgets, default_budget=default, method="window"
-                ).collect()
-            }
+            base = set(
+                duckdb_token_budget_select(
+                    pdf, budgets, default_budget=default
+                )["doc_id"].tolist()
+            )
             for nb in [2, 64, 1024]:
                 got = {
                     r.doc_id
                     for r in token_budget_select(
-                        docs,
-                        budgets,
-                        default_budget=default,
-                        method="bucketed",
-                        n_buckets=nb,
+                        docs, budgets, default_budget=default, n_buckets=nb
                     ).collect()
                 }
                 assert got == base, (budgets, default, nb)
@@ -337,25 +332,24 @@ class TestTokenBudgetSelect:
             ],
             self.SCHEMA,
         )
-        for method in ["window", "bucketed"]:
-            # default budget covers NULL lang; NULL-text doc counts as
-            # 0 tokens so it rides along while budget remains
-            kept = {
-                r.doc_id
-                for r in token_budget_select(
-                    docs, {"en": 5}, default_budget=2, method=method
-                ).collect()
-            }
-            assert kept == {1, 2, 3}, method
-            # default 0 drops the NULL-lang doc; en keeps 3 then the
-            # free 0-token doc 2
-            kept = {
-                r.doc_id
-                for r in token_budget_select(
-                    docs, {"en": 5}, default_budget=0, method=method
-                ).collect()
-            }
-            assert kept == {2, 3}, method
+        # default budget covers NULL lang; NULL-text doc counts as
+        # 0 tokens so it rides along while budget remains
+        kept = {
+            r.doc_id
+            for r in token_budget_select(
+                docs, {"en": 5}, default_budget=2
+            ).collect()
+        }
+        assert kept == {1, 2, 3}
+        # default 0 drops the NULL-lang doc; en keeps 3 then the
+        # free 0-token doc 2
+        kept = {
+            r.doc_id
+            for r in token_budget_select(
+                docs, {"en": 5}, default_budget=0
+            ).collect()
+        }
+        assert kept == {2, 3}
 
 
 from streetview_naturevisibility_spark.operators.textops import chunk_dedup
@@ -556,15 +550,14 @@ class TestUrlCuration:
 
 
 # ------------------------------------------------------------------
-# chunk_dedup grid-alignment recall boundary (round 6): offset grids,
-# the shifted second pass, and the content-defined (CDC) variant
+# chunk_dedup grid-alignment recall boundary (round 6): the fixed
+# grid and the content-defined (CDC) variant
 # ------------------------------------------------------------------
 from streetview_naturevisibility_spark.operators.dedup import (  # noqa: E402
     minhash_lsh_pairs,
 )
 from streetview_naturevisibility_spark.operators.textops import (  # noqa: E402
     chunk_dedup_cdc,
-    chunk_dedup_shifted,
 )
 from tests.oracle import duckdb_chunk_dedup_cdc  # noqa: E402
 
@@ -587,45 +580,22 @@ def _alignment_corpus(n: int = 36):
 
 
 class TestChunkAlignment:
-    def test_offset_grid_matches_duckdb_twin(self, spark):
-        rows = _alignment_corpus(12)
-        docs = spark.createDataFrame(rows, "doc_id: long, text: string")
-        got = (
-            chunk_dedup(docs, chunk_chars=_CA_L, offset=_CA_L // 2)
-            .toPandas()
-            .sort_values("doc_id")
-            .reset_index(drop=True)
-        )
-        want = duckdb_chunk_dedup(
-            pd.DataFrame(rows, columns=["doc_id", "text"]),
-            chunk_chars=_CA_L,
-            offset=_CA_L // 2,
-        )
-        assert list(got["text_deduped"]) == list(want["text_deduped"])
-        assert list(got["n_removed"]) == list(want["n_removed"])
-
     def test_shifted_pass_cannot_change_relative_phase(self, spark):
-        """THE measured boundary: a globally shifted grid moves both
-        instances of a repeat by the same amount, so their relative
-        phase is invariant — the shifted second pass removes ZERO
-        additional chars on phase-mismatched plants. (The round-5
-        hypothesis that a shifted pass recovers unaligned repeats is
-        refuted by construction; the alignment-free path is CDC.)"""
+        """THE measured boundary: the grid only matches repeats whose
+        instances share a phase (start offset mod L), and shifting the
+        grid moves both instances by the same amount, so no shifted
+        pass can help; on all-distinct phases the grid removes ZERO
+        chars. The alignment-free path is CDC."""
         rows = _alignment_corpus(32)  # 32 docs, 32 DISTINCT phases
         docs = spark.createDataFrame(rows, "doc_id: long, text: string")
         grid = {
             r.doc_id: r for r in chunk_dedup(docs, chunk_chars=_CA_L).collect()
         }
-        shifted = {
-            r.doc_id: r
-            for r in chunk_dedup_shifted(docs, chunk_chars=_CA_L).collect()
-        }
-        # all phases distinct -> no two instances agree mod L -> no
-        # pass can match ANY passage chunk; both leave texts intact
+        # all phases distinct -> no two instances agree mod L -> the
+        # grid cannot match ANY passage chunk and leaves texts intact
         for i, text in rows:
             assert grid[i].text_deduped == text, i
-            assert shifted[i].text_deduped == text, i
-            assert shifted[i].n_removed == 0
+            assert grid[i].n_removed == 0, i
 
     def test_grid_catches_equal_phase_only(self, spark):
         rows = _alignment_corpus(36)  # 32..35 share phases with 0..3

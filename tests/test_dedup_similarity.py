@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.operators import dedup, similarity, textops
+from tests.oracle import jvm_minhash_fold
 
 SF = "/root/testdata/sf0.001"
 
@@ -568,9 +569,7 @@ class TestMinhashKernelParity:
     def test_kernel_equals_jvm_fold(self, spark, docs):
         sh = dedup.minhash_shingle_frame(docs, "text", "doc_id", 3, "tokenmix")
         fast = dedup.minhash_signatures_from_shingles(sh, 32, "tokenmix")
-        slow = dedup.minhash_signatures_from_shingles(
-            sh, 32, "tokenmix", engine="jvm"
-        )
+        slow = jvm_minhash_fold(sh, 32, "tokenmix")
         key = F.col("minhash").cast("string").alias("m")
         assert fast.select("id", key).exceptAll(slow.select("id", key)).count() == 0
         assert slow.select("id", key).exceptAll(fast.select("id", key)).count() == 0
@@ -588,9 +587,7 @@ class TestMinhashKernelParity:
         }
         slow = {
             r.id: r.minhash
-            for r in dedup.minhash_signatures_from_shingles(
-                src, 8, "tokenmix", engine="jvm"
-            ).collect()
+            for r in jvm_minhash_fold(src, 8, "tokenmix").collect()
         }
         assert fast == slow
         assert fast[2] is None and fast[3] == [1 << 33] * 8

@@ -15,11 +15,10 @@ from collections import Counter
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.operators.similarity import (
     build_ivf_index,
-    kmeans_fit_df,
+    kmeans_fit,
     pinned_centroids,
     semantic_dedup,
     semantic_dedup_incremental,
@@ -472,73 +471,15 @@ def test_semantic_dedup_rejects_bad_keep(spark):
         semantic_dedup(_spark_emb(spark, _mk_emb()), pairs="local")
 
 
-def _np_lloyd(vectors: np.ndarray, init: np.ndarray, iters: int) -> np.ndarray:
-    """NumPy twin of kmeans_fit_df: argmin of the expanded squared
-    distance, per-cluster mean update, empty clusters keep their old
-    centroid."""
-    cents = init.copy()
-    for _ in range(iters):
-        d2 = (
-            (vectors**2).sum(axis=1, keepdims=True)
-            - 2.0 * vectors @ cents.T
-            + (cents**2).sum(axis=1)[None, :]
-        )
-        lab = d2.argmin(axis=1)
-        nxt = cents.copy()
-        for c in range(len(cents)):
-            m = lab == c
-            if m.any():
-                nxt[c] = vectors[m].mean(axis=0)
-        cents = nxt
-    return cents
-
-
-def test_kmeans_fit_df_matches_numpy_lloyd(spark):
-    """Distributed Lloyd over the full table == driver-side NumPy
-    Lloyd from the same deterministic init (k lowest-id vectors), to
-    FP-sum tolerance."""
-    rng = np.random.RandomState(17)
-    vecs = rng.randn(240, DIM)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": list(range(240)),
-            "embedding": [[float(x) for x in v] for v in vecs],
-        }
-    )
-    got = kmeans_fit_df(_spark_emb(spark, pdf), k=5, iters=4, dim=DIM)
-    exp = _np_lloyd(vecs, vecs[:5].copy(), iters=4)
-    np.testing.assert_allclose(got, exp, rtol=1e-9, atol=1e-12)
-    with pytest.raises(ValueError, match="exceeds"):
-        kmeans_fit_df(_spark_emb(spark, pdf.head(3)), k=5, iters=1, dim=DIM)
-
-
-def test_kmeans_fit_df_realistic_dim(spark):
-    """dim=256 (the regime that motivated the long-form rewrite: the
-    old per-dimension ``F.avg(v[i])`` fan-out put k x 256 aggregate
-    expressions in ONE plan). posexplode -> groupBy(_lid, pos) keeps a
-    single aggregate expression at any dim; values must still match
-    NumPy Lloyd from the same init."""
-    big_dim = 256
-    rng = np.random.RandomState(23)
-    vecs = rng.randn(120, big_dim)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": list(range(120)),
-            "embedding": [[float(x) for x in v] for v in vecs],
-        }
-    )
-    got = kmeans_fit_df(_spark_emb(spark, pdf), k=4, iters=3, dim=big_dim)
-    exp = _np_lloyd(vecs, vecs[:4].copy(), iters=3)
-    np.testing.assert_allclose(got, exp, rtol=1e-9, atol=1e-12)
-
-
 def test_semantic_dedup_accepts_fitted_centroids(spark):
     """A data-adapted quantizer plugs in via centroids=: planted
     exact-dup pair still collapses (identical vectors share a cluster
     under ANY quantizer), keep rule unchanged."""
     pdf = _mk_emb()
-    fit = kmeans_fit_df(
-        _spark_emb(spark, pdf.dropna(subset=["embedding"])), k=3, iters=3, dim=DIM
+    fit = kmeans_fit(
+        np.stack(pdf.dropna(subset=["embedding"])["embedding"].to_list()),
+        k=3,
+        iters=3,
     )
     out = {
         r.vec_id: r

@@ -11,7 +11,6 @@ from streetview_naturevisibility_spark.functions.labels import (
     crop_panoramic_images,
     crop_panoramic_images_roads,
     find_peaks,
-    find_road_centre,
     get_gvi,
     get_road_pixels_per_column,
     process_labels,

@@ -3,7 +3,6 @@ containment, and snap-join equivalence with the square-cell path."""
 
 import duckdb
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.geo.hexgrid import (
@@ -11,7 +10,6 @@ from streetview_naturevisibility_spark.geo.hexgrid import (
     hex_cell_sql_ctes,
     hex_distance_py,
     hex_neighbors_col,
-    hex_parent_col,
     kring_py,
     make_hex_cell_udf,
     pack_hex_py,
@@ -118,28 +116,6 @@ class TestRings:
         cb = hex_cell_np(qx, qy, size)
         dists = [hex_distance_py(int(a), int(b)) for a, b in zip(ca, cb)]
         assert max(dists) <= 1
-
-    def test_parent_rebucket_exact_and_near(self, spark):
-        """hex_parent_col (integer half-up cube round) must equal the
-        driver-side twin bit-for-bit — including the exact-.5 lattice
-        ties — and the parent's center must stay within one parent
-        circumradius of the child center (approximate containment)."""
-        from streetview_naturevisibility_spark.geo.hexgrid import hex_parent_py
-
-        size, ratio = 25.0, 4
-        rng = np.random.RandomState(6)
-        xs = rng.uniform(-3000, 3000, 400)
-        ys = rng.uniform(-3000, 3000, 400)
-        cells = [int(c) for c in hex_cell_np(xs, ys, size)]
-        df = spark.createDataFrame([(c,) for c in cells], "c: long")
-        out = df.select("c", hex_parent_col(F.col("c"), ratio).alias("p")).toPandas()
-        for c, p in zip(out["c"], out["p"]):
-            assert int(p) == hex_parent_py(int(c), ratio)
-            q, r = unpack_hex_py(int(c))
-            pq, pr = unpack_hex_py(int(p))
-            cx, cy = _center(q, r, size)
-            px, py = _center(pq, pr, size * ratio)
-            assert np.hypot(cx - px, cy - py) <= size * ratio + 1e-9
 
 
 class TestHexSnap:

@@ -1,10 +1,7 @@
 """Isochrone union (F6) vs an independent brute-force oracle."""
 
-from collections import deque
-
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from tests.oracle import oracle_isochrone_cells as _oracle_iso
 from streetview_naturevisibility_spark.operators.isochrone import (

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.operators.tiling import prepare_pages
 

@@ -5,7 +5,6 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.fixtures.generate import gen_roads, gen_web_pages
 from streetview_naturevisibility_spark.operators.knn import knn_snap

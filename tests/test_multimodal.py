@@ -2,9 +2,7 @@
 expansion — real Spark pipelines over stubbed decoders."""
 
 import numpy as np
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.operators import multimodal as mm
 
@@ -25,11 +23,6 @@ class TestMultimodal:
         assert all(abs(sum(e) - 1.0) < 1e-5 for e in a["embedding"])
         # only image rows processed
         assert len(a) == 30
-
-    def test_resize_shapes(self, spark, media):
-        out = mm.resize_images(media, 8, 8).toPandas()
-        assert (out["width"] == 8).all() and (out["height"] == 8).all()
-        assert all(len(p) == 64 for p in out["pixels"])
 
     def test_frame_sampling_expansion(self, spark, media):
         frames = mm.video_frame_features(media, every_ms=1000).toPandas()
@@ -97,38 +90,6 @@ class TestRealDecoders:
         grid = decode_bmp(header + rows)
         assert grid.shape == (h, w)
         assert (grid == px.mean(axis=2).astype(np.uint8)).all()
-
-    def test_wav_tone_dominant_frequency(self, spark):
-        from streetview_naturevisibility_spark.operators.multimodal import (
-            decode_wav,
-            synth_wav,
-        )
-
-        payload = synth_wav(4)  # 200 + 4*100 = 600 Hz tone
-        samples, rate = decode_wav(payload)
-        assert rate == 8000 and len(samples) == 2000
-        import numpy as np
-
-        spec = np.abs(np.fft.rfft(samples))
-        dom = np.fft.rfftfreq(len(samples), 1 / rate)[spec.argmax()]
-        assert abs(dom - 600.0) < 8.0
-
-    def test_audio_features_pipeline(self, spark, media):
-        from streetview_naturevisibility_spark.operators.multimodal import (
-            audio_features,
-        )
-
-        out = audio_features(media).orderBy("media_id").toPandas()
-        assert len(out) > 0
-        assert (out["sample_rate"] == 8000).all()
-        assert (out["duration_ms"] == 250).all()
-        # pure half-amplitude sine -> rms = 0.5/sqrt(2) ~ 0.3536
-        assert ((out["rms"] - 0.3536).abs() < 0.01).all()
-        # dominant frequency tracks the synth tone (media_id i -> 200 + (i%10)*100)
-        for r in out.itertuples():
-            expect = 200.0 + (r.media_id % 10) * 100.0
-            assert abs(r.dominant_hz - expect) < 8.0
-        assert all(abs(sum(e) - 1.0) < 1e-5 for e in out["embedding"])
 
     def test_image_features_use_real_pgm_decode(self, spark, media):
         """The synth fixture now ships REAL PGM payloads; the feature

@@ -1,4 +1,5 @@
-"""Guard against package code that only tests reach.
+"""Guard against package code that only tests reach, and against
+unused top-level imports.
 
 Parses the package and the production entry points with ``ast`` (no
 Spark) and walks references transitively from the roots: the CLI
@@ -6,12 +7,14 @@ Spark) and walks references transitively from the roots: the CLI
 scripts (``bench.py``, ``bench_extra.py``, ``perfbench/``, ``BENCH/``)
 and ``tools/``. A reference is a name or attribute use in code; strings,
 docstrings and comments do not count. Every top-level package def
-(function, class or assigned name) must be reachable, unless one of the
-two lists below names it with its reason: ``ALLOWED`` (test oracles and
-fixture generators, which are roots themselves) and ``TEST_ONLY``
-(operators only tests still reach, kept until their tests go with them).
+(function, class or assigned name) must be reachable, unless
+``ALLOWED`` names it with its reason (test oracles and fixture
+generators, which are roots themselves).
 
-Run as a script to list the unreachable defs:
+Every top-level import in the package and in ``tests/`` must also be
+used by its module (``__future__`` imports aside).
+
+Run as a script to list the unreachable defs and unused imports:
 ``python tests/test_package_reachability.py``.
 """
 
@@ -54,37 +57,6 @@ ALLOWED = {
     f"{PKG}.operators.regression.fit_ols_normal_equations": "OLS oracle",
     f"{PKG}.operators.dedup.minhash_signatures": "MinHash oracle",
 }
-
-# Operators that only tests reach and that still have to go. Each is
-# deleted together with the tests that check nothing else; the list
-# may only shrink.
-TEST_ONLY = {
-    f"{PKG}.streaming.events.*": "stream dedup/window ops (5 tests)",
-    f"{PKG}.streaming.pages.*": "incremental snap state (3 tests)",
-    f"{PKG}.sources.layout.write_cell_partitioned": "cell layout (2 tests)",
-    f"{PKG}.sources.layout.read_cell_partitioned": "cell layout (2 tests)",
-    f"{PKG}.sources.layout.write_bucketed": "bucketed layout (1 test)",
-    f"{PKG}.sources.layout.read_bucketed": "bucketed layout (1 test)",
-    f"{PKG}.sources.tables.load_gvi_csv_shards": "CSV shard union (1 test)",
-    f"{PKG}.operators.resume.resume_delta": "delta resume (1 test)",
-    f"{PKG}.operators.resume.append_increment": "delta resume (1 test)",
-    f"{PKG}.operators.textops._PII_PATTERNS": "PII redaction (3 tests)",
-    f"{PKG}.operators.textops.redact_pii": "PII redaction (3 tests)",
-    f"{PKG}.operators.textops.normalize_text_col": "normalized dedup (2 tests)",
-    f"{PKG}.operators.textops.exact_dedup_normalized": "normalized dedup (2 tests)",
-    f"{PKG}.operators.textops.decontaminate_streaming": "stream decontam (1 test)",
-    f"{PKG}.operators.sketches.quantile_rollup": "quantile sketch (1 test)",
-    f"{PKG}.operators.similarity.kmeans_fit_df": "distributed k-means (2 tests)",
-    f"{PKG}.operators.multimodal.RESIZED": "image resize (1 test)",
-    f"{PKG}.operators.multimodal.resize_images": "image resize (1 test)",
-    f"{PKG}.operators.multimodal.AUDIO_FEATURES": "audio features (2 tests)",
-    f"{PKG}.operators.multimodal.audio_features": "audio features (2 tests)",
-    f"{PKG}.operators.multimodal.decode_wav": "audio features (2 tests)",
-    f"{PKG}.geo.hexgrid._floor_div": "hex parent rebucket (1 test)",
-    f"{PKG}.geo.hexgrid.hex_parent_col": "hex parent rebucket (1 test)",
-    f"{PKG}.geo.hexgrid.hex_parent_py": "hex parent rebucket (1 test)",
-}
-
 
 def _module_name(path: Path) -> str:
     rel = path.relative_to(REPO).with_suffix("")
@@ -265,15 +237,35 @@ def unreachable_defs() -> list[str]:
             push(_references(m, m.defs[name], modules))
             push({(mod, MODULE)})
 
-    listed = {**ALLOWED, **TEST_ONLY}
     out = []
     for mod, m in modules.items():
         for name in m.defs:
             if (mod, name) in seen or name.startswith("__"):
                 continue
-            if f"{mod}.{name}" in listed or f"{mod}.*" in listed:
+            if f"{mod}.{name}" in ALLOWED or f"{mod}.*" in ALLOWED:
                 continue
             out.append(f"{mod}.{name}")
+    return out
+
+
+def unused_imports() -> list[str]:
+    """``path:line name`` for each name a top-level import binds that
+    its module never uses as a name."""
+    paths = sorted((REPO / PKG).rglob("*.py")) + sorted((REPO / "tests").glob("*.py"))
+    out = []
+    for path in paths:
+        tree = ast.parse(path.read_text(), str(path))
+        bound: dict[str, int] = {}
+        for stmt in tree.body:
+            if isinstance(stmt, ast.Import):
+                for a in stmt.names:
+                    bound[a.asname or a.name.split(".")[0]] = stmt.lineno
+            elif isinstance(stmt, ast.ImportFrom) and stmt.module != "__future__":
+                for a in stmt.names:
+                    bound[a.asname or a.name] = stmt.lineno
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        rel = path.relative_to(REPO)
+        out += [f"{rel}:{line} {n}" for n, line in bound.items() if n not in used]
     return out
 
 
@@ -289,12 +281,17 @@ def test_every_package_def_is_reachable_from_a_production_root():
 def test_allowlist_names_existing_defs():
     modules = _package_modules()
     stale = []
-    for key in {**ALLOWED, **TEST_ONLY}:
+    for key in ALLOWED:
         mod, _, name = key.rpartition(".")
         if mod not in modules or (name != "*" and name not in modules[mod].defs):
             stale.append(key)
     assert not stale, f"allowlist entries that name no package def: {stale}"
 
 
+def test_no_unused_top_level_imports():
+    unused = unused_imports()
+    assert not unused, "unused top-level imports:\n  " + "\n  ".join(unused)
+
+
 if __name__ == "__main__":
-    print("\n".join(unreachable_defs()))
+    print("\n".join(unreachable_defs() + unused_imports()))

@@ -4,7 +4,6 @@ non-linear structure that the linear fit cannot."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.operators.regression import (
     LinearGAM1D,

@@ -4,13 +4,11 @@ import os
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.fixtures.generate import (
     gen_roads,
     gen_web_pages,
-    page_html,
 )
 from streetview_naturevisibility_spark.functions.text import (
     extract_text_kernel,
@@ -117,8 +115,8 @@ class TestSamplePoints:
 
 class TestDecontamination:
     """Benchmark-overlap decontamination: planted 13-gram contamination
-    must be found exactly — both the broadcast arrays_intersect path
-    and the explode+semi-join path — and clean docs must survive."""
+    must be found exactly by the explode+semi-join path, and clean
+    docs must survive."""
 
     def _corpus(self, spark):
         bench_gram = " ".join(f"b{i}" for i in range(13))
@@ -144,18 +142,11 @@ class TestDecontamination:
         )
 
         docs, blk = self._corpus(spark)
-        a = sorted(
-            (r.doc_id, r.n_hits)
-            for r in contaminated_ids(docs, blk, block_text_col="text",
-                                      method="broadcast").collect()
-        )
         b = sorted(
             (r.doc_id, r.n_hits)
-            for r in contaminated_ids(docs, blk, block_text_col="text",
-                                      method="join").collect()
+            for r in contaminated_ids(docs, blk, block_text_col="text").collect()
         )
-        assert a == b
-        assert [i for i, _ in a] == [2, 4]
+        assert [i for i, _ in b] == [2, 4]
 
     def test_decontaminate_drops_only_hits(self, spark):
         from streetview_naturevisibility_spark.operators.textops import decontaminate
@@ -191,14 +182,11 @@ class TestDecontamination:
         from tests.oracle import duckdb_decontaminate
 
         docs, blk = self._corpus(spark)
-        for method in ("join", "broadcast"):
-            got = sorted(
-                r.doc_id for r in decontaminate(docs, blk, method=method).collect()
-            )
-            want = duckdb_decontaminate(
-                docs.toPandas(), blk.toPandas().rename(columns={"bid": "doc_id"})
-            )
-            assert got == sorted(want["doc_id"].tolist())
+        got = sorted(r.doc_id for r in decontaminate(docs, blk).collect())
+        want = duckdb_decontaminate(
+            docs.toPandas(), blk.toPandas().rename(columns={"bid": "doc_id"})
+        )
+        assert got == sorted(want["doc_id"].tolist())
 
         # wider corpus: 120 docs, tokens from a small alphabet so real
         # overlaps occur; blocklist = 5 of the docs verbatim
@@ -225,122 +213,6 @@ class TestDecontamination:
             n=8,
         )
         assert got == sorted(want["doc_id"].tolist())
-
-
-class TestPiiRedaction:
-    def test_patterns_replaced_and_counted(self, spark):
-        from streetview_naturevisibility_spark.operators.textops import redact_pii
-
-        docs = spark.createDataFrame(
-            [
-                (1, "mail me at jane.doe+x@example.co.uk or call +1 (555) 123-4567"),
-                (2, "server at 192.168.0.1 and 10.0.0.255 responded"),
-                (3, "no pii here at all"),
-            ],
-            "doc_id: long, text: string",
-        )
-        out = {r.doc_id: r for r in redact_pii(docs).collect()}
-        assert "<EMAIL>" in out[1].text_redacted
-        assert "<PHONE>" in out[1].text_redacted
-        assert out[1].n_email == 1 and out[1].n_phone == 1
-        # bare national formats (review finding: the first pattern
-        # required a country code and leaked these)
-        bare = spark.createDataFrame(
-            [
-                (10, "call 555-123-4567 now"),
-                (11, "or (555) 123-4567 works"),
-                (12, "digits 5551234567 are an id, not a phone"),
-                (13, "dotted 555.123.4567 too"),
-            ],
-            "doc_id: long, text: string",
-        )
-        bout = {r.doc_id: r for r in redact_pii(bare).collect()}
-        for i in (10, 11, 13):
-            assert bout[i].n_phone == 1 and "<PHONE>" in bout[i].text_redacted, i
-        assert bout[12].n_phone == 0  # separator required: plain ids kept
-        assert out[2].text_redacted.count("<IP>") == 2 and out[2].n_ipv4 == 2
-        assert out[3].text_redacted == out[3].text
-        assert out[3].n_email == out[3].n_phone == out[3].n_ipv4 == 0
-
-    def test_plan_is_jvm_only(self, spark):
-        from streetview_naturevisibility_spark.operators.textops import redact_pii
-
-        docs = spark.createDataFrame([(1, "a@b.co x")], "doc_id: long, text: string")
-        plan = redact_pii(docs)._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-    def test_duckdb_sql_twin_agrees(self, spark):
-        """SQL-twin oracle (tests/oracle.duckdb_redact_pii): Java-regex
-        redaction (counts AND redacted text) must match an RE2-based
-        ANSI-SQL re-statement of the SAME pattern table on a corpus
-        mixing every pattern, overlap-after-substitution shapes, and
-        clean prose. Stands in for a driver contract row (50-row
-        cap)."""
-        from streetview_naturevisibility_spark.operators.textops import (
-            _PII_PATTERNS,
-            redact_pii,
-        )
-        from tests.oracle import duckdb_redact_pii
-
-        rows = [
-            (1, "mail jane.doe+x@example.co.uk or call +1 (555) 123-4567"),
-            (2, "server at 192.168.0.1 and 10.0.0.255 responded"),
-            (3, "no pii here at all"),
-            (4, "a@b.co b@c.io twice and 555-123-4567 then (555) 123-4567"),
-            (5, "id 5551234567 stays; dotted 555.123.4567 goes; v6 ::1 stays"),
-            (6, "edge 999.999.999.999 still matches the narrow ipv4 shape"),
-        ]
-        docs = spark.createDataFrame(rows, "doc_id: long, text: string")
-        got = (
-            redact_pii(docs)
-            .select(
-                "doc_id", "text", "n_email", "n_phone", "n_ipv4", "text_redacted"
-            )
-            .orderBy("doc_id")
-            .toPandas()
-        )
-        import pandas as pd
-
-        want = duckdb_redact_pii(
-            pd.DataFrame(rows, columns=["doc_id", "text"]), _PII_PATTERNS
-        )
-        pd.testing.assert_frame_equal(
-            got.reset_index(drop=True),
-            want.reset_index(drop=True),
-            check_dtype=False,
-        )
-
-
-class TestNormalizedDedup:
-    def test_case_and_whitespace_variants_collapse(self, spark):
-        from streetview_naturevisibility_spark.operators.textops import (
-            exact_dedup_normalized,
-        )
-
-        docs = spark.createDataFrame(
-            [
-                (1, "Hello   World"),
-                (2, "hello world"),
-                (3, "  HELLO WORLD \t"),
-                (4, "different doc"),
-            ],
-            "doc_id: long, text: string",
-        )
-        out = {r.keeper: r for r in exact_dedup_normalized(docs).collect()}
-        assert out[1].n_dups == 3  # 1,2,3 collapse
-        assert out[4].n_dups == 1
-        assert len(out) == 2
-
-    def test_plan_is_jvm_only(self, spark):
-        from streetview_naturevisibility_spark.operators.textops import (
-            exact_dedup_normalized,
-        )
-
-        docs = spark.createDataFrame([(1, "A  b")], "doc_id: long, text: string")
-        plan = (
-            exact_dedup_normalized(docs)._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 class TestDecontamWindowSize:

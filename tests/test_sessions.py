@@ -1,10 +1,7 @@
 """Session windows: batch gaps-and-islands vs a pandas oracle."""
 
-import os
-
 import numpy as np
 import pandas as pd
-import pytest
 
 from streetview_naturevisibility_spark.streaming.sessions import sessionize_batch
 

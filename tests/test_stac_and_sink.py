@@ -5,7 +5,6 @@ reference's network fetch left out as an environment capability."""
 import os
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from streetview_naturevisibility_spark.sources import stac

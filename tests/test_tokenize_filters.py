@@ -2,7 +2,6 @@
 hand goldens, independent oracles, and DuckDB twins (standing in for
 driver contract rows; the contract is capped at 50 entries)."""
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
