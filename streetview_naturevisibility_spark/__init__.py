@@ -11,7 +11,7 @@ Common-Crawl-style web-page tables, built Spark-first:
 - tile/cell assignment as native Column math (whole-stage codegen),
 - geometry kernels as Arrow-vectorized pandas UDFs (pure NumPy — no
   per-row Python),
-- explicit cell partitioning + salting for skewed spatial joins,
+- explicit cell partitioning for spatial joins,
 - checkpoint/lineage layer for resumable stages.
 """
 

@@ -7,8 +7,9 @@
 
 Subcommands (reference analogs cited):
 - ``pipeline``  — main_script.py end-to-end: sample points -> tile ->
-  kNN snap -> GVI -> per-road aggregate, each stage checkpointed with
-  per-partition lineage (resume = rerun the same command).
+  kNN snap -> GVI -> per-road aggregate, each stage checkpointed
+  (resume = rerun the same command); prints each stage's files and
+  rows, read from the parquet footers.
 - ``metrics``   — scripts/mean_gvi_street.py + results_metrics.py
   reporting chain over a finished pipeline output.
 - ``gap-fill``  — predict_missing_gvi.py: zonal NDVI + OLS fill.
@@ -22,6 +23,8 @@ Subcommands (reference analogs cited):
   exact dedup -> MinHash-LSH near-dup clustering with canonical
   keepers -> deterministic stratified sample; prints the funnel
   counts and the LSH bucket-drop metrics.
+- ``layout``    — rewrite a pages/points parquet Z-ordered by
+  (tile_x, tile_y) so bbox scans skip files.
 
 On a real cluster drop ``--master``; on the sandbox it defaults to
 local[$SPARK_GRAFT_CPUS].
@@ -47,7 +50,12 @@ from .operators.aggregates import (
 )
 from .operators.gvi import score_snapped_points
 from .operators.knn import knn_snap
-from .operators.regression import gap_fill_cv_metrics, gap_fill_linear
+from .operators.regression import (
+    gam_cv_metrics,
+    gap_fill_cv_metrics,
+    gap_fill_gam,
+    gap_fill_linear,
+)
 from .operators.resume import read_lineage, run_stage
 from .operators.sampling import sample_points
 from .operators.tiling import prepare_pages
@@ -74,16 +82,20 @@ def cmd_pipeline(args: argparse.Namespace) -> None:
         lambda: knn_snap(points, pages, max_distance=args.max_distance),
     )
     gvi_sel = snapped
+    gvi_stage = "gvi_points"
     if args.begin is not None or args.end is not None:
         lo = args.begin or 0
         hi = args.end if args.end is not None else 1 << 62
         gvi_sel = snapped.where(
             (F.col("point_id") >= F.lit(lo)) & (F.col("point_id") < F.lit(hi))
         )
+        # each slice is its own checkpoint: a run over another range
+        # into the same --out must not resume this one
+        gvi_stage = f"gvi_points_{lo}_{hi}"
     gvi = run_stage(
         spark,
         root,
-        "gvi_points",
+        gvi_stage,
         lambda: score_snapped_points(gvi_sel, pages, args.cut_by_road_centres),
     )
     per_road = gvi_per_road(build_intersection(gvi, points, roads))
@@ -93,10 +105,10 @@ def cmd_pipeline(args: argparse.Namespace) -> None:
     gvi.orderBy("point_id").write.mode("overwrite").parquet(
         os.path.join(args.out, "gvi_points")
     )
-    for stage in ("sample_points", "pages_prepared", "snapped", "gvi_points"):
+    for stage in ("sample_points", "pages_prepared", "snapped", gvi_stage):
         recs = read_lineage(root, stage)
         rows = sum(r["rows"] for r in recs)
-        print(f"[lineage] {stage}: {len(recs)} partitions, {rows} rows")
+        print(f"[lineage] {stage}: {len(recs)} files, {rows} rows")
 
 
 def cmd_metrics(args: argparse.Namespace) -> None:
@@ -150,8 +162,6 @@ def cmd_gap_fill(args: argparse.Namespace) -> None:
     # README picks the GAM on its data; linear stays the default for
     # protocol continuity with rounds 1-3)
     if getattr(args, "model", "linear") == "gam":
-        from .operators.regression import gap_fill_gam
-
         out = gap_fill_gam(known_feats, feature="ndvi", target="gvi")
     else:
         out = gap_fill_linear(known_feats, feature="ndvi", target="gvi")
@@ -171,8 +181,6 @@ def cmd_gap_fill(args: argparse.Namespace) -> None:
     print("RMSE:", m.avg_rmse)
     print("AIC value:", m.aic)
     # the GAM half of the reference printout (predict_missing_gvi.py:139-144)
-    from .operators.regression import gam_cv_metrics
-
     g = gam_cv_metrics(known_feats, feature="ndvi", target="gvi")
     print("<----- Linear GAM ----->")
     print("RMSE:", g["avg_rmse"])
@@ -546,7 +554,9 @@ def cmd_curate(args: argparse.Namespace) -> None:
         max_bucket=args.max_bucket,
         return_metrics=True,
     )
-    clusters = duplicate_clusters(pairs)
+    clusters = duplicate_clusters(
+        pairs, algorithm=getattr(args, "cc_algorithm", "propagation")
+    )
     near = dedup_keep_canonical(exact, clusters)
     n_near = near.count()
     m = metrics.collect()[0]

@@ -1,3 +1,3 @@
-"""Engine operators: sampling, tiling, kNN snap join, PIP join, zonal
-stats, GVI scoring, aggregation/metrics, dedup, similarity, gap-fill,
-resume/lineage, skew salting."""
+"""Engine operators: sampling, tiling, kNN snap join, zonal stats, GVI
+scoring, aggregation/metrics, dedup, similarity, gap-fill,
+resume/lineage."""

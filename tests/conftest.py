@@ -33,13 +33,13 @@ def run_cli_pipeline(spark, fixture_dir):
     """Runs ``cli pipeline`` in-process over the fixture tables, exactly
     as ``spark-submit ... cli.py pipeline`` would, and returns ``out``."""
 
-    def run(out: str) -> str:
+    def run(out: str, *extra: str) -> str:
         saved = sys.argv
         sys.argv = [
             "svnv-spark", "--master", "local[4]", "pipeline",
             "--roads", os.path.join(fixture_dir, "roads.parquet"),
             "--pages", os.path.join(fixture_dir, "web_pages.parquet"),
-            "--out", out,
+            "--out", out, *extra,
         ]
         try:
             cli.main()

@@ -44,6 +44,30 @@ class TestCli:
         )
         assert before == after
 
+    def test_pipeline_ranges_do_not_share_a_checkpoint(
+        self, spark, pipeline_out, run_cli_pipeline, tmp_path, capsys
+    ):
+        """Two disjoint --begin/--end slices into one --out: each run
+        writes its own slice, not the checkpoint of the full run or of
+        the other slice, and its [lineage] rows match what it wrote."""
+        import re
+
+        outdir = str(tmp_path / "ranges")
+        shutil.copytree(pipeline_out, outdir)
+        for lo, hi in ((0, 20), (20, 40)):
+            capsys.readouterr()
+            run_cli_pipeline(outdir, "--begin", str(lo), "--end", str(hi))
+            ids = [
+                r.point_id
+                for r in spark.read.parquet(os.path.join(outdir, "gvi_points")).collect()
+            ]
+            assert ids and all(lo <= i < hi for i in ids), (lo, hi, ids)
+            m = re.search(
+                rf"\[lineage\] gvi_points_{lo}_{hi}: \d+ files, (\d+) rows",
+                capsys.readouterr().out,
+            )
+            assert m and int(m.group(1)) == len(ids)
+
     def test_metrics(self, fixture_dir, pipeline_out, capsys):
         cli.cmd_metrics(
             _ns(
@@ -156,6 +180,49 @@ class TestCurate:
             cur.groupBy(F.md5("text")).count().where("count > 1").count() == 0
         )
         assert "weight" in cur.columns
+
+    def test_cc_algorithm_flag_reaches_clustering(
+        self, spark, tmp_path, monkeypatch, capsys
+    ):
+        """``curate --cc-algorithm star`` must run the star kernel, not
+        the propagation default."""
+        import sys
+
+        import pandas as pd
+
+        from streetview_naturevisibility_spark.operators import corpus
+
+        docs = str(tmp_path / "docs.parquet")
+        text = "the quick brown fox jumps over the lazy dog again and again"
+        pd.DataFrame(
+            {
+                "doc_id": [1, 2, 3],
+                "text": [text, text + " today", "spark engines shuffle data"],
+                "lang": ["en", "en", "en"],
+                "source": ["t", "t", "t"],
+                "n_chars": [len(text), len(text) + 6, 26],
+            }
+        ).to_parquet(docs, index=False)
+        seen = []
+        real = corpus.duplicate_clusters
+
+        def spy(pairs, *args, **kwargs):
+            seen.append(kwargs.get("algorithm"))
+            return real(pairs, *args, **kwargs)
+
+        monkeypatch.setattr(corpus, "duplicate_clusters", spy)
+        monkeypatch.setattr(
+            sys,
+            "argv",
+            [
+                "svnv-spark", "--master", "local[4]", "curate",
+                "--docs", docs, "--out", str(tmp_path / "cur"),
+                "--min-quality", "0", "--cc-algorithm", "star",
+            ],
+        )
+        cli.main()
+        capsys.readouterr()
+        assert seen == ["star"]
 
     def test_lm_filter_keeps_unscorable_short_docs(self, spark, tmp_path, capsys):
         """--lm-ref must KEEP docs too short to score (<2 tokens, NULL

@@ -29,11 +29,32 @@ class TestResume:
         root = str(tmp_path / "ckpt2")
         run_stage(spark, root, "s", lambda: spark.range(1000).repartition(4))
         recs = read_lineage(root, "s")
-        assert len(recs) >= 1
+        files = sorted(
+            p.name for p in (tmp_path / "ckpt2" / "s" / "data").glob("*.parquet")
+        )
+        assert [r["file"] for r in recs] == files
         assert sum(r["rows"] for r in recs) == 1000
         for r in recs:
             assert r["stage"] == "s"
-            assert "wall_ms" in r and "rows_per_sec" in r
+
+    def test_file_uri_root(self, spark, tmp_path, monkeypatch):
+        """A ``file:`` URI root resumes like a path: the second run does
+        not rebuild, lineage counts the written rows, and nothing lands
+        in a relative ``file:`` directory under the working directory."""
+        monkeypatch.chdir(tmp_path)
+        root = (tmp_path / "ckpt").as_uri()
+        calls = {"n": 0}
+
+        def build():
+            calls["n"] += 1
+            return spark.range(300).repartition(3)
+
+        run_stage(spark, root, "s", build)
+        out = run_stage(spark, root, "s", build)
+        assert calls["n"] == 1
+        assert out.count() == 300
+        assert sum(r["rows"] for r in read_lineage(root, "s")) == 300
+        assert not (tmp_path / "file:").exists()
 
 
 class TestStreaming:
