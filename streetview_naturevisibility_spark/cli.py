@@ -4,6 +4,10 @@
         --roads roads.parquet --pages pages.parquet --out results/ \\
         [--spacing 50] [--max-distance 50] [--cut-by-road-centres] \\
         [--checkpoint results/_ckpt] [--begin N --end M]
+    ... cli.py metrics --roads roads.parquet --results results/ \\
+        [--checkpoint results/_ckpt]
+    ... cli.py gap-fill --results results/ --ndvi-grid ndvi.parquet \\
+        [--checkpoint results/_ckpt] [--distance 50] [--model linear]
 
 Subcommands (reference analogs cited):
 - ``pipeline``  — main_script.py end-to-end: sample points -> tile ->
@@ -48,6 +52,15 @@ from .operators.aggregates import (
     unavailable_images_per_highway,
     usability_score,
 )
+from .operators.bloom import bloom_anti_join, build_bloom
+from .operators.corpus import (
+    dedup_keep_canonical,
+    duplicate_clusters,
+    pack_rows,
+    stratified_sample,
+    token_budget_select,
+)
+from .operators.dedup import minhash_lsh_pairs
 from .operators.gvi import score_snapped_points
 from .operators.knn import knn_snap
 from .operators.regression import (
@@ -56,11 +69,31 @@ from .operators.regression import (
     gap_fill_gam,
     gap_fill_linear,
 )
-from .operators.resume import read_lineage, run_stage
+from .operators.resume import read_lineage, read_stage, run_stage
 from .operators.sampling import sample_points
+from .operators.similarity import semantic_dedup
+from .operators.textops import (
+    analyze_documents,
+    c4_clean,
+    chunk_dedup,
+    chunk_dedup_cdc,
+    decontaminate,
+    dsir_select,
+    fix_text,
+    paragraph_dedup,
+    repetition_signals,
+    score_bigram_logprob,
+    score_quality_classifier,
+    span_dedup_c4,
+    train_bigram_lm,
+    train_quality_classifier,
+)
 from .operators.tiling import prepare_pages
+from .operators.tokenize import bpe_token_count, train_bpe_from_corpus
 from .operators.zonal import zonal_mean
 from .session import get_spark
+from .sources.layout import write_spatial_sorted
+from .sources.stac import landcover_percentages, ndvi_for_aoi
 
 
 def cmd_pipeline(args: argparse.Namespace) -> None:
@@ -114,7 +147,8 @@ def cmd_pipeline(args: argparse.Namespace) -> None:
 def cmd_metrics(args: argparse.Namespace) -> None:
     spark = get_spark(app_name="svnv-metrics", master=args.master)
     roads = spark.read.parquet(args.roads)
-    points = spark.read.parquet(os.path.join(args.results, "_ckpt", "sample_points", "data"))
+    root = args.checkpoint or os.path.join(args.results, "_ckpt")
+    points = read_stage(spark, root, "sample_points")
     gvi = spark.read.parquet(os.path.join(args.results, "gvi_points"))
     inter = build_intersection(gvi, points, roads).cache()
 
@@ -135,7 +169,8 @@ def cmd_metrics(args: argparse.Namespace) -> None:
 def cmd_gap_fill(args: argparse.Namespace) -> None:
     spark = get_spark(app_name="svnv-gapfill", master=args.master)
     gvi = spark.read.parquet(os.path.join(args.results, "gvi_points"))
-    points = spark.read.parquet(os.path.join(args.results, "_ckpt", "sample_points", "data"))
+    root = args.checkpoint or os.path.join(args.results, "_ckpt")
+    points = read_stage(spark, root, "sample_points")
     grid = spark.read.parquet(args.ndvi_grid)
     ndvi = zonal_mean(points, grid, radius=args.distance / 2.0)
     feats = gvi.join(ndvi, "point_id", "left").withColumnRenamed("mean_ndvi", "ndvi")
@@ -161,7 +196,7 @@ def cmd_gap_fill(args: argparse.Namespace) -> None:
     # --model selects the filler (the reference evaluates both and its
     # README picks the GAM on its data; linear stays the default for
     # protocol continuity with rounds 1-3)
-    if getattr(args, "model", "linear") == "gam":
+    if args.model == "gam":
         out = gap_fill_gam(known_feats, feature="ndvi", target="gvi")
     else:
         out = gap_fill_linear(known_feats, feature="ndvi", target="gvi")
@@ -196,8 +231,6 @@ def cmd_stac_ndvi(args: argparse.Namespace) -> None:
     --ndvi-grid`` consumes (cell_x, cell_y, cx, cy, value) — catalog
     to regression with no manual glue. Prints the reference's
     image-info lines (availability.py:166-170)."""
-    from .sources.stac import ndvi_for_aoi
-
     spark = get_spark(app_name="svnv-stac-ndvi", master=args.master)
     try:
         bbox = tuple(float(v) for v in args.bbox.split(","))
@@ -212,7 +245,6 @@ def cmd_stac_ndvi(args: argparse.Namespace) -> None:
         spark, args.catalog, bbox, date_range,
         collection=args.collection, max_cloud=args.max_cloud,
     )
-    os.makedirs(args.out, exist_ok=True)
     out_path = os.path.join(args.out, "ndvi_grid.parquet")
     ndvi.select(
         "cell_x", "cell_y", "cx", "cy", F.col("ndvi").alias("value")
@@ -231,14 +263,11 @@ def cmd_stac_landcover(args: argparse.Namespace) -> None:
     per-point landcover class percentages from the most recent
     esa-worldcover item of a LOCAL static STAC catalog, euclidean
     buffer of --radius meters."""
-    from .sources.stac import landcover_percentages
-
     spark = get_spark(app_name="svnv-stac-landcover", master=args.master)
     points = spark.read.parquet(args.points)
     out, item = landcover_percentages(
         spark, args.catalog, points, radius=args.radius
     )
-    os.makedirs(args.out, exist_ok=True)
     path = os.path.join(args.out, "landcover_percentages.parquet")
     out.write.mode("overwrite").parquet(path)
     print(
@@ -249,6 +278,11 @@ def cmd_stac_landcover(args: argparse.Namespace) -> None:
     print(f"stac-landcover complete -> {path}")
 
 
+def _per_lang(spec: str, cast) -> dict:
+    """``"en=0.5,de=1"`` -> ``{"en": cast("0.5"), "de": cast("1")}``."""
+    return {kv.split("=")[0]: cast(kv.split("=")[1]) for kv in spec.split(",")}
+
+
 def cmd_curate(args: argparse.Namespace) -> None:
     """Training-corpus curation over a documents table: quality filter
     -> exact dedup -> MinHash-LSH near-dup clustering (keep canonical)
@@ -256,54 +290,52 @@ def cmd_curate(args: argparse.Namespace) -> None:
     summary; every stage is a distributed DataFrame op (the near-dup
     bucket join is capped via --max-bucket with drop metrics printed,
     never silent)."""
-    from .operators.corpus import (
-        dedup_keep_canonical,
-        duplicate_clusters,
-        stratified_sample,
-    )
-    from .operators.dedup import minhash_lsh_pairs
-    from .operators.textops import analyze_documents
-
-    if getattr(args, "dsir_target", None) and getattr(args, "dsir_keep", None) is None:
+    if args.dsir_target and args.dsir_keep is None:
         raise SystemExit("--dsir-target requires --dsir-keep")
 
     spark = get_spark(app_name="svnv-curate", master=args.master)
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
+    rewritten = False
 
-    if getattr(args, "fix_text", False):
+    def rewrite(out, text_col, where=None, **metrics):
+        """One text-rewrite stage: checkpoint the operator's output,
+        aggregate its ``metrics`` in one job and put its ``text_col``
+        in place of the docs' text (a doc failing ``where`` is
+        dropped). Returns the metrics row."""
+        nonlocal docs, rewritten
+        out = out.localCheckpoint(eager=True)
+        row = out.agg(*(c.alias(k) for k, c in metrics.items())).collect()[0]
+        kept = out.where(where) if where else out
+        docs = docs.drop("text").join(
+            kept.select("doc_id", F.col(text_col).alias("text")), "doc_id"
+        )
+        rewritten = True
+        return row
+
+    if args.fix_text:
         # encoding cleanup FIRST: every later stage (shingles, LM,
         # classifier, dedup digests) judges the repaired text
-        from .operators.textops import fix_text
-
-        fx = fix_text(docs).localCheckpoint(eager=True)
-        n_fixed = fx.where("changed").count()
-        docs = docs.drop("text").join(
-            fx.select("doc_id", F.col("text_fixed").alias("text")), "doc_id"
+        st = rewrite(
+            fix_text(docs), "text_fixed", n=F.count(F.when(F.col("changed"), 1))
         )
-        print(f"[fix] repaired={n_fixed} docs (mojibake/spaces/control chars)")
+        print(f"[fix] repaired={st.n} docs (mojibake/spaces/control chars)")
 
-    if getattr(args, "c4", False):
+    if args.c4:
         # C4 line/page heuristics (Raffel et al. 2020 §2.2) directly
         # after encoding repair: later stages (shingles, LM, dedup
         # digests) judge the line-cleaned text
-        from .operators.textops import c4_clean
-
-        cc = c4_clean(
-            docs,
-            min_words_per_line=getattr(args, "c4_min_words", 3),
-            min_sentences=getattr(args, "c4_min_sentences", 5),
-        ).localCheckpoint(eager=True)
-        st = cc.agg(
-            F.sum(F.col("keep").cast("long")).alias("kept"),
-            F.sum("n_lines").alias("nl"),
-            F.sum("n_lines_kept").alias("nk"),
-        ).collect()[0]
-        docs = docs.drop("text").join(
-            cc.where("keep").select(
-                "doc_id", F.col("text_clean").alias("text")
+        st = rewrite(
+            c4_clean(
+                docs,
+                min_words_per_line=args.c4_min_words,
+                min_sentences=args.c4_min_sentences,
             ),
-            "doc_id",
+            "text_clean",
+            where="keep",
+            kept=F.sum(F.col("keep").cast("long")),
+            nl=F.sum("n_lines"),
+            nk=F.sum("n_lines_kept"),
         )
         print(
             f"[c4] kept={int(st.kept or 0)} of {n_in} pages; "
@@ -311,9 +343,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         )
         n_in = int(st.kept or 0)
 
-    if getattr(args, "blocklist", None):
-        from .operators.textops import decontaminate
-
+    if args.blocklist:
         blk = spark.read.parquet(args.blocklist)
         n_before = n_in
         docs = decontaminate(docs, blk, n=args.decontam_n).localCheckpoint(
@@ -325,87 +355,38 @@ def cmd_curate(args: argparse.Namespace) -> None:
             f"({args.decontam_n}-gram overlap vs blocklist)"
         )
 
-    if getattr(args, "para_dedup", False):
-        # boilerplate removal BEFORE scoring: quality/LM judge the
-        # text the downstream corpus will actually contain
-        from .operators.textops import paragraph_dedup
-
-        pd_out = paragraph_dedup(
-            docs,
-            max_docs=getattr(args, "para_max_docs", 1),
-            min_chars=getattr(args, "para_min_chars", 0),
-        ).localCheckpoint(eager=True)
-        n_para_removed = pd_out.agg(F.sum("n_removed")).collect()[0][0] or 0
-        docs = docs.drop("text").join(
-            pd_out.select("doc_id", F.col("text_deduped").alias("text")),
-            "doc_id",
-        )
-        print(f"[para] removed={n_para_removed} boilerplate paragraph instances")
-
-    if getattr(args, "chunk_dedup", None):
-        # substring-level dedup (RETRO-chunk approximation): cut every
-        # repeated L-char chunk except its globally-first occurrence
-        from .operators.textops import chunk_dedup
-
-        cd_out = chunk_dedup(docs, chunk_chars=args.chunk_dedup).localCheckpoint(
-            eager=True
-        )
-        n_chunks_removed = cd_out.agg(F.sum("n_removed")).collect()[0][0] or 0
-        docs = docs.drop("text").join(
-            cd_out.select("doc_id", F.col("text_deduped").alias("text")),
-            "doc_id",
-        )
-        print(
-            f"[chunk] removed={n_chunks_removed} duplicated "
-            f"{args.chunk_dedup}-char chunk instances"
-        )
-
-    if getattr(args, "span_dedup", None):
-        # C4 §2.2 companion: remove all but the globally-first
-        # occurrence of any n-sentence span (sentence-unit analog of
+    # substring-level dedup before scoring, in this order: each cuts
+    # a repeated unit from all but its globally-first occurrence
+    for on, tag, dedup, what in (
+        # boilerplate paragraphs: quality/LM judge the text the
+        # downstream corpus will actually contain
+        (args.para_dedup, "para",
+         lambda d: paragraph_dedup(
+             d, max_docs=args.para_max_docs, min_chars=args.para_min_chars
+         ),
+         "boilerplate paragraph instances"),
+        # repeated L-char chunks (RETRO-chunk approximation)
+        (args.chunk_dedup, "chunk",
+         lambda d: chunk_dedup(d, chunk_chars=args.chunk_dedup),
+         f"duplicated {args.chunk_dedup}-char chunk instances"),
+        # C4 §2.2 companion: n-sentence spans (sentence-unit analog of
         # the chunk grid; pairs naturally with --c4)
-        from .operators.textops import span_dedup_c4
-
-        sd_out = span_dedup_c4(docs, n_sents=args.span_dedup).localCheckpoint(
-            eager=True
-        )
-        n_spans_removed = sd_out.agg(F.sum("n_removed")).collect()[0][0] or 0
-        docs = docs.drop("text").join(
-            sd_out.select("doc_id", F.col("text_deduped").alias("text")),
-            "doc_id",
-        )
-        print(
-            f"[span] removed={n_spans_removed} duplicated "
-            f"{args.span_dedup}-sentence span instances"
-        )
-
-    if getattr(args, "chunk_dedup_cdc", None):
-        # alignment-free substring dedup: content-defined token chunks
-        # (boundaries from the token hash, so repeats match at ANY
-        # position — see BENCH/BASELINE.md "grid-alignment recall")
-        from .operators.textops import chunk_dedup_cdc
-
-        cdc_out = chunk_dedup_cdc(docs, avg_tokens=args.chunk_dedup_cdc).localCheckpoint(
-            eager=True
-        )
-        n_cdc_removed = cdc_out.agg(F.sum("n_removed")).collect()[0][0] or 0
-        docs = docs.drop("text").join(
-            cdc_out.select("doc_id", F.col("text_deduped").alias("text")),
-            "doc_id",
-        )
-        print(
-            f"[chunk-cdc] removed={n_cdc_removed} duplicated "
-            f"content-defined chunk instances (~{args.chunk_dedup_cdc} tokens)"
-        )
-
-    if (
-        getattr(args, "fix_text", False)
-        or getattr(args, "c4", False)
-        or getattr(args, "para_dedup", False)
-        or getattr(args, "chunk_dedup", None)
-        or getattr(args, "chunk_dedup_cdc", None)
-        or getattr(args, "span_dedup", None)
+        (args.span_dedup, "span",
+         lambda d: span_dedup_c4(d, n_sents=args.span_dedup),
+         f"duplicated {args.span_dedup}-sentence span instances"),
+        # alignment-free content-defined token chunks (boundaries from
+        # the token hash, so repeats match at ANY position — see
+        # BENCH/BASELINE.md "grid-alignment recall")
+        (args.chunk_dedup_cdc, "chunk-cdc",
+         lambda d: chunk_dedup_cdc(d, avg_tokens=args.chunk_dedup_cdc),
+         "duplicated content-defined chunk instances "
+         f"(~{args.chunk_dedup_cdc} tokens)"),
     ):
+        if on:
+            st = rewrite(dedup(docs), "text_deduped", removed=F.sum("n_removed"))
+            print(f"[{tag}] removed={st.removed or 0} {what}")
+
+    if rewritten:
         # cut the text-rewrite lineage before the scoring stages: every
         # downstream stage otherwise replans the full fix/para/chunk
         # expression tree and the composed plan grows multiplicatively
@@ -418,32 +399,26 @@ def cmd_curate(args: argparse.Namespace) -> None:
     scored = analyze_documents(docs, keep_input_cols=True)
     kept_q = scored.where(F.col("quality_score") >= F.lit(args.min_quality))
 
-    max_dup_line = getattr(args, "max_dup_line_frac", None)
-    max_top2gram = getattr(args, "max_top2gram_frac", None)
-    if max_dup_line is not None or max_top2gram is not None:
+    if args.max_dup_line_frac is not None or args.max_top2gram_frac is not None:
         # Gopher-style repetition filter between the heuristic quality
         # gate and the LM gate
-        from .operators.textops import repetition_signals
-
         rep = repetition_signals(kept_q.select("doc_id", "text"), top_ns=(2,))
         cond = F.lit(False)
-        if max_dup_line is not None:
-            cond = cond | (F.col("dup_line_frac") > max_dup_line)
-        if max_top2gram is not None:
-            cond = cond | (F.col("top2gram_char_frac") > max_top2gram)
+        if args.max_dup_line_frac is not None:
+            cond = cond | (F.col("dup_line_frac") > args.max_dup_line_frac)
+        if args.max_top2gram_frac is not None:
+            cond = cond | (F.col("top2gram_char_frac") > args.max_top2gram_frac)
         bad = rep.where(cond).select("doc_id")
         n_rep_dropped = bad.count()
         kept_q = kept_q.join(bad, "doc_id", "left_anti")
         print(f"[rep] dropped={n_rep_dropped} repetitive docs")
 
-    if getattr(args, "lm_ref", None):
+    if args.lm_ref:
         # CCNet-style in-domain filter: bigram LM trained on the
         # reference corpus; docs below --min-logprob are dropped.
         # Docs with NO score (fewer than 2 tokens -> NULL mean_logprob)
         # are KEPT, per score_bigram_logprob's contract: an unscorable
         # doc is not a bad doc — the quality filter already judged it.
-        from .operators.textops import score_bigram_logprob, train_bigram_lm
-
         ref = spark.read.parquet(args.lm_ref)
         uni, bi, v = train_bigram_lm(ref)
         lp = score_bigram_logprob(kept_q, uni, bi, v)
@@ -459,23 +434,17 @@ def cmd_curate(args: argparse.Namespace) -> None:
             | (F.col("mean_logprob") >= F.lit(args.min_logprob))
         ).drop("mean_logprob")
 
-    if getattr(args, "clf_ref", None):
+    if args.clf_ref:
         # fastText-style classifier gate: logistic regression trained
         # driver-side on (reference sample) vs (deterministic sample of
         # this corpus), scored distributed. Unscorable NULL-text docs
         # are KEPT (the LM-filter contract).
-        from .operators.textops import (
-            score_quality_classifier,
-            train_quality_classifier,
-        )
-
-        n_train = getattr(args, "clf_train_n", 500)
         ref = spark.read.parquet(args.clf_ref)
         pos = [r.text for r in ref.where(F.col("text").isNotNull())
-               .orderBy("doc_id").limit(n_train).collect()
-               if r.text is not None]
+               .orderBy("doc_id").limit(args.clf_train_n).collect()]
         neg = [r.text for r in kept_q.where(F.col("text").isNotNull())
-               .orderBy("doc_id").limit(n_train).select("doc_id", "text").collect()]
+               .orderBy("doc_id").limit(args.clf_train_n)
+               .select("doc_id", "text").collect()]
         if not pos or not neg:
             # an empty/all-NULL reference (or an already-empty pool)
             # would reach np.stack([]) deep in the trainer — fail at
@@ -510,7 +479,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
     # (doc_id, text, lang); at 100 TB checkpoint a pruned projection
     n_exact = exact.count()
 
-    if getattr(args, "done_digests", None):
+    if args.done_digests:
         # INCREMENTAL exact dedup vs the already-curated done set:
         # drop every doc whose md5 digest appears in the given parquet
         # (column `digest`). --done-bloom routes through the Bloom
@@ -523,9 +492,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         if "digest" in exact.columns:
             exact = exact.drop("digest")
         keyed = exact.withColumn("_digest", F.md5(F.col("text")))
-        if getattr(args, "done_bloom", False):
-            from .operators.bloom import bloom_anti_join, build_bloom
-
+        if args.done_bloom:
             cap = done.count()
             bloom = build_bloom(done, "digest", capacity=max(cap, 1))
             exact = bloom_anti_join(
@@ -554,9 +521,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         max_bucket=args.max_bucket,
         return_metrics=True,
     )
-    clusters = duplicate_clusters(
-        pairs, algorithm=getattr(args, "cc_algorithm", "propagation")
-    )
+    clusters = duplicate_clusters(pairs, algorithm=args.cc_algorithm)
     near = dedup_keep_canonical(exact, clusters)
     n_near = near.count()
     m = metrics.collect()[0]
@@ -565,22 +530,22 @@ def cmd_curate(args: argparse.Namespace) -> None:
         f"dropped_members={m.dropped_members}"
     )
 
-    out = near
-    if getattr(args, "semdedup", None):
+    # the running pool size: each later stage that drops docs counts
+    # its output once and the next stage's line reports against it
+    out, n_pool = near, n_near
+    if args.semdedup:
         # SemDeDup semantic dedup: embeddings parquet keyed by vec_id
         # == doc_id; docs whose embedding has a preferred within-
         # cluster near-duplicate are dropped. Docs WITHOUT an
         # embedding row are kept (an unembedded doc is not a dup —
         # same keep-on-unscorable contract as the LM filter).
-        from .operators.similarity import semantic_dedup
-
         emb = spark.read.parquet(args.semdedup)
-        big = getattr(args, "semdedup_lists", 8) > 32
+        big = args.semdedup_lists > 32
         sd = semantic_dedup(
             emb,
-            threshold=getattr(args, "semdedup_threshold", 0.92),
-            n_lists=getattr(args, "semdedup_lists", 8),
-            dim=getattr(args, "semdedup_dim", 64),
+            threshold=args.semdedup_threshold,
+            n_lists=args.semdedup_lists,
+            dim=args.semdedup_dim,
             # scale path past the literal-Column limit: Arrow matmul
             # assignment + per-cluster BLAS dominance (10.9x vs the
             # pair join at 1M vectors, identical outputs)
@@ -590,46 +555,38 @@ def cmd_curate(args: argparse.Namespace) -> None:
         dup_ids = sd.where(~F.col("kept")).select(
             F.col("vec_id").alias("doc_id")
         )
-        n_before_sd = out.count()
         out = out.join(dup_ids, "doc_id", "left_anti")
-        n_after_sd = out.count()
-        print(f"[semdedup] dropped={n_before_sd - n_after_sd} semantic near-dups")
-    if getattr(args, "dsir_target", None):
+        n_kept = out.count()
+        print(f"[semdedup] dropped={n_pool - n_kept} semantic near-dups")
+        n_pool = n_kept
+    if args.dsir_target:
         # DSIR importance resampling: keep the --dsir-keep docs whose
         # hashed-n-gram profile best matches the target domain. Runs
         # AFTER dedup (the published setup selects from the deduped
         # pool) and before sampling/budget mixing.
-        from .operators.textops import dsir_select
-
         tgt = spark.read.parquet(args.dsir_target)
-        # count the ACTUAL pool (semdedup may have shrunk it past
-        # n_near) and the actual kept rows (fewer docs than --dsir-keep
-        # keeps them all) — funnel accounting must not report the ask
-        n_before_dsir = out.count()
         out = dsir_select(
             out, tgt, n=args.dsir_keep, n_buckets=args.dsir_buckets
         ).drop("dsir_logweight")
-        n_after_dsir = out.count()
-        print(f"[dsir] kept={n_after_dsir} of {n_before_dsir} (target-likeness rank)")
+        # count the actual kept rows (fewer docs than --dsir-keep keeps
+        # them all) — funnel accounting must not report the ask
+        n_kept = out.count()
+        print(f"[dsir] kept={n_kept} of {n_pool} (target-likeness rank)")
+        n_pool = n_kept
     if args.sample:
-        rates = {
-            kv.split("=")[0]: float(kv.split("=")[1])
-            for kv in args.sample.split(",")
-        }
+        rates = _per_lang(args.sample, float)
         out = stratified_sample(out, "lang_pred", rates, "doc_id",
                                 default_rate=args.default_rate)
 
     tokens_col = "n_tokens" if "n_tokens" in out.columns else None
-    if getattr(args, "bpe_merges", None):
+    if args.bpe_merges:
         # real subword counts for the budget/pack stages: merges are
         # learned ONCE from a bounded sample of the SELECTED pool,
         # broadcast, applied Arrow-batched (operators/tokenize.py)
-        from .operators.tokenize import bpe_token_count, train_bpe_from_corpus
-
         merges = train_bpe_from_corpus(
             out,
             n_merges=args.bpe_merges,
-            sample_docs=getattr(args, "bpe_sample", 10_000),
+            sample_docs=args.bpe_sample,
         )
         out = bpe_token_count(out, merges)
         tokens_col = "n_tokens_bpe"
@@ -638,16 +595,11 @@ def cmd_curate(args: argparse.Namespace) -> None:
             "subwords (n_tokens_bpe)"
         )
 
-    if getattr(args, "token_budget", None):
+    if args.token_budget:
         # final mixing stage: fill each language's token budget with
         # its best remaining docs (bucketed two-phase — only the
         # boundary quality-bucket per stratum is sorted)
-        from .operators.corpus import token_budget_select
-
-        budgets = {
-            kv.split("=")[0]: int(kv.split("=")[1])
-            for kv in args.token_budget.split(",")
-        }
+        budgets = _per_lang(args.token_budget, int)
         out = token_budget_select(
             out,
             budgets,
@@ -656,7 +608,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
             # analyze_documents already counted tokens — reuse, don't
             # re-split the text (or the BPE subword counts when asked)
             tokens_col=tokens_col,
-            default_budget=getattr(args, "budget_default", 0),
+            default_budget=args.budget_default,
         )
         budget_col = tokens_col or "n_tokens"
         tot = out.groupBy("lang_pred").agg(F.sum(budget_col).alias("t"))
@@ -665,16 +617,16 @@ def cmd_curate(args: argparse.Namespace) -> None:
             "[budget] tokens kept per lang: "
             + ", ".join(f"{k}={v}" for k, v in sorted(mix.items(), key=str))
         )
-    if getattr(args, "pack_tokens", None):
+    if args.pack_tokens:
         # final stage: materialize fixed-token-budget training rows
-        from .operators.corpus import pack_rows
-
         out = pack_rows(out, args.pack_tokens, tokens_col=tokens_col)
         print(f"[pack] budget={args.pack_tokens} tokens/row")
 
-    n_out = out.count()
-
-    out.write.mode("overwrite").parquet(os.path.join(args.out, "curated"))
+    curated = os.path.join(args.out, "curated")
+    out.write.mode("overwrite").parquet(curated)
+    # from the written files' footers: counting `out` itself would
+    # re-run the whole funnel a second time
+    n_out = spark.read.parquet(curated).count()
     print(
         f"[curate] in={n_in} quality>={args.min_quality}: {n_quality} "
         f"exact-dedup: {n_exact} near-dedup: {n_near} sampled: {n_out}"
@@ -685,8 +637,6 @@ def cmd_layout(args: argparse.Namespace) -> None:
     """Rewrite a pages/points parquet clustered by Z-order of
     (tile_x, tile_y): disjoint per-file morton ranges + tight tile
     min/max stats, so bbox scans skip files (sources/layout.py)."""
-    from .sources.layout import write_spatial_sorted
-
     spark = get_spark(app_name="svnv-layout", master=args.master)
     df = spark.read.parquet(args.input)
     write_spatial_sorted(
@@ -697,7 +647,9 @@ def cmd_layout(args: argparse.Namespace) -> None:
     print(f"[layout] wrote {n} rows z-ordered by ({args.x_col}, {args.y_col}) -> {args.out}")
 
 
-def main() -> None:
+def build_parser() -> argparse.ArgumentParser:
+    """The whole command line: every subcommand, its options and their
+    defaults, with the handler as ``fn``."""
     p = argparse.ArgumentParser(prog="svnv-spark")
     p.add_argument("--master", default=None)
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -717,11 +669,13 @@ def main() -> None:
     pm = sub.add_parser("metrics")
     pm.add_argument("--roads", required=True)
     pm.add_argument("--results", required=True)
+    pm.add_argument("--checkpoint", default=None)
     pm.set_defaults(fn=cmd_metrics)
 
     pg = sub.add_parser("gap-fill")
     pg.add_argument("--results", required=True)
     pg.add_argument("--ndvi-grid", required=True)
+    pg.add_argument("--checkpoint", default=None)
     pg.add_argument("--distance", type=float, default=50.0)
     pg.add_argument("--model", choices=["linear", "gam"], default="linear")
     pg.set_defaults(fn=cmd_gap_fill)
@@ -929,8 +883,11 @@ def main() -> None:
     pl.add_argument("--y-col", default="tile_y")
     pl.add_argument("--num-files", type=int, default=None)
     pl.set_defaults(fn=cmd_layout)
+    return p
 
-    args = p.parse_args()
+
+def main() -> None:
+    args = build_parser().parse_args()
     args.fn(args)
 
 

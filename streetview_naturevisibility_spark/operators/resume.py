@@ -52,7 +52,12 @@ def run_stage(
     uri, fs, path = _stage_data(root, stage)
     if fs.get_file_info(f"{path}/_SUCCESS").type != pafs.FileType.File:
         build().write.mode("overwrite").parquet(uri)
-    return spark.read.parquet(uri)
+    return read_stage(spark, root, stage)
+
+
+def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:
+    """A committed stage, read back without the compute fallback."""
+    return spark.read.parquet(_stage_data(root, stage)[0])
 
 
 def read_lineage(root: str, stage: str) -> list[dict]:

@@ -29,22 +29,33 @@ def fixture_dir(tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
-def run_cli_pipeline(spark, fixture_dir):
-    """Runs ``cli pipeline`` in-process over the fixture tables, exactly
-    as ``spark-submit ... cli.py pipeline`` would, and returns ``out``."""
+def run_cli(spark):
+    """Runs ``svnv-spark --master local[4] <argv>`` in-process through
+    the real parser, exactly as ``spark-submit ... cli.py <argv>``
+    would (non-string arguments are passed as ``str(arg)``)."""
 
-    def run(out: str, *extra: str) -> str:
+    def run(*argv: object) -> None:
         saved = sys.argv
-        sys.argv = [
-            "svnv-spark", "--master", "local[4]", "pipeline",
-            "--roads", os.path.join(fixture_dir, "roads.parquet"),
-            "--pages", os.path.join(fixture_dir, "web_pages.parquet"),
-            "--out", out, *extra,
-        ]
+        sys.argv = ["svnv-spark", "--master", "local[4]", *map(str, argv)]
         try:
             cli.main()
         finally:
             sys.argv = saved
+
+    return run
+
+
+@pytest.fixture(scope="session")
+def run_cli_pipeline(run_cli, fixture_dir):
+    """``cli pipeline`` over the fixture tables; returns ``out``."""
+
+    def run(out: str, *extra: str) -> str:
+        run_cli(
+            "pipeline",
+            "--roads", os.path.join(fixture_dir, "roads.parquet"),
+            "--pages", os.path.join(fixture_dir, "web_pages.parquet"),
+            "--out", out, *extra,
+        )
         return out
 
     return run

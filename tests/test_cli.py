@@ -1,17 +1,15 @@
 """End-to-end smoke of the spark-submit CLI subcommands over the
 fixture tables (pipeline -> metrics -> gap-fill), including resume."""
 
-import argparse
 import os
 import shutil
 
 import pytest
 
+from conftest import SF_DIR
 from streetview_naturevisibility_spark import cli
 
-
-def _ns(**kw):
-    return argparse.Namespace(master="local[4]", **kw)
+SF_DOCS = os.path.join(SF_DIR, "documents.parquet")
 
 
 class TestCli:
@@ -68,26 +66,54 @@ class TestCli:
             )
             assert m and int(m.group(1)) == len(ids)
 
-    def test_metrics(self, fixture_dir, pipeline_out, capsys):
-        cli.cmd_metrics(
-            _ns(
-                roads=os.path.join(fixture_dir, "roads.parquet"),
-                results=pipeline_out,
-            )
+    def test_metrics_and_gap_fill_follow_pipeline_checkpoint(
+        self, spark, fixture_dir, pipeline_out, run_cli, run_cli_pipeline,
+        tmp_path, capsys,
+    ):
+        """``pipeline --checkpoint <uri>`` keeps its stages outside
+        ``--out``; ``metrics`` and ``gap-fill`` given the same
+        ``--checkpoint`` read the sample points from there. The stages
+        are copied from the shared run, so the pipeline resumes."""
+        ckpt = tmp_path / "ckpt"
+        shutil.copytree(os.path.join(pipeline_out, "_ckpt"), ckpt)
+        uri = ckpt.as_uri()
+        out = run_cli_pipeline(str(tmp_path / "out"), "--checkpoint", uri)
+        assert not os.path.exists(os.path.join(out, "_ckpt"))
+        run_cli(
+            "metrics",
+            "--roads", os.path.join(fixture_dir, "roads.parquet"),
+            "--results", out,
+            "--checkpoint", uri,
+        )
+        assert "availability score" in capsys.readouterr().out
+        run_cli(
+            "gap-fill",
+            "--results", out,
+            "--ndvi-grid", os.path.join(fixture_dir, "ndvi_grid.parquet"),
+            "--distance", 100.0,
+            "--checkpoint", uri,
+        )
+        assert "<----- Linear GAM ----->" in capsys.readouterr().out
+        assert spark.read.parquet(os.path.join(out, "gvi_filled")).count() > 0
+
+    def test_metrics(self, fixture_dir, pipeline_out, run_cli, capsys):
+        run_cli(
+            "metrics",
+            "--roads", os.path.join(fixture_dir, "roads.parquet"),
+            "--results", pipeline_out,
         )
         text = capsys.readouterr().out
         assert "availability score" in text
         assert "top-5 highway types" in text
 
     def test_gap_fill_prints_model_selection(
-        self, spark, fixture_dir, pipeline_out, capsys
+        self, spark, fixture_dir, pipeline_out, run_cli, capsys
     ):
-        cli.cmd_gap_fill(
-            _ns(
-                results=pipeline_out,
-                ndvi_grid=os.path.join(fixture_dir, "ndvi_grid.parquet"),
-                distance=100.0,
-            )
+        run_cli(
+            "gap-fill",
+            "--results", pipeline_out,
+            "--ndvi-grid", os.path.join(fixture_dir, "ndvi_grid.parquet"),
+            "--distance", 100.0,
         )
         text = capsys.readouterr().out
         assert "<----- Linear Regression ----->" in text
@@ -98,15 +124,14 @@ class TestCli:
         assert "gvi_filled" in filled.columns
 
     def test_gap_fill_gam_model_flag(
-        self, spark, fixture_dir, pipeline_out, capsys
+        self, spark, fixture_dir, pipeline_out, run_cli, capsys
     ):
-        cli.cmd_gap_fill(
-            _ns(
-                results=pipeline_out,
-                ndvi_grid=os.path.join(fixture_dir, "ndvi_grid.parquet"),
-                distance=100.0,
-                model="gam",
-            )
+        run_cli(
+            "gap-fill",
+            "--results", pipeline_out,
+            "--ndvi-grid", os.path.join(fixture_dir, "ndvi_grid.parquet"),
+            "--distance", 100.0,
+            "--model", "gam",
         )
         capsys.readouterr()
         filled = spark.read.parquet(os.path.join(pipeline_out, "gvi_filled")).toPandas()
@@ -115,7 +140,7 @@ class TestCli:
 
     @pytest.mark.parametrize("model", ["linear", "gam"])
     def test_gap_fill_disjoint_raster_warns_not_crashes(
-        self, spark, fixture_dir, pipeline_out, tmp_path, capsys, model
+        self, spark, fixture_dir, pipeline_out, run_cli, tmp_path, capsys, model
     ):
         """An NDVI raster that does not overlap the study area at all:
         clean warning + empty output, not a TypeError on None metrics
@@ -134,29 +159,64 @@ class TestCli:
                 "value": [0.5, 0.6],
             }
         ).to_parquet(far, index=False)
-        cli.cmd_gap_fill(
-            _ns(results=pipeline_out, ndvi_grid=far, distance=100.0, model=model)
+        run_cli(
+            "gap-fill", "--results", pipeline_out, "--ndvi-grid", far,
+            "--distance", 100.0, "--model", model,
         )
         text = capsys.readouterr().out
         assert "WARNING: no points with NDVI values" in text
         assert spark.read.parquet(os.path.join(pipeline_out, "gvi_filled")).count() == 0
 
+class TestParser:
+    def test_each_handler_reads_exactly_its_options(self):
+        """For every subcommand, the ``args.<name>`` its handler reads
+        are exactly the options the parser defines for it, plus the
+        global ``--master``: no option is parsed and then ignored, and
+        no handler reads a name the parser does not default."""
+        import argparse
+        import ast
+        import inspect
+        import textwrap
+
+        skip = (argparse._HelpAction, argparse._SubParsersAction)
+        parser = cli.build_parser()
+        shared = {a.dest for a in parser._actions if not isinstance(a, skip)}
+        (subs,) = [
+            a for a in parser._actions if isinstance(a, argparse._SubParsersAction)
+        ]
+        assert len(subs.choices) == 7
+        for name, sub in subs.choices.items():
+            handler = sub.get_default("fn")
+            tree = ast.parse(textwrap.dedent(inspect.getsource(handler)))
+            read = {
+                n.attr
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Attribute)
+                and isinstance(n.value, ast.Name)
+                and n.value.id == "args"
+            }
+            defined = shared | {
+                a.dest for a in sub._actions if not isinstance(a, skip)
+            }
+            assert read == defined, (name, read ^ defined)
+
+
 class TestCurate:
-    def test_curate_funnel(self, spark, tmp_path, capsys):
+    def test_curate_funnel(self, spark, run_cli, tmp_path, capsys):
         """Curation funnel over the sf0.001 documents table: counts are
         monotone non-increasing, exact duplicates are gone, the output
         parquet is readable, and the LSH drop metrics are printed."""
         out = str(tmp_path / "cur")
-        args = _ns(
-            docs="/root/testdata/sf0.001/documents.parquet",
-            out=out,
-            min_quality=0.3,
-            jaccard=0.5,
-            max_bucket=10_000,
-            sample="en=0.5,de=1.0,es=1.0,fr=1.0,zh=1.0",
-            default_rate=1.0,
+        run_cli(
+            "curate",
+            "--docs", SF_DOCS,
+            "--out", out,
+            "--min-quality", 0.3,
+            "--jaccard", 0.5,
+            "--max-bucket", 10_000,
+            "--sample", "en=0.5,de=1.0,es=1.0,fr=1.0,zh=1.0",
+            "--default-rate", 1.0,
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         assert "[lsh] buckets=" in text
         assert "[curate] in=" in text
@@ -182,15 +242,11 @@ class TestCurate:
         assert "weight" in cur.columns
 
     def test_cc_algorithm_flag_reaches_clustering(
-        self, spark, tmp_path, monkeypatch, capsys
+        self, spark, run_cli, tmp_path, monkeypatch, capsys
     ):
         """``curate --cc-algorithm star`` must run the star kernel, not
         the propagation default."""
-        import sys
-
         import pandas as pd
-
-        from streetview_naturevisibility_spark.operators import corpus
 
         docs = str(tmp_path / "docs.parquet")
         text = "the quick brown fox jumps over the lazy dog again and again"
@@ -204,27 +260,23 @@ class TestCurate:
             }
         ).to_parquet(docs, index=False)
         seen = []
-        real = corpus.duplicate_clusters
+        real = cli.duplicate_clusters
 
         def spy(pairs, *args, **kwargs):
             seen.append(kwargs.get("algorithm"))
             return real(pairs, *args, **kwargs)
 
-        monkeypatch.setattr(corpus, "duplicate_clusters", spy)
-        monkeypatch.setattr(
-            sys,
-            "argv",
-            [
-                "svnv-spark", "--master", "local[4]", "curate",
-                "--docs", docs, "--out", str(tmp_path / "cur"),
-                "--min-quality", "0", "--cc-algorithm", "star",
-            ],
+        monkeypatch.setattr(cli, "duplicate_clusters", spy)
+        run_cli(
+            "curate", "--docs", docs, "--out", tmp_path / "cur",
+            "--min-quality", 0, "--cc-algorithm", "star",
         )
-        cli.main()
         capsys.readouterr()
         assert seen == ["star"]
 
-    def test_lm_filter_keeps_unscorable_short_docs(self, spark, tmp_path, capsys):
+    def test_lm_filter_keeps_unscorable_short_docs(
+        self, spark, run_cli, tmp_path, capsys
+    ):
         """--lm-ref must KEEP docs too short to score (<2 tokens, NULL
         mean_logprob) per score_bigram_logprob's contract, and print
         the kept-unscorable count — not silently drop them (review
@@ -247,25 +299,24 @@ class TestCurate:
             }
         ).to_parquet(docs, index=False)
         out = str(tmp_path / "cur")
-        args = _ns(
-            docs=docs,
-            out=out,
-            min_quality=0.0,
-            jaccard=0.5,
-            max_bucket=10_000,
-            sample=None,
-            default_rate=1.0,
-            lm_ref=docs,
-            min_logprob=0.0,
+        run_cli(
+            "curate",
+            "--docs", docs,
+            "--out", out,
+            "--min-quality", 0.0,
+            "--jaccard", 0.5,
+            "--max-bucket", 10_000,
+            "--default-rate", 1.0,
+            "--lm-ref", docs,
+            "--min-logprob", 0.0,
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         assert "[lm] kept 1 unscorable docs" in text
         cur = spark.read.parquet(os.path.join(out, "curated"))
         assert [r.doc_id for r in cur.collect()] == [1]
 
 
-    def test_para_dedup_and_repetition_filter(self, spark, tmp_path, capsys):
+    def test_para_dedup_and_repetition_filter(self, spark, run_cli, tmp_path, capsys):
         """--para-dedup strips corpus-wide boilerplate paragraphs before
         scoring; --max-top2gram-frac drops the repetitive doc (Gopher
         axis). Both print their stage lines and the funnel stays
@@ -289,18 +340,17 @@ class TestCurate:
             }
         ).to_parquet(docs, index=False)
         out = str(tmp_path / "cur")
-        args = _ns(
-            docs=docs,
-            out=out,
-            min_quality=0.0,
-            jaccard=0.5,
-            max_bucket=10_000,
-            sample=None,
-            default_rate=1.0,
-            para_dedup=True,
-            max_top2gram_frac=0.5,
+        run_cli(
+            "curate",
+            "--docs", docs,
+            "--out", out,
+            "--min-quality", 0.0,
+            "--jaccard", 0.5,
+            "--max-bucket", 10_000,
+            "--default-rate", 1.0,
+            "--para-dedup",
+            "--max-top2gram-frac", 0.5,
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         assert "[para] removed=8 boilerplate paragraph instances" in text
         assert "[rep] dropped=1 repetitive docs" in text
@@ -310,7 +360,7 @@ class TestCurate:
         assert all(boiler not in t for t in got.values())
 
 
-    def test_token_budget_stage(self, spark, tmp_path, capsys):
+    def test_token_budget_stage(self, spark, run_cli, tmp_path, capsys):
         """--token-budget fills each predicted language's budget with
         its best docs and prints the per-lang token mix."""
         import pandas as pd
@@ -332,25 +382,24 @@ class TestCurate:
             }
         ).to_parquet(docs, index=False)
         out = str(tmp_path / "cur")
-        args = _ns(
-            docs=docs,
-            out=out,
-            min_quality=0.0,
-            jaccard=0.5,
-            max_bucket=10_000,
-            sample=None,
-            default_rate=1.0,
-            token_budget="en=200",
-            budget_default=0,
+        run_cli(
+            "curate",
+            "--docs", docs,
+            "--out", out,
+            "--min-quality", 0.0,
+            "--jaccard", 0.5,
+            "--max-bucket", 10_000,
+            "--default-rate", 1.0,
+            "--token-budget", "en=200",
+            "--budget-default", 0,
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         assert "[budget] tokens kept per lang: en=" in text
         cur = spark.read.parquet(os.path.join(out, "curated"))
         total = sum(r.n_tokens for r in cur.select("n_tokens").collect())
         assert 0 < total <= 200
 
-    def test_chunk_dedup_stage(self, spark, tmp_path, capsys):
+    def test_chunk_dedup_stage(self, spark, run_cli, tmp_path, capsys):
         """--chunk-dedup cuts repeated L-char chunks from all but the
         first doc before scoring."""
         import pandas as pd
@@ -371,24 +420,23 @@ class TestCurate:
             }
         ).to_parquet(docs, index=False)
         out = str(tmp_path / "cur")
-        args = _ns(
-            docs=docs,
-            out=out,
-            min_quality=0.0,
-            jaccard=0.5,
-            max_bucket=10_000,
-            sample=None,
-            default_rate=1.0,
-            chunk_dedup=40,
+        run_cli(
+            "curate",
+            "--docs", docs,
+            "--out", out,
+            "--min-quality", 0.0,
+            "--jaccard", 0.5,
+            "--max-bucket", 10_000,
+            "--default-rate", 1.0,
+            "--chunk-dedup", 40,
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         assert "[chunk] removed=5 duplicated 40-char chunk instances" in text
         cur = spark.read.parquet(os.path.join(out, "curated"))
         got = {r.doc_id: r.text for r in cur.collect()}
         assert sum(1 for t in got.values() if t.startswith(shared)) == 1
 
-    def test_chunk_dedup_cdc_stage(self, spark, tmp_path, capsys):
+    def test_chunk_dedup_cdc_stage(self, spark, run_cli, tmp_path, capsys):
         """--chunk-dedup-cdc cuts a repeated passage planted at a
         DIFFERENT token offset in every doc — the case the aligned
         grid provably misses (BENCH/BASELINE.md recall table)."""
@@ -411,17 +459,16 @@ class TestCurate:
             }
         ).to_parquet(docs, index=False)
         out = str(tmp_path / "cur")
-        args = _ns(
-            docs=docs,
-            out=out,
-            min_quality=0.0,
-            jaccard=0.99,
-            max_bucket=10_000,
-            sample=None,
-            default_rate=1.0,
-            chunk_dedup_cdc=8,
+        run_cli(
+            "curate",
+            "--docs", docs,
+            "--out", out,
+            "--min-quality", 0.0,
+            "--jaccard", 0.99,
+            "--max-bucket", 10_000,
+            "--default-rate", 1.0,
+            "--chunk-dedup-cdc", 8,
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         assert "[chunk-cdc] removed=" in text
         cur = spark.read.parquet(os.path.join(out, "curated"))
@@ -432,7 +479,7 @@ class TestCurate:
         assert n_full == 1, got
         assert all(f"suf{i}a" in got[i] for i in range(6))  # edges kept
 
-    def test_dsir_stage_keeps_target_like_docs(self, spark, tmp_path, capsys):
+    def test_dsir_stage_keeps_target_like_docs(self, spark, run_cli, tmp_path, capsys):
         """--dsir-target/--dsir-keep: after dedup, the kept docs are the
         most target-like by hashed-n-gram importance weight — the
         in-domain docs all outrank the out-of-domain ones."""
@@ -468,19 +515,18 @@ class TestCurate:
             }
         ).to_parquet(target, index=False)
         out = str(tmp_path / "cur")
-        args = _ns(
-            docs=docs,
-            out=out,
-            min_quality=0.0,
-            jaccard=0.99,
-            max_bucket=10_000,
-            sample=None,
-            default_rate=1.0,
-            dsir_target=target,
-            dsir_keep=10,
-            dsir_buckets=512,
+        run_cli(
+            "curate",
+            "--docs", docs,
+            "--out", out,
+            "--min-quality", 0.0,
+            "--jaccard", 0.99,
+            "--max-bucket", 10_000,
+            "--default-rate", 1.0,
+            "--dsir-target", target,
+            "--dsir-keep", 10,
+            "--dsir-buckets", 512,
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         assert "[dsir] kept=10 of " in text
         cur = spark.read.parquet(os.path.join(out, "curated"))
@@ -489,7 +535,7 @@ class TestCurate:
         assert "dsir_logweight" not in cur.columns
 
     def test_semdedup_stage_drops_embedding_near_dups(
-        self, spark, tmp_path, capsys
+        self, spark, run_cli, tmp_path, capsys
     ):
         """--semdedup: of a pair of docs with identical embeddings the
         lower doc_id survives; docs with no embedding row are kept."""
@@ -536,27 +582,26 @@ class TestCurate:
             "vec_id bigint, embedding array<double>",
         ).write.mode("overwrite").parquet(embp)
         out = str(tmp_path / "cur")
-        args = _ns(
-            docs=docs,
-            out=out,
-            min_quality=0.0,
-            jaccard=0.99,
-            max_bucket=10_000,
-            sample=None,
-            default_rate=1.0,
-            semdedup=embp,
-            semdedup_threshold=0.95,
-            semdedup_lists=4,
-            semdedup_dim=8,
+        run_cli(
+            "curate",
+            "--docs", docs,
+            "--out", out,
+            "--min-quality", 0.0,
+            "--jaccard", 0.99,
+            "--max-bucket", 10_000,
+            "--default-rate", 1.0,
+            "--semdedup", embp,
+            "--semdedup-threshold", 0.95,
+            "--semdedup-lists", 4,
+            "--semdedup-dim", 8,
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         assert "[semdedup] dropped=1 semantic near-dups" in text
         cur = spark.read.parquet(os.path.join(out, "curated"))
         kept = sorted(r.doc_id for r in cur.collect())
         assert kept == [0, 2, 3, 4, 5]  # 1 dropped; unembedded 5 kept
 
-    def test_clf_gate_drops_off_domain_docs(self, spark, tmp_path, capsys):
+    def test_clf_gate_drops_off_domain_docs(self, spark, run_cli, tmp_path, capsys):
         """--clf-ref: the trained classifier gate keeps the
         reference-like half of the corpus and drops the rest."""
         import numpy as np
@@ -593,25 +638,26 @@ class TestCurate:
             }
         ).to_parquet(ref, index=False)
         out = str(tmp_path / "cur")
-        args = _ns(
-            docs=docs,
-            out=out,
-            min_quality=0.0,
-            jaccard=0.99,
-            max_bucket=10_000,
-            sample=None,
-            default_rate=1.0,
-            clf_ref=ref,
-            clf_min_prob=0.5,
-            clf_train_n=100,
+        run_cli(
+            "curate",
+            "--docs", docs,
+            "--out", out,
+            "--min-quality", 0.0,
+            "--jaccard", 0.99,
+            "--max-bucket", 10_000,
+            "--default-rate", 1.0,
+            "--clf-ref", ref,
+            "--clf-min-prob", 0.5,
+            "--clf-train-n", 100,
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         assert "[clf] dropped=12 below P(reference-like) 0.5" in text
         cur = spark.read.parquet(os.path.join(out, "curated"))
         assert sorted(r.doc_id for r in cur.collect()) == list(range(12))
 
-    def test_fix_text_stage_repairs_before_dedup(self, spark, tmp_path, capsys):
+    def test_fix_text_stage_repairs_before_dedup(
+        self, spark, run_cli, tmp_path, capsys
+    ):
         """--fix-text runs FIRST: two docs identical except one is
         mojibake-encoded collapse in exact dedup after repair."""
         import pandas as pd
@@ -637,17 +683,16 @@ class TestCurate:
             }
         ).to_parquet(docs, index=False)
         out = str(tmp_path / "cur")
-        args = _ns(
-            docs=docs,
-            out=out,
-            min_quality=0.0,
-            jaccard=0.99,
-            max_bucket=10_000,
-            sample=None,
-            default_rate=1.0,
-            fix_text=True,
+        run_cli(
+            "curate",
+            "--docs", docs,
+            "--out", out,
+            "--min-quality", 0.0,
+            "--jaccard", 0.99,
+            "--max-bucket", 10_000,
+            "--default-rate", 1.0,
+            "--fix-text",
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         assert "[fix] repaired=1 docs" in text
         cur = spark.read.parquet(os.path.join(out, "curated"))
@@ -657,7 +702,7 @@ class TestCurate:
         assert got0 == body
 
     def test_pack_tokens_stage_outputs_training_rows(
-        self, spark, tmp_path, capsys
+        self, spark, run_cli, tmp_path, capsys
     ):
         """--pack-tokens: the curated output becomes fixed-budget
         training rows; total tokens and doc count are conserved."""
@@ -677,17 +722,16 @@ class TestCurate:
             }
         ).to_parquet(docs, index=False)
         out = str(tmp_path / "cur")
-        args = _ns(
-            docs=docs,
-            out=out,
-            min_quality=0.0,
-            jaccard=0.99,
-            max_bucket=10_000,
-            sample=None,
-            default_rate=1.0,
-            pack_tokens=60,
+        run_cli(
+            "curate",
+            "--docs", docs,
+            "--out", out,
+            "--min-quality", 0.0,
+            "--jaccard", 0.99,
+            "--max-bucket", 10_000,
+            "--default-rate", 1.0,
+            "--pack-tokens", 60,
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         assert "[pack] budget=60 tokens/row" in text
         cur = spark.read.parquet(os.path.join(out, "curated"))
@@ -699,7 +743,7 @@ class TestCurate:
         assert len(rows_out) == 5  # floor packing: 300 tokens / 60
 
     def test_kitchen_sink_funnel_composes_all_stages(
-        self, spark, tmp_path, capsys
+        self, spark, run_cli, tmp_path, capsys
     ):
         """EVERY curate stage in one invocation: fix-text, decontam,
         para-dedup, chunk-dedup, repetition filter, LM filter,
@@ -763,41 +807,41 @@ class TestCurate:
         ).write.mode("overwrite").parquet(embp)
 
         out = str(tmp_path / "cur")
-        args = _ns(
-            docs=docs,
-            out=out,
-            min_quality=0.0,
-            jaccard=0.8,
-            max_bucket=10_000,
-            sample="en=1.0",
-            default_rate=1.0,
-            fix_text=True,
-            blocklist=blk,
-            decontam_n=13,
-            para_dedup=True,
-            para_max_docs=1,
-            para_min_chars=0,
-            chunk_dedup=40,
-            max_top2gram_frac=0.5,
-            lm_ref=ref,
-            min_logprob=-20.0,
-            clf_ref=ref,
-            clf_min_prob=0.01,
-            clf_train_n=50,
-            semdedup=embp,
-            semdedup_threshold=0.95,
-            semdedup_lists=4,
-            semdedup_dim=8,
-            dsir_target=ref,
-            dsir_keep=20,
-            dsir_buckets=512,
+        run_cli(
+            "curate",
+            "--docs", docs,
+            "--out", out,
+            "--min-quality", 0.0,
+            "--jaccard", 0.8,
+            "--max-bucket", 10_000,
+            "--sample", "en=1.0",
+            "--default-rate", 1.0,
+            "--fix-text",
+            "--blocklist", blk,
+            "--decontam-n", 13,
+            "--para-dedup",
+            "--para-max-docs", 1,
+            "--para-min-chars", 0,
+            "--chunk-dedup", 40,
+            "--max-top2gram-frac", 0.5,
+            "--lm-ref", ref,
+            "--min-logprob", -20.0,
+            "--clf-ref", ref,
+            "--clf-min-prob", 0.01,
+            "--clf-train-n", 50,
+            "--semdedup", embp,
+            "--semdedup-threshold", 0.95,
+            "--semdedup-lists", 4,
+            "--semdedup-dim", 8,
+            "--dsir-target", ref,
+            "--dsir-keep", 20,
+            "--dsir-buckets", 512,
             # stopword-free fruit vocab language-IDs as "de" (the
             # zero-score tie-fold default) — budget that stratum
-            token_budget="de=400",
-            budget_default=0,
-            pack_tokens=64,
+            "--token-budget", "de=400",
+            "--budget-default", 0,
+            "--pack-tokens", 64,
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         for tag in ("[fix]", "[decontam]", "[para]", "[chunk]", "[rep]",
                     "[clf]", "[semdedup]", "[dsir]", "[budget]", "[pack]",
@@ -812,25 +856,22 @@ class TestCurate:
         assert cur.count() > 0
         assert cur.agg({"n_tokens": "sum"}).collect()[0][0] <= 400
 
-    def test_dsir_target_requires_keep(self, tmp_path):
+    def test_dsir_target_requires_keep(self, run_cli, tmp_path):
         with pytest.raises(SystemExit, match="dsir-keep"):
-            cli.cmd_curate(
-                _ns(
-                    docs="/root/testdata/sf0.001/documents.parquet",
-                    out=str(tmp_path / "cur"),
-                    min_quality=0.0,
-                    jaccard=0.5,
-                    max_bucket=10_000,
-                    sample=None,
-                    default_rate=1.0,
-                    dsir_target="/root/testdata/sf0.001/documents.parquet",
-                    dsir_keep=None,
-                )
+            run_cli(
+                "curate",
+                "--docs", SF_DOCS,
+                "--out", tmp_path / "cur",
+                "--min-quality", 0.0,
+                "--jaccard", 0.5,
+                "--max-bucket", 10_000,
+                "--default-rate", 1.0,
+                "--dsir-target", SF_DOCS,
             )
 
 
 class TestLayout:
-    def test_layout_subcommand(self, spark, tmp_path):
+    def test_layout_subcommand(self, spark, run_cli, tmp_path):
         from streetview_naturevisibility_spark.sources import derived as D
 
         src = str(tmp_path / "src")
@@ -838,8 +879,10 @@ class TestLayout:
             "doc_id", "tile_x", "tile_y"
         ).write.parquet(src)
         out = str(tmp_path / "z")
-        args = _ns(input=src, out=out, x_col="tile_x", y_col="tile_y", num_files=4)
-        cli.cmd_layout(args)
+        run_cli(
+            "layout", "--input", src, "--out", out,
+            "--x-col", "tile_x", "--y-col", "tile_y", "--num-files", 4,
+        )
         got = spark.read.parquet(out)
         assert "_morton" in got.columns
         assert got.count() == spark.read.parquet(src).count()

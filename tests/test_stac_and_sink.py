@@ -77,22 +77,19 @@ class TestStacSource:
 
 
 class TestStacNdviCli:
-    def test_cli_writes_gapfill_compatible_grid(self, spark, catalog, tmp_path, capsys):
-        import argparse
-
-        from streetview_naturevisibility_spark.cli import cmd_stac_ndvi
-
+    def test_cli_writes_gapfill_compatible_grid(
+        self, spark, run_cli, catalog, tmp_path, capsys
+    ):
         out = str(tmp_path / "ndvi_out")
-        args = argparse.Namespace(
-            master=None,
-            catalog=catalog,
-            bbox=",".join(str(v) for v in AOI),
-            date_range="2021-01-01,2021-12-30",
-            collection="sentinel-2-l2a",
-            max_cloud=20.0,
-            out=out,
+        run_cli(
+            "stac-ndvi",
+            "--catalog", catalog,
+            "--bbox", ",".join(str(v) for v in AOI),
+            "--date-range", "2021-01-01,2021-12-30",
+            "--collection", "sentinel-2-l2a",
+            "--max-cloud", 20.0,
+            "--out", out,
         )
-        cmd_stac_ndvi(args)
         printed = capsys.readouterr().out
         assert "item-0" in printed and "cloud cover: 3.0" in printed
         grid = spark.read.parquet(os.path.join(out, "ndvi_grid.parquet"))
@@ -152,21 +149,16 @@ class TestLandcoverPercentages:
 
 
 class TestStacLandcoverCli:
-    def test_cli_writes_percentages(self, spark, catalog, tmp_path, capsys):
-        import argparse
-
-        from streetview_naturevisibility_spark.cli import cmd_stac_landcover
-
+    def test_cli_writes_percentages(self, spark, run_cli, catalog, tmp_path, capsys):
         pts = str(tmp_path / "pts")
         spark.createDataFrame(
             [(1, 620000.0 - 250.0, 5180000.0 + 250.0)],
             "point_id: long, x: double, y: double",
         ).write.mode("overwrite").parquet(pts)
         out = str(tmp_path / "lc")
-        cmd_stac_landcover(
-            argparse.Namespace(
-                master=None, catalog=catalog, points=pts, radius=220.0, out=out
-            )
+        run_cli(
+            "stac-landcover", "--catalog", catalog, "--points", pts,
+            "--radius", 220.0, "--out", out,
         )
         printed = capsys.readouterr().out
         assert "worldcover-2021" in printed

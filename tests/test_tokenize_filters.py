@@ -301,13 +301,10 @@ def test_bloom_build_many_partitions_and_nulls(spark):
 
 
 # ---------------------------------------------------- CLI integration
-def test_cli_curate_c4_and_bpe(spark, tmp_path, capsys):
+def test_cli_curate_c4_and_bpe(spark, run_cli, tmp_path, capsys):
     """curate --c4 --bpe-merges --pack-tokens end-to-end: C4 drops the
     punctuation-free page, BPE subword counts drive packing."""
-    import argparse
     import os
-
-    from streetview_naturevisibility_spark import cli
 
     rows = []
     for i in range(40):
@@ -323,23 +320,21 @@ def test_cli_curate_c4_and_bpe(spark, tmp_path, capsys):
     docs.write.parquet(src)
 
     out = str(tmp_path / "cur")
-    args = argparse.Namespace(
-        master="local[4]",
-        docs=src,
-        out=out,
-        min_quality=0.0,
-        jaccard=0.5,
-        max_bucket=10_000,
-        sample=None,
-        default_rate=1.0,
-        c4=True,
-        c4_min_words=3,
-        c4_min_sentences=5,
-        bpe_merges=30,
-        bpe_sample=100,
-        pack_tokens=64,
+    run_cli(
+        "curate",
+        "--docs", src,
+        "--out", out,
+        "--min-quality", 0.0,
+        "--jaccard", 0.5,
+        "--max-bucket", 10_000,
+        "--default-rate", 1.0,
+        "--c4",
+        "--c4-min-words", 3,
+        "--c4-min-sentences", 5,
+        "--bpe-merges", 30,
+        "--bpe-sample", 100,
+        "--pack-tokens", 64,
     )
-    cli.cmd_curate(args)
     text = capsys.readouterr().out
     assert "[c4] kept=36 of 40 pages" in text
     assert "[bpe] learned" in text
@@ -492,13 +487,10 @@ def test_bpe_count_memo_keyed_by_merges_not_their_hash():
         tokenize._COUNT_CACHE_KEY = saved[1]
 
 
-def test_cli_curate_done_set(spark, tmp_path, capsys):
+def test_cli_curate_done_set(spark, run_cli, tmp_path, capsys):
     """Incremental curate: --done-digests drops already-curated docs,
     --done-bloom yields the identical funnel."""
-    import argparse
     import os
-
-    from streetview_naturevisibility_spark import cli
 
     rows = [(i, f"unique document body number {i} with words") for i in range(40)]
     src = str(tmp_path / "docs")
@@ -512,19 +504,17 @@ def test_cli_curate_done_set(spark, tmp_path, capsys):
     outs = {}
     for use_bloom in (False, True):
         out = str(tmp_path / f"cur_{use_bloom}")
-        args = argparse.Namespace(
-            master="local[4]",
-            docs=src,
-            out=out,
-            min_quality=0.0,
-            jaccard=0.5,
-            max_bucket=10_000,
-            sample=None,
-            default_rate=1.0,
-            done_digests=done,
-            done_bloom=use_bloom,
+        run_cli(
+            "curate",
+            "--docs", src,
+            "--out", out,
+            "--min-quality", 0.0,
+            "--jaccard", 0.5,
+            "--max-bucket", 10_000,
+            "--default-rate", 1.0,
+            "--done-digests", done,
+            *(["--done-bloom"] if use_bloom else []),
         )
-        cli.cmd_curate(args)
         text = capsys.readouterr().out
         assert "[done-set] dropped=10" in text, text
         outs[use_bloom] = sorted(
@@ -613,13 +603,10 @@ def test_span_dedup_c4_rejects_string_ids(spark):
         span_dedup_c4(df)
 
 
-def test_cli_curate_span_dedup(spark, tmp_path, capsys):
+def test_cli_curate_span_dedup(spark, run_cli, tmp_path, capsys):
     """curate --c4 --span-dedup 3: the shared three-sentence opener is
     removed from every doc but the global first."""
-    import argparse
     import os
-
-    from streetview_naturevisibility_spark import cli
 
     shared = "Shared open one. Shared open two. Shared open three."
     rows = [
@@ -630,21 +617,19 @@ def test_cli_curate_span_dedup(spark, tmp_path, capsys):
     src = str(tmp_path / "docs")
     spark.createDataFrame(rows, "doc_id: long, text: string").write.parquet(src)
     out = str(tmp_path / "cur")
-    args = argparse.Namespace(
-        master="local[4]",
-        docs=src,
-        out=out,
-        min_quality=0.0,
-        jaccard=0.5,
-        max_bucket=10_000,
-        sample=None,
-        default_rate=1.0,
-        c4=True,
-        c4_min_words=3,
-        c4_min_sentences=5,
-        span_dedup=3,
+    run_cli(
+        "curate",
+        "--docs", src,
+        "--out", out,
+        "--min-quality", 0.0,
+        "--jaccard", 0.5,
+        "--max-bucket", 10_000,
+        "--default-rate", 1.0,
+        "--c4",
+        "--c4-min-words", 3,
+        "--c4-min-sentences", 5,
+        "--span-dedup", 3,
     )
-    cli.cmd_curate(args)
     text = capsys.readouterr().out
     assert "[span] removed=19" in text, text
     cur = spark.read.parquet(os.path.join(out, "curated"))
