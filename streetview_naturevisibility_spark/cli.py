@@ -13,7 +13,9 @@ Subcommands (reference analogs cited):
 - ``pipeline``  — main_script.py end-to-end: sample points -> tile ->
   kNN snap -> GVI -> per-road aggregate, each stage checkpointed
   (resume = rerun the same command); prints each stage's files and
-  rows, read from the parquet footers.
+  rows, read from the parquet footers. ``--begin/--end`` slices are
+  checkpointed one stage each, and the outputs hold every slice run
+  into the checkpoint root so far.
 - ``metrics``   — scripts/mean_gvi_street.py + results_metrics.py
   reporting chain over a finished pipeline output.
 - ``gap-fill``  — predict_missing_gvi.py: zonal NDVI + OLS fill.
@@ -38,7 +40,9 @@ from __future__ import annotations
 
 import argparse
 import os
+from functools import reduce
 
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .operators.aggregates import (
@@ -69,10 +73,16 @@ from .operators.regression import (
     gap_fill_gam,
     gap_fill_linear,
 )
-from .operators.resume import read_lineage, read_stage, run_stage
+from .operators.resume import (
+    committed_stages,
+    read_lineage,
+    read_stage,
+    run_stage,
+)
 from .operators.sampling import sample_points
 from .operators.similarity import semantic_dedup
 from .operators.textops import (
+    analysis_cols,
     analyze_documents,
     c4_clean,
     chunk_dedup,
@@ -96,6 +106,30 @@ from .sources.layout import write_spatial_sorted
 from .sources.stac import landcover_percentages, ndvi_for_aoi
 
 
+def _materialize(
+    df: DataFrame, where=None, **observed
+) -> tuple[DataFrame, dict]:
+    """The one place the CLI materializes a frame: an eager
+    ``localCheckpoint`` of ``df`` (filtered by ``where``), so every
+    later consumer reads the stored rows instead of re-running the
+    lineage above them. The same job fills an ``Observation`` with the
+    rows kept (``rows``) and each ``observed`` aggregate over ``df``
+    before the filter, so no count needs a job of its own. The
+    observation also keeps the filter above ``df``'s projection:
+    pushed below it, the filter would derive its columns a second
+    time. (On a cluster that can lose executors, a reliable
+    ``checkpoint()`` belongs here.)"""
+    obs = Observation()
+    keep = F.lit(True) if where is None else where
+    df = df.observe(
+        obs,
+        F.count(F.when(keep, 1)).alias("rows"),
+        *(c.alias(k) for k, c in observed.items()),
+    )
+    df = (df if where is None else df.where(where)).localCheckpoint(eager=True)
+    return df, obs.get
+
+
 def cmd_pipeline(args: argparse.Namespace) -> None:
     spark = get_spark(app_name="svnv-pipeline", master=args.master)
     roads = spark.read.parquet(args.roads)
@@ -116,7 +150,8 @@ def cmd_pipeline(args: argparse.Namespace) -> None:
     )
     gvi_sel = snapped
     gvi_stage = "gvi_points"
-    if args.begin is not None or args.end is not None:
+    ranged = args.begin is not None or args.end is not None
+    if ranged:
         lo = args.begin or 0
         hi = args.end if args.end is not None else 1 << 62
         gvi_sel = snapped.where(
@@ -131,6 +166,15 @@ def cmd_pipeline(args: argparse.Namespace) -> None:
         gvi_stage,
         lambda: score_snapped_points(gvi_sel, pages, args.cut_by_road_centres),
     )
+    if ranged:
+        # the outputs hold every slice committed under this root so far,
+        # each point once: chunks accumulate, as the reference's
+        # per-chunk append does (modules/process_data.py:347-366)
+        gvi = reduce(
+            DataFrame.unionByName,
+            (read_stage(spark, root, s)
+             for s in committed_stages(root, "gvi_points_")),
+        ).dropDuplicates(["point_id"])
     per_road = gvi_per_road(build_intersection(gvi, points, roads))
     per_road.orderBy("road_id").write.mode("overwrite").parquet(
         os.path.join(args.out, "gvi_per_road")
@@ -150,7 +194,7 @@ def cmd_metrics(args: argparse.Namespace) -> None:
     root = args.checkpoint or os.path.join(args.results, "_ckpt")
     points = read_stage(spark, root, "sample_points")
     gvi = spark.read.parquet(os.path.join(args.results, "gvi_points"))
-    inter = build_intersection(gvi, points, roads).cache()
+    inter, _ = _materialize(build_intersection(gvi, points, roads))
 
     print("gvi-streets (per-road):")
     roads_with_avg_gvi(roads, gvi_per_road(inter)).orderBy("road_id").show(20)
@@ -174,7 +218,9 @@ def cmd_gap_fill(args: argparse.Namespace) -> None:
     grid = spark.read.parquet(args.ndvi_grid)
     ndvi = zonal_mean(points, grid, radius=args.distance / 2.0)
     feats = gvi.join(ndvi, "point_id", "left").withColumnRenamed("mean_ndvi", "ndvi")
-    known_feats = feats.where(F.col("ndvi").isNotNull())
+    # four actions read the known features (CV metrics, fit, write, GAM
+    # CV): run the zonal candidate join and its groupBy once
+    known_feats, _ = _materialize(feats.where(F.col("ndvi").isNotNull()))
     # Collect the CV metrics row BEFORE choosing/fitting a model: the
     # GAM path fits eagerly on the driver (toPandas + np.quantile), so
     # a zero-known input (e.g. the NDVI raster does not overlap the
@@ -278,6 +324,14 @@ def cmd_stac_landcover(args: argparse.Namespace) -> None:
     print(f"stac-landcover complete -> {path}")
 
 
+# analyze_documents columns the curate funnel never reads: its
+# boundaries drop them and the unpacked output gets them at the write
+_ATTACHED_AT_WRITE = (
+    "n_bpe_pieces", "mean_token_len", "alpha_ratio", "distinct_token_ratio",
+    "fingerprint",
+)
+
+
 def _per_lang(spec: str, cast) -> dict:
     """``"en=0.5,de=1"`` -> ``{"en": cast("0.5"), "de": cast("1")}``."""
     return {kv.split("=")[0]: cast(kv.split("=")[1]) for kv in spec.split(",")}
@@ -296,22 +350,18 @@ def cmd_curate(args: argparse.Namespace) -> None:
     spark = get_spark(app_name="svnv-curate", master=args.master)
     docs = spark.read.parquet(args.docs)
     n_in = docs.count()
-    rewritten = False
 
     def rewrite(out, text_col, where=None, **metrics):
-        """One text-rewrite stage: checkpoint the operator's output,
-        aggregate its ``metrics`` in one job and put its ``text_col``
-        in place of the docs' text (a doc failing ``where`` is
-        dropped). Returns the metrics row."""
-        nonlocal docs, rewritten
-        out = out.localCheckpoint(eager=True)
-        row = out.agg(*(c.alias(k) for k, c in metrics.items())).collect()[0]
-        kept = out.where(where) if where else out
+        """One text-rewrite stage: materialize the operator's output
+        with its ``metrics`` observed and put its ``text_col`` in place
+        of the docs' text (a doc failing ``where`` is dropped). Returns
+        the metrics."""
+        nonlocal docs
+        out, st = _materialize(out, where, **metrics)
         docs = docs.drop("text").join(
-            kept.select("doc_id", F.col(text_col).alias("text")), "doc_id"
+            out.select("doc_id", F.col(text_col).alias("text")), "doc_id"
         )
-        rewritten = True
-        return row
+        return st
 
     if args.fix_text:
         # encoding cleanup FIRST: every later stage (shingles, LM,
@@ -319,7 +369,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         st = rewrite(
             fix_text(docs), "text_fixed", n=F.count(F.when(F.col("changed"), 1))
         )
-        print(f"[fix] repaired={st.n} docs (mojibake/spaces/control chars)")
+        print(f"[fix] repaired={st['n']} docs (mojibake/spaces/control chars)")
 
     if args.c4:
         # C4 line/page heuristics (Raffel et al. 2020 §2.2) directly
@@ -332,24 +382,22 @@ def cmd_curate(args: argparse.Namespace) -> None:
                 min_sentences=args.c4_min_sentences,
             ),
             "text_clean",
-            where="keep",
+            where=F.col("keep"),
             kept=F.sum(F.col("keep").cast("long")),
             nl=F.sum("n_lines"),
             nk=F.sum("n_lines_kept"),
         )
         print(
-            f"[c4] kept={int(st.kept or 0)} of {n_in} pages; "
-            f"lines {int(st.nl or 0)} -> {int(st.nk or 0)}"
+            f"[c4] kept={int(st['kept'] or 0)} of {n_in} pages; "
+            f"lines {int(st['nl'] or 0)} -> {int(st['nk'] or 0)}"
         )
-        n_in = int(st.kept or 0)
+        n_in = int(st["kept"] or 0)
 
     if args.blocklist:
         blk = spark.read.parquet(args.blocklist)
         n_before = n_in
-        docs = decontaminate(docs, blk, n=args.decontam_n).localCheckpoint(
-            eager=True
-        )
-        n_in = docs.count()
+        docs, st = _materialize(decontaminate(docs, blk, n=args.decontam_n))
+        n_in = st["rows"]
         print(
             f"[decontam] dropped={n_before - n_in} "
             f"({args.decontam_n}-gram overlap vs blocklist)"
@@ -384,20 +432,27 @@ def cmd_curate(args: argparse.Namespace) -> None:
     ):
         if on:
             st = rewrite(dedup(docs), "text_deduped", removed=F.sum("n_removed"))
-            print(f"[{tag}] removed={st.removed or 0} {what}")
+            print(f"[{tag}] removed={st['removed'] or 0} {what}")
 
-    if rewritten:
-        # cut the text-rewrite lineage before the scoring stages: every
-        # downstream stage otherwise replans the full fix/para/chunk
-        # expression tree and the composed plan grows multiplicatively
-        # (an all-stages run OOMed a 4g driver on PLAN size, not data).
-        # This is the pruned-projection checkpoint strategy
-        # BENCH/BASELINE.md documents — on a cluster use checkpoint()
-        # to reliable storage.
-        docs = docs.localCheckpoint(eager=False)
-
-    scored = analyze_documents(docs, keep_input_cols=True)
-    kept_q = scored.where(F.col("quality_score") >= F.lit(args.min_quality))
+    # Funnel boundaries: the quality filter, each enabled gate, exact
+    # dedup, the done set, near dedup, semdedup, DSIR and the budget
+    # each end in one _materialize, and every printed count is read
+    # from that job's observation. No count or operator re-reads a
+    # lineage that was not materialized (each used to re-run the scan
+    # -> analyze_documents -> md5 digest shuffle chain above it). The
+    # boundary frames are PRUNED to the input columns plus the three
+    # derived columns later stages read (lang_pred, n_tokens,
+    # quality_score): a full-column cache computes the fingerprint UDF
+    # for every row and was 3-10x slower at 200k docs (BENCH/BASELINE.md
+    # "Funnel caching negative result"). The other five analysis
+    # columns are attached to the survivors at the write. Ten
+    # interleaved perfbench pairs on a 4-vCPU host: curate_funnel
+    # rows_per_s median 416 -> 624, cpu_s 22.0 -> 13.4.
+    kept_q, st = _materialize(
+        analyze_documents(docs, keep_input_cols=True).drop(*_ATTACHED_AT_WRITE),
+        F.col("quality_score") >= F.lit(args.min_quality),
+    )
+    n_quality = st["rows"]
 
     if args.max_dup_line_frac is not None or args.max_top2gram_frac is not None:
         # Gopher-style repetition filter between the heuristic quality
@@ -409,9 +464,9 @@ def cmd_curate(args: argparse.Namespace) -> None:
         if args.max_top2gram_frac is not None:
             cond = cond | (F.col("top2gram_char_frac") > args.max_top2gram_frac)
         bad = rep.where(cond).select("doc_id")
-        n_rep_dropped = bad.count()
-        kept_q = kept_q.join(bad, "doc_id", "left_anti")
-        print(f"[rep] dropped={n_rep_dropped} repetitive docs")
+        kept_q, st = _materialize(kept_q.join(bad, "doc_id", "left_anti"))
+        print(f"[rep] dropped={n_quality - st['rows']} repetitive docs")
+        n_quality = st["rows"]
 
     if args.lm_ref:
         # CCNet-style in-domain filter: bigram LM trained on the
@@ -422,17 +477,19 @@ def cmd_curate(args: argparse.Namespace) -> None:
         ref = spark.read.parquet(args.lm_ref)
         uni, bi, v = train_bigram_lm(ref)
         lp = score_bigram_logprob(kept_q, uni, bi, v)
-        kept_q = kept_q.join(lp.select("doc_id", "mean_logprob"), "doc_id", "left")
-        n_unscorable = kept_q.where(F.col("mean_logprob").isNull()).count()
-        if n_unscorable:
+        kept_q, st = _materialize(
+            kept_q.join(lp.select("doc_id", "mean_logprob"), "doc_id", "left"),
+            F.col("mean_logprob").isNull()
+            | (F.col("mean_logprob") >= F.lit(args.min_logprob)),
+            unscorable=F.count(F.when(F.col("mean_logprob").isNull(), 1)),
+        )
+        kept_q = kept_q.drop("mean_logprob")
+        if st["unscorable"]:
             print(
-                f"[lm] kept {n_unscorable} unscorable docs "
+                f"[lm] kept {st['unscorable']} unscorable docs "
                 "(<2 tokens, no LM score — not dropped)"
             )
-        kept_q = kept_q.where(
-            F.col("mean_logprob").isNull()
-            | (F.col("mean_logprob") >= F.lit(args.min_logprob))
-        ).drop("mean_logprob")
+        n_quality = st["rows"]
 
     if args.clf_ref:
         # fastText-style classifier gate: logistic regression trained
@@ -455,29 +512,24 @@ def cmd_curate(args: argparse.Namespace) -> None:
             )
         w, bias = train_quality_classifier(pos, neg)
         cp = score_quality_classifier(kept_q, w, bias)
-        kept_q = kept_q.join(cp, "doc_id", "left")
-        n_dropped_clf = kept_q.where(
-            F.col("clf_prob") < F.lit(args.clf_min_prob)
-        ).count()
-        kept_q = kept_q.where(
+        kept_q, st = _materialize(
+            kept_q.join(cp, "doc_id", "left"),
             F.col("clf_prob").isNull()
-            | (F.col("clf_prob") >= F.lit(args.clf_min_prob))
-        ).drop("clf_prob")
-        print(f"[clf] dropped={n_dropped_clf} below P(reference-like) {args.clf_min_prob}")
-
-    n_quality = kept_q.count()
+            | (F.col("clf_prob") >= F.lit(args.clf_min_prob)),
+            dropped=F.count(F.when(F.col("clf_prob") < F.lit(args.clf_min_prob), 1)),
+        )
+        kept_q = kept_q.drop("clf_prob")
+        print(f"[clf] dropped={st['dropped']} below P(reference-like) {args.clf_min_prob}")
+        n_quality = st["rows"]
 
     # exact dedup: keep the min doc_id per content digest (shuffle on
     # the digest only; the digest frame is corpus-sized, NOT broadcast)
     digests = kept_q.withColumn("_digest", F.md5(F.col("text")))
     keepers = digests.groupBy("_digest").agg(F.min("doc_id").alias("doc_id"))
-    exact = digests.join(keepers, ["_digest", "doc_id"], "left_semi").drop("_digest")
-    # deliberately NOT cached: a measured A/B (bench.bench_curate_funnel
-    # docstring) showed caching this frame 3-10x SLOWER — the cache
-    # materializes every analyze_documents column (incl. the rolling
-    # fingerprint) while uncached consumers are column-pruned to
-    # (doc_id, text, lang); at 100 TB checkpoint a pruned projection
-    n_exact = exact.count()
+    exact, st = _materialize(
+        digests.join(keepers, ["_digest", "doc_id"], "left_semi").drop("_digest")
+    )
+    n_exact = st["rows"]
 
     if args.done_digests:
         # INCREMENTAL exact dedup vs the already-curated done set:
@@ -493,7 +545,8 @@ def cmd_curate(args: argparse.Namespace) -> None:
             exact = exact.drop("digest")
         keyed = exact.withColumn("_digest", F.md5(F.col("text")))
         if args.done_bloom:
-            cap = done.count()
+            # from the done set's parquet footers
+            cap = spark.read.parquet(args.done_digests).count()
             bloom = build_bloom(done, "digest", capacity=max(cap, 1))
             exact = bloom_anti_join(
                 keyed.withColumnRenamed("_digest", "digest"),
@@ -507,12 +560,12 @@ def cmd_curate(args: argparse.Namespace) -> None:
                 done, keyed["_digest"] == done["digest"], "left_anti"
             ).drop("_digest")
             mode = "anti-join"
-        n_after_done = exact.count()
+        exact, st = _materialize(exact)
         print(
-            f"[done-set] dropped={n_exact - n_after_done} already-curated "
+            f"[done-set] dropped={n_exact - st['rows']} already-curated "
             f"docs ({mode})"
         )
-        n_exact = n_after_done
+        n_exact = st["rows"]
 
     # near-dup: LSH pairs -> connected components -> keep canonical
     pairs, metrics = minhash_lsh_pairs(
@@ -522,8 +575,8 @@ def cmd_curate(args: argparse.Namespace) -> None:
         return_metrics=True,
     )
     clusters = duplicate_clusters(pairs, algorithm=args.cc_algorithm)
-    near = dedup_keep_canonical(exact, clusters)
-    n_near = near.count()
+    near, st = _materialize(dedup_keep_canonical(exact, clusters))
+    n_near = st["rows"]
     m = metrics.collect()[0]
     print(
         f"[lsh] buckets={m.n_buckets} dropped_buckets={m.dropped_buckets} "
@@ -555,30 +608,30 @@ def cmd_curate(args: argparse.Namespace) -> None:
         dup_ids = sd.where(~F.col("kept")).select(
             F.col("vec_id").alias("doc_id")
         )
-        out = out.join(dup_ids, "doc_id", "left_anti")
-        n_kept = out.count()
-        print(f"[semdedup] dropped={n_pool - n_kept} semantic near-dups")
-        n_pool = n_kept
+        out, st = _materialize(out.join(dup_ids, "doc_id", "left_anti"))
+        print(f"[semdedup] dropped={n_pool - st['rows']} semantic near-dups")
+        n_pool = st["rows"]
     if args.dsir_target:
         # DSIR importance resampling: keep the --dsir-keep docs whose
         # hashed-n-gram profile best matches the target domain. Runs
         # AFTER dedup (the published setup selects from the deduped
         # pool) and before sampling/budget mixing.
         tgt = spark.read.parquet(args.dsir_target)
-        out = dsir_select(
-            out, tgt, n=args.dsir_keep, n_buckets=args.dsir_buckets
-        ).drop("dsir_logweight")
-        # count the actual kept rows (fewer docs than --dsir-keep keeps
+        out, st = _materialize(
+            dsir_select(
+                out, tgt, n=args.dsir_keep, n_buckets=args.dsir_buckets
+            ).drop("dsir_logweight")
+        )
+        # report the actual kept rows (fewer docs than --dsir-keep keeps
         # them all) — funnel accounting must not report the ask
-        n_kept = out.count()
-        print(f"[dsir] kept={n_kept} of {n_pool} (target-likeness rank)")
-        n_pool = n_kept
+        print(f"[dsir] kept={st['rows']} of {n_pool} (target-likeness rank)")
+        n_pool = st["rows"]
     if args.sample:
         rates = _per_lang(args.sample, float)
         out = stratified_sample(out, "lang_pred", rates, "doc_id",
                                 default_rate=args.default_rate)
 
-    tokens_col = "n_tokens" if "n_tokens" in out.columns else None
+    tokens_col = "n_tokens"
     if args.bpe_merges:
         # real subword counts for the budget/pack stages: merges are
         # learned ONCE from a bounded sample of the SELECTED pool,
@@ -600,7 +653,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # its best remaining docs (bucketed two-phase — only the
         # boundary quality-bucket per stratum is sorted)
         budgets = _per_lang(args.token_budget, int)
-        out = token_budget_select(
+        out, _ = _materialize(token_budget_select(
             out,
             budgets,
             strata_col="lang_pred",
@@ -609,9 +662,8 @@ def cmd_curate(args: argparse.Namespace) -> None:
             # re-split the text (or the BPE subword counts when asked)
             tokens_col=tokens_col,
             default_budget=args.budget_default,
-        )
-        budget_col = tokens_col or "n_tokens"
-        tot = out.groupBy("lang_pred").agg(F.sum(budget_col).alias("t"))
+        ))
+        tot = out.groupBy("lang_pred").agg(F.sum(tokens_col).alias("t"))
         mix = {r.lang_pred: int(r.t) for r in tot.collect()}
         print(
             "[budget] tokens kept per lang: "
@@ -621,6 +673,19 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # final stage: materialize fixed-token-budget training rows
         out = pack_rows(out, args.pack_tokens, tokens_col=tokens_col)
         print(f"[pack] budget={args.pack_tokens} tokens/row")
+    else:
+        # the analysis columns no stage reads, computed for the
+        # survivors only, in analyze_documents' column order (the
+        # three the funnel kept stay adjacent, starting at lang_pred)
+        full = analysis_cols("text")
+        i = out.columns.index("lang_pred")
+        j = i + len(full) - len(_ATTACHED_AT_WRITE)
+        out = out.select(
+            *(out[c] for c in out.columns[:i]),
+            *(c.alias(k) if k in _ATTACHED_AT_WRITE else out[k]
+              for k, c in full.items()),
+            *(out[c] for c in out.columns[j:]),
+        )
 
     curated = os.path.join(args.out, "curated")
     out.write.mode("overwrite").parquet(curated)

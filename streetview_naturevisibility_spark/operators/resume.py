@@ -16,7 +16,9 @@ the committed files are the whole record:
   because parquet commit is all-or-nothing);
 - ``read_lineage`` lists the committed parquet files on the driver and
   takes each file's row count from its footer (metadata only). Nothing
-  is written from executors.
+  is written from executors;
+- ``committed_stages`` lists the committed stages whose names share a
+  prefix (the slices of a chunked run).
 
 ``root`` is a URI (``file:``, ``hdfs:``, ...) or a local path; a
 scheme-less path is made absolute, so Spark and the driver's one
@@ -33,12 +35,22 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _stage_data(root: str, stage: str) -> tuple[str, pafs.FileSystem, str]:
-    """``<root>/<stage>/data`` as (Spark path, filesystem, path on it)."""
+def _root(root: str) -> tuple[str, pafs.FileSystem, str]:
+    """``root`` as (Spark path, filesystem, path on it)."""
     if not urlsplit(root).scheme:
         root = str(Path(root).absolute())
     fs, base = pafs.FileSystem.from_uri(root)
-    return f"{root.rstrip('/')}/{stage}/data", fs, f"{base}/{stage}/data"
+    return root.rstrip("/"), fs, base
+
+
+def _stage_data(root: str, stage: str) -> tuple[str, pafs.FileSystem, str]:
+    """``<root>/<stage>/data`` as (Spark path, filesystem, path on it)."""
+    root, fs, base = _root(root)
+    return f"{root}/{stage}/data", fs, f"{base}/{stage}/data"
+
+
+def _committed(fs: pafs.FileSystem, path: str) -> bool:
+    return fs.get_file_info(f"{path}/_SUCCESS").type == pafs.FileType.File
 
 
 def run_stage(
@@ -50,9 +62,23 @@ def run_stage(
     """Compute-or-restore a stage. Returns the stage DataFrame reading
     from the checkpoint (so downstream stages never recompute it)."""
     uri, fs, path = _stage_data(root, stage)
-    if fs.get_file_info(f"{path}/_SUCCESS").type != pafs.FileType.File:
+    if not _committed(fs, path):
         build().write.mode("overwrite").parquet(uri)
     return read_stage(spark, root, stage)
+
+
+def committed_stages(root: str, prefix: str) -> list[str]:
+    """The stages under ``root`` whose name starts with ``prefix`` and
+    whose data is committed, sorted by name."""
+    _, fs, base = _root(root)
+    dirs = fs.get_file_info(pafs.FileSelector(base, allow_not_found=True))
+    return sorted(
+        d.base_name
+        for d in dirs
+        if d.type == pafs.FileType.Directory
+        and d.base_name.startswith(prefix)
+        and _committed(fs, f"{d.path}/data")
+    )
 
 
 def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:

@@ -221,19 +221,27 @@ def analyze_documents(
     derived columns to the input row instead of projecting it away
     (for pipelines that filter then continue with the original text —
     a pure projection either way, no shuffle)."""
-    cols = quality_score_cols(text_col)
     base = [F.col("*")] if keep_input_cols else [F.col(id_col)]
     return df.select(
-        *base,
-        lang_id_col(text_col).alias("lang_pred"),
-        cols["n_tokens"].alias("n_tokens"),
-        token_count_col(text_col, "bpe").alias("n_bpe_pieces"),
-        F.round(cols["mean_token_len"], 6).alias("mean_token_len"),
-        F.round(cols["alpha_ratio"], 6).alias("alpha_ratio"),
-        F.round(cols["distinct_token_ratio"], 6).alias("distinct_token_ratio"),
-        F.round(cols["quality_score"], 6).alias("quality_score"),
-        fingerprint_udf(F.col(text_col)).alias("fingerprint"),
+        *base, *(c.alias(k) for k, c in analysis_cols(text_col).items())
     )
+
+
+def analysis_cols(text_col: str) -> dict:
+    """``analyze_documents``' derived columns by name, in its output
+    order. Each is a per-row function of ``text_col`` alone, so a
+    caller may attach any of them to any subset of the rows later."""
+    cols = quality_score_cols(text_col)
+    return {
+        "lang_pred": lang_id_col(text_col),
+        "n_tokens": cols["n_tokens"],
+        "n_bpe_pieces": token_count_col(text_col, "bpe"),
+        "mean_token_len": F.round(cols["mean_token_len"], 6),
+        "alpha_ratio": F.round(cols["alpha_ratio"], 6),
+        "distinct_token_ratio": F.round(cols["distinct_token_ratio"], 6),
+        "quality_score": F.round(cols["quality_score"], 6),
+        "fingerprint": fingerprint_udf(F.col(text_col)),
+    }
 
 
 # ------------------------------------------------------------------

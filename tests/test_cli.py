@@ -43,28 +43,27 @@ class TestCli:
         assert before == after
 
     def test_pipeline_ranges_do_not_share_a_checkpoint(
-        self, spark, pipeline_out, run_cli_pipeline, tmp_path, capsys
+        self, spark, run_cli_pipeline, tmp_path, capsys
     ):
-        """Two disjoint --begin/--end slices into one --out: each run
-        writes its own slice, not the checkpoint of the full run or of
-        the other slice, and its [lineage] rows match what it wrote."""
+        """--begin/--end slices into one fresh --out accumulate: each
+        slice is its own checkpoint (its [lineage] rows are its own),
+        and the outputs hold every slice run so far, each point once,
+        also after a slice is run again."""
         import re
 
         outdir = str(tmp_path / "ranges")
-        shutil.copytree(pipeline_out, outdir)
-        for lo, hi in ((0, 20), (20, 40)):
+        for lo, hi, held in ((0, 20, 20), (20, 40, 40), (20, 40, 40)):
             capsys.readouterr()
             run_cli_pipeline(outdir, "--begin", str(lo), "--end", str(hi))
-            ids = [
-                r.point_id
-                for r in spark.read.parquet(os.path.join(outdir, "gvi_points")).collect()
-            ]
-            assert ids and all(lo <= i < hi for i in ids), (lo, hi, ids)
+            gvi = spark.read.parquet(os.path.join(outdir, "gvi_points"))
+            assert sorted(r.point_id for r in gvi.collect()) == list(range(held))
             m = re.search(
                 rf"\[lineage\] gvi_points_{lo}_{hi}: \d+ files, (\d+) rows",
                 capsys.readouterr().out,
             )
-            assert m and int(m.group(1)) == len(ids)
+            assert m and int(m.group(1)) == hi - lo
+            per_road = spark.read.parquet(os.path.join(outdir, "gvi_per_road"))
+            assert per_road.agg({"total_points": "sum"}).collect()[0][0] == held
 
     def test_metrics_and_gap_fill_follow_pipeline_checkpoint(
         self, spark, fixture_dir, pipeline_out, run_cli, run_cli_pipeline,
@@ -200,6 +199,66 @@ class TestParser:
             }
             assert read == defined, (name, read ^ defined)
 
+    def test_one_materialization_helper(self):
+        """``cli.py`` stores a frame only inside ``_materialize``, and
+        ``cmd_curate`` counts only a frame that helper returned or a
+        frame read straight from parquet files (a footer count), never
+        a lineage it would have to re-run."""
+        import ast
+        import inspect
+
+        tree = ast.parse(inspect.getsource(cli))
+        funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+        inside = set(map(id, ast.walk(funcs["_materialize"])))
+        stores = [
+            (n.func.attr, n.lineno)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in ("localCheckpoint", "checkpoint", "cache", "persist")
+            and id(n) not in inside
+        ]
+        assert not stores, stores
+
+        def is_parquet_read(node):
+            return (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and ast.unparse(node.func.value) == "spark.read"
+            )
+
+        curate = funcs["cmd_curate"]
+        binds = []  # (line, name, bound by _materialize or a parquet read)
+        for n in ast.walk(curate):
+            if isinstance(n, ast.Assign):
+                for t in n.targets:
+                    helper = (
+                        isinstance(n.value, ast.Call)
+                        and getattr(n.value.func, "id", None) == "_materialize"
+                    )
+                    name = t.elts[0] if helper else t
+                    if isinstance(name, ast.Name):
+                        binds.append(
+                            (n.lineno, name.id, helper or is_parquet_read(n.value))
+                        )
+        counts = [
+            n
+            for n in ast.walk(curate)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "count"
+            and not n.args
+        ]
+        assert counts
+        for c in counts:
+            recv = c.func.value
+            if is_parquet_read(recv):
+                continue
+            assert isinstance(recv, ast.Name), ast.unparse(c)
+            last = max(b for b in binds if b[1] == recv.id and b[0] < c.lineno)
+            assert last[2], (ast.unparse(c), c.lineno)
+
 
 class TestCurate:
     def test_curate_funnel(self, spark, run_cli, tmp_path, capsys):
@@ -273,6 +332,57 @@ class TestCurate:
         )
         capsys.readouterr()
         assert seen == ["star"]
+
+    def test_each_doc_is_analyzed_once(
+        self, spark, run_cli, tmp_path, monkeypatch, capsys
+    ):
+        """Every funnel stage reads a materialized boundary, never the
+        lineage above it: ``analyze_documents``' input text passes
+        through a counting identity UDF, which must see each input doc
+        exactly once per run — with the benchmark's flags (DSIR +
+        packing) and with a repetition gate and unpacked output."""
+        import numpy as np
+        import pandas as pd
+        from pyspark.sql import functions as F
+
+        rng = np.random.RandomState(5)
+        voc = ["apple", "banana", "cherry", "date", "elder", "fig", "grape"]
+        texts = [" ".join(voc[j] for j in rng.randint(0, 7, size=30)) for _ in range(30)]
+        texts[3] = texts[2]  # exact duplicate
+        texts[7] = "spam line\n" * 20  # repetitive
+        docs = str(tmp_path / "docs.parquet")
+        pd.DataFrame(
+            {
+                "doc_id": list(range(30)),
+                "text": texts,
+                "lang": ["en"] * 30,
+                "source": ["t"] * 30,
+                "n_chars": [len(t) for t in texts],
+            }
+        ).to_parquet(docs, index=False)
+        seen = spark.sparkContext.accumulator(0)
+
+        @F.pandas_udf("string")
+        def count_rows(s: pd.Series) -> pd.Series:
+            seen.add(len(s))
+            return s
+
+        real = cli.analyze_documents
+
+        def counting(df, *args, **kwargs):
+            return real(df.withColumn("text", count_rows("text")), *args, **kwargs)
+
+        monkeypatch.setattr(cli, "analyze_documents", counting)
+        for i, flags in enumerate((
+            ("--dsir-target", docs, "--dsir-keep", 10, "--pack-tokens", 64),
+            ("--max-dup-line-frac", 0.5),
+        )):
+            seen.value = 0
+            out = str(tmp_path / f"cur{i}")
+            run_cli("curate", "--docs", docs, "--out", out, "--min-quality", 0, *flags)
+            assert "[curate] in=30" in capsys.readouterr().out
+            assert spark.read.parquet(os.path.join(out, "curated")).count() > 0
+            assert seen.value == 30, (flags, seen.value)
 
     def test_lm_filter_keeps_unscorable_short_docs(
         self, spark, run_cli, tmp_path, capsys
