@@ -301,7 +301,7 @@ def main() -> None:
     bloom = build_bloom(done, "d", capacity=n_done, fpp=0.01)
     build_s = time.perf_counter() - t0
     t0 = time.perf_counter()
-    nb = bloom_anti_join(batch, done, "d", bloom, residual="broadcast").count()
+    nb = bloom_anti_join(batch, done, "d", bloom).count()
     bloom_s = time.perf_counter() - t0
     t0 = time.perf_counter()
     np_ = batch.join(done, "d", "left_anti").count()

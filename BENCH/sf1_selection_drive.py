@@ -190,7 +190,7 @@ def main() -> None:
     keyed = docs.select("doc_id", F.md5("text").alias("d"))
     done = keyed.where(F.col("doc_id") % 2 == 0).select("d").distinct()
     bloom = build_bloom(done, "d", capacity=500_000, fpp=0.01)
-    nb = bloom_anti_join(keyed, done, "d", bloom, residual="auto").count()
+    nb = bloom_anti_join(keyed, done, "d", bloom).count()
     npl = keyed.join(done, "d", "left_anti").count()
     results["bloom_anti_sf1"] = {
         "bloom_survivors": int(nb),

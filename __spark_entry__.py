@@ -22,6 +22,7 @@ from streetview_naturevisibility_spark.geo.polygon import coords_to_wkt, halfpla
 from streetview_naturevisibility_spark.operators import aggregates as agg
 from streetview_naturevisibility_spark.operators.pip import make_pip_flag_udf
 from streetview_naturevisibility_spark.operators.zonal import zonal_mean
+from streetview_naturevisibility_spark.session import materialize
 from streetview_naturevisibility_spark.sources import derived as D
 from streetview_naturevisibility_spark.sources.tables import load
 
@@ -453,12 +454,12 @@ def q_pipeline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators remain the public API (operators/aggregates.py) and keep
     their own pytest coverage.
 
-    r7: the shared gvi frame is eagerly localCheckpoint-ed — it is a
-    full snap join (spark_gvi), and the four independent 1-row
-    aggregates otherwise each re-run it (4 snap evaluations per
-    query; measured 2.6 s -> ~1.3 s at sf0.1). Identical rows feed
-    identical aggregates — the oracle hash is unchanged."""
-    gvi = D.spark_gvi(spark, sf_dir).localCheckpoint(eager=True)
+    r7: the shared gvi frame is materialized — it is a full snap join
+    (spark_gvi), and the four independent 1-row aggregates otherwise
+    each re-run it (4 snap evaluations per query; measured 2.6 s ->
+    ~1.3 s at sf0.1). Identical rows feed identical aggregates — the
+    oracle hash is unchanged."""
+    gvi, _ = materialize(D.spark_gvi(spark, sf_dir))
     m = agg.missing_images_metrics(gvi).select(
         "unavailable",
         "unsuitable",
@@ -796,8 +797,12 @@ def q_curate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streetview_naturevisibility_spark.operators.textops import analyze_documents
 
     docs = load(spark, sf_dir, "documents")
-    scored = analyze_documents(docs, keep_input_cols=True)
-    kept_q = scored.where(F.col("quality_score") >= F.lit(0.3))
+    # observe-then-filter: the filter stays above the analysis
+    # projection, so each doc's quality features are derived once
+    kept_q, _ = materialize(
+        analyze_documents(docs, keep_input_cols=True),
+        F.col("quality_score") >= F.lit(0.3),
+    )
     digests = kept_q.withColumn("_digest", F.md5(F.col("text")))
     keepers = digests.groupBy("_digest").agg(F.min("doc_id").alias("doc_id"))
     exact = digests.join(keepers, ["_digest", "doc_id"], "left_semi").drop("_digest")

@@ -42,7 +42,7 @@ import argparse
 import os
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators.aggregates import (
@@ -101,33 +101,9 @@ from .operators.textops import (
 from .operators.tiling import prepare_pages
 from .operators.tokenize import bpe_token_count, train_bpe_from_corpus
 from .operators.zonal import zonal_mean
-from .session import get_spark
+from .session import get_spark, materialize
 from .sources.layout import write_spatial_sorted
 from .sources.stac import landcover_percentages, ndvi_for_aoi
-
-
-def _materialize(
-    df: DataFrame, where=None, **observed
-) -> tuple[DataFrame, dict]:
-    """The one place the CLI materializes a frame: an eager
-    ``localCheckpoint`` of ``df`` (filtered by ``where``), so every
-    later consumer reads the stored rows instead of re-running the
-    lineage above them. The same job fills an ``Observation`` with the
-    rows kept (``rows``) and each ``observed`` aggregate over ``df``
-    before the filter, so no count needs a job of its own. The
-    observation also keeps the filter above ``df``'s projection:
-    pushed below it, the filter would derive its columns a second
-    time. (On a cluster that can lose executors, a reliable
-    ``checkpoint()`` belongs here.)"""
-    obs = Observation()
-    keep = F.lit(True) if where is None else where
-    df = df.observe(
-        obs,
-        F.count(F.when(keep, 1)).alias("rows"),
-        *(c.alias(k) for k, c in observed.items()),
-    )
-    df = (df if where is None else df.where(where)).localCheckpoint(eager=True)
-    return df, obs.get
 
 
 def cmd_pipeline(args: argparse.Namespace) -> None:
@@ -194,7 +170,7 @@ def cmd_metrics(args: argparse.Namespace) -> None:
     root = args.checkpoint or os.path.join(args.results, "_ckpt")
     points = read_stage(spark, root, "sample_points")
     gvi = spark.read.parquet(os.path.join(args.results, "gvi_points"))
-    inter, _ = _materialize(build_intersection(gvi, points, roads))
+    inter, _ = materialize(build_intersection(gvi, points, roads))
 
     print("gvi-streets (per-road):")
     roads_with_avg_gvi(roads, gvi_per_road(inter)).orderBy("road_id").show(20)
@@ -220,7 +196,7 @@ def cmd_gap_fill(args: argparse.Namespace) -> None:
     feats = gvi.join(ndvi, "point_id", "left").withColumnRenamed("mean_ndvi", "ndvi")
     # four actions read the known features (CV metrics, fit, write, GAM
     # CV): run the zonal candidate join and its groupBy once
-    known_feats, _ = _materialize(feats.where(F.col("ndvi").isNotNull()))
+    known_feats, _ = materialize(feats.where(F.col("ndvi").isNotNull()))
     # Collect the CV metrics row BEFORE choosing/fitting a model: the
     # GAM path fits eagerly on the driver (toPandas + np.quantile), so
     # a zero-known input (e.g. the NDVI raster does not overlap the
@@ -357,7 +333,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         of the docs' text (a doc failing ``where`` is dropped). Returns
         the metrics."""
         nonlocal docs
-        out, st = _materialize(out, where, **metrics)
+        out, st = materialize(out, where, **metrics)
         docs = docs.drop("text").join(
             out.select("doc_id", F.col(text_col).alias("text")), "doc_id"
         )
@@ -396,7 +372,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
     if args.blocklist:
         blk = spark.read.parquet(args.blocklist)
         n_before = n_in
-        docs, st = _materialize(decontaminate(docs, blk, n=args.decontam_n))
+        docs, st = materialize(decontaminate(docs, blk, n=args.decontam_n))
         n_in = st["rows"]
         print(
             f"[decontam] dropped={n_before - n_in} "
@@ -436,7 +412,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
 
     # Funnel boundaries: the quality filter, each enabled gate, exact
     # dedup, the done set, near dedup, semdedup, DSIR and the budget
-    # each end in one _materialize, and every printed count is read
+    # each end in one materialize, and every printed count is read
     # from that job's observation. No count or operator re-reads a
     # lineage that was not materialized (each used to re-run the scan
     # -> analyze_documents -> md5 digest shuffle chain above it). The
@@ -448,7 +424,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
     # columns are attached to the survivors at the write. Ten
     # interleaved perfbench pairs on a 4-vCPU host: curate_funnel
     # rows_per_s median 416 -> 624, cpu_s 22.0 -> 13.4.
-    kept_q, st = _materialize(
+    kept_q, st = materialize(
         analyze_documents(docs, keep_input_cols=True).drop(*_ATTACHED_AT_WRITE),
         F.col("quality_score") >= F.lit(args.min_quality),
     )
@@ -464,7 +440,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         if args.max_top2gram_frac is not None:
             cond = cond | (F.col("top2gram_char_frac") > args.max_top2gram_frac)
         bad = rep.where(cond).select("doc_id")
-        kept_q, st = _materialize(kept_q.join(bad, "doc_id", "left_anti"))
+        kept_q, st = materialize(kept_q.join(bad, "doc_id", "left_anti"))
         print(f"[rep] dropped={n_quality - st['rows']} repetitive docs")
         n_quality = st["rows"]
 
@@ -477,7 +453,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         ref = spark.read.parquet(args.lm_ref)
         uni, bi, v = train_bigram_lm(ref)
         lp = score_bigram_logprob(kept_q, uni, bi, v)
-        kept_q, st = _materialize(
+        kept_q, st = materialize(
             kept_q.join(lp.select("doc_id", "mean_logprob"), "doc_id", "left"),
             F.col("mean_logprob").isNull()
             | (F.col("mean_logprob") >= F.lit(args.min_logprob)),
@@ -512,7 +488,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
             )
         w, bias = train_quality_classifier(pos, neg)
         cp = score_quality_classifier(kept_q, w, bias)
-        kept_q, st = _materialize(
+        kept_q, st = materialize(
             kept_q.join(cp, "doc_id", "left"),
             F.col("clf_prob").isNull()
             | (F.col("clf_prob") >= F.lit(args.clf_min_prob)),
@@ -526,7 +502,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
     # the digest only; the digest frame is corpus-sized, NOT broadcast)
     digests = kept_q.withColumn("_digest", F.md5(F.col("text")))
     keepers = digests.groupBy("_digest").agg(F.min("doc_id").alias("doc_id"))
-    exact, st = _materialize(
+    exact, st = materialize(
         digests.join(keepers, ["_digest", "doc_id"], "left_semi").drop("_digest")
     )
     n_exact = st["rows"]
@@ -560,7 +536,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
                 done, keyed["_digest"] == done["digest"], "left_anti"
             ).drop("_digest")
             mode = "anti-join"
-        exact, st = _materialize(exact)
+        exact, st = materialize(exact)
         print(
             f"[done-set] dropped={n_exact - st['rows']} already-curated "
             f"docs ({mode})"
@@ -575,7 +551,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         return_metrics=True,
     )
     clusters = duplicate_clusters(pairs, algorithm=args.cc_algorithm)
-    near, st = _materialize(dedup_keep_canonical(exact, clusters))
+    near, st = materialize(dedup_keep_canonical(exact, clusters))
     n_near = st["rows"]
     m = metrics.collect()[0]
     print(
@@ -608,7 +584,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         dup_ids = sd.where(~F.col("kept")).select(
             F.col("vec_id").alias("doc_id")
         )
-        out, st = _materialize(out.join(dup_ids, "doc_id", "left_anti"))
+        out, st = materialize(out.join(dup_ids, "doc_id", "left_anti"))
         print(f"[semdedup] dropped={n_pool - st['rows']} semantic near-dups")
         n_pool = st["rows"]
     if args.dsir_target:
@@ -617,7 +593,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # AFTER dedup (the published setup selects from the deduped
         # pool) and before sampling/budget mixing.
         tgt = spark.read.parquet(args.dsir_target)
-        out, st = _materialize(
+        out, st = materialize(
             dsir_select(
                 out, tgt, n=args.dsir_keep, n_buckets=args.dsir_buckets
             ).drop("dsir_logweight")
@@ -653,7 +629,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # its best remaining docs (bucketed two-phase — only the
         # boundary quality-bucket per stratum is sorted)
         budgets = _per_lang(args.token_budget, int)
-        out, _ = _materialize(token_budget_select(
+        out, _ = materialize(token_budget_select(
             out,
             budgets,
             strata_col="lang_pred",

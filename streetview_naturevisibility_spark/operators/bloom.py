@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import fits, materialize
+
 _H2_SALT = 0x5BD1E995  # second-hash salt column (any fixed literal)
 _SLICE = 4 << 20  # bitmap shard size for the build shuffle (bytes)
 
@@ -190,8 +192,6 @@ def bloom_anti_join(
     done: DataFrame,
     col: str,
     bloom: dict,
-    residual: str = "auto",
-    broadcast_max_candidates: int = 2_000_000,
 ) -> DataFrame:
     """EXACT ``batch LEFT ANTI JOIN done ON col`` where only the
     Bloom-positive slice (true members + ~fpp false positives) enters
@@ -199,44 +199,23 @@ def bloom_anti_join(
     ``bloom`` must have been built over done[col] (no false negatives
     => exactness).
 
-    ``residual`` picks how the positive slice meets the done set:
-
-    - ``"join"``: plain left-anti (Spark picks the strategy). Right
-      when the done set is broadcast-sized anyway — but then the
-      Bloom layer itself buys little.
-    - ``"broadcast"``: semi-then-anti decomposition — broadcast the
-      candidate DIGESTS into a map-only scan of the done set (left
-      semi), then anti-join the candidates against the (candidate-
-      bounded, broadcastable) match set. The done set is SCANNED but
-      never SHUFFLED — the shape that wins when done is far beyond
-      broadcast size and the per-batch overlap is small (the
-      incremental-funnel steady state, where the filter is also built
-      once and amortized across batches).
-    - ``"auto"``: count the candidates with a dedicated probe pass
-      (map-only — deliberately NOT persisted: a persist inside a
-      lazy operator has no unpersist point, the two-phase kNN
-      lifecycle lesson), take ``"broadcast"`` iff they fit
-      ``broadcast_max_candidates``.
+    One probe pass materializes the distinct candidate keys. When they
+    ``fits`` the broadcast budget, they are broadcast into a map-only
+    scan of the done set (left semi), and the untouched batch is
+    anti-joined against that candidate-bounded match set (never split:
+    a certain-miss/candidate union re-runs the probe once per branch,
+    measured 16.4 s vs 7.0 s at 8M rows): the done set is scanned,
+    never shuffled — the shape that wins when done is far
+    beyond broadcast size and the per-batch overlap is small (the
+    incremental-funnel steady state). Otherwise the positive slice
+    meets the done set in a plain left-anti join (Spark picks the
+    strategy) and the certain misses pass through.
     """
     probed = bloom_probe_col(batch, col, bloom)
-    if residual == "auto":
-        n_cand = probed.where(F.col("_maybe_member")).count()
-        residual = (
-            "broadcast" if n_cand <= broadcast_max_candidates else "join"
-        )
-    elif residual not in ("join", "broadcast"):
-        raise ValueError(f"unknown residual {residual!r}")
-    if residual == "broadcast":
-        # single-probe shape: the batch is NEVER split (a
-        # certain-miss/candidate union re-executes the probe once per
-        # branch — measured 16.4 s vs 7.0 s at 8M rows). One probe
-        # pass yields the candidate digests; a broadcast semi turns
-        # the done set into the (candidate-bounded) match set; one
-        # broadcast anti over the UNTOUCHED batch finishes. The done
-        # set is scanned once, shuffled never.
-        cand_keys = (
-            probed.where(F.col("_maybe_member")).select(F.col(col)).distinct()
-        )
+    cand_keys, st = materialize(
+        probed.where(F.col("_maybe_member")).select(F.col(col)).distinct()
+    )
+    if fits(batch.sparkSession, st["bytes"]):
         matches = (
             done.select(F.col(col))
             .join(F.broadcast(cand_keys), on=col, how="left_semi")

@@ -39,19 +39,28 @@ from pyspark.sql.types import (
 )
 
 from streetview_naturevisibility_spark.operators.dedup import shingles_col
+from streetview_naturevisibility_spark.session import fits, materialize
 
 
 # ------------------------------------------------------------------
 # connected components over near-dup pairs
 # ------------------------------------------------------------------
-def _cc_star(edges: DataFrame, max_iters: int) -> DataFrame:
+def _fp():
+    """Order-independent fingerprint of an edge set (xor cannot
+    overflow under ANSI mode); with the row count it detects a
+    fixpoint."""
+    return F.bit_xor(F.xxhash64("src", "dst"))
+
+
+def _cc_star(edges: DataFrame, stats: tuple, max_iters: int) -> DataFrame:
     """Alternating large-star/small-star connected components (Kiveris
     et al., "Connected Components in MapReduce and Beyond"): O(log^2 n)
     rounds regardless of component diameter. Each round is two
-    neighborhood-min passes (groupBy + join); the edge frame is eagerly
-    localCheckpoint-ed per round (bounded lineage, cleaner-reclaimed).
-    Converges when the edge set is a stable star forest: every node
-    linked directly to its component minimum. Returns (id, lbl)."""
+    neighborhood-min passes (groupBy + join); the edge frame is
+    materialized per round (bounded lineage). Converges when the edge
+    set is a stable star forest: every node linked directly to its
+    component minimum. ``stats`` is the input edges' fingerprint
+    (``_fp``). Returns (id, lbl)."""
 
     def nbr_min(e: DataFrame) -> DataFrame:
         # m(u) = min over Γ(u) ∪ {u}
@@ -59,14 +68,6 @@ def _cc_star(edges: DataFrame, max_iters: int) -> DataFrame:
             e.groupBy("src").agg(F.least(F.min("dst"), F.first("src")).alias("m"))
         )
 
-    def _star_fp(e: DataFrame) -> tuple:
-        r = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        ).first()
-        return (r.n, r.h)
-
-    stats_prev = None
     for _ in range(max_iters):
         # large-star: for v in Γ(u) with v > u, link (v, m(u))
         m = nbr_min(edges)
@@ -76,11 +77,10 @@ def _cc_star(edges: DataFrame, max_iters: int) -> DataFrame:
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
         # symmetric closure for the next neighborhood pass
-        e2 = (
+        e2, _ = materialize(
             large.union(large.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
             .where(F.col("src") != F.col("dst"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # small-star: orient edges to (big, small); link every small
         # neighbor (and the center) to the minimum
@@ -97,25 +97,19 @@ def _cc_star(edges: DataFrame, max_iters: int) -> DataFrame:
             .select(F.col("v").alias("src"), F.col("m").alias("dst"))
             .distinct()
         )
-        edges_next = (
-            small.union(small.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
         # stable star forest: every edge already points at the root
         # (src>dst side equals its own min) — detected when the edge
         # set stops changing (count + order-independent xor-of-hashes
-        # fingerprint; xor cannot overflow under ANSI mode). The
-        # previous round's fingerprint is carried forward, so each
-        # round costs ONE aggregate job, not two.
-        if stats_prev is None:
-            stats_prev = _star_fp(edges)
-        stats_next = _star_fp(edges_next)
-        edges = edges_next
-        if stats_prev == stats_next:
+        # fingerprint, observed by the round's materialization)
+        edges, st = materialize(
+            small.union(small.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            .where(F.col("src") != F.col("dst"))
+            .distinct(),
+            h=_fp(),
+        )
+        prev, stats = stats, (st["rows"], st["h"])
+        if prev == stats:
             break
-        stats_prev = stats_next
     else:
         raise ValueError(
             f"star connected components did not converge in {max_iters} "
@@ -137,7 +131,6 @@ def duplicate_clusters(
     id_b: str = "id_b",
     max_iters: int = 25,
     algorithm: str = "propagation",
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Connected components over an undirected pair list -> one row per
     member node: (doc_id, cluster_id, cluster_size), where cluster_id
@@ -149,47 +142,40 @@ def duplicate_clusters(
       Each round is one shuffle join (edges x labels on src) plus a
       groupBy(dst) min — the label frame is node-sized (#docs that
       appear in any pair, far smaller than the corpus), and each
-      round's result is eagerly ``localCheckpoint``-ed so the lineage
-      never grows and superseded round results are released by the
-      context cleaner (no persist leak). Convergence = zero changed
-      labels (one tiny aggregate per round). Rounds needed = component
-      DIAMETER — right for dedup graphs, whose clusters are
-      near-cliques (diameter 2-4 at any corpus size).
+      round's result is materialized so the lineage never grows.
+      Convergence = zero changed labels, observed by that
+      materialization. Rounds needed = component DIAMETER — right for
+      dedup graphs, whose clusters are near-cliques (diameter 2-4 at
+      any corpus size).
     - ``"star"``: alternating large-star/small-star (Kiveris et al.,
       "Connected Components in MapReduce and Beyond") — O(log^2 n)
       rounds regardless of diameter; use for adversarial/chain-shaped
       graphs (e.g. transitive similarity chains) where propagation
       would loop diameter times.
 
-    The pair input is materialized ONCE (eager localCheckpoint): the
-    upstream LSH pipeline is the expensive part and must not re-run
-    per round.
+    The pair input is materialized ONCE: the upstream LSH pipeline is
+    the expensive part and must not re-run per round.
 
-    r7 adaptive path: when the (checkpointed) edge set is small —
-    ``driver_max_edges`` rows, the broadcast-threshold idea applied to
-    CC — the components are closed with a driver-side union-find on
-    the collected edges (bounded collect, the kmeans_fit precedent)
-    instead of 3-5 distributed rounds of join+aggregate+checkpoint
-    jobs. Output is identical (min-id labels, member counts; integral
-    ids only — string ids keep the distributed path so byte-wise vs
-    codepoint min ordering can never diverge). Dedup graphs are pair-
-    member-sized, far smaller than the corpus, so real funnels at any
-    corpus scale usually take this path; pass ``driver_max_edges=0``
-    to force the distributed rounds.
+    When the edge set ``fits`` the driver budget, the components are
+    closed with a driver-side union-find on the collected edges
+    instead of 3-5 distributed rounds. Output is identical (min-id
+    labels, member counts; integral ids only — string ids keep the
+    distributed path so byte-wise vs codepoint min ordering can never
+    diverge).
     """
-    edges = (
+    edges, st = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         # self-pairs carry no connectivity; drop them at entry so both
         # algorithms treat them identically (a doc paired only with
         # itself is not clustered)
         .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        h=_fp(),
     )
     src_type = edges.schema["src"].dataType
     integral = isinstance(src_type, (ByteType, ShortType, IntegerType, LongType))
-    if driver_max_edges and integral and edges.count() <= int(driver_max_edges):
+    if integral and fits(pairs.sparkSession, st["bytes"]):
         import pandas as pd
         from pyspark.sql.types import StructField, StructType
 
@@ -232,18 +218,17 @@ def duplicate_clusters(
         )
         return pairs.sparkSession.createDataFrame(out_pd, schema)
     if algorithm == "star":
-        labels = _cc_star(edges, max_iters)
+        labels = _cc_star(edges, (st["rows"], st["h"]), max_iters)
         sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("cluster_size"))
         return labels.join(sizes, "lbl").select(
             F.col("id").alias("doc_id"),
             F.col("lbl").alias("cluster_id"),
             "cluster_size",
         )
-    labels = (
+    labels, _ = materialize(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("lbl"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iters):
         msgs = (
@@ -251,20 +236,16 @@ def duplicate_clusters(
             .groupBy("dst")
             .agg(F.min("lbl").alias("nbr_min"))
         )
-        stepped = (
-            labels.join(msgs, labels.id == msgs.dst, "left")
-            .select(
+        stepped, st = materialize(
+            labels.join(msgs, labels.id == msgs.dst, "left").select(
                 "id",
-                F.least(F.col("lbl"), F.coalesce("nbr_min", "lbl")).alias("new_lbl"),
-                (F.coalesce("nbr_min", "lbl") < F.col("lbl")).cast("long").alias(
-                    "chg"
-                ),
-            )
-            .localCheckpoint(eager=True)
+                F.least(F.col("lbl"), F.coalesce("nbr_min", "lbl")).alias("lbl"),
+                (F.col("nbr_min") < F.col("lbl")).alias("_chg"),
+            ),
+            changed=F.count(F.when(F.col("_chg"), 1)),
         )
-        n_changed = stepped.agg(F.sum("chg")).first()[0] or 0
-        labels = stepped.select("id", F.col("new_lbl").alias("lbl"))
-        if n_changed == 0:
+        labels = stepped.drop("_chg")
+        if st["changed"] == 0:
             break
     else:
         # wrong clusters are worse than no clusters: partially-merged
@@ -670,15 +651,14 @@ def pack_assignments(
     # on 32 cores; results are identical for any span by construction)
     eff_span = max(1, int(bucket_span) // 8)
     # the (id, tokens, bucket) proxy is ~24 bytes/row — materialize it
-    # once (eager localCheckpoint) so the per-bucket totals pass and
-    # the window pass don't each re-evaluate the upstream lineage
-    # (guide §8: decide with small rows; compute happens at call time)
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(tok.cast("long"), F.lit(0)).alias("_t"),
-    ).withColumn(
-        "_bk", F.floor(F.col("id") / F.lit(eff_span))
-    ).localCheckpoint(eager=True)
+    # once so the per-bucket totals pass and the window pass don't each
+    # re-evaluate the upstream lineage (compute happens at call time)
+    base, _ = materialize(
+        df.select(
+            F.col(id_col).alias("id"),
+            F.coalesce(tok.cast("long"), F.lit(0)).alias("_t"),
+        ).withColumn("_bk", F.floor(F.col("id") / F.lit(eff_span)))
+    )
     totals = base.groupBy("_bk").agg(F.sum("_t").alias("_bt"))
     w_tot = Window.orderBy("_bk").rowsBetween(Window.unboundedPreceding, -1)
     offsets = totals.withColumn(

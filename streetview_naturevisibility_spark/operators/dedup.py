@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from ..session import fits, materialize
+
 # the permutation domain: (a*h + b) mod 2^32 with a odd is a bijection
 # of the 32-bit hash space. The modulus MUST be <= the hash range —
 # an earlier draft reduced mod (2^61 - 1), but a*h+b < 2^60 never
@@ -357,18 +359,15 @@ def minhash_lsh_pairs(
     # action — the bucket self-join evaluates its subtree twice, the
     # cap-size aggregate a third time, and the two verify joins
     # re-shingled the whole corpus twice more. Now the per-doc shingle
-    # frame is materialized ONCE (eager localCheckpoint — raw row
-    # blocks, ContextCleaner-reclaimed) and shared by the signature
-    # stage AND the verify stage (tokenmix verifies over exactly the
-    # same hash arrays the signatures fold); the exploded band-bucket
-    # frame is materialized once more so the self-join + cap sizes
-    # read blocks instead of recomputing the k-permutation fold.
-    # Compute happens at CALL time (the knn_snap precedent).
-    from pyspark import StorageLevel
-
-    sh_frame = minhash_shingle_frame(
-        df, text_col, id_col, n, hash_method
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    # frame is materialized ONCE and shared by the signature stage AND
+    # the verify stage (tokenmix verifies over exactly the same hash
+    # arrays the signatures fold); the exploded band-bucket frame is
+    # materialized once more so the self-join + cap sizes read blocks
+    # instead of recomputing the k-permutation fold. Compute happens
+    # at CALL time (the knn_snap precedent).
+    sh_frame, sh_st = materialize(
+        minhash_shingle_frame(df, text_col, id_col, n, hash_method)
+    )
     sig = minhash_signatures_from_shingles(sh_frame, k, hash_method)
     band_cols = []
     for b in range(bands):
@@ -397,10 +396,12 @@ def minhash_lsh_pairs(
     # self-join, which streams the quadratic output instead of
     # materializing one giant in-row array. Same pair set either way
     # (sorted members, i<j), same metrics.
-    grouped = buckets.groupBy("band", "bh").agg(
-        F.count(F.lit(1)).alias("_bsz"),
-        F.collect_list("id").alias("_ids"),
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    grouped, _ = materialize(
+        buckets.groupBy("band", "bh").agg(
+            F.count(F.lit(1)).alias("_bsz"),
+            F.collect_list("id").alias("_ids"),
+        )
+    )
     over = (
         F.lit(False)
         if max_bucket is None
@@ -447,21 +448,22 @@ def minhash_lsh_pairs(
     )
     cand = pairs_small.union(pairs_big).distinct()
 
-    # Verify joins read the checkpointed shingle frame — no upstream
+    # Verify joins read the materialized shingle frame — no upstream
     # re-evaluation, no second corpus-wide shingle pass. The candidate
-    # set is materialized (it is consumed by both verify joins) and,
-    # when small, broadcast into them so the shingle frame is never
-    # shuffled (guide §3.1; a checkpointed frame carries no size
-    # statistics, so Catalyst would otherwise pick a sort-merge join).
-    cand = cand.localCheckpoint(eager=True)
-    small_cand = cand.count() <= 5_000_000
-    sh = sh_frame
-    sh_a = sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a")
-    sh_b = sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b")
-    j1 = sh_a.join(F.broadcast(cand) if small_cand else cand, "id_a")
+    # set is materialized (it is consumed by both verify joins) and
+    # each verify join broadcasts its small side when that ``fits``, so
+    # the shingle frame is never shuffled (a checkpointed frame carries
+    # no size statistics, so Catalyst would otherwise pick a sort-merge
+    # join). ``j1`` is one shingle row per candidate pair.
+    spark = df.sparkSession
+    cand, st = materialize(cand)
+    sh_a = sh_frame.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a")
+    sh_b = sh_frame.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b")
+    j1 = sh_a.join(F.broadcast(cand) if fits(spark, st["bytes"]) else cand, "id_a")
+    j1_bytes = st["rows"] * sh_st["bytes"] / max(sh_st["rows"], 1)
     verified = (
         sh_b.join(F.broadcast(j1), "id_b")
-        if small_cand
+        if fits(spark, j1_bytes)
         else j1.join(sh_b, "id_b")
     )
     verified = (

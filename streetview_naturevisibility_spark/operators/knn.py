@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geo.cells import neighbor_cells_col
+from ..session import materialize
 
 
 def knn_snap(
@@ -44,7 +45,6 @@ def knn_snap(
     zoom: int = 14,
     key_col: str = "url",
     reduce: str = "two_phase",
-    materialize: bool = True,
 ) -> DataFrame:
     """Snap each point to its nearest page within ``max_distance/2``
     (strictly: cKDTree's ``distance_upper_bound`` accepts only
@@ -97,7 +97,7 @@ def knn_snap(
         .select("point_id", "_dist", "_url", "_pano")
     )
 
-    return _snap_reduce_join(points, cand, key_is_string, key_col, reduce, materialize)
+    return _snap_reduce_join(points, cand, key_is_string, key_col, reduce)
 
 
 def _snap_reduce_join(
@@ -106,7 +106,6 @@ def _snap_reduce_join(
     key_is_string: bool,
     key_col: str,
     reduce: str,
-    materialize: bool = True,
 ) -> DataFrame:
     """Shared k=1 reduce + miss-preserving join-back (used by the
     square-cell and hex-cell snap joins — the candidate generation is
@@ -132,31 +131,14 @@ def _snap_reduce_join(
         # candidate set adds a constant job boundary — callers with
         # provably sparse candidates may pass reduce="sort_exact".
         #
-        # Lifecycle: the candidate set is persisted so the pages scan
-        # runs exactly once across the two phases, the (small, winners-
-        # only) ``best`` frame is eagerly localCheckpoint-ed to cut the
-        # lineage back to cand, and cand is unpersisted BEFORE this
-        # function returns — repeated snaps in one long-lived session
-        # leave the CacheManager empty (pytest-asserted in
-        # tests/test_knn.py), no call-site clearCache() convention
-        # needed. The checkpointed winners (<= one row per point) are
-        # reclaimed by Spark's ContextCleaner when the returned
-        # DataFrame is dropped. Note this makes the snap compute at
-        # CALL time rather than first-action time.
-        # materialize=False returns the fully LAZY two-phase plan (no
-        # persist, no checkpoint) — for plan inspection (EXPLAIN audit)
-        # or callers managing their own lifecycle; an action on it
-        # computes the candidate set twice (md + tie-break branches).
-        if materialize:
-            # r7: eager localCheckpoint instead of persist — raw row
-            # blocks, no columnar cache build (measured ~4x the block
-            # write elsewhere), nothing registered in the CacheManager,
-            # blocks reclaimed by the ContextCleaner when `best` (and
-            # with it this lineage) is dropped. Same one-scan
-            # guarantee: both reduce phases read the blocks. Default
-            # storage level, as for `best`: DISK_ONLY measured slower
-            # (r7 A/B, snap_kernel_pages 2.59 -> 2.94 s).
-            cand = cand.localCheckpoint(eager=True)
+        # Lifecycle: the candidate set is materialized so the pages scan
+        # runs exactly once across the two phases, and the (small,
+        # winners-only) ``best`` frame is materialized to cut the
+        # lineage back to cand — repeated snaps in one long-lived
+        # session leave the CacheManager empty (pytest-asserted in
+        # tests/test_knn.py). Note this makes the snap compute at CALL
+        # time rather than first-action time.
+        cand, _ = materialize(cand)
         md = cand.groupBy("point_id").agg(F.min("_dist").alias("_md"))
         best = (
             cand.join(F.broadcast(md), "point_id")
@@ -164,8 +146,7 @@ def _snap_reduce_join(
             .groupBy("point_id")
             .agg(F.min(best_struct).alias("best"))
         )
-        if materialize:
-            best = best.localCheckpoint(eager=True)
+        best, _ = materialize(best)
     else:
         best = cand.groupBy("point_id").agg(F.min(best_struct).alias("best"))
 
@@ -190,7 +171,6 @@ def knn_snap_hex(
     hex_size: float | None = None,
     key_col: str = "url",
     reduce: str = "two_phase",
-    materialize: bool = True,
 ) -> DataFrame:
     """The hex-index variant of ``knn_snap`` (SURVEY J2 H3 variant):
     identical semantics and output, candidate pruning via the 7-cell
@@ -237,4 +217,4 @@ def knn_snap_hex(
         .where(F.col("_dist") < F.lit(bound))
         .select("point_id", "_dist", "_url", "_pano")
     )
-    return _snap_reduce_join(points, cand, key_is_string, key_col, reduce, materialize)
+    return _snap_reduce_join(points, cand, key_is_string, key_col, reduce)

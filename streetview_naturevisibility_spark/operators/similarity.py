@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
+from ..session import fits, materialize
+
 
 def cosine_col(vec_col, query: list[float]):
     """cos(vec, query) as pure JVM expressions."""
@@ -611,7 +613,7 @@ def semantic_dedup(
         # scale path: one Arrow matmul per batch — n_lists can be
         # thousands (sqrt(N) clusters keeps the pair join near-linear);
         # the pure-Column path below is the oracle-exact small-k twin.
-        # The frame is checkpointed across its consumers (cap sizes,
+        # The frame is materialized across its consumers (cap sizes,
         # pair stage, output) — assignment computes ONCE.
         if pairs == "local":
             # r7: the local pair kernel consumes whole clusters, so the
@@ -636,7 +638,7 @@ def semantic_dedup(
                 F.lit(0.0),
                 lambda acc, x: acc + x,
             )
-        materialize = True
+        s, _ = materialize(s)
     else:
         cos_arr = F.array(
             *[cosine_col(F.col("v"), [float(x) for x in c]) for c in centroids]
@@ -647,21 +649,6 @@ def semantic_dedup(
         # oracle-exact pair arithmetic (dot / (|a| |b|)) — the DuckDB
         # twin restates it verbatim; no persist (cheap codegen frame)
         pair_sim = pairwise_cosine_col(F.col("a.v"), F.col("b.v"))
-        materialize = False
-    if materialize:
-        # r7: localCheckpoint instead of persist — the assignment frame
-        # is materialized ONCE as raw row blocks and every consumer
-        # (cap sizes, pair stage, output join) reads them; the former
-        # persist/unpersist lifecycle recomputed the 1M x n_lists Arrow
-        # matmul once more for the output action, and the columnar
-        # cache build itself costs ~4x a block write for array columns
-        # (measured on the dsir bucket arrays). Blocks are reclaimed by
-        # the ContextCleaner when the returned frame is dropped.
-        from pyspark import StorageLevel
-
-        s = s.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
     capped, metrics = _cap_buckets(s, ["list_id"], max_cluster)
     a, b = capped.alias("a"), capped.alias("b")
     better = (
@@ -690,17 +677,16 @@ def semantic_dedup(
             .distinct()
         )
     dup_flag = dominated.withColumn("_dup", F.lit(True))
-    if materialize:
-        # the (small, dup-ids-only) frame is eagerly checkpointed so
-        # repeated consumer actions don't re-run the pair stage. Note
-        # this makes the dedup compute at CALL time. When the dup set
-        # is genuinely small (it is checkpointed, so the count is
-        # free), broadcast it so the kept-flag attach never shuffles
-        # the assignment frame (guide §3.1) — a checkpointed frame has
-        # no size statistics, so Catalyst would otherwise sort-merge.
-        dominated = dominated.localCheckpoint(eager=True)
+    if assign == "udf":
+        # the (small, dup-ids-only) frame is materialized so repeated
+        # consumer actions don't re-run the pair stage (the dedup
+        # computes at CALL time). When it ``fits``, broadcast it so the
+        # kept-flag attach never shuffles the assignment frame — a
+        # checkpointed frame has no size statistics, so Catalyst would
+        # otherwise sort-merge.
+        dominated, st = materialize(dominated)
         dup_flag = dominated.withColumn("_dup", F.lit(True))
-        if dominated.count() <= 10_000_000:
+        if fits(s.sparkSession, st["bytes"]):
             dup_flag = F.broadcast(dup_flag)
     out = (
         s.join(
@@ -755,12 +741,9 @@ def semantic_dedup_incremental(
     with open(os.path.join(index_path, "_centroids.json")) as f:
         centroids = np.asarray(json.load(f), dtype=np.float64)
     ac = make_assign_ccos_udf(centroids)
-    # eager localCheckpoint, not persist: the batch (small side) is
-    # consumed three times (touched-cluster collect, cogroup, null
-    # rows) — checkpointing materializes the assignment ONCE and
-    # leaves nothing registered in the CacheManager (the knn r2
-    # lifecycle lesson); blocks reclaim with the returned frame.
-    batch = (
+    # the batch (small side) is consumed three times (touched-cluster
+    # collect, cogroup, null rows): the assignment computes ONCE
+    batch, _ = materialize(
         new_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
         .withColumn("_ac", ac(F.col("v")))
         .select(
@@ -769,7 +752,6 @@ def semantic_dedup_incremental(
             F.col("_ac.ccos").alias("ccos"),
             F.col("_ac.vn").alias("vn"),
         )
-        .localCheckpoint(eager=True)
     )
     touched = [
         int(r.list_id)

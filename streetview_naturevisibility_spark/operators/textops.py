@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from ..session import materialize
+
 # tiny pinned stopword lists — heuristic n-gram/stopword language ID
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "a", "in", "is", "it", "that", "for"],
@@ -978,7 +980,7 @@ def dsir_score(
     Scale shape (r7 rewrite — guide §2.3/§2.4 "shuffle keys, not
     payloads" + §3.1 broadcast): the per-bucket log-ratio depends only
     on the bucket id, so the whole weight table is ``n_buckets``
-    doubles. The corpus's bucket arrays are computed ONCE (persisted
+    doubles. The corpus's bucket arrays are computed ONCE (materialized
     across the raw-count pass and the scoring pass — the md5 feature
     hashing is the dominant cost and previously ran twice), the
     ``lw`` table is collected driver-side (bounded by ``n_buckets``,
@@ -990,10 +992,9 @@ def dsir_score(
     corpus side). Per-doc sum order is unchanged (array order — the
     old explode + partial hash agg summed in exactly that order), so
     results are bit-equal, not just round-6 equal. The bucket-array
-    frame is eagerly localCheckpoint-ed (raw row blocks, reclaimed by
-    the ContextCleaner when the returned frame is dropped) so both the
-    count pass and every consumer action read it without re-hashing;
-    compute happens at call time (the knn_snap precedent).
+    frame is materialized so both the count pass and every consumer
+    action read it without re-hashing; compute happens at call time
+    (the knn_snap precedent).
     """
     spark = docs.sparkSession
     bs_col = hashed_ngram_buckets_col(text_col, n_buckets)
@@ -1006,15 +1007,9 @@ def dsir_score(
     )
     reuse_bs = raw is None
     if reuse_bs:
-        # materialized ONCE as raw row blocks (localCheckpoint — the
-        # columnar .persist() cache build measured ~4x the block write
-        # for this array column); both the count pass and the scoring
-        # pass read it, so the md5 feature hashing runs once
-        from pyspark import StorageLevel
-
-        bs_frame = bs_frame.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
+        # both the count pass and the scoring pass read it, so the md5
+        # feature hashing runs once
+        bs_frame, _ = materialize(bs_frame)
         # vectorized partial counts (guide §4.2): one np.bincount per
         # Arrow batch and ONE 10k-row partial per task instead of a
         # 79M-row Generate + per-row hash aggregate (measured 8.2 s ->
@@ -1105,7 +1100,7 @@ def dsir_score(
             lambda s: s["lw"],
         ).alias("_lw")
     )
-    # scoring is a pure projection over the checkpointed bucket arrays
+    # scoring is a pure projection over the materialized bucket arrays
     # — no further materialization needed (consumers read the blocks)
     return bs_frame.crossJoin(F.broadcast(lw_one_row)).select(
         F.col("id").alias(id_col),

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -19,6 +20,26 @@ def spark():
         extra_conf={"spark.driver.memory": "4g"},
     )
     yield s
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """A context manager: inside it ``spark.sql.autoBroadcastJoinThreshold``
+    is ``-1``, so no frame ``fits`` the broadcast and driver-collect
+    budget and every size-picked path takes its distributed branch.
+    The setting is restored on exit."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextlib.contextmanager
+    def off():
+        saved = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, saved)
+
+    return off
 
 
 @pytest.fixture(scope="session")

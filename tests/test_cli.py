@@ -200,25 +200,49 @@ class TestParser:
             assert read == defined, (name, read ^ defined)
 
     def test_one_materialization_helper(self):
-        """``cli.py`` stores a frame only inside ``_materialize``, and
-        ``cmd_curate`` counts only a frame that helper returned or a
-        frame read straight from parquet files (a footer count), never
-        a lineage it would have to re-run."""
+        """Only ``session.materialize`` stores a frame: no
+        ``localCheckpoint``/``checkpoint``/``cache``/``persist`` call
+        anywhere else in the package or ``__spark_entry__.py``, and no
+        ``StorageLevel`` name outside ``session.py``. ``cmd_curate``
+        counts only a frame that helper returned or a frame read
+        straight from parquet files (a footer count), never a lineage
+        it would have to re-run."""
         import ast
         import inspect
+        import pathlib
+
+        pkg = pathlib.Path(cli.__file__).parent
+        session_py = pkg / "session.py"
+        for path in [*sorted(pkg.rglob("*.py")), pkg.parent / "__spark_entry__.py"]:
+            tree = ast.parse(path.read_text())
+            inside = set()
+            if path == session_py:
+                helper = next(
+                    n for n in tree.body
+                    if isinstance(n, ast.FunctionDef) and n.name == "materialize"
+                )
+                inside = set(map(id, ast.walk(helper)))
+            stores = [
+                (n.func.attr, n.lineno)
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("localCheckpoint", "checkpoint", "cache", "persist")
+                and id(n) not in inside
+            ]
+            assert not stores, (str(path), stores)
+            levels = [
+                n.lineno
+                for n in ast.walk(tree)
+                if "StorageLevel" in (
+                    getattr(n, "id", None), getattr(n, "attr", None),
+                    n.name if isinstance(n, ast.alias) else None,
+                )
+            ]
+            assert path == session_py or not levels, (str(path), levels)
 
         tree = ast.parse(inspect.getsource(cli))
         funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
-        inside = set(map(id, ast.walk(funcs["_materialize"])))
-        stores = [
-            (n.func.attr, n.lineno)
-            for n in ast.walk(tree)
-            if isinstance(n, ast.Call)
-            and isinstance(n.func, ast.Attribute)
-            and n.func.attr in ("localCheckpoint", "checkpoint", "cache", "persist")
-            and id(n) not in inside
-        ]
-        assert not stores, stores
 
         def is_parquet_read(node):
             return (
@@ -229,13 +253,13 @@ class TestParser:
             )
 
         curate = funcs["cmd_curate"]
-        binds = []  # (line, name, bound by _materialize or a parquet read)
+        binds = []  # (line, name, bound by materialize or a parquet read)
         for n in ast.walk(curate):
             if isinstance(n, ast.Assign):
                 for t in n.targets:
                     helper = (
                         isinstance(n.value, ast.Call)
-                        and getattr(n.value.func, "id", None) == "_materialize"
+                        and getattr(n.value.func, "id", None) == "materialize"
                     )
                     name = t.elts[0] if helper else t
                     if isinstance(name, ast.Name):

@@ -284,22 +284,22 @@ def test_distinct_rollup_sketch_bounds(spark):
         )
 
 
-def test_clusters_nonconvergence_raises(spark):
+def test_clusters_nonconvergence_raises(spark, no_broadcast):
     # wrong clusters are worse than no clusters: exhausting max_iters
     # without a fixpoint must raise, not return partial merges
-    # (driver_max_edges=0 forces the distributed rounds — the r7
-    # driver union-find needs no iteration and converges exactly)
+    # (no_broadcast forces the distributed rounds — the driver
+    # union-find needs no iteration and converges exactly)
     pairs = [(i, i + 1) for i in range(12)]
     pdf = spark.createDataFrame(pairs, "id_a: long, id_b: long")
-    with pytest.raises(ValueError, match="did not converge"):
-        duplicate_clusters(pdf, max_iters=3, driver_max_edges=0)
+    with no_broadcast(), pytest.raises(ValueError, match="did not converge"):
+        duplicate_clusters(pdf, max_iters=3)
 
 
 class TestDriverUnionFind:
     """r7 adaptive CC: driver union-find (small edge sets) must equal
     the distributed propagation rounds exactly."""
 
-    def test_driver_path_equals_distributed(self, spark):
+    def test_driver_path_equals_distributed(self, spark, no_broadcast):
         import pandas as pd
 
         from streetview_naturevisibility_spark.operators.corpus import (
@@ -313,7 +313,8 @@ class TestDriverUnionFind:
             "id_a long, id_b long",
         )
         fast = duplicate_clusters(pairs).toPandas()
-        slow = duplicate_clusters(pairs, driver_max_edges=0).toPandas()
+        with no_broadcast():
+            slow = duplicate_clusters(pairs).toPandas()
         key = ["doc_id", "cluster_id", "cluster_size"]
         a = fast[key].sort_values(key).reset_index(drop=True)
         b = slow[key].sort_values(key).reset_index(drop=True)

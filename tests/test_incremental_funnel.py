@@ -19,6 +19,8 @@ by design.
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -236,7 +238,7 @@ def test_incremental_funnel_kills_attributed(spark, ivf_index):
     assert killed == {103, 105}
 
 
-def test_done_set_anti_join_bloom_equivalent(spark):
+def test_done_set_anti_join_bloom_equivalent(spark, no_broadcast):
     """The exact-dedup-vs-done-set step of the incremental funnel,
     routed through the Bloom pre-probe (operators/bloom.py): identical
     survivor set to the plain left-anti — no false negatives, the
@@ -265,13 +267,14 @@ def test_done_set_anti_join_bloom_equivalent(spark):
         r.doc_id
         for r in batch.join(done, "digest", "left_anti").collect()
     )
-    for residual in ("join", "broadcast", "auto"):
-        got = sorted(
-            r.doc_id
-            for r in bloom_anti_join(
-                batch, done, "digest", bloom, residual=residual
-            ).collect()
-        )
-        assert got == want, residual
+    # both residual paths: broadcast candidates (default budget) and
+    # the plain left-anti join (nothing fits)
+    for path in (contextlib.nullcontext, no_broadcast):
+        with path():
+            got = sorted(
+                r.doc_id
+                for r in bloom_anti_join(batch, done, "digest", bloom).collect()
+            )
+        assert got == want, path
     # the funnel's planted cross-corpus exact dup is actually removed
     assert len(want) < docs_b.count()

@@ -2,6 +2,8 @@
 hand goldens, independent oracles, and DuckDB twins (standing in for
 driver contract rows; the contract is capped at 50 entries)."""
 
+import contextlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -254,7 +256,7 @@ def test_bloom_no_false_negatives_and_fp_rate(spark):
     assert fp / 20_000 < 0.03  # ~1% design point, 3x headroom
 
 
-def test_bloom_anti_join_exact(spark):
+def test_bloom_anti_join_exact(spark, no_broadcast):
     batch = spark.range(0, 1000).select(
         F.col("id").alias("doc_id"),
         F.concat(F.lit("k"), F.col("id") % 400).alias("key"),
@@ -266,15 +268,17 @@ def test_bloom_anti_join_exact(spark):
     want = (
         batch.join(done, "key", "left_anti").orderBy("doc_id").toPandas()
     )
-    # all three residual strategies are EXACTLY the anti-join
-    for residual in ("join", "broadcast", "auto"):
-        got = (
-            bloom_anti_join(batch, done, "key", bloom, residual=residual)
-            .orderBy("doc_id")
-            .toPandas()
-        )
-        assert list(got.doc_id) == list(want.doc_id), residual
-        assert list(got.key) == list(want.key), residual
+    # both residual paths are EXACTLY the anti-join: broadcast
+    # candidates (default budget) and the plain join that unions the
+    # certain misses back in (nothing fits)
+    for path, union in ((contextlib.nullcontext, False), (no_broadcast, True)):
+        with path():
+            out = bloom_anti_join(batch, done, "key", bloom)
+            got = out.orderBy("doc_id").toPandas()
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("Union" in plan) == union, path
+        assert list(got.doc_id) == list(want.doc_id), path
+        assert list(got.key) == list(want.key), path
 
 
 def test_bloom_build_many_partitions_and_nulls(spark):

@@ -10,7 +10,7 @@ from __future__ import annotations
 import io
 import os
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -25,6 +25,23 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+@contextmanager
+def lazy(module):
+    """An operator that materializes an intermediate leaves only a Scan
+    ExistingRDD of it in the returned plan. Inside this block
+    ``module``'s storing helper is a lazy identity (an empty frame's
+    observation: everything fits), so the plan shows the whole LAZY
+    operator."""
+    stored = module.materialize
+    module.materialize = lambda df, where=None: (
+        df if where is None else df.where(where), {"rows": 0, "bytes": 0}
+    )
+    try:
+        yield
+    finally:
+        module.materialize = stored
 
 
 def check(name: str, plan: str, must: list[str], must_not: list[str]) -> tuple[bool, str]:
@@ -79,21 +96,19 @@ def main() -> None:
     # candidate stream reduces via HashAggregate (phase-1 min(dist),
     # map-side partial drains hot cells); the residual SortAggregate
     # only sees winner-distance rows (bounded by the points count)
+    from streetview_naturevisibility_spark.operators import knn
     from streetview_naturevisibility_spark.operators.knn import knn_snap
 
     pages_snap = D.spark_pages(spark, sf_dir).drop("cell_id").withColumnRenamed(
         "scell_id", "cell_id"
     )
-    # materialize=False: the default eagerly checkpoints the winners
-    # (cache-lifecycle fix), which would leave only a Scan ExistingRDD
-    # in the returned plan — the audit wants the LAZY two-phase plan
-    flag = knn_snap(
-        D.spark_points(spark, sf_dir),
-        pages_snap,
-        max_distance=2 * D.SNAP_RADIUS,
-        zoom=D.SNAP_ZOOM,
-        materialize=False,
-    )
+    with lazy(knn):
+        flag = knn_snap(
+            D.spark_points(spark, sf_dir),
+            pages_snap,
+            max_distance=2 * D.SNAP_RADIUS,
+            zoom=D.SNAP_ZOOM,
+        )
     p2b = plan_of(flag)
     ok2b, n2b = check(
         "flagship two-phase reduce",
@@ -148,13 +163,13 @@ def main() -> None:
     # reduce; single ArrowEvalPython (the one hex-cell UDF per side)
     from streetview_naturevisibility_spark.operators.knn import knn_snap_hex
 
-    hx = knn_snap_hex(
-        D.spark_points(spark, sf_dir),
-        D.spark_pages(spark, sf_dir),
-        max_distance=2 * D.SNAP_RADIUS,
-        hex_size=D.SNAP_RADIUS,
-        materialize=False,  # lazy plan for inspection (see above)
-    )
+    with lazy(knn):
+        hx = knn_snap_hex(
+            D.spark_points(spark, sf_dir),
+            D.spark_pages(spark, sf_dir),
+            max_distance=2 * D.SNAP_RADIUS,
+            hex_size=D.SNAP_RADIUS,
+        )
     p6 = plan_of(hx)
     ok6, n6 = check(
         "hex snap",
@@ -711,6 +726,7 @@ def main() -> None:
     # 24. Bloom anti-join: certain-miss slice is a map-only probe (no
     # join at all); only Bloom-positives enter the residual anti-join,
     # which must be hash-based, never a sort-merge or cartesian
+    from streetview_naturevisibility_spark.operators import bloom
     from streetview_naturevisibility_spark.operators.bloom import (
         bloom_anti_join,
         build_bloom,
@@ -723,7 +739,8 @@ def main() -> None:
     batch24 = docs.select(
         "doc_id", F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("digest")
     )
-    q24 = bloom_anti_join(batch24, done24, "digest", bloom24)
+    with lazy(bloom):
+        q24 = bloom_anti_join(batch24, done24, "digest", bloom24)
     p24 = plan_of(q24)
     ok24, n24 = check(
         "bloom anti-join residual",
