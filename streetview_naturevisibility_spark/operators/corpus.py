@@ -271,13 +271,18 @@ def dedup_keep_canonical(
     docs: DataFrame, clusters: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Drop every clustered doc except its cluster's canonical keeper
-    (min id). Docs in no cluster pass through. One left join on the
-    doc id — the cluster frame is pair-member-sized, broadcastable in
-    most real corpora (duplicate fraction << corpus)."""
-    drop = clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("doc_id").alias(id_col)
+    (min id). Docs in no cluster pass through. One left-anti join on
+    the doc id; the drop set is materialized and broadcast when it
+    ``fits`` (pair-member-sized, so in most real corpora: duplicate
+    fraction << corpus)."""
+    drop, st = materialize(
+        clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
+            F.col("doc_id").alias(id_col)
+        )
     )
-    return docs.join(F.broadcast(drop), id_col, "left_anti")
+    if fits(docs.sparkSession, st["bytes"]):
+        drop = F.broadcast(drop)
+    return docs.join(drop, id_col, "left_anti")
 
 
 # ------------------------------------------------------------------

@@ -332,6 +332,41 @@ def pairwise_cosine_col(va, vb):
     return dot / (norm(va) * norm(vb))
 
 
+def _assign_rows(
+    mat: np.ndarray, centroids: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The SemDeDup assignment kernel over an (n, dim) float64 matrix:
+    -> (list id = argmin of ``|v|^2 - 2 v.c + |c|^2``, cosine to the
+    assigned centroid, unit-normalized rows)."""
+    cn2 = (centroids**2).sum(axis=1)
+    ct = np.ascontiguousarray(centroids.T)
+    nrow = len(mat)
+    vnorm = np.sqrt((mat**2).sum(axis=1))
+    v2 = vnorm**2
+    lid = np.empty(nrow, dtype=np.int64)
+    # Chunked, buffer-reusing distance computation: a full
+    # (batch x n_lists) float64 matrix at 10k x 4096 is ~330 MB
+    # and the naive expression allocates several of them PER
+    # BATCH — with N workers that is an mmap/page-fault storm
+    # (measured >95% system CPU, 673 s for the 1M-vector leg).
+    # One 4096-row scratch buffer reused in place keeps the
+    # resident set flat.
+    CH = 4096
+    dbuf = np.empty((min(CH, nrow), len(cn2)))
+    for s0 in range(0, nrow, CH):
+        e = min(s0 + CH, nrow)
+        nb = e - s0
+        np.matmul(mat[s0:e], ct, out=dbuf[:nb])
+        dbuf[:nb] *= -2.0
+        dbuf[:nb] += cn2[None, :]
+        dbuf[:nb] += v2[s0:e, None]
+        lid[s0:e] = dbuf[:nb].argmin(axis=1)
+    # dot(v, assigned centroid) recomputed cheaply (nrow x dim)
+    dd = np.einsum("ij,ij->i", mat, centroids[lid])
+    cc = dd / (vnorm * np.sqrt(cn2)[lid])
+    return lid, cc, mat / vnorm[:, None]
+
+
 def make_assign_ccos_udf(centroids: np.ndarray):
     """(list id, cosine-to-assigned-centroid, UNIT-NORMALIZED vector)
     per input vector in ONE Arrow pass — a matmul per batch, so
@@ -344,7 +379,6 @@ def make_assign_ccos_udf(centroids: np.ndarray):
     leg)."""
     from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-    cnorm = np.sqrt((centroids**2).sum(axis=1))
     out_t = StructType(
         [
             StructField("list_id", IntegerType()),
@@ -352,9 +386,6 @@ def make_assign_ccos_udf(centroids: np.ndarray):
             StructField("vn", ArrayType(DoubleType())),
         ]
     )
-
-    cn2 = (centroids**2).sum(axis=1)
-    ct = np.ascontiguousarray(centroids.T)
 
     @F.pandas_udf(out_t)
     def assign_ccos(vecs: pd.Series) -> pd.DataFrame:
@@ -371,35 +402,10 @@ def make_assign_ccos_udf(centroids: np.ndarray):
         mat = np.stack(
             vecs[mask].map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy()
         )
-        nrow = len(mat)
-        vnorm = np.sqrt((mat**2).sum(axis=1))
-        v2 = vnorm**2
-        lid = np.empty(nrow, dtype=np.int64)
-        # Chunked, buffer-reusing distance computation: a full
-        # (batch x n_lists) float64 matrix at 10k x 4096 is ~330 MB
-        # and the naive expression allocates several of them PER
-        # BATCH — with N workers that is an mmap/page-fault storm
-        # (measured >95% system CPU, 673 s for the 1M-vector leg).
-        # One 4096-row scratch buffer reused in place keeps the
-        # resident set flat.
-        CH = 4096
-        dbuf = np.empty((min(CH, nrow), len(cn2)))
-        for s0 in range(0, nrow, CH):
-            e = min(s0 + CH, nrow)
-            nb = e - s0
-            np.matmul(mat[s0:e], ct, out=dbuf[:nb])
-            dbuf[:nb] *= -2.0
-            dbuf[:nb] += cn2[None, :]
-            dbuf[:nb] += v2[s0:e, None]
-            lid[s0:e] = dbuf[:nb].argmin(axis=1)
-        # dot(v, assigned centroid) recomputed cheaply (nrow x dim)
-        dd = np.einsum("ij,ij->i", mat, centroids[lid])
-        cc = dd / (vnorm * cnorm[lid])
+        lid, cc, vn = _assign_rows(mat, centroids)
         out.loc[mask, "list_id"] = lid.astype(np.int32)
         out.loc[mask, "ccos"] = cc
-        out.loc[mask, "vn"] = pd.Series(
-            list(mat / vnorm[:, None]), index=out.index[mask]
-        )
+        out.loc[mask, "vn"] = pd.Series(list(vn), index=out.index[mask])
         return out
 
     return assign_ccos
@@ -407,17 +413,12 @@ def make_assign_ccos_udf(centroids: np.ndarray):
 
 def _assign_ccos_vnb_batches(centroids: np.ndarray):
     """mapInPandas twin of ``make_assign_ccos_udf`` for the
-    pairs='local' path (r7): identical assignment arithmetic (same
-    chunked ``|v|^2 - 2 v.c + |c|^2`` matmul, same argmin, same cosine),
-    but the unit-normalized vector leaves the stage as ONE flat
-    float64 BINARY cell instead of an Arrow list<double> — the pair
-    stage then rebuilds each cluster's matrix with a single
-    ``np.frombuffer`` instead of 10k-per-batch list conversions
-    (guide §4.2: binary columns are re-sliced buffers, not per-element
-    structures)."""
-    cn2 = (centroids**2).sum(axis=1)
-    cnorm = np.sqrt(cn2)
-    ct = np.ascontiguousarray(centroids.T)
+    pairs='local' path (r7): the same ``_assign_rows`` kernel, but the
+    unit-normalized vector leaves the stage as ONE flat float64 BINARY
+    cell instead of an Arrow list<double> — the pair stage then
+    rebuilds each cluster's matrix with a single ``np.frombuffer``
+    instead of 10k-per-batch list conversions (guide §4.2: binary
+    columns are re-sliced buffers, not per-element structures)."""
     from typing import Iterator
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -445,44 +446,46 @@ def _assign_ccos_vnb_batches(centroids: np.ndarray):
                         if m
                     ]
                 )
-                nrow = len(mat)
-                vnorm = np.sqrt((mat**2).sum(axis=1))
-                v2 = vnorm**2
-                lid = np.empty(nrow, dtype=np.int64)
-                CH = 4096
-                dbuf = np.empty((min(CH, nrow), len(cn2)))
-                for s0 in range(0, nrow, CH):
-                    e = min(s0 + CH, nrow)
-                    nb = e - s0
-                    np.matmul(mat[s0:e], ct, out=dbuf[:nb])
-                    dbuf[:nb] *= -2.0
-                    dbuf[:nb] += cn2[None, :]
-                    dbuf[:nb] += v2[s0:e, None]
-                    lid[s0:e] = dbuf[:nb].argmin(axis=1)
-                dd = np.einsum("ij,ij->i", mat, centroids[lid])
-                cc = dd / (vnorm * cnorm[lid])
-                vn = mat / vnorm[:, None]
+                lid, cc, vn = _assign_rows(mat, centroids)
                 out.loc[mask, "list_id"] = lid.astype(np.int32)
                 out.loc[mask, "ccos"] = cc
                 out.loc[mask, "vnb"] = pd.Series(
-                    [vn[i].tobytes() for i in range(nrow)],
-                    index=out.index[mask],
+                    [row.tobytes() for row in vn], index=out.index[mask]
                 )
             yield out
 
     return fn
 
 
+def _dominated(
+    m: np.ndarray, cc: np.ndarray, ids: np.ndarray, thr: float, flip: bool
+) -> np.ndarray:
+    """The SemDeDup dominance kernel over one cluster's unit rows ``m``:
+    row a is dominated iff some other row b has ``m[a].m[b] >= thr``
+    and is preferred — larger ``cc`` (smaller when ``flip``), ties by
+    lower id. Blocked ``m @ m.T`` rows, so a cluster at the
+    ``max_cluster`` cap stays ~80 MB of scratch, not O(c^2) resident
+    (the allocation-storm lesson of ``_assign_rows``)."""
+    n = len(m)
+    dom = np.zeros(n, dtype=bool)
+    ch = max(1, 10_000_000 // max(n, 1))
+    for s0 in range(0, n, ch):
+        e = min(s0 + ch, n)
+        sims = m[s0:e] @ m.T
+        bet = (cc[None, :] < cc[s0:e, None]) if flip else (cc[None, :] > cc[s0:e, None])
+        bet |= (cc[None, :] == cc[s0:e, None]) & (ids[None, :] < ids[s0:e, None])
+        bet[np.arange(e - s0), np.arange(s0, e)] = False
+        dom[s0:e] = ((sims >= thr) & bet).any(axis=1)
+    return dom
+
+
 def _local_cluster_dups(
     capped: DataFrame, threshold: float, keep: str, vn_col: str = "vn"
 ) -> DataFrame:
-    """Dominated ids per cluster via ONE applyInPandas pass: blocked
-    ``m @ m.T`` cosine matrix (unit vectors -> dot == cosine) and a
-    vectorized dominance reduction. Row-chunked so a cluster at the
-    ``max_cluster`` cap stays ~80 MB of scratch, not O(c^2) resident
-    (the allocation-storm lesson from make_assign_ccos_udf).
-    ``vn_col="vnb"`` reads the flat-binary unit vectors (one
-    frombuffer per cluster, zero per-row conversion)."""
+    """Dominated ids per cluster via ONE applyInPandas pass of
+    ``_dominated`` (unit vectors -> dot == cosine). ``vn_col="vnb"``
+    reads the flat-binary unit vectors (one frombuffer per cluster,
+    zero per-row conversion)."""
     from pyspark.sql.types import StructField, StructType
 
     out_t = StructType([StructField("id", capped.schema["id"].dataType)])
@@ -505,16 +508,7 @@ def _local_cluster_dups(
             )
         ids = pdf["id"].to_numpy()
         cc = pdf["ccos"].to_numpy(dtype=np.float64)
-        dom = np.zeros(n, dtype=bool)
-        ch = max(1, 10_000_000 // n)
-        for s0 in range(0, n, ch):
-            e = min(s0 + ch, n)
-            sims = m[s0:e] @ m.T
-            bet = (cc[None, :] < cc[s0:e, None]) if flip else (cc[None, :] > cc[s0:e, None])
-            bet |= (cc[None, :] == cc[s0:e, None]) & (ids[None, :] < ids[s0:e, None])
-            bet[np.arange(e - s0), np.arange(s0, e)] = False
-            dom[s0:e] = ((sims >= thr) & bet).any(axis=1)
-        return pdf.loc[dom, ["id"]]
+        return pdf.loc[_dominated(m, cc, ids, thr, flip), ["id"]]
 
     return capped.groupBy("list_id").applyInPandas(f, out_t)
 
@@ -799,21 +793,8 @@ def semantic_dedup_incremental(
         cc = bpdf["ccos"].to_numpy(dtype=np.float64)
         # within-batch dominance among SURVIVORS of the corpus check
         # (a batch item killed by the corpus cannot save its twin)
-        alive = ~dom
-        if alive.sum() >= 2:
-            ai = np.flatnonzero(alive)
-            ma, ca, ia = m[ai], cc[ai], ids[ai]
-            na = len(ai)
-            ch = max(1, 10_000_000 // na)
-            for s0 in range(0, na, ch):
-                e = min(s0 + ch, na)
-                sims = ma[s0:e] @ ma.T
-                bet = (ca[None, :] < ca[s0:e, None]) if flip else (
-                    ca[None, :] > ca[s0:e, None]
-                )
-                bet |= (ca[None, :] == ca[s0:e, None]) & (ia[None, :] < ia[s0:e, None])
-                bet[np.arange(e - s0), np.arange(s0, e)] = False
-                dom[ai[s0:e]] |= ((sims >= thr) & bet).any(axis=1)
+        ai = np.flatnonzero(~dom)
+        dom[ai] |= _dominated(m[ai], cc[ai], ids[ai], thr, flip)
         return pd.DataFrame(
             {
                 "id": bpdf["id"].to_numpy(),

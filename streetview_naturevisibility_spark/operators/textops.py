@@ -673,6 +673,73 @@ def contamination_overlap(
 _CHUNK_PACK = 2**31  # packed (doc_id, pos) canonical key — pos < 2^31
 
 
+def _drop_repeated_units(
+    df: DataFrame, id_col: str, units: F.Column, eligible=None
+) -> tuple[DataFrame, F.Column]:
+    """The repeated-unit dedup core shared by ``chunk_dedup``,
+    ``chunk_dedup_cdc`` and ``span_dedup_c4``: ``units`` is a per-row
+    array<string> of a doc's units (chunks, spans); every unit whose
+    content occurs more than once in the corpus (across docs OR within
+    one doc) is killed in every occurrence EXCEPT the globally-first
+    one (min packed (doc_id, pos)). ``eligible(unit)`` restricts which
+    units may dedup at all. -> (``df`` left-joined with its per-doc
+    ``_kill`` position set and ``n_removed``, the doc's kept units as a
+    Column over that frame).
+
+    Physical shape: posexplode -> ONE groupBy on md5(unit) (the 128-bit
+    digest is the shuffle key, long units never shuffle twice; instance
+    count + packed-min canonical in the same aggregate) -> inner join
+    back (AQE broadcasts the usually-small duplicated set) -> per-doc
+    kill-position sets -> the caller's rebuild is a per-row codegen HOF
+    (re-derive the unit array, two-arg ``F.filter`` drops killed
+    indices) — the text itself never shuffles for the rebuild. Skew
+    bound = the most duplicated unit's occurrence count, reduced
+    map-side by the partial aggregate. ``id_col`` must be integral and
+    fit 32 bits, and a doc must hold under 2^31 units, for the packed
+    key."""
+    from pyspark.sql import types as T
+
+    # a string id would implicitly cast to double -> NULL, making _canon
+    # NULL and the != filter drop every kill (silent no-op). Fail fast.
+    id_type = df.schema[id_col].dataType
+    if not isinstance(
+        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    ):
+        raise TypeError(
+            f"repeated-unit dedup needs an integral {id_col!r} (fits 32 "
+            f"bits) for its packed (id, pos) canonical key; got {id_type}"
+        )
+    ex = df.select(
+        F.col(id_col).alias("id"), F.posexplode(units).alias("pos", "u")
+    )
+    if eligible is not None:
+        ex = ex.where(eligible(F.col("u")))
+    ex = ex.select("id", "pos", F.md5("u").alias("uk"))
+    packed = F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos")
+    dup = (
+        ex.groupBy("uk")
+        .agg(F.count(F.lit(1)).alias("_n"), F.min(packed).alias("_canon"))
+        .where(F.col("_n") > 1)
+        .select("uk", "_canon")
+    )
+    kills = (
+        ex.join(dup, "uk", "inner")
+        .where(packed != F.col("_canon"))
+        .groupBy("id")
+        .agg(F.collect_set("pos").alias("_kill"))
+    )
+    joined = df.join(kills, F.col(id_col) == F.col("id"), "left").withColumn(
+        "n_removed", F.coalesce(F.size("_kill"), F.lit(0)).cast("long")
+    )
+    kept = F.filter(
+        units,
+        lambda u, i: ~F.array_contains(
+            F.coalesce(F.col("_kill"), F.array().cast("array<int>")), i
+        ),
+    )
+    return joined, kept
+
+
 def chunk_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -690,98 +757,33 @@ def chunk_dedup(
 
     -> (id_col, text_deduped, n_chunks, n_removed) — one row per input
     doc (NULL text stays NULL; docs shorter than one chunk pass
-    through whole).
-
-    Physical shape: posexplode -> ONE groupBy on md5(chunk) (the
-    128-bit digest is the shuffle key, long chunks never shuffle
-    twice; instance count + packed-min canonical in the same
-    aggregate) -> inner join back (AQE broadcasts the usually-small
-    duplicated set) -> per-doc kill-position sets -> the rebuild is a
-    per-row codegen HOF (re-derive the chunk array, two-arg
-    ``F.filter`` drops killed indices, concat the protected tail) —
-    the text itself never shuffles for the rebuild. Skew bound = the
-    most duplicated chunk's occurrence count, reduced map-side by the
-    partial aggregate. ``doc_id`` must fit 32 bits and docs must stay
-    under 2^31 chars for the packed key (raise chunk_chars for huge
+    through whole). Plan: ``_drop_repeated_units``; docs must stay
+    under 2^31 chars for its packed key (raise chunk_chars for huge
     docs)."""
     L = int(chunk_chars)
     if L < 1:
         raise ValueError("chunk_chars must be >= 1")
-    # the packed (id, pos) canonical key needs an integral id: a string
-    # id would implicitly cast to double -> NULL, making _canon NULL and
-    # the != filter drop every kill (silent no-op). Fail fast instead.
-    from pyspark.sql import types as T
-
-    id_type = df.schema[id_col].dataType
-    if not isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise TypeError(
-            f"chunk_dedup needs an integral {id_col!r} (fits 32 bits) "
-            f"for its packed (id, pos) canonical key; got {id_type}"
-        )
     # chunk i covers [i*L, (i+1)*L); the trailing len % L chars are
     # protected (recall boundary: BENCH/BASELINE.md, "chunk_dedup
     # grid-alignment recall")
     n_full = F.floor(F.length(text_col) / F.lit(L))
-
-    def _chunks():
-        idx = F.sequence(F.lit(0).cast("long"), n_full - 1)
-        mk = F.transform(
-            idx,
-            lambda i: F.col(text_col).substr(
-                (i * F.lit(L) + 1).cast("int"), F.lit(L)
-            ),
-        )
-        # sequence(0, stop) DESCENDS when stop < 0 — guard short docs
-        return F.when(n_full >= 1, mk).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    chunks = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(_chunks()).alias("pos", "chunk"),
-    ).select("id", "pos", F.md5("chunk").alias("ck"))
-    dup = (
-        chunks.groupBy("ck")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.min(
-                F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos")
-            ).alias("_canon"),
-        )
-        .where(F.col("_n") > 1)
-        .select("ck", "_canon")
+    idx = F.sequence(F.lit(0).cast("long"), n_full - 1)
+    mk = F.transform(
+        idx,
+        lambda i: F.col(text_col).substr((i * F.lit(L) + 1).cast("int"), F.lit(L)),
     )
-    kills = (
-        chunks.join(dup, "ck", "inner")
-        .where(
-            F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos")
-            != F.col("_canon")
-        )
-        .groupBy("id")
-        .agg(F.collect_set("pos").alias("_kill"))
-    )
+    # sequence(0, stop) DESCENDS when stop < 0 — guard short docs
+    chunks = F.when(n_full >= 1, mk).otherwise(F.array().cast("array<string>"))
+    joined, kept = _drop_repeated_units(df, id_col, chunks)
     tail = F.col(text_col).substr(
         (n_full * F.lit(L) + 1).cast("int"), F.length(text_col)
     )
-    kept_arr = F.filter(
-        _chunks(),
-        lambda c, i: ~F.array_contains(
-            F.coalesce(F.col("_kill"), F.array().cast("array<int>")), i
-        ),
-    )
-    out = df.join(
-        kills, F.col(id_col) == F.col("id"), "left"
-    ).select(
+    return joined.select(
         F.col(id_col),
-        F.concat(F.array_join(kept_arr, ""), tail).alias(
-            "text_deduped"
-        ),
+        F.concat(F.array_join(kept, ""), tail).alias("text_deduped"),
         F.coalesce(n_full, F.lit(0)).cast("long").alias("n_chunks"),
-        F.coalesce(F.size("_kill"), F.lit(0)).cast("long").alias("n_removed"),
+        "n_removed",
     )
-    return out
 
 
 def chunk_dedup_cdc(
@@ -810,24 +812,14 @@ def chunk_dedup_cdc(
     are not preserved, same normalization the token ops assume). NULL
     text stays NULL.
 
-    Physical shape: identical to chunk_dedup — per-row codegen HOFs
-    build the chunk array, ONE groupBy on the chunk md5 digest, join
-    back, per-row rebuild. Average chunk = ``avg_tokens`` tokens;
-    worst doc cost is linear in its tokens."""
+    Plan: ``_drop_repeated_units`` over per-row codegen chunk arrays.
+    Average chunk = ``avg_tokens`` tokens; worst doc cost is linear in
+    its tokens."""
     D = int(avg_tokens)
     if D < 2:
         raise ValueError("avg_tokens must be >= 2")
-    from pyspark.sql import types as T
-
-    id_type = df.schema[id_col].dataType
-    if not isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise TypeError(
-            f"chunk_dedup_cdc needs an integral {id_col!r}; got {id_type}"
-        )
-
     tk = F.split(F.col(text_col), " ")
+    n = F.size(tk)
 
     def _is_cut(t):
         return (
@@ -838,65 +830,28 @@ def chunk_dedup_cdc(
             == 0
         )
 
-    def _chunks():
-        n = F.size(tk)
-        cuts = F.filter(
-            F.sequence(F.lit(1), n), lambda i: _is_cut(F.element_at(tk, i))
-        )
-        starts = F.concat(
-            F.array(F.lit(1)), F.transform(cuts, lambda c: c + 1)
-        )
-        ends = F.concat(cuts, F.array(n))
-        raw = F.zip_with(
+    cuts = F.filter(F.sequence(F.lit(1), n), lambda i: _is_cut(F.element_at(tk, i)))
+    starts = F.concat(F.array(F.lit(1)), F.transform(cuts, lambda c: c + 1))
+    ends = F.concat(cuts, F.array(n))
+    chunks = F.filter(
+        F.zip_with(
             starts,
             ends,
-            lambda s, e: F.when(
-                e >= s, F.concat_ws(" ", F.slice(tk, s, e - s + 1))
-            ),
-        )
-        return F.filter(raw, lambda c: c.isNotNull())
-
-    chunks = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(_chunks()).alias("pos", "chunk"),
-    ).select(
-        "id",
-        "pos",
-        F.md5("chunk").alias("ck"),
-        (F.size(F.split(F.col("chunk"), " ")) >= min_tokens).alias("elig"),
-    )
-    dup = (
-        chunks.where(F.col("elig"))
-        .groupBy("ck")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.min(F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos")).alias(
-                "_canon"
-            ),
-        )
-        .where(F.col("_n") > 1)
-        .select("ck", "_canon")
-    )
-    kills = (
-        chunks.where(F.col("elig"))
-        .join(dup, "ck", "inner")
-        .where(
-            F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos") != F.col("_canon")
-        )
-        .groupBy("id")
-        .agg(F.collect_set("pos").alias("_kill"))
-    )
-    kept_arr = F.filter(
-        _chunks(),
-        lambda c, i: ~F.array_contains(
-            F.coalesce(F.col("_kill"), F.array().cast("array<int>")), i
+            lambda s, e: F.when(e >= s, F.concat_ws(" ", F.slice(tk, s, e - s + 1))),
         ),
+        lambda c: c.isNotNull(),
     )
-    return df.join(kills, F.col(id_col) == F.col("id"), "left").select(
+    joined, kept = _drop_repeated_units(
+        df,
+        id_col,
+        chunks,
+        eligible=lambda c: F.size(F.split(c, " ")) >= min_tokens,
+    )
+    return joined.select(
         F.col(id_col),
-        F.array_join(kept_arr, " ").alias("text_deduped"),
-        F.coalesce(F.size(_chunks()), F.lit(0)).cast("long").alias("n_chunks"),
-        F.coalesce(F.size("_kill"), F.lit(0)).cast("long").alias("n_removed"),
+        F.array_join(kept, " ").alias("text_deduped"),
+        F.coalesce(F.size(chunks), F.lit(0)).cast("long").alias("n_chunks"),
+        "n_removed",
     )
 
 
@@ -939,25 +894,38 @@ def hashed_ngram_buckets_col(text_col: str, n_buckets: int = DSIR_BUCKETS):
     return F.concat(uni, bi)
 
 
-def ngram_bucket_counts(
-    corpus: DataFrame, text_col: str = "text", n_buckets: int = DSIR_BUCKETS
-) -> tuple[DataFrame, DataFrame]:
-    """-> (bucket counts (b, c), total instance count as a LAZY 1-row
-    frame). Explode + one groupBy; the counts table is at most
-    ``n_buckets`` rows — broadcastable regardless of corpus size. Lazy
-    end to end (the train_bigram_lm lesson: declare, don't execute)."""
-    feats = corpus.select(
-        F.explode(hashed_ngram_buckets_col(text_col, n_buckets)).alias("b")
-    )
-    cnt = feats.groupBy("b").agg(F.count(F.lit(1)).alias("c"))
-    tot = cnt.agg(F.coalesce(F.sum("c"), F.lit(0)).alias("_T"))
-    return cnt, tot
+def _bucket_counts(frame: DataFrame, n_buckets: int) -> np.ndarray:
+    """Exact instance count per bucket of ``frame``'s ``_bs`` bucket
+    arrays, as one int64 vector of ``n_buckets`` on the driver.
+    Vectorized partial counts (guide §4.2): one np.bincount per Arrow
+    batch and ONE partial of at most ``n_buckets`` rows per task
+    instead of a 79M-row Generate + per-row hash aggregate (measured
+    8.2 s -> 2.3 s net at 1M docs x ~79 features). Integer counts, so
+    bit-identical to an explode + groupBy."""
+    from typing import Iterator
+
+    def _bincount(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc = np.zeros(n_buckets, dtype=np.int64)
+        for pdf in it:
+            if len(pdf):
+                flat = np.concatenate(
+                    [np.asarray(a, dtype=np.int64) for a in pdf["_bs"]]
+                )
+                acc += np.bincount(flat, minlength=n_buckets)
+        nz = np.flatnonzero(acc)
+        if nz.size:
+            yield pd.DataFrame({"b": nz, "c": acc[nz]})
+
+    counts = np.zeros(n_buckets, dtype=np.int64)
+    parts = frame.select("_bs").mapInPandas(_bincount, "b long, c long")
+    for r in parts.groupBy("b").agg(F.sum("c").alias("c")).collect():
+        counts[r.b] = r.c
+    return counts
 
 
 def dsir_score(
     docs: DataFrame,
     target: DataFrame,
-    raw: DataFrame | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = DSIR_BUCKETS,
@@ -968,111 +936,53 @@ def dsir_score(
         w(doc) = sum over hashed-gram instances b of
                  log((ct(b)+k)/(Tt+k*B)) - log((cr(b)+k)/(Tr+k*B))
 
-    where (ct, Tt) count the TARGET corpus and (cr, Tr) the RAW pool
-    (``raw`` defaults to ``docs`` itself, the published setup). Higher
-    = more target-like. Smoothing ``k`` handles unseen buckets exactly
-    like the bigram LM's add-k.
+    where (ct, Tt) count the TARGET corpus and (cr, Tr) the raw pool,
+    which is ``docs`` itself (the published setup). Higher = more
+    target-like. Smoothing ``k`` handles unseen buckets exactly like
+    the bigram LM's add-k.
 
     -> (id_col, dsir_logweight, n_feats). NULL-text docs have no
     features and are ABSENT (callers left-join and decide — same
     contract as score_bigram_logprob).
 
-    Scale shape (r7 rewrite — guide §2.3/§2.4 "shuffle keys, not
-    payloads" + §3.1 broadcast): the per-bucket log-ratio depends only
-    on the bucket id, so the whole weight table is ``n_buckets``
-    doubles. The corpus's bucket arrays are computed ONCE (materialized
-    across the raw-count pass and the scoring pass — the md5 feature
-    hashing is the dominant cost and previously ran twice), the
-    ``lw`` table is collected driver-side (bounded by ``n_buckets``,
-    computed IN the JVM via ``F.log`` so every double is bit-identical
-    to the former per-row expression) and shipped back as ONE array
-    literal; scoring is then a map-only ``aggregate`` over each doc's
-    bucket array — the 2x-token-count explode, both broadcast hash
-    joins and the per-doc shuffle are gone (plan: zero Exchange on the
-    corpus side). Per-doc sum order is unchanged (array order — the
-    old explode + partial hash agg summed in exactly that order), so
-    results are bit-equal, not just round-6 equal. The bucket-array
-    frame is materialized so both the count pass and every consumer
-    action read it without re-hashing; compute happens at call time
-    (the knn_snap precedent).
+    ``n_buckets`` must lie in [1, 2^22]: both count vectors are
+    collected to the driver and the weight table travels as one array
+    cell, so the bucket space bounds what the driver holds.
+
+    Scale shape (guide §2.3/§2.4 "shuffle keys, not payloads" + §3.1
+    broadcast): the per-bucket log-ratio depends only on the bucket id,
+    so the whole weight table is ``n_buckets`` doubles. The pool's
+    bucket arrays are computed ONCE (materialized across the count pass
+    and the scoring pass — the md5 feature hashing is the dominant
+    cost), both corpora are counted by ``_bucket_counts``, the ``lw``
+    table is computed IN the JVM via ``F.log`` and shipped back as ONE
+    array literal; scoring is then a map-only ``aggregate`` over each
+    doc's bucket array in array order — no explode, no per-doc shuffle
+    (plan: zero Exchange on the corpus side). Compute happens at call
+    time (the knn_snap precedent).
     """
-    spark = docs.sparkSession
-    bs_col = hashed_ngram_buckets_col(text_col, n_buckets)
-    if int(n_buckets) <= (1 << 31) - 1:
-        # buckets < n_buckets always fit int32: halve the materialized
-        # array and Arrow bytes (guide §2.3 narrower types)
-        bs_col = F.transform(bs_col, lambda b: b.cast("int"))
-    bs_frame = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("id"), bs_col.alias("_bs")
-    )
-    reuse_bs = raw is None
-    if reuse_bs:
-        # both the count pass and the scoring pass read it, so the md5
-        # feature hashing runs once
-        bs_frame, _ = materialize(bs_frame)
-        # vectorized partial counts (guide §4.2): one np.bincount per
-        # Arrow batch and ONE 10k-row partial per task instead of a
-        # 79M-row Generate + per-row hash aggregate (measured 8.2 s ->
-        # 2.3 s net at 1M docs x ~79 features). Exact integer counts —
-        # bit-identical to the explode + groupBy it replaces. Guarded
-        # to small bucket spaces (the count vector is materialized per
-        # task); DSIR's published config is 10k buckets.
-        if int(n_buckets) <= (1 << 22):
-            from typing import Iterator
-
-            nb = int(n_buckets)
-
-            def _bincount(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                acc = np.zeros(nb, dtype=np.int64)
-                seen = False
-                for pdf in it:
-                    if len(pdf):
-                        seen = True
-                        flat = np.concatenate(
-                            [np.asarray(a, dtype=np.int64) for a in pdf["_bs"]]
-                        )
-                        if flat.size:
-                            acc += np.bincount(flat, minlength=nb)
-                if seen:
-                    yield pd.DataFrame({"b": np.arange(nb), "c": acc})
-
-            cr = (
-                bs_frame.select("_bs")
-                .mapInPandas(_bincount, "b long, c long")
-                .groupBy("b")
-                .agg(F.sum("c").alias("c"))
-                .where(F.col("c") > 0)
-            )
-        else:
-            cr = (
-                bs_frame.select(F.explode("_bs").alias("b"))
-                .groupBy("b")
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
-    else:
-        cr, _ = ngram_bucket_counts(raw, text_col, n_buckets)
-    ct, _ = ngram_bucket_counts(target, text_col, n_buckets)
-    # bounded collects (<= n_buckets rows each); totals recomposed
-    # driver-side as exact integer sums — no extra pass over either
-    # corpus for the 1-row total frames
-    ct_rows = {int(r.b): int(r.c) for r in ct.collect()}
-    cr_rows = {int(r.b): int(r.c) for r in cr.collect()}
-    tt, tr_ = sum(ct_rows.values()), sum(cr_rows.values())
     nb = int(n_buckets)
-    counts = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "b": np.arange(nb, dtype=np.int64),
-                "ct": np.array(
-                    [ct_rows.get(b, 0) for b in range(nb)], dtype=np.int64
-                ),
-                "cr": np.array(
-                    [cr_rows.get(b, 0) for b in range(nb)], dtype=np.int64
-                ),
-            }
+    if not 1 <= nb <= 1 << 22:
+        raise ValueError(f"n_buckets must be in [1, 2**22], got {n_buckets}")
+    spark = docs.sparkSession
+    # buckets < n_buckets fit int32: halve the materialized array and
+    # Arrow bytes (guide §2.3 narrower types)
+    bs_col = F.transform(
+        hashed_ngram_buckets_col(text_col, nb), lambda b: b.cast("int")
+    ).alias("_bs")
+    # both the count pass and the scoring pass read it, so the md5
+    # feature hashing runs once
+    bs_frame, _ = materialize(
+        docs.where(F.col(text_col).isNotNull()).select(
+            F.col(id_col).alias("id"), bs_col
         )
     )
-    kB = F.lit(float(k)) * F.lit(float(n_buckets))
+    ct = _bucket_counts(target.where(F.col(text_col).isNotNull()).select(bs_col), nb)
+    cr = _bucket_counts(bs_frame, nb)
+    counts = spark.createDataFrame(
+        pd.DataFrame({"b": np.arange(nb, dtype=np.int64), "ct": ct, "cr": cr})
+    )
+    kB = F.lit(float(k)) * F.lit(float(nb))
     # the whole weight table as ONE b-ordered array in a 1-row frame,
     # broadcast into the scoring projection. It never leaves the JVM
     # (a 10k-double Python literal costs seconds of py4j round trips)
@@ -1087,11 +997,11 @@ def dsir_score(
                         (
                             F.log(
                                 (F.col("ct") + F.lit(float(k)))
-                                / (F.lit(tt).cast("double") + kB)
+                                / (F.lit(int(ct.sum())).cast("double") + kB)
                             )
                             - F.log(
                                 (F.col("cr") + F.lit(float(k)))
-                                / (F.lit(tr_).cast("double") + kB)
+                                / (F.lit(int(cr.sum())).cast("double") + kB)
                             )
                         ).alias("lw"),
                     )
@@ -1125,7 +1035,6 @@ def dsir_select(
     docs: DataFrame,
     target: DataFrame,
     n: int,
-    raw: DataFrame | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = DSIR_BUCKETS,
@@ -1139,7 +1048,7 @@ def dsir_select(
     full sort); at 100 TB-scale n one would threshold on an
     approx-quantile cut instead — same scored frame, filter not sort.
     """
-    scored = dsir_score(docs, target, raw, text_col, id_col, n_buckets, k)
+    scored = dsir_score(docs, target, text_col, id_col, n_buckets, k)
     top = (
         scored.orderBy(F.desc("dsir_logweight"), F.asc(id_col))
         .limit(int(n))
@@ -1483,25 +1392,10 @@ def span_dedup_c4(
     -> (id_col, text_deduped, n_spans, n_removed); NULL text -> NULL.
     Inter-sentence whitespace is normalized to one space in the
     rebuilt text (the segmentation consumes it — C4's own pipeline
-    re-joins sentences the same way).
-
-    Physical shape — identical to chunk_dedup: ONE groupBy on
-    md5(span) carrying count + packed-min canonical, inner join back
-    (AQE broadcasts the duplicated set), per-doc kill sets, per-row
-    codegen HOF rebuild; the text never shuffles for the rebuild."""
+    re-joins sentences the same way). Plan: ``_drop_repeated_units``."""
     n = int(n_sents)
     if n < 1:
         raise ValueError("n_sents must be >= 1")
-    from pyspark.sql import types as T
-
-    id_type = df.schema[id_col].dataType
-    if not isinstance(
-        id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise TypeError(
-            f"span_dedup_c4 needs an integral {id_col!r} (fits 32 bits) "
-            f"for its packed (id, pos) canonical key; got {id_type}"
-        )
     # sentence boundary = terminal-punct run + whitespace, marked with
     # U+0001 via capture+backreference (RE2-compatible, so the DuckDB
     # twin restates it verbatim — no lookbehind)
@@ -1510,47 +1404,12 @@ def span_dedup_c4(
     )
     sents = F.split(marked, "\u0001")
     n_spans = F.floor(F.size(sents) / F.lit(n))
-
-    def _spans():
-        idx = F.sequence(F.lit(0).cast("long"), n_spans - 1)
-        mk = F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", F.slice(sents, (i * n + 1).cast("int"), n)
-            ),
-        )
-        return F.when(n_spans >= 1, mk).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    spans = (
-        df.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.posexplode(_spans()).alias("pos", "span"),
-        )
-        .select("id", "pos", F.md5("span").alias("sk"))
+    mk = F.transform(
+        F.sequence(F.lit(0).cast("long"), n_spans - 1),
+        lambda i: F.concat_ws(" ", F.slice(sents, (i * n + 1).cast("int"), n)),
     )
-    dup = (
-        spans.groupBy("sk")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.min(
-                F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos")
-            ).alias("_canon"),
-        )
-        .where(F.col("_n") > 1)
-        .select("sk", "_canon")
-    )
-    kills = (
-        spans.join(dup, "sk", "inner")
-        .where(
-            F.col("id") * F.lit(_CHUNK_PACK) + F.col("pos")
-            != F.col("_canon")
-        )
-        .groupBy("id")
-        .agg(F.collect_set("pos").alias("_kill"))
-    )
+    spans = F.when(n_spans >= 1, mk).otherwise(F.array().cast("array<string>"))
+    joined, kept = _drop_repeated_units(df, id_col, spans)
     remainder = F.concat_ws(
         " ",
         F.slice(
@@ -1559,26 +1418,16 @@ def span_dedup_c4(
             (F.size(sents) - n_spans * n).cast("int"),
         ),
     )
-    kept_arr = F.filter(
-        _spans(),
-        lambda c, i: ~F.array_contains(
-            F.coalesce(F.col("_kill"), F.array().cast("array<int>")), i
-        ),
-    )
     rebuilt = F.concat_ws(
         " ",
         F.filter(
-            F.concat(
-                F.array(F.array_join(kept_arr, " ")), F.array(remainder)
-            ),
+            F.concat(F.array(F.array_join(kept, " ")), F.array(remainder)),
             lambda s: s != "",
         ),
     )
-    return df.join(
-        kills, F.col(id_col) == F.col("id"), "left"
-    ).select(
+    return joined.select(
         F.col(id_col),
         F.when(F.col(text_col).isNotNull(), rebuilt).alias("text_deduped"),
         F.coalesce(n_spans, F.lit(0)).cast("long").alias("n_spans"),
-        F.coalesce(F.size("_kill"), F.lit(0)).cast("long").alias("n_removed"),
+        "n_removed",
     )

@@ -5,6 +5,7 @@ ANSI-SQL twins (tests/oracle.py), standing in for driver contract rows
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from streetview_naturevisibility_spark.operators.textops import (
     contaminated_ids,
@@ -374,6 +375,23 @@ def _chunk_corpus(L=20):
     return rows
 
 
+@pytest.mark.parametrize(
+    "op", ["chunk_dedup", "chunk_dedup_cdc", "span_dedup_c4"]
+)
+def test_unit_dedup_rejects_string_ids(spark, op):
+    """A string id would NULL the packed (id, pos) canonical key and
+    silently no-op every kill, so each repeated-unit dedup operator
+    rejects it at plan time."""
+    from streetview_naturevisibility_spark.operators import textops
+
+    docs = spark.createDataFrame(
+        [("a", "One two three four. Five six. Seven. "), ("b", "aaaabbbb")],
+        "doc_id: string, text: string",
+    )
+    with pytest.raises(TypeError, match="integral"):
+        getattr(textops, op)(docs)
+
+
 class TestChunkDedup:
     def test_hand_computed(self, spark):
         L = 4
@@ -392,18 +410,6 @@ class TestChunkDedup:
         assert out[2].n_removed == 2
         assert out[3].text_deduped == ""            # repeat of doc1's aaaa
         assert out[3].n_removed == 2
-
-    def test_string_id_fails_fast(self, spark):
-        # a string id would NULL the packed canonical key and silently
-        # no-op every kill — the operator must reject it at plan time
-        import pytest as _pt
-
-        docs = spark.createDataFrame(
-            [("a", "aaaabbbb"), ("b", "aaaabbbb")],
-            "doc_id: string, text: string",
-        )
-        with _pt.raises(TypeError, match="integral"):
-            chunk_dedup(docs, chunk_chars=4)
 
     def test_duckdb_twin(self, spark):
         import pandas as pd

@@ -152,6 +152,19 @@ def test_dsir_score_matches_duckdb_twin(spark):
     )
 
 
+@pytest.mark.parametrize("n_buckets", [0, 2**22 + 1])
+def test_dsir_score_rejects_bucket_space_out_of_range(spark, n_buckets):
+    """Both count vectors are collected to the driver and the weight
+    table is one array cell, so the bucket space is bounded."""
+    docs, target = _mk_docs(), _mk_target()
+    with pytest.raises(ValueError, match="n_buckets"):
+        dsir_score(
+            spark.createDataFrame(docs),
+            spark.createDataFrame(target),
+            n_buckets=n_buckets,
+        )
+
+
 def test_dsir_select_topn_deterministic(spark):
     docs, target = _mk_docs(), _mk_target()
     sel = dsir_select(

@@ -79,3 +79,47 @@ def test_curate_funnel_query_analyzes_each_doc_once(spark, monkeypatch):
     )
     row = entry.q_curate_funnel(spark, SF_DIR).collect()[0]
     assert seen.value == row.n_in
+
+
+def test_bloom_anti_join_probes_once_without_budget(spark, no_broadcast):
+    """With nothing fitting the budget, ``bloom_anti_join`` still runs
+    its Python probe only in the candidate-key materialization: the
+    returned plan holds no ``ArrowEvalPython``, and the result is the
+    plain anti-join."""
+    from streetview_naturevisibility_spark.operators.bloom import (
+        bloom_anti_join,
+        build_bloom,
+    )
+
+    batch = spark.range(0, 600).select(
+        F.col("id").alias("doc_id"), F.concat(F.lit("k"), F.col("id") % 300).alias("key")
+    )
+    done = spark.range(0, 100).select(F.concat(F.lit("k"), F.col("id")).alias("key"))
+    bloom = build_bloom(done, "key", capacity=100, fpp=0.01)
+    want = sorted(r.doc_id for r in batch.join(done, "key", "left_anti").collect())
+    with no_broadcast():
+        out = bloom_anti_join(batch, done, "key", bloom)
+        got = sorted(r.doc_id for r in out.collect())
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan, plan
+    assert got == want
+
+
+def test_keep_canonical_broadcasts_nothing_without_budget(spark, no_broadcast):
+    """``dedup_keep_canonical`` broadcasts the drop set only when it
+    ``fits``: under ``-1`` the executed plan has no ``BroadcastExchange``."""
+    from streetview_naturevisibility_spark.operators.corpus import (
+        dedup_keep_canonical,
+        duplicate_clusters,
+    )
+
+    docs = spark.createDataFrame([(i, f"t{i}") for i in range(8)], "doc_id: long, text: string")
+    clusters = duplicate_clusters(
+        spark.createDataFrame([(1, 2), (2, 5)], "id_a: long, id_b: long")
+    )
+    with no_broadcast():
+        out = dedup_keep_canonical(docs, clusters)
+        kept = sorted(r.doc_id for r in out.collect())
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan, plan
+    assert kept == [0, 1, 3, 4, 6, 7]

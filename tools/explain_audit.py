@@ -376,6 +376,28 @@ def main() -> None:
         )
     )
 
+    # 12c. CDC chunk dedup: the same repeated-unit core as 12b on
+    # content-defined chunks (eligibility filter before the digest agg)
+    from streetview_naturevisibility_spark.operators.textops import chunk_dedup_cdc
+
+    cdc = chunk_dedup_cdc(docs11)
+    p12c = plan_of(cdc)
+    ok12c, n12c = check(
+        "cdc chunk dedup",
+        p12c,
+        must=["HashAggregate", "md5"],
+        must_not=["ArrowEvalPython", "BatchEvalPython", "CartesianProduct"],
+    )
+    sections.append(
+        (
+            "CDC chunk dedup: digest-keyed count+canonical agg, HOF rebuild, zero Python",
+            cdc,
+            p12c,
+            ok12c,
+            n12c,
+        )
+    )
+
     # 13. token-budget select (bucketed): the corpus-sized side joins
     # the tiny per-bucket verdict frame via BROADCAST (never sort-merge
     # on the corpus), and the only corpus-side Window is the boundary-
@@ -723,9 +745,9 @@ def main() -> None:
         ("BPE subword count: broadcast merges, zero shuffle", q23, p23, ok23, n23)
     )
 
-    # 24. Bloom anti-join: certain-miss slice is a map-only probe (no
-    # join at all); only Bloom-positives enter the residual anti-join,
-    # which must be hash-based, never a sort-merge or cartesian
+    # 24. Bloom anti-join: only the Bloom-positive keys meet the done
+    # set, and the batch's anti-join against those matches must be
+    # hash-based, never a sort-merge or cartesian
     from streetview_naturevisibility_spark.operators import bloom
     from streetview_naturevisibility_spark.operators.bloom import (
         bloom_anti_join,
@@ -750,7 +772,7 @@ def main() -> None:
     )
     sections.append(
         (
-            "Bloom-filter anti-join: broadcast-probe bulk, hash residual join",
+            "Bloom-filter anti-join: broadcast-probe candidates, hash anti-join",
             q24,
             p24,
             ok24,
