@@ -15,4 +15,16 @@ Common-Crawl-style web-page tables, built Spark-first:
 - checkpoint/lineage layer for resumable stages.
 """
 
+import os
+
+# One BLAS thread per process: without it each of local[N]'s N Python
+# workers spawns a core-count OpenBLAS pool, and N x N spinning threads
+# drive the box into >95% system time (a SemDeDup matmul: 20+ min vs ~1
+# min pinned). OpenBLAS reads these once, when ``import pyspark`` loads
+# NumPy, so the pin is set here, before any submodule imports either;
+# the JVM starts later and hands it to its workers. Pre-set values win;
+# on a real cluster set spark.executorEnv.* too.
+for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
+    os.environ.setdefault(_v, "1")
+
 __version__ = "0.1.0"

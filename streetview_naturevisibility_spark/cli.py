@@ -219,15 +219,19 @@ def cmd_gap_fill(args: argparse.Namespace) -> None:
     # README picks the GAM on its data; linear stays the default for
     # protocol continuity with rounds 1-3)
     if args.model == "gam":
-        out = gap_fill_gam(known_feats, feature="ndvi", target="gvi")
+        try:
+            out = gap_fill_gam(known_feats, feature="ndvi", target="gvi")
+        except ValueError as e:  # the eager driver fit, before any write
+            raise SystemExit(f"gap-fill --model gam: {e}")
     else:
         out = gap_fill_linear(known_feats, feature="ndvi", target="gvi")
     out.orderBy("point_id").write.mode("overwrite").parquet(
         os.path.join(args.results, "gvi_filled")
     )
+    g = gam_cv_metrics(known_feats, feature="ndvi", target="gvi")
     # the reference's model-selection printout
     # (predict_missing_gvi.py:81-85: cv=5 R2 / RMSE / AIC)
-    if m.n_known < 5 or m.avg_rmse is None or m.avg_r2 is None:
+    if m.n_known < 5 or m.avg_rmse is None or m.avg_r2 is None or g["aic"] is None:
         print(
             f"WARNING: CV metrics degenerate (n_known={m.n_known}; "
             "constant-x training fold or constant-y test fold) — "
@@ -238,7 +242,6 @@ def cmd_gap_fill(args: argparse.Namespace) -> None:
     print("RMSE:", m.avg_rmse)
     print("AIC value:", m.aic)
     # the GAM half of the reference printout (predict_missing_gvi.py:139-144)
-    g = gam_cv_metrics(known_feats, feature="ndvi", target="gvi")
     print("<----- Linear GAM ----->")
     print("RMSE:", g["avg_rmse"])
     print("AIC value:", g["aic"])

@@ -142,7 +142,9 @@ def gam_cv_metrics(
     predict_missing_gvi.py:128-144). The known set is bounded, so folds
     fit driver-side (same contiguous KFold splits as
     ``gap_fill_cv_metrics``); each fold re-runs the lambda gridsearch
-    like cross_val_score refitting the pygam estimator."""
+    like cross_val_score refitting the pygam estimator. If any fold
+    cannot be fit (an empty test fold when n < folds, or a training
+    split no lambda solves), every metric but ``n_known`` is None."""
     known = (
         df.where(F.col(target).isNotNull())
         .select(order_col, feature, target)
@@ -152,6 +154,9 @@ def gam_cv_metrics(
     x = known[feature].to_numpy(dtype=np.float64)
     y = known[target].to_numpy(dtype=np.float64)
     n = len(y)
+    null = {"n_known": n, "avg_rmse": None, "avg_r2": None, "aic": None}
+    if n < folds:  # some test fold is empty
+        return null
     q, r = divmod(n, folds)
     bounds = np.cumsum([0] + [q + 1] * r + [q] * (folds - r))
     rmses = []
@@ -160,7 +165,10 @@ def gam_cv_metrics(
         lo, hi = bounds[f], bounds[f + 1]
         test = np.zeros(n, dtype=bool)
         test[lo:hi] = True
-        gam = LinearGAM1D(n_splines=n_splines).fit(x[~test], y[~test])
+        try:
+            gam = LinearGAM1D(n_splines=n_splines).fit(x[~test], y[~test])
+        except ValueError:
+            return null
         pred = gam.predict(x[test])
         resid = y[test] - pred
         rmses.append(float(np.sqrt(np.mean(resid**2))))
@@ -251,6 +259,8 @@ class LinearGAM1D:
             gcv = n * rss / max((n - H_trace) ** 2, 1e-12)
             if gcv < best[0]:
                 best = (gcv, coef, lam)
+        if best[1] is None:
+            raise ValueError(f"no GAM smoothing penalty solves the fit on n={n} known points")
         self.coef_ = best[1]
         self.lam_ = best[2]
         return self
@@ -263,10 +273,13 @@ def gap_fill_gam(
     df: DataFrame, feature: str, target: str, n_splines: int = 25
 ) -> DataFrame:
     """GAM gap-fill: fit on known rows (collected — the known set is
-    bounded), predict missing via a broadcast pandas UDF."""
+    bounded), predict missing via a broadcast pandas UDF. Raises
+    ``ValueError`` when the known rows admit no fit."""
     from pyspark.sql.types import DoubleType
 
-    known = df.where(F.col(target).isNotNull()).select(feature, target).toPandas()
+    # point_id order: B'B sums the same rows in the same order on any plan
+    known = df.where(F.col(target).isNotNull()).orderBy("point_id")
+    known = known.select(feature, target).toPandas()
     gam = LinearGAM1D(n_splines=n_splines).fit(
         known[feature].to_numpy(), known[target].to_numpy()
     )

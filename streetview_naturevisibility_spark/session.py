@@ -45,6 +45,11 @@ _DEFAULTS: dict[str, str] = {
     # so the OOM risk the guide notes stays capped on any cluster.
     "spark.sql.join.preferSortMergeJoin": "false",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "256m",
+    # Generated classes per JVM. A warm pass compiles 94 + 50 + 41
+    # (pipeline / metrics / gap-fill) or 152 (curate) distinct classes;
+    # at the default 100 each pass evicted and recompiled them all. A
+    # static conf, so it also reaches every executor's cache.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # Quieter driver logs in the sandbox.
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
@@ -62,17 +67,6 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 in the
     sandbox); on a real cluster pass None and let spark-submit decide.
     """
-    # One BLAS thread per Python worker. local[N] runs N workers forked
-    # from a daemon that inherits this environment; without the pin,
-    # every worker's OpenBLAS spawns a full core-count thread pool and
-    # N x N spin-waiting threads drive the box into >95% SYSTEM time
-    # (measured: the 1M x 4096-centroid SemDeDup assignment matmul sat
-    # at 20+ min of sys-thrash vs ~1 min pinned). Must run BEFORE the
-    # JVM starts so the env reaches the workers; pre-set values win.
-    # On a real cluster do the same via spark.executorEnv.*.
-    for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
-        os.environ.setdefault(_v, "1")
-
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"

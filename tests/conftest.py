@@ -22,6 +22,15 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def compiled(spark):
+    """A callable: how many classes Janino has compiled in this JVM so
+    far (Spark's ``CodegenMetrics`` records one compile-time sample per
+    class; a codegen cache hit records none)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return lambda: metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 @pytest.fixture
 def no_broadcast(spark):
     """A context manager: inside it ``spark.sql.autoBroadcastJoinThreshold``

@@ -166,6 +166,40 @@ class TestCli:
         assert "WARNING: no points with NDVI values" in text
         assert spark.read.parquet(os.path.join(pipeline_out, "gvi_filled")).count() == 0
 
+    @pytest.mark.parametrize("n", [1, 2, 3])
+    def test_gap_fill_few_known_points_warns_not_crashes(
+        self, spark, fixture_dir, pipeline_out, run_cli, tmp_path, capsys, n
+    ):
+        """One to three known points (fewer than the five CV folds):
+        both models' CV lines are the degenerate-metrics warning and
+        null GAM metrics, not a traceback or a silent ``nan``. The GAM
+        fit itself needs two points; on one, ``--model gam`` stops with
+        the fit's message and writes nothing."""
+        results = str(tmp_path / "few")
+        shutil.copytree(os.path.join(pipeline_out, "_ckpt"), os.path.join(results, "_ckpt"))
+        gvi = spark.read.parquet(os.path.join(pipeline_out, "gvi_points"))
+        gvi.where("gvi IS NOT NULL").orderBy("point_id").limit(n).unionByName(
+            gvi.where("gvi IS NULL").orderBy("point_id").limit(5)
+        ).write.parquet(os.path.join(results, "gvi_points"))
+        filled = os.path.join(results, "gvi_filled")
+        argv = ("gap-fill", "--results", results, "--ndvi-grid",
+                os.path.join(fixture_dir, "ndvi_grid.parquet"), "--distance", 100.0)
+        run_cli(*argv)
+        text = capsys.readouterr().out
+        assert f"WARNING: CV metrics degenerate (n_known={n};" in text
+        assert text.split("<----- Linear GAM ----->")[1].startswith(
+            "\nRMSE: None\nAIC value: None\n"
+        )
+        assert spark.read.parquet(filled).count() == n + 5
+        shutil.rmtree(filled)
+        if n == 1:
+            with pytest.raises(SystemExit, match="n=1 known points"):
+                run_cli(*argv, "--model", "gam")
+            assert not os.path.exists(filled)
+        else:
+            run_cli(*argv, "--model", "gam")
+            assert spark.read.parquet(filled).where("gvi_filled IS NULL").count() == 0
+
 class TestParser:
     def test_each_handler_reads_exactly_its_options(self):
         """For every subcommand, the ``args.<name>`` its handler reads

@@ -53,6 +53,17 @@ class TestLinear:
 
 
 class TestGAM:
+    def test_gam_fill_does_not_depend_on_partitioning(self, spark):
+        """The driver fit reads the known rows in ``point_id`` order, so
+        the same rows in 1 or in 7 partitions fill bit-identical values."""
+        df, _, _ = _toy(spark, nonlinear=True)
+        a, b = (
+            gap_fill_gam(df.repartition(k), "ndvi", "gvi")
+            .orderBy("point_id").toPandas()["gvi_filled"].to_numpy()
+            for k in (1, 7)
+        )
+        assert np.array_equal(a, b)
+
     def test_gam_beats_linear_on_nonlinear_signal(self, spark):
         df, pdf, y_true = _toy(spark, nonlinear=True)
         lin = gap_fill_linear(df, "ndvi", "gvi").orderBy("point_id").toPandas()
