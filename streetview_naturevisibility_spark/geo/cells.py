@@ -14,9 +14,11 @@ formula available as SQL for the DuckDB oracle.
 Neighbor expansion: the kNN candidate set for a point is its cell plus
 the 8 surrounding cells (cell edge at z14 ≈ 2.4 km >> 2x the 25 m snap
 radius, so one ring is always sufficient — same guarantee the reference
-gets implicitly from a global KDTree). Implemented as
-``explode(array(...))`` of 9 packed ids on the *small* (points) side so
-the big pages table is shuffled exactly once, unexploded.
+gets implicitly from a global KDTree). ``ring_join`` is the one place
+this expansion meets the big side: it explodes the *small* (points)
+side to its ring and broadcasts it, so the big table streams through
+once, unexploded and unshuffled. Both kNN snaps (square tiles, hex
+cells) and the zonal operators (packed meter bins) join this way.
 """
 
 from __future__ import annotations
@@ -137,3 +139,25 @@ def with_cell(df: DataFrame, lon: str = "lon", lat: str = "lat", zoom: int = 14)
         .withColumn("tile_y", tile_y_col(F.col(lat), zoom))
         .withColumn("cell_id", pack_cell_col(F.col("tile_x"), F.col("tile_y"), zoom))
     )
+
+
+def ring_join(points: DataFrame, ring: Column, big: DataFrame, cell: Column) -> DataFrame:
+    """Cell-pruned candidate join: every ``big`` row paired with every
+    point whose ``ring`` holds the one ``cell`` the row lies in.
+
+    ``points(point_id, x, y)`` is exploded to its ``ring`` (an array of
+    packed cell ids, a Column over ``points``) and broadcast; ``cell``
+    (a bigint Column over ``big``) is the hash key the big side streams
+    through once, unshuffled. Returns ``big``'s columns plus
+    ``point_id``, ``_px`` and ``_py``. The ring must contain every cell
+    within the caller's distance bound; the caller filters on distance.
+    """
+    side = F.broadcast(
+        points.select(
+            "point_id",
+            F.col("x").alias("_px"),
+            F.col("y").alias("_py"),
+            F.explode(ring).alias("_cell"),
+        )
+    )
+    return big.withColumn("_cell", cell).join(side, "_cell").drop("_cell")

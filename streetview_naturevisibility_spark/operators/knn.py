@@ -10,12 +10,14 @@ NOT null), ``distance = None``, and ``is_panoramic`` None -> False
 Engine plan (Spark-first, 100 TB-ready):
 
 1. Points (bounded side, ~1e6 rows max) are exploded to their 3x3
-   neighbor cells — cell edge at z14 (~2.4 km at 52°N) >> 2x the 25 m
-   radius, so one ring provably contains every candidate within bound.
-2. ``pages JOIN broadcast(points_exploded) ON cell_id`` — the 100 TB
-   pages table is **never shuffled**: broadcast hash join streams it
-   once, and Catalyst pushes the cell-id computation into the scan
-   stage (whole-stage codegen, no UDF).
+   neighbor cells (``knn_snap``) or 7-cell hex ring (``knn_snap_hex``)
+   — cell edge at z14 (~2.4 km at 52°N) >> 2x the 25 m radius, so one
+   ring provably contains every candidate within bound.
+2. ``geo.cells.ring_join``: ``pages JOIN broadcast(points_exploded) ON
+   cell`` — the 100 TB pages table is **never shuffled**: broadcast
+   hash join streams it once, and Catalyst pushes the cell-id
+   computation into the scan stage. The two snaps differ only in their
+   (ring, cell) pair; ``_snap`` holds everything else.
 3. Planar distance filter ``dist < bound`` prunes immediately (strict,
    matching cKDTree's open ``distance_upper_bound``).
 4. k=1 reduce as ``groupBy(point_id).agg(min(struct(dist, url, ...)))``
@@ -31,10 +33,10 @@ Engine plan (Spark-first, 100 TB-ready):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..geo.cells import neighbor_cells_col
+from ..geo.cells import neighbor_cells_col, ring_join
 from ..session import materialize
 
 
@@ -65,51 +67,39 @@ def knn_snap(
     Returns points + (page_url, snap_distance, is_panoramic) with
     reference miss semantics: ('' / null-key, null, false).
     """
-    bound = max_distance / 2.0
-    key_is_string = dict(pages.dtypes)[key_col] == "string"
-
-    cand_points = F.broadcast(
-        points.select(
-            "point_id",
-            F.col("x").alias("_px"),
-            F.col("y").alias("_py"),
-            F.explode(neighbor_cells_col(F.col("tile_x"), F.col("tile_y"), zoom)).alias("cell_id"),
-        )
-    )
-
-    pages_side = pages.select(
-        "cell_id",
-        F.col(key_col).alias("_url"),
-        F.col("x").alias("_qx"),
-        F.col("y").alias("_qy"),
-        F.col("is_panoramic").alias("_pano"),
-    )
-
-    dist = F.sqrt(
-        (F.col("_px") - F.col("_qx")) * (F.col("_px") - F.col("_qx"))
-        + (F.col("_py") - F.col("_qy")) * (F.col("_py") - F.col("_qy"))
-    )
-    cand = (
-        pages_side.join(cand_points, "cell_id")
-        .withColumn("_dist", dist)
-        # strict <: cKDTree's distance_upper_bound is an open bound
-        .where(F.col("_dist") < F.lit(bound))
-        .select("point_id", "_dist", "_url", "_pano")
-    )
-
-    return _snap_reduce_join(points, cand, key_is_string, key_col, reduce)
+    ring = neighbor_cells_col(F.col("tile_x"), F.col("tile_y"), zoom)
+    return _snap(points, pages, ring, F.col("cell_id"), max_distance / 2.0, key_col, reduce)
 
 
-def _snap_reduce_join(
+def _snap(
     points: DataFrame,
-    cand: DataFrame,
-    key_is_string: bool,
+    pages: DataFrame,
+    ring: Column,
+    cell: Column,
+    bound: float,
     key_col: str,
     reduce: str,
 ) -> DataFrame:
-    """Shared k=1 reduce + miss-preserving join-back (used by the
-    square-cell and hex-cell snap joins — the candidate generation is
-    the only part that differs)."""
+    """The one snap body under both cell kinds: ring-join candidates,
+    strict distance filter, k=1 reduce and miss-preserving join-back.
+    ``ring`` is a Column over ``points``, ``cell`` one over ``pages``."""
+    key_is_string = dict(pages.dtypes)[key_col] == "string"
+    dist = F.sqrt(
+        (F.col("_px") - F.col("x")) * (F.col("_px") - F.col("x"))
+        + (F.col("_py") - F.col("y")) * (F.col("_py") - F.col("y"))
+    )
+    cand = (
+        ring_join(points, ring, pages, cell)
+        .withColumn("_dist", dist)
+        # strict <: cKDTree's distance_upper_bound is an open bound
+        .where(F.col("_dist") < F.lit(bound))
+        .select(
+            "point_id",
+            "_dist",
+            F.col(key_col).alias("_url"),
+            F.col("is_panoramic").alias("_pano"),
+        )
+    )
     best_struct = F.struct(
         F.col("_dist").alias("dist"),
         F.col("_url").alias("url"),
@@ -189,32 +179,5 @@ def knn_snap_hex(
     size = hex_size if hex_size is not None else bound
     if size < bound:
         raise ValueError("hex_size must cover the snap bound (one-ring guarantee)")
-    key_is_string = dict(pages.dtypes)[key_col] == "string"
-    hex_udf = make_hex_cell_udf(size)
-
-    cand_points = F.broadcast(
-        points.withColumn("_hc", hex_udf(F.col("x"), F.col("y"))).select(
-            "point_id",
-            F.col("x").alias("_px"),
-            F.col("y").alias("_py"),
-            F.explode(hex_neighbors_col(F.col("_hc"))).alias("cell_id"),
-        )
-    )
-    pages_side = pages.select(
-        hex_udf(F.col("x"), F.col("y")).alias("cell_id"),
-        F.col(key_col).alias("_url"),
-        F.col("x").alias("_qx"),
-        F.col("y").alias("_qy"),
-        F.col("is_panoramic").alias("_pano"),
-    )
-    dist = F.sqrt(
-        (F.col("_px") - F.col("_qx")) * (F.col("_px") - F.col("_qx"))
-        + (F.col("_py") - F.col("_qy")) * (F.col("_py") - F.col("_qy"))
-    )
-    cand = (
-        pages_side.join(cand_points, "cell_id")
-        .withColumn("_dist", dist)
-        .where(F.col("_dist") < F.lit(bound))
-        .select("point_id", "_dist", "_url", "_pano")
-    )
-    return _snap_reduce_join(points, cand, key_is_string, key_col, reduce)
+    cell = make_hex_cell_udf(size)(F.col("x"), F.col("y"))
+    return _snap(points, pages, hex_neighbors_col(cell), cell, bound, key_col, reduce)

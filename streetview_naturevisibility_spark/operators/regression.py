@@ -186,15 +186,16 @@ def _bspline_basis(x: np.ndarray, knots: np.ndarray, degree: int = 3) -> np.ndar
     t = np.concatenate([[knots[0]] * degree, knots, [knots[-1]] * degree])
     n_basis = len(t) - degree - 1
     B = np.zeros((len(x), n_basis))
-    # degree 0
-    for j in range(len(t) - 1):
+    # degree 0; intervals past n_basis are empty (repeated end knots).
+    # The last non-empty one ends at knots[-1] and is right-closed, so
+    # x == knots[-1] (where predict clips every larger x) has a basis.
+    for j in range(n_basis):
         left, right = t[j], t[j + 1]
-        if j == len(t) - 2:
+        if j == n_basis - 1:
             B0 = (x >= left) & (x <= right)
         else:
             B0 = (x >= left) & (x < right)
-        if j < n_basis:
-            B[:, j] = B0.astype(float)
+        B[:, j] = B0.astype(float)
     # elevate degree
     Bk = B.copy()
     for k in range(1, degree + 1):

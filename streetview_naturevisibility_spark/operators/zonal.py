@@ -14,10 +14,10 @@ Buffer semantics pinned as: grid cells whose CENTER lies within
 SURVEY.md F4 note), mirrored identically in the DuckDB oracles.
 
 Scale plan: the raster grid is the big side (a continental 10 m grid is
-~1e12 cells). Points (bounded) are exploded to 3x3 neighbor *meter
-bins* of size >= radius and broadcast; the grid computes its bin with
-codegen math and equi-joins unshuffled. The only shuffle carries
-per-(point, class) partial aggregates.
+~1e12 cells). ``geo.cells.ring_join`` explodes the (bounded) points to
+their 3x3 neighbor *meter bins* of size >= radius and broadcasts them;
+the grid computes its bin with codegen math and equi-joins unshuffled.
+The only shuffle carries per-(point, class) partial aggregates.
 """
 
 from __future__ import annotations
@@ -25,42 +25,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _bin_col(coord, bin_size: float):
-    return F.floor(coord / F.lit(bin_size)).cast("long")
-
-
-def _points_with_neighbor_bins(points: DataFrame, radius: float, bin_size: float) -> DataFrame:
-    bx = _bin_col(F.col("x"), bin_size)
-    by = _bin_col(F.col("y"), bin_size)
-    cells = []
-    for dx in (-1, 0, 1):
-        for dy in (-1, 0, 1):
-            cells.append(
-                F.struct(
-                    (bx + F.lit(dx)).alias("bin_x"), (by + F.lit(dy)).alias("bin_y")
-                )
-            )
-    return points.select(
-        "point_id",
-        F.col("x").alias("_px"),
-        F.col("y").alias("_py"),
-        F.explode(F.array(*cells)).alias("_bin"),
-    ).select("point_id", "_px", "_py", F.col("_bin.bin_x").alias("bin_x"), F.col("_bin.bin_y").alias("bin_y"))
+from ..geo.cells import ring_join
 
 
 def _candidates(points: DataFrame, grid: DataFrame, radius: float) -> DataFrame:
-    bin_size = max(radius, 1.0)
-    pts = F.broadcast(_points_with_neighbor_bins(points, radius, bin_size))
-    g = grid.withColumn("bin_x", _bin_col(F.col("cx"), bin_size)).withColumn(
-        "bin_y", _bin_col(F.col("cy"), bin_size)
-    )
+    """(point, grid cell) pairs with the cell center within ``radius``
+    (inclusive). Bins of edge ``max(radius, 1)`` m are packed like every
+    other cell id into one bigint ``(bin_x << 32) + bin_y`` — injective
+    while ``|bin_y| < 2^31`` (and ``|bin_x| < 2^31``) — and the key is
+    linear, so the 3x3 ring is nine constant offsets."""
+    size = F.lit(max(radius, 1.0))
+
+    def packed_bin(x, y):
+        bx = F.floor(x / size).cast("long")
+        return F.shiftleft(bx, 32) + F.floor(y / size).cast("long")
+
+    home = packed_bin(F.col("x"), F.col("y"))
+    ring = F.array(*[home + F.lit((dx << 32) + dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
     d2 = (F.col("cx") - F.col("_px")) * (F.col("cx") - F.col("_px")) + (
         F.col("cy") - F.col("_py")
     ) * (F.col("cy") - F.col("_py"))
-    return (
-        g.join(pts, ["bin_x", "bin_y"])
-        .where(d2 <= F.lit(float(radius * radius)))
+    return ring_join(points, ring, grid, packed_bin(F.col("cx"), F.col("cy"))).where(
+        d2 <= F.lit(float(radius * radius))
     )
 
 

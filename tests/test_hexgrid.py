@@ -138,18 +138,13 @@ class TestHexSnap:
             os.path.join(fixture_dir, "web_pages.parquet")
         ).drop("lon", "lat")
         pages = prepare_pages(raw, keep_text=False)
-        sq = (
-            knn_snap(points, pages, max_distance=50.0)
-            .orderBy("point_id")
-            .select("point_id", "page_url", "snap_distance", "is_panoramic")
-            .toPandas()
-        )
-        hx = (
-            knn_snap_hex(points, pages, max_distance=50.0)
-            .orderBy("point_id")
-            .select("point_id", "page_url", "snap_distance", "is_panoramic")
-            .toPandas()
-        )
+        sq_df = knn_snap(points, pages, max_distance=50.0)
+        hx_df = knn_snap_hex(points, pages, max_distance=50.0)
+        # one output schema: no hex cell column leaks out of the ring
+        assert hx_df.columns == sq_df.columns
+        cols = ["point_id", "page_url", "snap_distance", "is_panoramic"]
+        sq = sq_df.orderBy("point_id").select(*cols).toPandas()
+        hx = hx_df.orderBy("point_id").select(*cols).toPandas()
         assert (sq["point_id"] == hx["point_id"]).all()
         assert (sq["page_url"] == hx["page_url"]).all()
         a = sq["snap_distance"].to_numpy(float)

@@ -157,3 +157,51 @@ class TestZonal:
         )
         assert got["cell_count"].tolist() == [2, 1]
         assert got["pct"].tolist() == ["66.667%", "33.333%"]
+
+    def test_packed_bins_across_the_sign_boundary(self, spark):
+        """Points and cells straddle bin 0 on both axes (negative x and
+        y): the packed ``(bin_x << 32) + bin_y`` key and its constant
+        ring offsets must find exactly the brute-force candidates. One
+        cell sits at exactly ``radius`` (counted: the filter is
+        inclusive), one a hair beyond it (not counted)."""
+        radius = 25.0
+        pts = pd.DataFrame(
+            {
+                "point_id": [0, 1, 2, 3],
+                "x": [-3.0, 0.5, -26.0, 24.9],
+                "y": [4.0, -0.5, -24.0, -25.1],
+            }
+        )
+        gx, gy = np.meshgrid(np.arange(-72.5, 75.0, 7.5), np.arange(-71.0, 75.0, 6.5))
+        cx = np.concatenate([gx.ravel(), [-28.0, -3.0]])
+        cy = np.concatenate([gy.ravel(), [4.0, 4.0 + radius + 1e-9]])
+        value = np.sin(cx * 0.37 + cy * 0.11)
+        grid_pd = pd.DataFrame({"cx": cx, "cy": cy, "value": value})
+        grid_pd["class"] = (np.floor(value * 3) + 3).astype(np.int32)
+        points = spark.createDataFrame(pts)
+        grid = spark.createDataFrame(grid_pd)
+
+        d2 = (cx[None, :] - pts["x"].to_numpy()[:, None]) ** 2 + (
+            cy[None, :] - pts["y"].to_numpy()[:, None]
+        ) ** 2
+        inside = d2 <= radius * radius
+        assert inside[0, -2] and not inside[0, -1]
+
+        got = zonal_mean(points, grid, radius=radius).orderBy("point_id").toPandas()
+        exp = [round(float(np.maximum(value[m], 0.0).mean()), 3) for m in inside]
+        assert got["point_id"].tolist() == [0, 1, 2, 3]
+        assert np.abs(got["mean_ndvi"].to_numpy() - np.array(exp)).max() <= 0.001
+
+        hist = (
+            zonal_histogram(points, grid, "class", radius=radius)
+            .orderBy("point_id", "class")
+            .toPandas()
+        )
+        exp_rows = []
+        for pid, m in enumerate(inside):
+            classes, counts = np.unique(grid_pd["class"].to_numpy()[m], return_counts=True)
+            exp_rows += [(pid, int(c), int(n), n * 100.0 / m.sum()) for c, n in zip(classes, counts)]
+        got_rows = list(zip(hist["point_id"], hist["class"], hist["cell_count"]))
+        assert got_rows == [r[:3] for r in exp_rows]
+        pct = hist["pct"].str.rstrip("%").astype(float).to_numpy()
+        assert np.abs(pct - np.array([r[3] for r in exp_rows])).max() <= 0.0005

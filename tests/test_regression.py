@@ -7,6 +7,7 @@ import pytest
 
 from streetview_naturevisibility_spark.operators.regression import (
     LinearGAM1D,
+    _bspline_basis,
     fit_ols_normal_equations,
     gap_fill_cv_metrics,
     gap_fill_gam,
@@ -83,6 +84,13 @@ class TestGAM:
         assert np.sqrt(((pred - np.cos(x * 5)) ** 2).mean()) < 0.05
         # smoothing lambda chosen by GCV from the reference's grid
         assert gam.lam_ is not None
+        # the basis sums to 1 on [knots[0], knots[-1]], both ends included
+        xs = np.linspace(gam.knots_[0], gam.knots_[-1], 101)
+        assert np.allclose(_bspline_basis(xs, gam.knots_).sum(axis=1), 1.0)
+        # at and above the largest known x the fit holds its edge value
+        # (predict clips to the last knot) instead of dropping to 0.0
+        edge = np.cos(x.max() * 5)
+        assert np.abs(gam.predict(np.array([x.max(), x.max() + 0.1])) - edge).max() < 0.05
 
 
 def _sklearn_style_cv(x, y, folds=5):

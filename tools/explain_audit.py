@@ -44,6 +44,56 @@ def lazy(module):
         module.materialize = stored
 
 
+@contextmanager
+def aqe_off(spark):
+    """Plans built inside show every Exchange (AQE plans its stages at
+    run time, so an adaptive plan hides them until it executes)."""
+    key = "spark.sql.adaptive.enabled"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
+
+
+def _nodes(plan):
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
+
+
+def ring_join_shape(plan) -> tuple[bool, str]:
+    """``geo.cells.ring_join``'s shape in a non-adaptive executed plan:
+    exactly one BroadcastExchange, over the exploded ring (a Generate),
+    a hash join on one bigint key, and no Exchange between the streamed
+    side's scan and that join."""
+    bcasts = [n for n in _nodes(plan) if n.nodeName() == "BroadcastExchange"]
+    joins = [
+        n
+        for n in _nodes(plan)
+        if n.nodeName() == "BroadcastHashJoin"
+        and any(c.nodeName() == "Generate" for c in _nodes(n))
+    ]
+    checks = [
+        ("exactly 1 BroadcastExchange, over the exploded ring",
+         len(bcasts) == 1 and any(c.nodeName() == "Generate" for c in _nodes(bcasts[0]))),
+        ("the ring join keys on one bigint",
+         len(joins) == 1 and joins[0].leftKeys().size() == 1
+         and joins[0].leftKeys().apply(0).dataType().typeName() == "long"),
+    ]
+    if joins:
+        j = joins[0]
+        streamed = j.left() if j.buildSide().toString() == "BuildRight" else j.right()
+        checks.append(
+            ("no Exchange on the streamed (grid) side",
+             all(n.nodeName() != "Exchange" for n in _nodes(streamed)))
+        )
+    notes = [f"  - {'PASS' if ok else 'FAIL'}: {what}" for what, ok in checks]
+    return all(ok for _, ok in checks), "\n".join(notes)
+
+
 def check(name: str, plan: str, must: list[str], must_not: list[str]) -> tuple[bool, str]:
     ok = True
     notes = []
@@ -179,6 +229,35 @@ def main() -> None:
     )
     sections.append(
         ("Hex-ring kNN snap: broadcast join + hash reduce (H3-analog path)", hx, p6, ok6, n6)
+    )
+
+    # 6b. zonal: the same ring join as the snaps, on packed meter bins.
+    # AQE off so the exchanges are in the plan: the ring side is the one
+    # BroadcastExchange (over the exploded bins), the grid streams from
+    # its scan into the single-bigint hash join with no Exchange between
+    from streetview_naturevisibility_spark.operators.zonal import zonal_mean
+
+    with aqe_off(spark):
+        zm = zonal_mean(
+            D.spark_points(spark, sf_dir), D.spark_grid(spark, sf_dir), radius=D.ZONAL_RADIUS
+        )
+        p6b = plan_of(zm)
+        exec6b = zm._jdf.queryExecution().executedPlan()
+    ok6b, n6b = check(
+        "zonal ring join",
+        p6b,
+        must=["BroadcastHashJoin", "BroadcastExchange"],
+        must_not=["CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin"],
+    )
+    ok_ring, n_ring = ring_join_shape(exec6b)
+    sections.append(
+        (
+            "Zonal mean: ring side broadcast, grid never shuffled (packed-bin ring join)",
+            zm,
+            p6b,
+            ok6b and ok_ring,
+            n6b + "\n" + n_ring,
+        )
     )
 
     # 7. n-gram top-k: Catalyst derives the two-phase top-k
