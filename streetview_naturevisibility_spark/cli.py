@@ -46,15 +46,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators.aggregates import (
-    availability_score,
+    availability_report,
     build_intersection,
+    grand_total,
     gvi_per_road,
-    missing_images_metrics,
-    panoramic_images_metrics,
+    highway_report,
+    missing_images_report,
+    panoramic_report,
+    per_road_report,
+    road_aggregate_with_total,
     roads_with_avg_gvi,
     top5_highways,
-    unavailable_images_per_highway,
-    usability_score,
+    totals_frame,
+    usability_report,
 )
 from .operators.bloom import bloom_anti_join, build_bloom
 from .operators.corpus import (
@@ -68,14 +72,18 @@ from .operators.dedup import minhash_lsh_pairs
 from .operators.gvi import score_snapped_points
 from .operators.knn import knn_snap
 from .operators.regression import (
-    gam_cv_metrics,
+    LinearGAM1D,
+    gam_cv,
+    gam_fill,
     gap_fill_cv_metrics,
-    gap_fill_gam,
     gap_fill_linear,
+    known_xy,
 )
 from .operators.resume import (
     committed_stages,
+    parquet_rows,
     read_lineage,
+    read_parquet,
     read_stage,
     run_stage,
 )
@@ -101,7 +109,7 @@ from .operators.textops import (
 from .operators.tiling import prepare_pages
 from .operators.tokenize import bpe_token_count, train_bpe_from_corpus
 from .operators.zonal import zonal_mean
-from .session import get_spark, materialize
+from .session import fits, get_spark, materialize
 from .sources.layout import write_spatial_sorted
 from .sources.stac import landcover_percentages, ndvi_for_aoi
 
@@ -169,33 +177,45 @@ def cmd_metrics(args: argparse.Namespace) -> None:
     roads = spark.read.parquet(args.roads)
     root = args.checkpoint or os.path.join(args.results, "_ckpt")
     points = read_stage(spark, root, "sample_points")
-    gvi = spark.read.parquet(os.path.join(args.results, "gvi_points"))
-    inter, _ = materialize(build_intersection(gvi, points, roads))
+    gvi = read_parquet(spark, os.path.join(args.results, "gvi_points"))
+    inter = build_intersection(gvi, points, roads)
+    # one job: the stored road-level pre-aggregate answers the per-road
+    # and highway reports, and its grand-total row, observed as it is
+    # stored, the four one-row reports
+    road, st = materialize(
+        road_aggregate_with_total(inter), where=~F.col("_total"), **grand_total()
+    )
+    t = totals_frame(inter, st)
+    per_road = per_road_report(road)
+    if fits(spark, st["bytes"]):
+        # the stored frame has no size statistics: without the hint
+        # the left join shuffles the roads as well
+        per_road = F.broadcast(per_road)
 
     print("gvi-streets (per-road):")
-    roads_with_avg_gvi(roads, gvi_per_road(inter)).orderBy("road_id").show(20)
+    roads_with_avg_gvi(roads, per_road).orderBy("road_id").show(20)
     print("missing images:")
-    missing_images_metrics(inter).show()
+    missing_images_report(t).show()
     print("panoramic images:")
-    panoramic_images_metrics(inter).show()
+    panoramic_report(t).show()
     print("availability score:")
-    availability_score(inter).show()
+    availability_report(t).show()
     print("usability score:")
-    usability_score(inter).show()
+    usability_report(t).show()
     print("top-5 highway types by image count:")
-    top5_highways(unavailable_images_per_highway(inter)).show()
+    top5_highways(highway_report(road, t)).show()
 
 
 def cmd_gap_fill(args: argparse.Namespace) -> None:
     spark = get_spark(app_name="svnv-gapfill", master=args.master)
-    gvi = spark.read.parquet(os.path.join(args.results, "gvi_points"))
+    gvi = read_parquet(spark, os.path.join(args.results, "gvi_points"))
     root = args.checkpoint or os.path.join(args.results, "_ckpt")
     points = read_stage(spark, root, "sample_points")
     grid = spark.read.parquet(args.ndvi_grid)
     ndvi = zonal_mean(points, grid, radius=args.distance / 2.0)
     feats = gvi.join(ndvi, "point_id", "left").withColumnRenamed("mean_ndvi", "ndvi")
-    # four actions read the known features (CV metrics, fit, write, GAM
-    # CV): run the zonal candidate join and its groupBy once
+    # three actions read the known features (CV metrics, known-set
+    # collect, write): run the zonal candidate join and its groupBy once
     known_feats, _ = materialize(feats.where(F.col("ndvi").isNotNull()))
     # Collect the CV metrics row BEFORE choosing/fitting a model: the
     # GAM path fits eagerly on the driver (toPandas + np.quantile), so
@@ -215,20 +235,21 @@ def cmd_gap_fill(args: argparse.Namespace) -> None:
             "without an NDVI feature cannot be predicted)"
         )
         return
+    # the known set, collected once: the GAM fit and the GAM CV read it
+    x, y = known_xy(known_feats, feature="ndvi", target="gvi")
     # --model selects the filler (the reference evaluates both and its
     # README picks the GAM on its data; linear stays the default for
     # protocol continuity with rounds 1-3)
     if args.model == "gam":
         try:
-            out = gap_fill_gam(known_feats, feature="ndvi", target="gvi")
+            gam = LinearGAM1D().fit(x, y)
         except ValueError as e:  # the eager driver fit, before any write
             raise SystemExit(f"gap-fill --model gam: {e}")
+        out = gam_fill(known_feats.orderBy("point_id"), gam, feature="ndvi", target="gvi")
     else:
-        out = gap_fill_linear(known_feats, feature="ndvi", target="gvi")
-    out.orderBy("point_id").write.mode("overwrite").parquet(
-        os.path.join(args.results, "gvi_filled")
-    )
-    g = gam_cv_metrics(known_feats, feature="ndvi", target="gvi")
+        out = gap_fill_linear(known_feats, feature="ndvi", target="gvi").orderBy("point_id")
+    out.write.mode("overwrite").parquet(os.path.join(args.results, "gvi_filled"))
+    g = gam_cv(x, y)
     # the reference's model-selection printout
     # (predict_missing_gvi.py:81-85: cv=5 R2 / RMSE / AIC)
     if m.n_known < 5 or m.avg_rmse is None or m.avg_r2 is None or g["aic"] is None:
@@ -668,9 +689,9 @@ def cmd_curate(args: argparse.Namespace) -> None:
 
     curated = os.path.join(args.out, "curated")
     out.write.mode("overwrite").parquet(curated)
-    # from the written files' footers: counting `out` itself would
-    # re-run the whole funnel a second time
-    n_out = spark.read.parquet(curated).count()
+    # from the written files' footers, on the driver: counting `out`
+    # itself would re-run the whole funnel a second time
+    n_out = parquet_rows(curated)
     print(
         f"[curate] in={n_in} quality>={args.min_quality}: {n_quality} "
         f"exact-dedup: {n_exact} near-dedup: {n_near} sampled: {n_out}"
@@ -687,7 +708,7 @@ def cmd_layout(args: argparse.Namespace) -> None:
         df, args.out, x_col=args.x_col, y_col=args.y_col,
         num_files=args.num_files,
     )
-    n = spark.read.parquet(args.out).count()
+    n = parquet_rows(args.out)
     print(f"[layout] wrote {n} rows z-ordered by ({args.x_col}, {args.y_col}) -> {args.out}")
 
 

@@ -130,29 +130,33 @@ def gap_fill_cv_metrics(
     )
 
 
-def gam_cv_metrics(
-    df: DataFrame,
-    feature: str,
-    target: str,
-    folds: int = 5,
-    n_splines: int = 25,
-    order_col: str = "point_id",
-) -> dict:
+def known_xy(
+    df: DataFrame, feature: str, target: str, order_col: str = "point_id"
+) -> tuple[np.ndarray, np.ndarray]:
+    """The known rows' ``feature`` and ``target`` values in ``order_col``
+    order: the GAM fit and its CV read them in the same order on any
+    plan. The known set is bounded; it is sorted on the driver, since a
+    Spark sort would add a range-sampling job and a shuffle."""
+    known = (
+        df.where(F.col(target).isNotNull())
+        .select(order_col, feature, target)
+        .toPandas()
+        .sort_values(order_col, kind="stable")
+    )
+    return (
+        known[feature].to_numpy(dtype=np.float64),
+        known[target].to_numpy(dtype=np.float64),
+    )
+
+
+def gam_cv(x: np.ndarray, y: np.ndarray, folds: int = 5, n_splines: int = 25) -> dict:
     """k-fold CV RMSE + AIC for the GAM gap-fill (reference
-    predict_missing_gvi.py:128-144). The known set is bounded, so folds
-    fit driver-side (same contiguous KFold splits as
+    predict_missing_gvi.py:128-144) over the known values in order.
+    Folds fit driver-side (same contiguous KFold splits as
     ``gap_fill_cv_metrics``); each fold re-runs the lambda gridsearch
     like cross_val_score refitting the pygam estimator. If any fold
     cannot be fit (an empty test fold when n < folds, or a training
     split no lambda solves), every metric but ``n_known`` is None."""
-    known = (
-        df.where(F.col(target).isNotNull())
-        .select(order_col, feature, target)
-        .orderBy(order_col)
-        .toPandas()
-    )
-    x = known[feature].to_numpy(dtype=np.float64)
-    y = known[target].to_numpy(dtype=np.float64)
     n = len(y)
     null = {"n_known": n, "avg_rmse": None, "avg_r2": None, "aic": None}
     if n < folds:  # some test fold is empty
@@ -179,6 +183,18 @@ def gam_cv_metrics(
     valid_r2 = [v for v in r2s if v is not None]
     avg_r2 = float(np.mean(valid_r2)) if valid_r2 else None
     return {"n_known": n, "avg_rmse": avg_rmse, "avg_r2": avg_r2, "aic": float(aic)}
+
+
+def gam_cv_metrics(
+    df: DataFrame,
+    feature: str,
+    target: str,
+    folds: int = 5,
+    n_splines: int = 25,
+    order_col: str = "point_id",
+) -> dict:
+    """``gam_cv`` over the known rows of ``df``."""
+    return gam_cv(*known_xy(df, feature, target, order_col), folds, n_splines)
 
 
 def _bspline_basis(x: np.ndarray, knots: np.ndarray, degree: int = 3) -> np.ndarray:
@@ -270,37 +286,39 @@ class LinearGAM1D:
         return self._basis(np.asarray(x, dtype=np.float64)) @ self.coef_
 
 
-def gap_fill_gam(
-    df: DataFrame, feature: str, target: str, n_splines: int = 25
-) -> DataFrame:
-    """GAM gap-fill: fit on known rows (collected — the known set is
-    bounded), predict missing via a broadcast pandas UDF. Raises
-    ``ValueError`` when the known rows admit no fit."""
+def _gam_udf(gam: LinearGAM1D):
+    """A pandas UDF predicting with the fitted ``gam``."""
     from pyspark.sql.types import DoubleType
-
-    # point_id order: B'B sums the same rows in the same order on any plan
-    known = df.where(F.col(target).isNotNull()).orderBy("point_id")
-    known = known.select(feature, target).toPandas()
-    gam = LinearGAM1D(n_splines=n_splines).fit(
-        known[feature].to_numpy(), known[target].to_numpy()
-    )
-    knots = gam.knots_
-    coef = gam.coef_
-    degree = gam.degree
 
     @F.pandas_udf(DoubleType())
     def gam_predict(x: pd.Series) -> pd.Series:
-        model = LinearGAM1D(n_splines=n_splines, degree=degree)
-        model.knots_ = knots
-        model.coef_ = coef
-        return pd.Series(model.predict(x.to_numpy()))
+        return pd.Series(gam.predict(x.to_numpy()))
 
+    return gam_predict
+
+
+def gam_fill(df: DataFrame, gam: LinearGAM1D, feature: str, target: str) -> DataFrame:
+    """``df`` + a ``gvi_filled`` column: the known ``target``, else the
+    fitted ``gam``'s prediction from ``feature`` (a broadcast pandas
+    UDF). Sort ``df`` before, not after: a sort above the UDF samples
+    its input, and that job evaluates the UDF a second time."""
     return df.withColumn(
         "gvi_filled",
         F.when(F.col(target).isNotNull(), F.col(target)).otherwise(
-            gam_predict(F.col(feature))
+            _gam_udf(gam)(F.col(feature))
         ),
     )
+
+
+def gap_fill_gam(
+    df: DataFrame, feature: str, target: str, n_splines: int = 25
+) -> DataFrame:
+    """GAM gap-fill: fit on the known rows (collected in point_id
+    order, so B'B sums the same rows in the same order on any plan),
+    predict the missing ones with ``gam_fill``. Raises ``ValueError``
+    when the known rows admit no fit."""
+    gam = LinearGAM1D(n_splines=n_splines).fit(*known_xy(df, feature, target))
+    return gam_fill(df, gam, feature, target)
 
 
 def fit_ols_normal_equations(df: DataFrame, features: list[str], target: str) -> np.ndarray:

@@ -17,6 +17,11 @@ the committed files are the whole record:
 - ``read_lineage`` lists the committed parquet files on the driver and
   takes each file's row count from its footer (metadata only). Nothing
   is written from executors;
+- ``read_parquet`` (and so ``read_stage``) reads a directory Spark
+  wrote with the Spark schema stored in its first footer, read on the
+  driver: without a schema, ``spark.read.parquet`` runs a Spark job
+  over the footers to infer one. ``parquet_rows`` sums the footers'
+  row counts;
 - ``committed_stages`` lists the committed stages whose names share a
   prefix (the slices of a chunked run).
 
@@ -27,12 +32,17 @@ filesystem handle resolve it to the same directory.
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
 from urllib.parse import urlsplit
 
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# the footer key under which Spark stores the schema of the rows it wrote
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _root(root: str) -> tuple[str, pafs.FileSystem, str]:
@@ -47,6 +57,16 @@ def _stage_data(root: str, stage: str) -> tuple[str, pafs.FileSystem, str]:
     """``<root>/<stage>/data`` as (Spark path, filesystem, path on it)."""
     root, fs, base = _root(root)
     return f"{root}/{stage}/data", fs, f"{base}/{stage}/data"
+
+
+def _parquet_files(fs: pafs.FileSystem, path: str) -> list[pafs.FileInfo]:
+    """The parquet files directly under ``path``, sorted by name (none
+    when ``path`` does not exist)."""
+    files = fs.get_file_info(pafs.FileSelector(path, allow_not_found=True))
+    return sorted(
+        (f for f in files if f.is_file and f.base_name.endswith(".parquet")),
+        key=lambda f: f.base_name,
+    )
 
 
 def _committed(fs: pafs.FileSystem, path: str) -> bool:
@@ -81,22 +101,43 @@ def committed_stages(root: str, prefix: str) -> list[str]:
     )
 
 
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` of a parquet directory. When Spark
+    wrote it, the schema comes from the first file's footer, read on
+    the driver, so Spark runs no job to infer it; parquet other tools
+    wrote carries no Spark schema and keeps Spark's inference."""
+    uri, fs, base = _root(path)
+    files = _parquet_files(fs, base)
+    meta = pq.read_metadata(files[0].path, filesystem=fs).metadata if files else None
+    reader = spark.read
+    if meta and _SPARK_SCHEMA in meta:
+        reader = reader.schema(StructType.fromJson(json.loads(meta[_SPARK_SCHEMA])))
+    return reader.parquet(uri)
+
+
 def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:
     """A committed stage, read back without the compute fallback."""
-    return spark.read.parquet(_stage_data(root, stage)[0])
+    return read_parquet(spark, _stage_data(root, stage)[0])
+
+
+def parquet_rows(path: str) -> int:
+    """The rows of a parquet directory, summed from its footers."""
+    _, fs, base = _root(path)
+    return sum(
+        pq.read_metadata(f.path, filesystem=fs).num_rows
+        for f in _parquet_files(fs, base)
+    )
 
 
 def read_lineage(root: str, stage: str) -> list[dict]:
     """One ``{stage, file, rows}`` record per committed parquet file of
     the stage, ``rows`` read from the file's footer."""
     _, fs, path = _stage_data(root, stage)
-    files = fs.get_file_info(pafs.FileSelector(path, allow_not_found=True))
     return [
         {
             "stage": stage,
             "file": f.base_name,
             "rows": pq.read_metadata(f.path, filesystem=fs).num_rows,
         }
-        for f in sorted(files, key=lambda f: f.base_name)
-        if f.is_file and f.base_name.endswith(".parquet")
+        for f in _parquet_files(fs, path)
     ]

@@ -1,4 +1,5 @@
 import contextlib
+import itertools
 import os
 import sys
 
@@ -49,6 +50,28 @@ def no_broadcast(spark):
             spark.conf.set(key, saved)
 
     return off
+
+
+_job_groups = itertools.count()
+
+
+@pytest.fixture
+def jobs_in(spark):
+    """A callable: ``jobs_in(fn)`` runs ``fn()`` under a Spark job group
+    of its own and returns its result and the number of jobs it ran."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        name = f"jobs-in-{next(_job_groups)}"
+        sc.setJobGroup(name, name)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(name))
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -1,11 +1,20 @@
 """Checkpoint/lineage/resume tests."""
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from streetview_naturevisibility_spark.operators.resume import (
+    parquet_rows,
     read_lineage,
+    read_parquet,
+    read_stage,
     run_stage,
 )
+
+PIPELINE_STAGES = ("sample_points", "pages_prepared", "snapped", "gvi_points")
 
 
 class TestResume:
@@ -55,6 +64,36 @@ class TestResume:
         assert out.count() == 300
         assert sum(r["rows"] for r in read_lineage(root, "s")) == 300
         assert not (tmp_path / "file:").exists()
+
+
+class TestReadBack:
+    def test_read_stage_takes_the_footer_schema(self, spark, pipeline_out, jobs_in):
+        """Every stage of a pipeline run reads back with the schema and
+        rows ``spark.read.parquet`` infers, and without a Spark job."""
+        root = os.path.join(pipeline_out, "_ckpt")
+        for stage in PIPELINE_STAGES:
+            got, n_jobs = jobs_in(lambda: read_stage(spark, root, stage))
+            assert n_jobs == 0, stage
+            want = spark.read.parquet(os.path.join(root, stage, "data"))
+            assert got.schema == want.schema, stage
+            assert got.collect() == want.collect(), stage
+            assert parquet_rows(os.path.join(root, stage, "data")) == want.count()
+
+    def test_parquet_written_by_pyarrow_is_inferred(self, spark, tmp_path, jobs_in):
+        """Parquet without a Spark schema in its footer keeps Spark's
+        inference (a job over the footers)."""
+        d = tmp_path / "pa"
+        d.mkdir()
+        pq.write_table(
+            pa.table({"k": pa.array([1, 2, 3], pa.int32()), "s": ["a", None, "c"]}),
+            d / "part-0.parquet",
+        )
+        got, n_jobs = jobs_in(lambda: read_parquet(spark, str(d)))
+        assert n_jobs >= 1
+        want = spark.read.parquet(str(d))
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        assert parquet_rows(str(d)) == 3
 
 
 class TestStreaming:
