@@ -13,9 +13,13 @@ Subcommands (reference analogs cited):
 - ``pipeline``  — main_script.py end-to-end: sample points -> tile ->
   kNN snap -> GVI -> per-road aggregate, each stage checkpointed
   (resume = rerun the same command); prints each stage's files and
-  rows, read from the parquet footers. ``--begin/--end`` slices are
-  checkpointed one stage each, and the outputs hold every slice run
-  into the checkpoint root so far.
+  rows, read from the parquet footers. A stage stores only what a
+  later stage reads: ``pages_prepared`` the page coordinates and cells
+  (no text), ``snapped`` the six columns the scorer reads, and the
+  ``gvi_points`` stage parses the text of the snapped-to pages alone
+  (a semi-join of the raw pages on the hit urls). ``--begin/--end``
+  slices are checkpointed one stage each, and the outputs hold every
+  slice run into the checkpoint root so far.
 - ``metrics``   — scripts/mean_gvi_street.py + results_metrics.py
   reporting chain over a finished pipeline output.
 - ``gap-fill``  — predict_missing_gvi.py: zonal NDVI + OLS fill.
@@ -31,6 +35,10 @@ Subcommands (reference analogs cited):
   counts and the LSH bucket-drop metrics.
 - ``layout``    — rewrite a pages/points parquet Z-ordered by
   (tile_x, tile_y) so bbox scans skip files.
+
+Every parquet input is read with ``resume.read_parquet``: its schema
+comes from the first footer on the driver, so reading parquet that
+Spark or pyarrow wrote runs no schema-inference job.
 
 On a real cluster drop ``--master``; on the sandbox it defaults to
 local[$SPARK_GRAFT_CPUS].
@@ -106,7 +114,7 @@ from .operators.textops import (
     train_bigram_lm,
     train_quality_classifier,
 )
-from .operators.tiling import prepare_pages
+from .operators.tiling import hit_pages, prepare_pages
 from .operators.tokenize import bpe_token_count, train_bpe_from_corpus
 from .operators.zonal import zonal_mean
 from .session import fits, get_spark, materialize
@@ -116,21 +124,27 @@ from .sources.stac import landcover_percentages, ndvi_for_aoi
 
 def cmd_pipeline(args: argparse.Namespace) -> None:
     spark = get_spark(app_name="svnv-pipeline", master=args.master)
-    roads = spark.read.parquet(args.roads)
-    pages_raw = spark.read.parquet(args.pages)
+    roads = read_parquet(spark, args.roads)
+    pages_raw = read_parquet(spark, args.pages)
     root = args.checkpoint or os.path.join(args.out, "_ckpt")
 
     points = run_stage(
         spark, root, "sample_points", lambda: sample_points(roads, args.spacing)
     )
+    # each stage stores only what a later stage reads: the snap needs
+    # the pages' coordinates, the scorer the points' snap columns, and
+    # the text is parsed in the gvi stage for the hit pages alone
     pages = run_stage(
-        spark, root, "pages_prepared", lambda: prepare_pages(pages_raw)
+        spark, root, "pages_prepared",
+        lambda: prepare_pages(pages_raw, keep_text=False),
     )
     snapped = run_stage(
         spark,
         root,
         "snapped",
-        lambda: knn_snap(points, pages, max_distance=args.max_distance),
+        lambda: knn_snap(points, pages, max_distance=args.max_distance).select(
+            "point_id", "lon", "lat", "page_url", "snap_distance", "is_panoramic"
+        ),
     )
     gvi_sel = snapped
     gvi_stage = "gvi_points"
@@ -148,7 +162,9 @@ def cmd_pipeline(args: argparse.Namespace) -> None:
         spark,
         root,
         gvi_stage,
-        lambda: score_snapped_points(gvi_sel, pages, args.cut_by_road_centres),
+        lambda: score_snapped_points(
+            gvi_sel, hit_pages(pages_raw, gvi_sel), args.cut_by_road_centres
+        ),
     )
     if ranged:
         # the outputs hold every slice committed under this root so far,
@@ -174,7 +190,7 @@ def cmd_pipeline(args: argparse.Namespace) -> None:
 
 def cmd_metrics(args: argparse.Namespace) -> None:
     spark = get_spark(app_name="svnv-metrics", master=args.master)
-    roads = spark.read.parquet(args.roads)
+    roads = read_parquet(spark, args.roads)
     root = args.checkpoint or os.path.join(args.results, "_ckpt")
     points = read_stage(spark, root, "sample_points")
     gvi = read_parquet(spark, os.path.join(args.results, "gvi_points"))
@@ -211,7 +227,7 @@ def cmd_gap_fill(args: argparse.Namespace) -> None:
     gvi = read_parquet(spark, os.path.join(args.results, "gvi_points"))
     root = args.checkpoint or os.path.join(args.results, "_ckpt")
     points = read_stage(spark, root, "sample_points")
-    grid = spark.read.parquet(args.ndvi_grid)
+    grid = read_parquet(spark, args.ndvi_grid)
     ndvi = zonal_mean(points, grid, radius=args.distance / 2.0)
     feats = gvi.join(ndvi, "point_id", "left").withColumnRenamed("mean_ndvi", "ndvi")
     # three actions read the known features (CV metrics, known-set
@@ -310,7 +326,7 @@ def cmd_stac_landcover(args: argparse.Namespace) -> None:
     esa-worldcover item of a LOCAL static STAC catalog, euclidean
     buffer of --radius meters."""
     spark = get_spark(app_name="svnv-stac-landcover", master=args.master)
-    points = spark.read.parquet(args.points)
+    points = read_parquet(spark, args.points)
     out, item = landcover_percentages(
         spark, args.catalog, points, radius=args.radius
     )
@@ -348,7 +364,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         raise SystemExit("--dsir-target requires --dsir-keep")
 
     spark = get_spark(app_name="svnv-curate", master=args.master)
-    docs = spark.read.parquet(args.docs)
+    docs = read_parquet(spark, args.docs)
     n_in = docs.count()
 
     def rewrite(out, text_col, where=None, **metrics):
@@ -394,7 +410,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         n_in = int(st["kept"] or 0)
 
     if args.blocklist:
-        blk = spark.read.parquet(args.blocklist)
+        blk = read_parquet(spark, args.blocklist)
         n_before = n_in
         docs, st = materialize(decontaminate(docs, blk, n=args.decontam_n))
         n_in = st["rows"]
@@ -474,7 +490,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # Docs with NO score (fewer than 2 tokens -> NULL mean_logprob)
         # are KEPT, per score_bigram_logprob's contract: an unscorable
         # doc is not a bad doc — the quality filter already judged it.
-        ref = spark.read.parquet(args.lm_ref)
+        ref = read_parquet(spark, args.lm_ref)
         uni, bi, v = train_bigram_lm(ref)
         lp = score_bigram_logprob(kept_q, uni, bi, v)
         kept_q, st = materialize(
@@ -496,7 +512,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # driver-side on (reference sample) vs (deterministic sample of
         # this corpus), scored distributed. Unscorable NULL-text docs
         # are KEPT (the LM-filter contract).
-        ref = spark.read.parquet(args.clf_ref)
+        ref = read_parquet(spark, args.clf_ref)
         pos = [r.text for r in ref.where(F.col("text").isNotNull())
                .orderBy("doc_id").limit(args.clf_train_n).collect()]
         neg = [r.text for r in kept_q.where(F.col("text").isNotNull())
@@ -538,7 +554,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # pre-probe (operators/bloom.py) — same survivors, the done
         # set is scanned, never shuffled; the filter would be built
         # once and reused across batches on a real deployment.
-        done = spark.read.parquet(args.done_digests).select("digest")
+        done = read_parquet(spark, args.done_digests).select("digest")
         # a pre-existing `digest` column on the docs would make the
         # rename below ambiguous — the funnel's digest is its own
         if "digest" in exact.columns:
@@ -546,7 +562,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         keyed = exact.withColumn("_digest", F.md5(F.col("text")))
         if args.done_bloom:
             # from the done set's parquet footers
-            cap = spark.read.parquet(args.done_digests).count()
+            cap = read_parquet(spark, args.done_digests).count()
             bloom = build_bloom(done, "digest", capacity=max(cap, 1))
             exact = bloom_anti_join(
                 keyed.withColumnRenamed("_digest", "digest"),
@@ -592,7 +608,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # cluster near-duplicate are dropped. Docs WITHOUT an
         # embedding row are kept (an unembedded doc is not a dup —
         # same keep-on-unscorable contract as the LM filter).
-        emb = spark.read.parquet(args.semdedup)
+        emb = read_parquet(spark, args.semdedup)
         big = args.semdedup_lists > 32
         sd = semantic_dedup(
             emb,
@@ -616,7 +632,7 @@ def cmd_curate(args: argparse.Namespace) -> None:
         # hashed-n-gram profile best matches the target domain. Runs
         # AFTER dedup (the published setup selects from the deduped
         # pool) and before sampling/budget mixing.
-        tgt = spark.read.parquet(args.dsir_target)
+        tgt = read_parquet(spark, args.dsir_target)
         out, st = materialize(
             dsir_select(
                 out, tgt, n=args.dsir_keep, n_buckets=args.dsir_buckets
@@ -703,7 +719,7 @@ def cmd_layout(args: argparse.Namespace) -> None:
     (tile_x, tile_y): disjoint per-file morton ranges + tight tile
     min/max stats, so bbox scans skip files (sources/layout.py)."""
     spark = get_spark(app_name="svnv-layout", master=args.master)
-    df = spark.read.parquet(args.input)
+    df = read_parquet(spark, args.input)
     write_spatial_sorted(
         df, args.out, x_col=args.x_col, y_col=args.y_col,
         num_files=args.num_files,

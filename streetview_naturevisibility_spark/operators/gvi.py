@@ -66,12 +66,16 @@ def score_snapped_points(
     cut_by_road_centres: bool = False,
 ) -> DataFrame:
     """snapped(point_id, lon, lat, page_url, snap_distance,
-    is_panoramic, ...) x pages(url, text) -> GVI_POINTS schema.
+    is_panoramic, ...) x pages(url, text[, warc_ts]) -> GVI_POINTS
+    schema.
 
     The text lookup is the reference's Graph-API metadata hop
     (process_data.py:312-319) collapsed into an ordinary left equi-join
-    against the pages table (SURVEY.md J9); pages is the big side so the
-    snapped points (bounded) are broadcast.
+    against the pages table (SURVEY.md J9); pages may be the big side
+    so the snapped points (bounded) are broadcast. ``cli pipeline``
+    passes the pages of the hit urls only (``tiling.hit_pages``), with
+    every snapshot of each; any superset of those rows, such as all of
+    ``prepare_pages``' output, scores the same.
 
     Urls are NOT assumed unique in pages: a crawl corpus plausibly
     holds several snapshots of one url (distinct warc_ts), and a

@@ -17,9 +17,11 @@ the committed files are the whole record:
 - ``read_lineage`` lists the committed parquet files on the driver and
   takes each file's row count from its footer (metadata only). Nothing
   is written from executors;
-- ``read_parquet`` (and so ``read_stage``) reads a directory Spark
-  wrote with the Spark schema stored in its first footer, read on the
-  driver: without a schema, ``spark.read.parquet`` runs a Spark job
+- ``read_parquet`` (and so ``read_stage``) reads a parquet file or
+  directory with a schema taken from its first footer on the driver:
+  the Spark schema Spark stored there, or else the Arrow schema other
+  writers (pyarrow, pandas) stored, mapped to the schema Spark would
+  infer. Without a schema, ``spark.read.parquet`` runs a Spark job
   over the footers to infer one. ``parquet_rows`` sums the footers'
   row counts;
 - ``committed_stages`` lists the committed stages whose names share a
@@ -36,10 +38,11 @@ import json
 from pathlib import Path
 from urllib.parse import urlsplit
 
+import pyarrow as pa
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import types as T
 
 # the footer key under which Spark stores the schema of the rows it wrote
 _SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
@@ -60,8 +63,12 @@ def _stage_data(root: str, stage: str) -> tuple[str, pafs.FileSystem, str]:
 
 
 def _parquet_files(fs: pafs.FileSystem, path: str) -> list[pafs.FileInfo]:
-    """The parquet files directly under ``path``, sorted by name (none
-    when ``path`` does not exist)."""
+    """``path`` itself when it is a file, else the parquet files
+    directly under it, sorted by name (none when ``path`` does not
+    exist)."""
+    info = fs.get_file_info(path)
+    if info.is_file:
+        return [info]
     files = fs.get_file_info(pafs.FileSelector(path, allow_not_found=True))
     return sorted(
         (f for f in files if f.is_file and f.base_name.endswith(".parquet")),
@@ -101,17 +108,81 @@ def committed_stages(root: str, prefix: str) -> list[str]:
     )
 
 
+# Arrow types whose Spark type does not depend on the field, as
+# Spark's parquet schema converter maps the types pyarrow writes them as
+_ARROW_TO_SPARK = {
+    pa.bool_(): T.BooleanType(),
+    pa.int8(): T.ByteType(),
+    pa.int16(): T.ShortType(),
+    pa.int32(): T.IntegerType(),
+    pa.int64(): T.LongType(),
+    pa.float32(): T.FloatType(),
+    pa.float64(): T.DoubleType(),
+    pa.string(): T.StringType(),
+    pa.large_string(): T.StringType(),
+    pa.binary(): T.BinaryType(),
+    pa.large_binary(): T.BinaryType(),
+    pa.date32(): T.DateType(),
+}
+
+
+def _spark_type(t: pa.DataType) -> T.DataType | None:
+    """The Spark type Spark 4.1 infers (with its default parquet
+    settings) for a column pyarrow wrote as Arrow type ``t``, every
+    level nullable as a file source reads it; None for a type not
+    mapped here (unsigned, map, dictionary, nanosecond time...)."""
+    if t in _ARROW_TO_SPARK:
+        return _ARROW_TO_SPARK[t]
+    if pa.types.is_timestamp(t) and t.unit in ("ms", "us"):
+        # a zone-less timestamp is stored isAdjustedToUTC=false, which
+        # spark.sql.parquet.inferTimestampNTZ.enabled reads as NTZ
+        return T.TimestampType() if t.tz else T.TimestampNTZType()
+    if pa.types.is_decimal128(t):
+        return T.DecimalType(t.precision, t.scale)
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        e = _spark_type(t.value_type)
+        return None if e is None else T.ArrayType(e, True)
+    if pa.types.is_struct(t):
+        fields = [_spark_field(t.field(i)) for i in range(t.num_fields)]
+        return None if None in fields else T.StructType(fields)
+    return None
+
+
+def _spark_field(f: pa.Field) -> T.StructField | None:
+    t = _spark_type(f.type)
+    return None if t is None else T.StructField(f.name, t, True)
+
+
+def _footer_schema(spark: SparkSession, meta: pq.FileMetaData) -> T.StructType | None:
+    """The schema Spark reads a file with, from its footer: the Spark
+    schema Spark stored there, else the stored Arrow schema mapped
+    field by field; None when a field does not map, or when a parquet
+    setting the mapping assumes at its default was changed."""
+    kv = meta.metadata or {}
+    if _SPARK_SCHEMA in kv:
+        return T.StructType.fromJson(json.loads(kv[_SPARK_SCHEMA]))
+    conf = spark.conf
+    if (
+        conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") != "true"
+        or conf.get("spark.sql.parquet.binaryAsString", "false") != "false"
+    ):
+        return None
+    fields = [_spark_field(f) for f in meta.schema.to_arrow_schema()]
+    return None if None in fields else T.StructType(fields)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` of a parquet directory. When Spark
-    wrote it, the schema comes from the first file's footer, read on
-    the driver, so Spark runs no job to infer it; parquet other tools
-    wrote carries no Spark schema and keeps Spark's inference."""
+    """``spark.read.parquet(path)`` of a parquet file or directory,
+    with the schema of its first file's footer, read on the driver, so
+    Spark runs no job to infer it. A footer that does not map
+    (``_footer_schema``) keeps Spark's inference."""
     uri, fs, base = _root(path)
     files = _parquet_files(fs, base)
-    meta = pq.read_metadata(files[0].path, filesystem=fs).metadata if files else None
-    reader = spark.read
-    if meta and _SPARK_SCHEMA in meta:
-        reader = reader.schema(StructType.fromJson(json.loads(meta[_SPARK_SCHEMA])))
+    schema = (
+        _footer_schema(spark, pq.read_metadata(files[0].path, filesystem=fs))
+        if files else None
+    )
+    reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(uri)
 
 

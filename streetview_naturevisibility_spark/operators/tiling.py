@@ -13,6 +13,9 @@ no shuffle:
 ``.explain`` shows exactly one ArrowEvalPython node and a codegen span
 for the tile math; filters on url/warc_ts push down to the parquet
 scan below the UDF.
+
+``hit_pages`` is the text half: the same kernel over the pages a point
+snapped to, after a semi-join on their urls.
 """
 
 from __future__ import annotations
@@ -90,3 +93,24 @@ def prepare_pages(
     fields = (["text"] if keep_text else []) + ["lon", "lat", "x", "y"]
     df = df.select(*keep, *[F.col(f"_p.{f}").alias(f) for f in fields])
     return with_cell(df, "lon", "lat", zoom)
+
+
+def hit_pages(pages_raw: DataFrame, snapped: DataFrame) -> DataFrame:
+    """pages(url, html[, warc_ts]) x snapped(page_url) -> (url[,
+    warc_ts], text) for every snapshot of each url a point snapped to:
+    ``prepare_pages``' text for those rows only, so the Python parse
+    of the text stays off the bulk scan (the reference's per-hit
+    metadata hop, process_data.py:312-319).
+
+    The hit urls are bounded by the points and are not deduplicated:
+    a parquet-backed ``snapped`` carries size statistics, so Spark's
+    own threshold broadcasts them while they are small and shuffles
+    the semi-join once they are not."""
+    keep = [c for c in ("url", "warc_ts") if c in pages_raw.columns]
+    urls = snapped.where(F.col("page_url") != "").select(F.col("page_url").alias("url"))
+    parse_page = make_page_parser(keep_text=True)
+    return (
+        pages_raw.select(*keep, "html")
+        .join(urls, "url", "left_semi")
+        .select(*keep, parse_page(F.col("html"))["text"].alias("text"))
+    )

@@ -279,11 +279,13 @@ class TestParser:
         funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
 
         def is_parquet_read(node):
-            return (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
+            # spark.read.parquet(...), or resume.read_parquet(spark, ...),
+            # the same read with the footer's schema
+            return isinstance(node, ast.Call) and (
+                isinstance(node.func, ast.Attribute)
                 and node.func.attr == "parquet"
                 and ast.unparse(node.func.value) == "spark.read"
+                or getattr(node.func, "id", None) == "read_parquet"
             )
 
         curate = funcs["cmd_curate"]

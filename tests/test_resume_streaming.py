@@ -79,13 +79,62 @@ class TestReadBack:
             assert got.collect() == want.collect(), stage
             assert parquet_rows(os.path.join(root, stage, "data")) == want.count()
 
+    def test_parquet_written_by_pyarrow_maps_without_a_job(
+        self, spark, fixture_dir, tmp_path, jobs_in
+    ):
+        """Parquet other writers made (the CLI fixture tables, the
+        benchmark's GVI and curation inputs, a directory of pyarrow
+        files) reads back with the schema and rows ``spark.read.parquet``
+        infers, and without a Spark job."""
+        import importlib.util
+
+        spec = importlib.util.spec_from_file_location(
+            "perfbench_inputs",
+            os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "inputs.py"),
+        )
+        inputs = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(inputs)
+        d = tmp_path / "dir"
+        d.mkdir()
+        for i in range(2):
+            pq.write_table(
+                pa.table({
+                    "ts": pa.array([i, None], pa.timestamp("us")),
+                    "utc": pa.array([i, 2], pa.timestamp("ms", tz="UTC")),
+                    "b": pa.array([True, None]),
+                    "i": pa.array([i, 3], pa.int16()),
+                    "dec": pa.array([None, None], pa.decimal128(7, 2)),
+                    "v": pa.array([[1.5], None], pa.list_(pa.float32())),
+                    "st": pa.array([{"k": "a", "n": [b"x"]}, None]),
+                    "day": pa.array([18000, i], pa.date32()),
+                }),
+                d / f"part-{i}.parquet",
+            )
+        paths = [
+            *(os.path.join(fixture_dir, f) for f in sorted(os.listdir(fixture_dir))),
+            *inputs.gvi_inputs(str(tmp_path / "gvi"), 1, 20, 50)["paths"].values(),
+            *inputs.curate_inputs(str(tmp_path / "cur"), 1, 200)["paths"].values(),
+            str(d),
+        ]
+        for p in paths:
+            got, n_jobs = jobs_in(lambda: read_parquet(spark, p))
+            assert n_jobs == 0, p
+            want = spark.read.parquet(p)
+            assert got.schema == want.schema, p
+            assert got.collect() == want.collect(), p
+
     def test_parquet_written_by_pyarrow_is_inferred(self, spark, tmp_path, jobs_in):
-        """Parquet without a Spark schema in its footer keeps Spark's
+        """Parquet whose footer holds a type the driver-side mapping
+        does not cover (here unsigned ints and a map) keeps Spark's
         inference (a job over the footers)."""
         d = tmp_path / "pa"
         d.mkdir()
         pq.write_table(
-            pa.table({"k": pa.array([1, 2, 3], pa.int32()), "s": ["a", None, "c"]}),
+            pa.table({
+                "k": pa.array([1, 2, 3], pa.uint32()),
+                "s": ["a", None, "c"],
+                "m": pa.array([[("a", 1)], None, []], pa.map_(pa.string(), pa.int64())),
+            }),
             d / "part-0.parquet",
         )
         got, n_jobs = jobs_in(lambda: read_parquet(spark, str(d)))

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import io
 import os
+import shutil
 import sys
 from contextlib import contextmanager, redirect_stdout
 
@@ -90,6 +91,44 @@ def ring_join_shape(plan) -> tuple[bool, str]:
             ("no Exchange on the streamed (grid) side",
              all(n.nodeName() != "Exchange" for n in _nodes(streamed)))
         )
+    notes = [f"  - {'PASS' if ok else 'FAIL'}: {what}" for what, ok in checks]
+    return all(ok for _, ok in checks), "\n".join(notes)
+
+
+def gvi_stage_shape(scored, prepared) -> tuple[bool, str]:
+    """The pipeline's text reads in non-adaptive executed plans: in
+    ``scored`` (the ``gvi_points`` stage) every text-parse
+    ArrowEvalPython sits above the hit-url LeftSemi join, so the parse
+    never runs over the whole pages scan; in ``prepared`` (the
+    ``pages_prepared`` stage) the parse struct has no ``text`` field."""
+
+    def parses(plan):
+        return [
+            n for n in _nodes(plan)
+            if n.nodeName() == "ArrowEvalPython" and "parse_page" in n.simpleString(100)
+        ]
+
+    def semi_join_below(n):
+        return any(
+            c.nodeName().endswith("Join") and c.joinType().toString() == "LeftSemi"
+            for c in _nodes(n)
+        )
+
+    def struct_types(n):
+        r = n.resultAttrs()
+        return [r.apply(i).dataType().simpleString() for i in range(r.size())]
+
+    text_parses, coord_parses = parses(scored), parses(prepared)
+    checks = [
+        ("the gvi stage parses text in exactly 1 ArrowEvalPython",
+         len(text_parses) == 1
+         and all("text:" in t for t in struct_types(text_parses[0]))),
+        ("the text parse sits above the hit-url LeftSemi join, not over the pages scan",
+         bool(text_parses) and all(semi_join_below(n) for n in text_parses)),
+        ("the pages_prepared parse struct has no text field",
+         len(coord_parses) == 1
+         and all("text:" not in t for t in struct_types(coord_parses[0]))),
+    ]
     notes = [f"  - {'PASS' if ok else 'FAIL'}: {what}" for what, ok in checks]
     return all(ok for _, ok in checks), "\n".join(notes)
 
@@ -309,10 +348,53 @@ def main() -> None:
         )
     )
 
-    # 9. z-ordered scan: the morton interval predicate reaches the
-    # parquet scan as a pushed filter (row-group min/max skipping)
+    # 6c. the pipeline's gvi stage: the text is parsed only for the
+    # pages a point snapped to, and the coordinate stage carries none
     import tempfile
 
+    from streetview_naturevisibility_spark.fixtures.generate import write_fixtures
+    from streetview_naturevisibility_spark.operators.gvi import score_snapped_points
+    from streetview_naturevisibility_spark.operators.resume import read_parquet, run_stage
+    from streetview_naturevisibility_spark.operators.sampling import sample_points
+    from streetview_naturevisibility_spark.operators.tiling import hit_pages, prepare_pages
+
+    _gtmp = tempfile.mkdtemp(prefix="explain_gvi_")
+    fx = write_fixtures(os.path.join(_gtmp, "fx"), n_pages=200, n_roads=20)
+    root = os.path.join(_gtmp, "ckpt")
+    raw6c = read_parquet(spark, fx["web_pages"])
+    pts6c = run_stage(
+        spark, root, "sample_points",
+        lambda: sample_points(read_parquet(spark, fx["roads"]), 50),
+    )
+    pages6c = run_stage(
+        spark, root, "pages_prepared", lambda: prepare_pages(raw6c, keep_text=False)
+    )
+    snapped6c = run_stage(
+        spark, root, "snapped",
+        lambda: knn_snap(pts6c, pages6c).select(
+            "point_id", "lon", "lat", "page_url", "snap_distance", "is_panoramic"
+        ),
+    )
+    with aqe_off(spark):
+        q6c = score_snapped_points(snapped6c, hit_pages(raw6c, snapped6c))
+        p6c = plan_of(q6c)
+        ok6c, n6c = gvi_stage_shape(
+            q6c._jdf.queryExecution().executedPlan(),
+            prepare_pages(raw6c, keep_text=False)._jdf.queryExecution().executedPlan(),
+        )
+    shutil.rmtree(_gtmp)
+    sections.append(
+        (
+            "GVI stage: page text parsed above the hit-url semi-join, coordinate-only pages stage",
+            q6c,
+            p6c,
+            ok6c,
+            n6c,
+        )
+    )
+
+    # 9. z-ordered scan: the morton interval predicate reaches the
+    # parquet scan as a pushed filter (row-group min/max skipping)
     from streetview_naturevisibility_spark.sources.layout import (
         bbox_morton_interval,
         write_spatial_sorted,
@@ -345,7 +427,6 @@ def main() -> None:
             n9,
         )
     )
-    import shutil
 
     shutil.rmtree(_ztmp, ignore_errors=True)
 
