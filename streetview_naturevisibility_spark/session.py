@@ -10,6 +10,16 @@ sandbox it runs on local[N]. All settings below are cluster-safe:
 - shuffle partitions default to a sandbox-friendly value; on a real
   cluster set ``spark.sql.shuffle.partitions`` ~ 2-3x total cores (AQE
   coalesces the excess).
+- for ``local``/``local[N]`` masters, the Python worker daemon is
+  ``pyworker``: Spark's own daemon with pyspark.zip, the py4j zip and
+  the spark-core jar off ``sys.path`` (when the workers find the
+  package and an installed pyspark of the same version). Every task
+  invalidates import caches, and each zip importer then re-reads its
+  archive directory: 110-250 ms per task before its UDF runs, 50-70 ms
+  without them. Other masters keep Spark's stock daemon: their
+  executors may see the package only once ``--py-files`` are installed
+  at task time. An explicit ``spark.python.daemon.module`` in
+  ``extra_conf`` wins.
 
 It also holds the engine's one size policy (``materialize`` and
 ``fits``): how a frame is stored, and whether it may be broadcast or
@@ -19,11 +29,14 @@ collected to the driver.
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from streetview_naturevisibility_spark import pyworker
 
 _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
@@ -77,9 +90,26 @@ def get_spark(
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    for k, v in _worker_conf(master).items():
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _worker_conf(master: str) -> dict[str, str]:
+    """The Python worker daemon: ``pyworker`` for ``local``/``local[N]``
+    masters, whose workers fork from the driver's own environment, when
+    that environment finds the package (working directory, PYTHONPATH or
+    site-packages); Spark's stock daemon otherwise, and for any other
+    master, whose executors may see the package only once ``--py-files``
+    are installed at task time."""
+    root = os.path.realpath(os.path.dirname(os.path.dirname(pyworker.__file__)))
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep), *site.getsitepackages()]
+    local = master == "local" or master.startswith("local[")
+    if local and any(d and os.path.realpath(d) == root for d in dirs):
+        return {"spark.python.daemon.module": pyworker.__name__}
+    return {}
 
 
 # payload bytes of one fixed-width value; any other fixed type counts 8

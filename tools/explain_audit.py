@@ -738,18 +738,20 @@ def main() -> None:
     # the batch's clusters — the literal isin reaches the parquet scan
     # as PartitionFilters; the batch-vs-corpus compare is one cogroup
     # (FlatMapCoGroupsInPandas), no join explosion.
-    import tempfile as _tf
-
     from streetview_naturevisibility_spark.operators.similarity import (
         build_ivf_index,
         semantic_dedup_incremental,
     )
 
     emb18 = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    idx18 = os.path.join(_tf.mkdtemp(), "ivf_idx")
-    build_ivf_index(emb18, idx18, n_lists=8)
-    inc = semantic_dedup_incremental(emb18.limit(50), idx18, threshold=0.95)
-    p18 = plan_of(inc)
+    _itmp = tempfile.mkdtemp(prefix="explain_ivf_")
+    try:
+        idx18 = os.path.join(_itmp, "ivf_idx")
+        build_ivf_index(emb18, idx18, n_lists=8)
+        inc = semantic_dedup_incremental(emb18.limit(50), idx18, threshold=0.95)
+        p18 = plan_of(inc)
+    finally:
+        shutil.rmtree(_itmp, ignore_errors=True)
     ok18, n18 = check(
         "incremental semdedup",
         p18,
